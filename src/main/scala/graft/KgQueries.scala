@@ -119,15 +119,9 @@ object KgQueries {
       // window/dedup computation); gate-only — the pipeline's own
       // bootstrap path is untouched.
       def c1(df: DataFrame) = df.coalesce(1)
-      val t = Dims.tiny(s)
-      val dims = Dims.Snapshot(c1(t.stratDim), c1(t.mineralDim),
-        c1(t.intervalDim), c1(t.gazetteerDim), c1(t.stratGpsDim),
-        c1(t.lithDim)).persisted()
-      val p = Hydrator.prepare(dims)
-      val prepared = Hydrator.Prepared(c1(p.stratKeyed).cache(),
-        c1(p.mineralKeyed).cache(), c1(p.gaz).cache(),
-        c1(p.lithKeyed).cache())
-      (dims, prepared, Linker.aliasDim(dims).coalesce(1).cache())
+      val dims = Dims.tiny(s).map(c1).persisted()
+      val prepared = Hydrator.prepare(dims).map(c1).cached()
+      (dims, prepared, c1(Linker.aliasDim(dims)).cache())
     })
   }
 
@@ -815,7 +809,7 @@ object KgQueries {
       val qn = s"gate_stream_triples_${streamGateSeq.incrementAndGet()}"
       val q = graft.streaming.StreamingKg.triplesStream(
           graft.streaming.StreamingKg.pagesStream(s, tmp), dims, client,
-          prebuiltAlias = Some(alias), preparedDims = Some(prepared))
+          KgPipeline.Config(prebuiltAlias = Some(alias), preparedDims = Some(prepared)))
         .writeStream.format("memory").queryName(qn)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()

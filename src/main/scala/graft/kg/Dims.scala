@@ -222,11 +222,13 @@ object Dims {
   final case class Snapshot(
       stratDim: DataFrame, mineralDim: DataFrame, intervalDim: DataFrame,
       gazetteerDim: DataFrame, stratGpsDim: DataFrame, lithDim: DataFrame) {
+    /** Apply `f` to each of the six dims. */
+    def map(f: DataFrame => DataFrame): Snapshot =
+      Snapshot(f(stratDim), f(mineralDim), f(intervalDim), f(gazetteerDim),
+        f(stratGpsDim), f(lithDim))
     /** Cache every dim (driver-built LocalRelations re-encode on each use
       * otherwise — snapshot tables are read-many by design). */
-    def persisted(): Snapshot =
-      Snapshot(stratDim.cache(), mineralDim.cache(), intervalDim.cache(),
-        gazetteerDim.cache(), stratGpsDim.cache(), lithDim.cache())
+    def persisted(): Snapshot = map(_.cache())
   }
 
   def snapshot(spark: SparkSession, bulkStrat: Int = 45646 - 13,

@@ -50,15 +50,14 @@ object Hydrator {
   final case class Prepared(
       stratKeyed: DataFrame, mineralKeyed: DataFrame, gaz: DataFrame,
       lithKeyed: DataFrame) {
-    def cached(): Prepared =
-      Prepared(stratKeyed.cache(), mineralKeyed.cache(), gaz.cache(),
-        lithKeyed.cache())
-    /** Release a [[cached]] snapshot — long-lived owners (the streaming
-      * sink bootstrap) must call this when the consuming query stops, or
-      * the four dim caches outlive the job. */
-    def unpersist(): Unit =
-      Seq(stratKeyed, mineralKeyed, gaz, lithKeyed)
-        .foreach(_.unpersist(blocking = false))
+    /** Apply `f` to each of the four keyed dims. */
+    def map(f: DataFrame => DataFrame): Prepared =
+      Prepared(f(stratKeyed), f(mineralKeyed), f(gaz), f(lithKeyed))
+    def cached(): Prepared = map(_.cache())
+    /** Release a [[cached]] snapshot — a long-lived owner must call this
+      * when the consuming query stops, or the four dim caches outlive the
+      * job. */
+    def unpersist(): Unit = { map(_.unpersist(blocking = false)); () }
   }
 
   def prepare(dims: Dims.Snapshot): Prepared = {
@@ -143,10 +142,6 @@ object Hydrator {
       .withColumnRenamed("macrostrat_version", "lith_macrostrat_version")
     Prepared(stratKeyed, mineralKeyed, gaz, lithKeyed)
   }
-
-  def hydrate(triples: DataFrame, dims: Dims.Snapshot,
-              jobStart: java.sql.Timestamp): DataFrame =
-    hydratePrepared(triples, prepare(dims), jobStart)
 
   /** Hydrate canonicalized triples with strat, mineral, USGS-fallback and
     * gazetteer fields. Input needs: subj_name, predicate, obj_kind,

@@ -11,6 +11,11 @@ import org.apache.spark.sql.functions._
   *   canonicalization → hydration joins → triples table
   *   [+ RDF materialization] + per-partition lineage/metrics rows.
   *
+  * The extract step and the parse → hydrate chain live in [[StageChain]],
+  * shared with the streaming skin (graft.streaming.StreamingKg); this
+  * object wires the batch-only stages around them: resume, dedup gate,
+  * repartition, inference, lineage, RDF and the commits.
+  *
   * Scale posture (designed for 10^12 pages / 1000 executors, tested at
   * local[N]):
   *  - one explicit url-hash repartition up front; every later stage either
@@ -38,7 +43,6 @@ object KgPipeline {
       numPartitions: Int = 32,
       microBatch: Int = 200,
       saltedAlign: Boolean = false,
-      saltBuckets: Int = 16,
       // Some(minJaccard) => tier-2 fuzzy alignment (Linker.alignFuzzy):
       // names tier-1 leaves unlinked get a char-3-gram Jaccard argmax
       // against the dictionary — the deterministic stand-in for the
@@ -115,7 +119,16 @@ object KgPipeline {
       // dictionaries from the dim snapshot (one driver-side collect of the
       // dictionary columns — bootstrap, not per-page work); Some(Seq())
       // disables prompting.
-      promptDicts: Option[Seq[Inference.HandlerDict]] = None)
+      promptDicts: Option[Seq[Inference.HandlerDict]] = None) {
+    /** This config with the corpus-wide stages cleared, for an incremental
+      * pass — a streaming micro-batch or a failure re-drive. Such a pass
+      * sees only its own pages, so it defers canonicalization to
+      * compaction (StreamingKg.compactCanonicalize) and corpus dedup to
+      * StreamingKg.compactDedup, and it runs no shard filter, resume
+      * checkpoint or RDF output of its own. */
+    def incremental: Config = copy(canonicalize = false, dedupMinJaccard = None,
+      buckets = None, checkpointDir = None, emitRdf = false)
+  }
 
   final case class Result(
       triples: DataFrame,
@@ -149,8 +162,6 @@ object KgPipeline {
     "lith", "lith_id", "lith_type", "lith_group", "lith_class",
     "provenance", "requested_at")
 
-  private val extractUdf = udf((html: Array[Byte]) => HtmlText.extract(html))
-
   def run(spark: SparkSession, pages0: DataFrame, dims: Dims.Snapshot,
           client: Inference.InferenceClient, cfg: Config = Config()): Result = {
 
@@ -167,22 +178,11 @@ object KgPipeline {
       case _ => scoped
     }
 
-    // Extract stage: html → text (the invariant-bearing step; input_hint
-    // demands byte-identical text per url). Runs BEFORE the repartition and
-    // immediately drops `html` + the golden column: shuffling both the raw
+    // Extract stage (StageChain.extract): runs BEFORE the repartition and
+    // drops `html` + the golden column on the spot — shuffling both the raw
     // html and the text would double the heaviest data movement of the
     // whole job (pages are the only page-cardinality shuffle there is).
-    val hasGolden = pages0.columns.contains("text")
-    val extracted0 = pages
-      .withColumn("extracted_text", extractUdf(col("html")))
-    val slim = (if (hasGolden)
-      // direct byte equality — hashing both sides would cost two extra
-      // sha256 passes per page for the same answer
-      extracted0.withColumn("extract_ok", col("extracted_text") === col("text"))
-    else extracted0.withColumn("extract_ok", lit(true)))
-      .drop("text", "html")
-      .withColumnRenamed("extracted_text", "text")
-      .withColumn("hashed_text", sha2(col("text"), 256))
+    val slim = StageChain.extract(pages)
 
     // Optional corpus dedup gate (training-data hygiene): runs on the
     // extracted text BEFORE any inference tokens are spent on duplicates.
@@ -234,35 +234,13 @@ object KgPipeline {
     // when the raw set outgrows executor memory at scale.
     val rawParsed = PostProcess.withParsed(raw.toDF())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val parsed = PostProcess.explodeParsed(rawParsed)
 
-    // J2: alignment — broadcast by default, salted shuffle variant on demand.
-    val alias = cfg.prebuiltAlias.getOrElse(Linker.aliasDim(dims))
-    val aligned0 =
-      if (cfg.saltedAlign) Linker.alignSalted(parsed, alias, cfg.saltBuckets)
-      else Linker.align(parsed, alias)
-    val aligned1 = cfg.fuzzyAlignMinJaccard
-      .map(t => Linker.alignFuzzy(aligned0, alias, t, cfg.fuzzyStopGramMaxDf))
-      .getOrElse(aligned0)
-    // tier-3's LSH-prune path persists its probe/dict subtrees; collect
-    // them here so Result.cleanup releases them with the run's other caches
-    val tierCached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val aligned = cfg.cosineAlignMinSim
-      .map(t => Linker.alignCosine(aligned1, alias, t,
-        lshPrune = cfg.cosineAlignLshPrune, registerCached = tierCached += _))
-      .getOrElse(aligned1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // CC canonicalization over the candidate-pair edges.
-    val canonical =
-      if (cfg.canonicalize) Canonicalizer(aligned, cfg.canonLocalProbe)
-      else aligned.withColumn("obj_final", col("obj_canonical"))
-        .withColumn("entity_cluster_id", xxhash64(col("obj_kind"), col("obj_canonical")))
-
-    // J3: hydration joins.
-    val hydrated = Hydrator.hydratePrepared(canonical,
-      cfg.preparedDims.getOrElse(Hydrator.prepare(dims)), cfg.jobStart)
-    val triples = hydrated.select(TripleColumns.map(col): _*)
+    // J2 alignment tiers → CC canonicalization → J3 hydration: the shared
+    // chain. Its aligned stage boundary and tier-3's LSH-prune sides
+    // persist; Result.cleanup releases them with the run's other caches.
+    val chainCached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val hydrated = StageChain(dims, cfg)(rawParsed, chainCached += _)
+    val triples = StageChain.triples(hydrated)
 
     // Lineage/metrics: one row per partition per stage (replaces the
     // reference's job_id bookkeeping + "NA" failure placeholders,
@@ -312,14 +290,9 @@ object KgPipeline {
       .select("stage", "partition_id", "input_rows", "output_rows",
               "failed_rows", "job_start")
 
-    val failedUrls = rawParsed
-      .filter(col("parse_status") =!= PostProcess.StatusOk)
-      .select(col("url"),
-        PostProcess.failedStage(col("parse_status")).as("failed_stage"))
-
     val rdf = if (cfg.emitRdf) Some(Rdf.fromHydrated(hydrated, dims)) else None
-    val cached = dedupCached ++ tierCached :+ rawParsed :+ aligned
-    Result(triples, lineage, rdf, failedUrls,
+    val cached = dedupCached ++ chainCached :+ rawParsed
+    Result(triples, lineage, rdf, StageChain.failedUrls(rawParsed),
       () => cached.foreach(_.unpersist(blocking = false)))
   }
 

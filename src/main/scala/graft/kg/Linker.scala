@@ -303,8 +303,9 @@ object Linker {
     * in double and sqrt/mult/div are correctly rounded — sims are
     * bit-reproducible (and bit-equal to an engine repeating the same
     * arithmetic, which the gate oracle does). Ties break to the
-    * lexical-min alias. Output schema equals [[align]]'s. */
-  /** @param registerCached receives every frame the LSH-prune path
+    * lexical-min alias. Output schema equals [[align]]'s.
+    *
+    * @param registerCached receives every frame the LSH-prune path
     *        persists (the probe/dict sides feed two subtrees each, so they
     *        must cache — see [[cosineLshCandidates]]), so the OWNER of the
     *        run can unpersist them: the batch pipeline adds them to

@@ -1,7 +1,6 @@
 package graft.kg
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** spark-submit entrypoint for the batch KG-construction job
   * (BASELINE.json north_rule: "the whole job submits via spark-submit").
@@ -49,81 +48,7 @@ object Main {
     val outDir = opts.getOrElse("out",
       sys.error("--out <dir> is required"))
     val numPartitions = opts.get("partitions").map(_.toInt).getOrElse(32)
-
-    val builder = SparkSession.builder()
-      .appName("graft-kg-construct")
-      .config("spark.sql.shuffle.partitions", numPartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-    // spark-submit injects spark.master; only default it for bare JVM runs
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master("local[*]")).getOrCreate()
-
-    // maintenance modes: operate on an existing snapshot store and exit
-    if (opts.contains("compact")) {
-      // pass the dim snapshot so rows whose canonical moved are RE-hydrated
-      // — without it the compacted table would keep dim columns joined on
-      // the pre-compaction name (stale next to the new obj_final)
-      val v = graft.streaming.StreamingKg.compactCanonicalize(spark, outDir,
-        dims = Some(Dims.snapshot(spark)))
-      println(v.map(v => s"[graft] compacted to snapshot v$v at $outDir")
-        .getOrElse(s"[graft] nothing to compact at $outDir"))
-      spark.stop(); return
-    }
-    if (opts.contains("compact-dedup")) {
-      val corpus =
-        (if (pagesSrc.startsWith("synthetic:"))
-          Pages.all(spark, pagesSrc.stripPrefix("synthetic:"))
-        else spark.read.parquet(pagesSrc))
-      // competition must run over the FULL corpus the sharded runs consumed
-      // (compactDedup scaladoc) — extract text when the source carries html
-      val docs =
-        if (corpus.columns.contains("text")) corpus.select("url", "text")
-        else corpus.select(col("url"),
-          udf((h: Array[Byte]) => HtmlText.extract(h)).apply(col("html")).as("text"))
-      val v = graft.streaming.StreamingKg.compactDedup(spark, outDir, docs,
-        minJaccard = opts("compact-dedup").toDouble,
-        localProbe = !opts.contains("open-vocabulary"))
-      println(v.map(v => s"[graft] dedup-compacted to snapshot v$v at $outDir")
-        .getOrElse(s"[graft] nothing to compact at $outDir"))
-      spark.stop(); return
-    }
-    if (opts.contains("redrive")) {
-      // same bootstrap AND the same alignment-tier flags as a pipeline
-      // run: redriveFailed's contract is micro-batch-identical per-page
-      // semantics, so a tiered deployment passes its tiers here too —
-      // silently re-driving with tier-1-only linking would commit triples
-      // whose obj_canonical/obj_linked differ from the stream's
-      val (dims, client) = bootstrap(spark)
-      val v = graft.streaming.StreamingKg.redriveFailed(
-        spark, outDir, loadPages(spark, pagesSrc), dims, client,
-        fuzzyMinJaccard = opts.get("fuzzy").map(_.toDouble),
-        fuzzyStopGramMaxDf = opts.get("fuzzy-cap").map(_.toInt),
-        cosineMinSim = opts.get("cosine").map(_.toDouble),
-        cosineLshPrune = opts.get("cosine-lsh").map(parsePair),
-        broadcastTarget = !opts.contains("no-broadcast-done"))
-      println(v.map(v => s"[graft] re-drive committed snapshot v$v at $outDir")
-        .getOrElse(s"[graft] no failure log to re-drive at $outDir"))
-      spark.stop(); return
-    }
-    if (opts.contains("rewrite")) {
-      val v = KgPipeline.compactStoreFiles(spark, outDir)
-      println(v.map(v => s"[graft] rewrote file layout to snapshot v$v at $outDir")
-        .getOrElse(s"[graft] nothing to rewrite at $outDir"))
-      spark.stop(); return
-    }
-    if (opts.contains("expire")) {
-      val (m, d) = graft.sources.SnapshotStore.expireSnapshots(
-        spark, outDir, keepLast = opts("expire").toInt,
-        graceMs = opts.getOrElse("grace-ms", "3600000").toLong)
-      println(s"[graft] expired $m manifests, reclaimed $d data files at $outDir")
-      spark.stop(); return
-    }
-
-    val pages = loadPages(spark, pagesSrc)
-    val (dims, client) = bootstrap(spark)
-
+    // one Config for a pipeline run and every maintenance mode that reads it
     val cfg = KgPipeline.Config(
       numPartitions = numPartitions,
       saltedAlign = opts.contains("salted"),
@@ -150,6 +75,71 @@ object Main {
           s"--buckets range must sit in 0-${KgPipeline.UrlBuckets - 1}")
         (lo to hi): Seq[Int]
       })
+
+    val builder = SparkSession.builder()
+      .appName("graft-kg-construct")
+      .config("spark.sql.shuffle.partitions", numPartitions.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+    // spark-submit injects spark.master; only default it for bare JVM runs
+    val spark = (if (sys.props.contains("spark.master")) builder
+                 else builder.master("local[*]")).getOrCreate()
+
+    // maintenance modes: operate on an existing snapshot store and exit
+    if (opts.contains("compact")) {
+      // pass the dim snapshot so rows whose canonical moved are RE-hydrated
+      // — without it the compacted table would keep dim columns joined on
+      // the pre-compaction name (stale next to the new obj_final)
+      val v = graft.streaming.StreamingKg.compactCanonicalize(spark, outDir,
+        dims = Some(Dims.snapshot(spark)))
+      println(v.map(v => s"[graft] compacted to snapshot v$v at $outDir")
+        .getOrElse(s"[graft] nothing to compact at $outDir"))
+      spark.stop(); return
+    }
+    if (opts.contains("compact-dedup")) {
+      val corpus = loadPages(spark, pagesSrc)
+      // competition must run over the FULL corpus the sharded runs consumed
+      // (compactDedup scaladoc) — extract text when the source carries html
+      val docs =
+        if (corpus.columns.contains("text")) corpus.select("url", "text")
+        else StageChain.extract(corpus).select("url", "text")
+      val v = graft.streaming.StreamingKg.compactDedup(spark, outDir, docs,
+        minJaccard = opts("compact-dedup").toDouble,
+        localProbe = cfg.canonLocalProbe)
+      println(v.map(v => s"[graft] dedup-compacted to snapshot v$v at $outDir")
+        .getOrElse(s"[graft] nothing to compact at $outDir"))
+      spark.stop(); return
+    }
+    if (opts.contains("redrive")) {
+      // same bootstrap AND the same Config as a pipeline run:
+      // redriveFailed's contract is micro-batch-identical per-page
+      // semantics, so a tiered deployment passes its tiers here too —
+      // silently re-driving with tier-1-only linking would commit triples
+      // whose obj_canonical/obj_linked differ from the stream's
+      val (dims, client) = bootstrap(spark)
+      val v = graft.streaming.StreamingKg.redriveFailed(
+        spark, outDir, loadPages(spark, pagesSrc), dims, client, cfg)
+      println(v.map(v => s"[graft] re-drive committed snapshot v$v at $outDir")
+        .getOrElse(s"[graft] no failure log to re-drive at $outDir"))
+      spark.stop(); return
+    }
+    if (opts.contains("rewrite")) {
+      val v = KgPipeline.compactStoreFiles(spark, outDir)
+      println(v.map(v => s"[graft] rewrote file layout to snapshot v$v at $outDir")
+        .getOrElse(s"[graft] nothing to rewrite at $outDir"))
+      spark.stop(); return
+    }
+    if (opts.contains("expire")) {
+      val (m, d) = graft.sources.SnapshotStore.expireSnapshots(
+        spark, outDir, keepLast = opts("expire").toInt,
+        graceMs = opts.getOrElse("grace-ms", "3600000").toLong)
+      println(s"[graft] expired $m manifests, reclaimed $d data files at $outDir")
+      spark.stop(); return
+    }
+
+    val pages = loadPages(spark, pagesSrc)
+    val (dims, client) = bootstrap(spark)
     if (opts.contains("snapshot")) {
       val v = KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, outDir, cfg)
       println(s"[graft] committed snapshot v$v at $outDir")

@@ -71,7 +71,7 @@ object Rdf {
   private def lit(v: String, lang: String = "", dt: String = "") = (v, true, lang, dt)
 
   /** One hydrated triple row → RDF triples. The row must carry the hydrated
-    * schema produced by [[Hydrator.hydrate]]. */
+    * schema produced by [[Hydrator.hydratePrepared]]. */
   def emitRow(r: Row, intervals: Map[String, String]): Seq[RdfTriple] = {
     def s(name: String): Option[String] =
       if (r.schema.fieldNames.contains(name) && !r.isNullAt(r.fieldIndex(name)))

@@ -148,8 +148,7 @@ object Similarity {
     * 10^12 rows the update is one posexplode shuffle keyed on
     * (cluster, pos), map-side combined, per round. */
   def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int,
-                      samplePermille: Int = 1000,
-                      checkpointEvery: Int = 4): DataFrame = {
+                      samplePermille: Int = 1000): DataFrame = {
     // Deterministic init: the k SMALLEST vec_ids (not `vec_id < k`, which
     // silently yields fewer/zero centroids when ids are sparse or hashed —
     // e.g. xxhash64-derived doc ids), cluster id = rank among those k.
@@ -191,15 +190,18 @@ object Similarity {
       // a driver action — a full scheduling round-trip per Lloyd round —
       // while the per-round plan only grows by one assign+agg layer. Short
       // trainings (the gates run iters = 2) now fuse into a single job;
-      // deep trainings still truncate every `checkpointEvery` rounds so
+      // deep trainings still truncate every KmeansCheckpointEvery rounds so
       // Catalyst never re-analyzes an unbounded plan. Values are
       // unchanged: the checkpoint sits AFTER the centroid aggregation, so
       // the aggregation's plan (and its fp fold order) is identical with
       // or without it.
-      if (i % checkpointEvery == 0 && i < iters) cents = cents.localCheckpoint(true)
+      if (i % KmeansCheckpointEvery == 0 && i < iters) cents = cents.localCheckpoint(true)
     }
     cents
   }
+
+  /** Lloyd rounds between lineage truncations in [[kmeansCentroids]]. */
+  private val KmeansCheckpointEvery = 4
 
   /** Final k-means cluster assignment after `iters` Lloyd rounds. */
   def kmeans(embeddings: DataFrame, k: Int, iters: Int): DataFrame =

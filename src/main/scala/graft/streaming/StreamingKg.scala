@@ -10,11 +10,14 @@ import graft.kg._
   *
   * The reference is pure batch (SURVEY §2.8), but a web-scale crawl is
   * naturally a stream of WARC segments: this module runs the same stage
-  * chain — extract → batched inference → lenient parse → alignment — as an
-  * incremental `readStream` over arriving page files. Stages were designed
-  * stream-compatible from the start: every transform is either stateless
-  * (map/mapPartitions/UDF) or a broadcast join, so the streaming plan is
-  * the batch plan minus the two inherently-global steps:
+  * chain — extract → batched inference → lenient parse → alignment tiers →
+  * hydration — as an incremental `readStream` over arriving page files.
+  * The extract step and the parse → hydrate chain are the batch
+  * pipeline's own, wired once in graft.kg.StageChain; every skin here
+  * configures it with one `KgPipeline.Config`. Every stage is either
+  * stateless (map/mapPartitions/UDF) or a join against a static side, so
+  * the streaming plan is the batch plan minus the inherently-global steps
+  * `Config.incremental` clears:
   *  - connected-components canonicalization (iterative; runs as a periodic
   *    batch compaction over the accumulated triples table instead),
   *  - cross-batch dedup (handled by the downstream table's merge keys).
@@ -48,53 +51,32 @@ object StreamingKg {
     pages.withWatermark("warc_ts", watermark)
       .dropDuplicatesWithinWatermark("hashed_text")
 
-  /** Streaming triple extraction: extract → [exact-dedup gate] →
-    * prompt-build → infer → parse → align → hydrate. Identical per-row
-    * semantics to the batch pipeline (same functions, including the prompt
-    * stage — stateless, so it streams). `dedupWatermark = Some(horizon)`
+  /** Streaming triple extraction: [[rawParsedStream]] → the shared
+    * StageChain, with the batch pipeline's exact `KgPipeline.TripleColumns`
+    * schema (the reference's output unit is always the hydrated triplet,
+    * text2graph/schema.py:441-447). `dedupWatermark = Some(horizon)`
     * inserts [[dedupPagesStream]] between extraction and inference — the
     * streaming counterpart of the batch `Config.dedupMinJaccard` gate, so
     * re-fetched identical pages never reach the model.
     *
-    * Hydration is the batch pipeline's `Hydrator.hydratePrepared` verbatim
-    * — stateless broadcast left joins against the prepared dim snapshot
-    * (the window-dedup key build is CACHED, so micro-batches re-read the
-    * materialized keys instead of re-running the dedup windows), so the
-    * streamed output unit is the HYDRATED triplet
-    * with the batch pipeline's exact `KgPipeline.TripleColumns` schema
-    * (the reference's output unit is always the hydrated triplet,
-    * text2graph/schema.py:441-447). The one batch-only step remaining is
-    * global canonicalization, which is inherently cross-batch and runs in
-    * [[compactCanonicalize]]; until then `obj_final = obj_canonical`, the
-    * same rule as the batch `canonicalize = false` path. */
+    * `cfg` runs as `cfg.incremental`: global canonicalization is deferred
+    * to [[compactCanonicalize]], and until then `obj_final =
+    * obj_canonical`, the batch `canonicalize = false` rule. Alignment
+    * tiers 2-3 compare each batch's unlinked names against themselves, a
+    * self-join a streaming frame cannot run: they run per micro-batch in
+    * [[snapshotSinkWithFailures]]. The chain caches the static sides it
+    * builds (alias table, prepared hydration keys) for the query's
+    * lifetime; a long-running caller passes its own
+    * `cfg.prebuiltAlias`/`cfg.preparedDims` and owns their lifetime. */
   def triplesStream(pages: DataFrame, dims: Dims.Snapshot,
                     client: Inference.InferenceClient,
-                    microBatch: Int = 200,
-                    dedupWatermark: Option[String] = None,
-                    jobStart: java.sql.Timestamp =
-                      java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
-                    prebuiltAlias: Option[DataFrame] = None,
-                    preparedDims: Option[Hydrator.Prepared] = None): DataFrame = {
-    val rawParsed = rawParsedStream(pages, dims, client, microBatch, dedupWatermark)
-    val parsed = PostProcess.explodeParsed(rawParsed)
-    val aligned = Linker.align(parsed,
-        prebuiltAlias.getOrElse(Linker.aliasDim(dims)))
-      .withColumn("obj_final", col("obj_canonical"))
-      .withColumn("entity_cluster_id", xxhash64(col("obj_kind"), col("obj_canonical")))
-    // cache the prepared (window-deduped) hydration keys: the static side
-    // of a stream-static join is re-evaluated every micro-batch, and
-    // without the cache each batch would re-run the 4-tier strat union +
-    // firstHit windows — bootstrap work, not per-batch work. A caller that
-    // already holds a prepared snapshot (the gate's cachedDims) passes it
-    // in instead of building a duplicate cached copy — and OWNS its
-    // lifetime. A long-running caller on the default path should build
-    // `Hydrator.prepare(dims).cached()` itself, pass it here, and
-    // `unpersist()` it when the query stops (the sink path's
-    // FailureSink.release() does exactly this); the default exists for
-    // short-lived jobs whose session ends with the query.
-    Hydrator.hydratePrepared(aligned,
-        preparedDims.getOrElse(Hydrator.prepare(dims).cached()), jobStart)
-      .select(KgPipeline.TripleColumns.map(col): _*)
+                    cfg: KgPipeline.Config = KgPipeline.Config(),
+                    dedupWatermark: Option[String] = None): DataFrame = {
+    require(cfg.fuzzyAlignMinJaccard.isEmpty && cfg.cosineAlignMinSim.isEmpty,
+      "alignment tiers 2-3 run per micro-batch: use snapshotSinkWithFailures")
+    val c = cfg.incremental
+    StageChain.triples(StageChain.cached(dims, c)(
+      rawParsedStream(pages, dims, client, c.microBatch, dedupWatermark, c.promptDicts)))
   }
 
   /** The streaming pipeline's PRE-explode stage: extract → [exact-dedup
@@ -102,7 +84,7 @@ object StreamingKg {
     * `parse_status` discriminator (the batch pipeline's persisted stage
     * boundary, PostProcess.withParsed). Feed this to
     * [[snapshotSinkWithFailures]] when the stream must carry the failure
-    * bookkeeping; [[triplesStream]] is this plus explode-align-hydrate. */
+    * bookkeeping; [[triplesStream]] is this plus the StageChain. */
   def rawParsedStream(pages: DataFrame, dims: Dims.Snapshot,
                       client: Inference.InferenceClient,
                       microBatch: Int = 200,
@@ -113,9 +95,7 @@ object StreamingKg {
     // top-df dictionary slice via promptDicts instead
     val prompting = promptDicts
       .getOrElse(Inference.promptDictsFromDims(dims))
-    val extracted0 = pages
-      .withColumn("text", udf((h: Array[Byte]) => HtmlText.extract(h)).apply(col("html")))
-      .withColumn("hashed_text", sha2(col("text"), 256))
+    val extracted0 = StageChain.extract(pages)
     val extracted = dedupWatermark
       .map(w => dedupPagesStream(extracted0, w)).getOrElse(extracted0)
     PostProcess.withParsed(
@@ -157,12 +137,13 @@ object StreamingKg {
       }
 
   /** A started failure sink plus the release hook for its bootstrap
-    * caches. [[snapshotSinkWithFailures]] caches the static side of every
-    * stream-static stage once per QUERY (dim keys, alias table, derived
-    * tier dictionaries) — state Spark cannot age out for us because it
-    * belongs to the writer closure, not the stream. The OWNER of the query
-    * calls `release()` after the query stops (idempotent; safe to put in a
-    * `finally`) or the caches outlive the job (ADVICE round 5). */
+    * caches. [[snapshotSinkWithFailures]]'s StageChain caches the static
+    * side of every stream-static stage once per QUERY (dim keys, alias
+    * table, derived tier dictionaries) — state Spark cannot age out for us
+    * because it belongs to the writer closure, not the stream. The OWNER
+    * of the query calls `release()` after the query stops (idempotent;
+    * safe to put in a `finally`) or the caches outlive the job (ADVICE
+    * round 5). */
   final case class FailureSink(
       writer: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
       private val caches: () => Unit) {
@@ -174,7 +155,7 @@ object StreamingKg {
     * batch commit's "NA" semantics: input is the pre-explode
     * [[rawParsedStream]], and each micro-batch splits BATCH-SIDE (no
     * second pass over the source, hence no second inference spend) into
-    *  - `triples`: exploded → aligned → hydrated rows
+    *  - `triples`: the micro-batch through the shared StageChain
     *    (KgPipeline.TripleColumns), and
     *  - `failed`: (url, failed_stage) for pages whose infer or parse
     *    failed this batch — an append-only failure log a re-drive job
@@ -182,38 +163,18 @@ object StreamingKg {
     * committed together in ONE atomic snapshot (exactly-once via the
     * batch_id watermark: a replayed micro-batch re-commits neither).
     *
-    * The optional alignment tiers mirror the batch `KgPipeline.Config`
-    * (fuzzyAlignMinJaccard / fuzzyStopGramMaxDf / cosineAlignMinSim /
-    * cosineAlignLshPrune) and run INSIDE each micro-batch: every tier is a
-    * per-name argmax against the STATIC dictionary — independent of which
-    * other names share the batch — so micro-batch scoping changes nothing
-    * vs the batch pipeline on the same pages (parity-tested in
-    * StreamingSpec). Unlike canonicalization (corpus-global, deferred to
-    * [[compactCanonicalize]]), the tiers need no cross-batch state. */
+    * `cfg` runs as `cfg.incremental`, so its alignment tiers run INSIDE
+    * each micro-batch: every tier is a per-name argmax against the STATIC
+    * dictionary — independent of which other names share the batch — so
+    * micro-batch scoping changes nothing vs the batch pipeline on the same
+    * pages (parity-tested in StreamingSpec). Unlike canonicalization
+    * (corpus-global, deferred to [[compactCanonicalize]]), the tiers need
+    * no cross-batch state. The chain is built once per query and cached;
+    * FailureSink.release() releases it. */
   def snapshotSinkWithFailures(rawParsed: DataFrame, dir: String,
                                dims: Dims.Snapshot,
-                               jobStart: java.sql.Timestamp =
-                                 java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
-                               fuzzyMinJaccard: Option[Double] = None,
-                               fuzzyStopGramMaxDf: Option[Int] = None,
-                               cosineMinSim: Option[Double] = None,
-                               cosineLshPrune: Option[(Int, Int)] = None): FailureSink = {
-    // bootstrap once per query, reused by every micro-batch closure — the
-    // static side of every stream-static stage (hydration keys, alias
-    // table, each tier's DERIVED dictionary frame: gram arrays,
-    // gram-bucket embeddings, and the fuzzy tier's stop-gram list — all
-    // pure functions of the dictionary, never the batch) is cached here,
-    // or each micro-batch would re-run the identical dictionary
-    // featurization. Released by FailureSink.release() when the owner is
-    // done with the query.
-    val prepared = Hydrator.prepare(dims).cached()
-    val alias = Linker.aliasDim(dims).cache()
-    val fuzzyDict = fuzzyMinJaccard
-      .map(_ => Linker.fuzzyDict(alias).persist())
-    val fuzzyStop = for { d <- fuzzyDict; cap <- fuzzyStopGramMaxDf }
-      yield Linker.stopGrams(d, cap).persist()
-    val cosineDict = cosineMinSim
-      .map(_ => Linker.cosineDict(alias).persist())
+                               cfg: KgPipeline.Config = KgPipeline.Config()): FailureSink = {
+    val chain = StageChain.cached(dims, cfg.incremental)
     val writer = rawParsed.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val b = batch.toDF().persist()
@@ -221,40 +182,16 @@ object StreamingKg {
         // cosine LSH prune persists its probe subtree) — released with the
         // batch frame, so a long-running stream holds only the bootstrap
         val batchCached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        try {
-          val tier1 = Linker.align(PostProcess.explodeParsed(b), alias)
-          val tier2 = fuzzyMinJaccard
-            .map(Linker.alignFuzzy(tier1, alias, _, fuzzyStopGramMaxDf,
-              prebuiltDict = fuzzyDict, prebuiltStopGrams = fuzzyStop))
-            .getOrElse(tier1)
-          val tier3 = cosineMinSim
-            .map(t => Linker.alignCosine(tier2, alias, t,
-              lshPrune = cosineLshPrune, prebuiltDict = cosineDict,
-              registerCached = batchCached += _))
-            .getOrElse(tier2)
-          val aligned = tier3
-            .withColumn("obj_final", col("obj_canonical"))
-            .withColumn("entity_cluster_id",
-              xxhash64(col("obj_kind"), col("obj_canonical")))
-          val triples = Hydrator.hydratePrepared(aligned, prepared, jobStart)
-            .select(KgPipeline.TripleColumns.map(col): _*)
-          val failed = b
-            .filter(col("parse_status") =!= PostProcess.StatusOk)
-            .select(col("url"),
-              PostProcess.failedStage(col("parse_status")).as("failed_stage"))
-          commitBatchTables(dir, Map("triples" -> triples, "failed" -> failed), batchId)
-        } finally {
+        try commitBatchTables(dir, Map(
+            "triples" -> StageChain.triples(chain(b, batchCached += _)),
+            "failed" -> StageChain.failedUrls(b)), batchId)
+        finally {
           batchCached.foreach(_.unpersist(blocking = false))
           b.unpersist()
         }
         ()
       }
-    FailureSink(writer, () => {
-      prepared.unpersist()
-      alias.unpersist(blocking = false)
-      (fuzzyDict.toSeq ++ fuzzyStop ++ cosineDict)
-        .foreach(_.unpersist(blocking = false))
-    })
+    FailureSink(writer, () => chain.release())
   }
 
   /** Re-drive job for the streaming failure log — the consumer
@@ -269,9 +206,9 @@ object StreamingKg {
     *  1. read the accumulated `failed` log and drop every url that already
     *     has triples in the store (healed by an earlier re-drive or a
     *     later append) — those clear from the log unconditionally;
-    *  2. re-run the batch pipeline (`canonicalize = false` + the same
-    *     alignment tiers as the sink — identical per-page semantics to a
-    *     micro-batch) over the remaining urls' pages from `pages`;
+    *  2. re-run the batch pipeline with `cfg.incremental` (the sink's
+    *     per-page semantics: same chain, same alignment tiers) over the
+    *     remaining urls' pages from `pages`;
     *  3. commit healed pages' triples (APPEND) and the rewritten failure
     *     log (REPLACE: fresh failure rows for pages that failed again,
     *     carried rows for target urls absent from `pages`) in ONE atomic
@@ -279,25 +216,20 @@ object StreamingKg {
     *     re-running converges (exactly-once via determinism, like every
     *     commit in this store).
     *
+    * `cfg.broadcastDone` pins the re-drive url set as a broadcast join
+    * build side — right while the failure log is incident-sized. A
+    * corpus-wide outage makes the log page-cardinality, and a pinned
+    * broadcast cannot be demoted by AQE — `false` gives a plain semi-join
+    * AQE sizes from runtime stats (the resume join's duality, same
+    * rationale).
+    *
     * Returns the committed version; None when the store has no failure
     * log (absent table, or already emptied by a prior re-drive — the job
     * is a read-only no-op then, committing nothing). A fully healed run
     * leaves the `failed` table with ZERO rows. */
-  /** @param broadcastTarget pins the re-drive url set as a broadcast join
-    *        build side — right while the failure log is incident-sized.
-    *        A corpus-wide outage makes the log page-cardinality, and a
-    *        pinned broadcast cannot be demoted by AQE — pass `false` for
-    *        a plain semi-join AQE sizes from runtime stats (the
-    *        KgPipeline.broadcastDone duality, same rationale). */
   def redriveFailed(spark: SparkSession, dir: String, pages: DataFrame,
                     dims: Dims.Snapshot, client: Inference.InferenceClient,
-                    jobStart: java.sql.Timestamp =
-                      java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
-                    fuzzyMinJaccard: Option[Double] = None,
-                    fuzzyStopGramMaxDf: Option[Int] = None,
-                    cosineMinSim: Option[Double] = None,
-                    cosineLshPrune: Option[(Int, Int)] = None,
-                    broadcastTarget: Boolean = true): Option[Int] = {
+                    cfg: KgPipeline.Config = KgPipeline.Config()): Option[Int] = {
     import graft.sources.SnapshotStore
     val readVersion = SnapshotStore.currentVersion(spark, dir)
     SnapshotStore.read(spark, dir, "failed", Some(readVersion).filter(_ > 0))
@@ -313,26 +245,20 @@ object StreamingKg {
       // pages to re-run: target urls the corpus still has. Target urls the
       // corpus LOST keep their old log rows — clearing them silently would
       // erase the only record that extraction never succeeded.
-      val targetSide = if (broadcastTarget) broadcast(target) else target
+      val targetSide = if (cfg.broadcastDone) broadcast(target) else target
       val redrive = pages.join(targetSide, Seq("url"), "left_semi")
-      val res = KgPipeline.run(spark, redrive, dims, client,
-        KgPipeline.Config(canonicalize = false, jobStart = jobStart,
-          fuzzyAlignMinJaccard = fuzzyMinJaccard,
-          fuzzyStopGramMaxDf = fuzzyStopGramMaxDf,
-          cosineAlignMinSim = cosineMinSim,
-          cosineAlignLshPrune = cosineLshPrune))
+      val res = KgPipeline.run(spark, redrive, dims, client, cfg.incremental)
       val stillMissing = target
         .join(pages.select("url").distinct(), Seq("url"), "left_anti")
       val carried = failed
         .join(stillMissing, Seq("url"), "left_semi")
         .groupBy("url").agg(min("failed_stage").as("failed_stage"))
       val newLog = res.failedUrls.unionByName(carried)
-      val healedTriples = res.triples.select(KgPipeline.TripleColumns.map(col): _*)
       // requireVersion: a micro-batch appending to `failed` between our
       // read and this publish must fail the rewrite (re-run the job), not
       // silently vanish under the replaced log
       val v = SnapshotStore.commitMixed(spark, dir,
-        append = Map("triples" -> healedTriples),
+        append = Map("triples" -> res.triples),
         replace = Map("failed" -> newLog),
         meta = Map("compaction" -> "redrive"),
         requireVersion = Some(readVersion))
@@ -348,20 +274,21 @@ object StreamingKg {
     * different micro-batches collapse to one canonical entity. Publishes
     * as a replace-mode snapshot (readers of older versions still see the
     * uncompacted files — time travel). Returns the new version, None when
-    * the store has no triples yet. */
-  /** @param dims when supplied, rows are RE-hydrated after
-    *        canonicalization: a row whose obj_final moved to a new cluster
-    *        canonical carries hydration columns joined on the OLD name —
-    *        re-running the (stateless, broadcast) hydration joins on the
-    *        compacted names brings the dim columns back in line with the
-    *        batch pipeline's canonicalize-then-hydrate order. The stored
-    *        per-row `requested_at` is PRESERVED through re-hydration
-    *        (passed to hydratePrepared as the provenance timestamp source),
-    *        so compacting never restamps the provenance history of rows an
-    *        earlier run committed — `jobStart` is only the fallback for a
-    *        store whose rows predate the column (ADVICE round 5). Omitted,
-    *        the hydration columns pass through unchanged (pure-canonicalize
-    *        compaction). */
+    * the store has no triples yet.
+    *
+    * @param dims when supplied, rows are RE-hydrated after
+    *        canonicalization through the StageChain's hydrate step: a row
+    *        whose obj_final moved to a new cluster canonical carries
+    *        hydration columns joined on the OLD name — re-running the
+    *        (stateless, broadcast) hydration joins on the compacted names
+    *        brings the dim columns back in line with the batch pipeline's
+    *        canonicalize-then-hydrate order. The stored per-row
+    *        `requested_at` is PRESERVED through re-hydration (passed as the
+    *        provenance timestamp source), so compacting never restamps the
+    *        provenance history of rows an earlier run committed —
+    *        `jobStart` is only the fallback for a store whose rows predate
+    *        the column (ADVICE round 5). Omitted, the hydration columns
+    *        pass through unchanged (pure-canonicalize compaction). */
   def compactCanonicalize(spark: SparkSession, dir: String,
                           dims: Option[Dims.Snapshot] = None,
                           jobStart: java.sql.Timestamp =
@@ -382,8 +309,8 @@ object StreamingKg {
             "subj_name", "predicate", "obj_name", "obj_kind", "obj_canonical",
             "obj_linked", "obj_final", "entity_cluster_id", "requested_at")
             .filter(canonicalized.columns.contains)
-          Hydrator.hydratePrepared(
-            canonicalized.select(core.map(col): _*), Hydrator.prepare(d), jobStart,
+          StageChain(d, KgPipeline.Config(jobStart = jobStart)).hydrate(
+            canonicalized.select(core.map(col): _*),
             requestedAt =
               if (core.contains("requested_at")) Some(col("requested_at")) else None)
         case None => canonicalized
@@ -530,8 +457,9 @@ object StreamingKg {
     * are watermarked and the join predicate bounds event time in BOTH
     * directions (ts >= err_ts and ts <= err_ts + window), so Spark derives
     * state-eviction watermarks for both buffers: state size tracks the
-    * lateness horizon + join window, never the stream length. */
-  /** @param joinType "inner" (matches only) or "left_outer": a click with
+    * lateness horizon + join window, never the stream length.
+    *
+    * @param joinType "inner" (matches only) or "left_outer": a click with
     *        no error in its window emits once with a null err_id AFTER the
     *        watermark proves no matching error can still arrive — the
     *        streaming form of the batch left join's null-keeping. */

@@ -55,7 +55,7 @@ object StageProfile {
       val c = Canonicalizer(aligned).cache(); c.count(); c
     }
     val hydrated = time("hydrate") {
-      val h = Hydrator.hydrate(canonical, dims,
+      val h = Hydrator.hydratePrepared(canonical, Hydrator.prepare(dims),
         java.sql.Timestamp.valueOf("2024-06-01 00:00:00")); h.count(); h
     }
     spark.stop()

@@ -27,7 +27,7 @@ class GoldenTtlSpec extends SparkSpec {
       .toDF("url", "hashed_text", "model_id", "subj_name", "predicate", "obj_name", "obj_kind")
     val aligned = Linker.align(triples, Linker.aliasDim(dims))
     val canonical = Canonicalizer(aligned)
-    val hydrated = Hydrator.hydrate(canonical, dims,
+    val hydrated = Hydrator.hydratePrepared(canonical, Hydrator.prepare(dims),
       java.sql.Timestamp.valueOf("2024-05-29 20:01:46"))
     Rdf.fromHydrated(hydrated, dims).collect()
       .map(t => (t.subj, t.pred, t.obj, t.obj_is_literal, t.lang)).toSet

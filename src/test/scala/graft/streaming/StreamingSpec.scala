@@ -197,7 +197,8 @@ class StreamingSpec extends SparkSpec {
     val storeDir = java.nio.file.Files.createTempDirectory("tiersink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("tierckpt").toString
     // dim knows only "Waldron Shale"; tier-1 misses the misspelling, the
-    // cosine tier links it (sim 0.859 >= 0.8) — inside a micro-batch
+    // capped fuzzy tier scores it below its bar (Jaccard 9/13 < 0.75) and
+    // the cosine tier links it (sim 0.859 >= 0.8) — inside a micro-batch
     val text = "The Waldron Shael is exposed near Minnesota."
     Seq(("https://t/tier-stream",
         java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
@@ -207,10 +208,11 @@ class StreamingSpec extends SparkSpec {
     def tierClient = Inference.defaultClient(
       Dims.pinnedStrat.map(_.strat_name).toArray :+ "Waldron Shael",
       Dims.gazetteer.map(_.name).toArray, Array())
+    val tiers = KgPipeline.Config(numPartitions = 2, fuzzyAlignMinJaccard = Some(0.75),
+      fuzzyStopGramMaxDf = Some(2), cosineAlignMinSim = Some(0.8))
     val raw = StreamingKg.rawParsedStream(
       StreamingKg.pagesStream(spark, pagesDir), dims, tierClient)
-    val sink = StreamingKg.snapshotSinkWithFailures(raw, storeDir, dims,
-      cosineMinSim = Some(0.8))
+    val sink = StreamingKg.snapshotSinkWithFailures(raw, storeDir, dims, tiers)
     try {
       val q = sink.writer
         .option("checkpointLocation", ckpt)
@@ -227,8 +229,7 @@ class StreamingSpec extends SparkSpec {
     // scoping is semantics-free (canonicalization stays in compaction)
     val batch = KgPipeline.run(spark,
       spark.read.parquet(pagesDir), dims, tierClient,
-      KgPipeline.Config(numPartitions = 2, canonicalize = false,
-        cosineAlignMinSim = Some(0.8))).triples
+      tiers.copy(canonicalize = false)).triples
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(KgPipeline.TripleColumns.map(col): _*).collect().map(_.toSeq).toSet
     assert(rows(streamed) === rows(batch))
