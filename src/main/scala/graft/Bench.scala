@@ -178,7 +178,7 @@ object Bench {
     val amp = sys.env.getOrElse("SPARK_GRAFT_SCALE_AMP", "24").toInt
     // executor size for the scaling phases. 2-core executors mirror the
     // small-executor shape real fleets use AND keep the 4N level (8 busy
-    // worker threads) under this host's memory-bandwidth wall — GapProfile
+    // worker threads) under this host's memory-bandwidth wall — profiling
     // measured per-core task-CPU inflating 3.2x at 16 threads but ~1.0x at
     // 8 (BASELINE.md): beyond it the box, not the job, is what stops
     // scaling.
@@ -329,7 +329,7 @@ object Bench {
         .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xmx"))
       // ParallelGC with GC threads capped at the executor's core count:
       // measurably lower per-core CPU inflation than G1 under this
-      // pipeline's allocation rate at high thread counts (GapProfile
+      // pipeline's allocation rate at high thread counts (per-core
       // task-CPU, BASELINE.md), and capping stops a 4-JVM fleet from
       // spawning 4 x ncpu GC threads on one box.
       val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx12g",

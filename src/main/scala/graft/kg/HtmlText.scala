@@ -108,6 +108,4 @@ object HtmlText {
     if (out.nonEmpty) paras += out.toString
     paras.map(unescape).mkString("\n\n")
   }
-
-  def extractStr(html: Array[Byte]): String = extract(html)
 }

@@ -215,6 +215,8 @@ object Inference {
       val modelId: String,
       transport: String => String,
       maxRetries: Int = 3) extends InferenceClient {
+    // 0 would make no call at all and record every page as infer-failed
+    require(maxRetries > 0, s"maxRetries must be > 0, got $maxRetries")
     private def esc(s: String): String =
       s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"

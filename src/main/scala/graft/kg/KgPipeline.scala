@@ -120,6 +120,18 @@ object KgPipeline {
       // dictionary columns — bootstrap, not per-page work); Some(Seq())
       // disables prompting.
       promptDicts: Option[Seq[Inference.HandlerDict]] = None) {
+    require(numPartitions > 0, s"numPartitions must be > 0, got $numPartitions")
+    // 0 would otherwise fail only at task time, inside Iterator.grouped
+    require(microBatch > 0, s"microBatch must be > 0, got $microBatch")
+    // <= 0 links or dedups everything; > 1 silently links nothing
+    Seq("fuzzyAlignMinJaccard" -> fuzzyAlignMinJaccard,
+        "cosineAlignMinSim" -> cosineAlignMinSim,
+        "dedupMinJaccard" -> dedupMinJaccard).foreach { case (name, v) =>
+      v.foreach(t => require(t > 0.0 && t <= 1.0, s"$name must be in (0, 1], got $t"))
+    }
+    // a cap of 0 silently drops every gram
+    fuzzyStopGramMaxDf.foreach(c => require(c > 0, s"fuzzyStopGramMaxDf must be > 0, got $c"))
+
     /** This config with the corpus-wide stages cleared, for an incremental
       * pass — a streaming micro-batch or a failure re-drive. Such a pass
       * sees only its own pages, so it defers canonicalization to

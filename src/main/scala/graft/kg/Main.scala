@@ -21,7 +21,10 @@ import org.apache.spark.sql.SparkSession
   *                                      re-drive the streaming failure log
   *     --out <dir> --rewrite            small-file compaction (file layout
   *                                      only; re-establishes url_bucket=N/)
-  *     --out <dir> --expire <keepLast>  retention sweep + orphan cleanup
+  *     --out <dir> --expire <keepLast> [--grace-ms <ms>]
+  *                                      retention sweep + orphan cleanup
+  *                                      (files younger than the grace
+  *                                      period survive; default 1 h)
   *
   * Reruns with the same --out resume incrementally (left-anti join against
   * committed urls). Two sink protocols:

@@ -163,6 +163,4 @@ object PostProcess {
         col("t.location").as("subj_name"), col("t.relationship").as("predicate"),
         col("t.obj_name").as("obj_name"), col("t.obj_kind").as("obj_kind"))
   }
-
-  def triplesDf(raw: DataFrame): DataFrame = explodeParsed(withParsed(raw))
 }

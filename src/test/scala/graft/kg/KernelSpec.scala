@@ -240,6 +240,9 @@ class PostProcessSpec extends AnyFunSuite {
     }, maxRetries = 3)
     assert(nullErr.infer(two) === Seq("p", "q"))
     assert(calls7 === 1)
+    // zero attempts would never call the endpoint: rejected at construction
+    assertThrows[IllegalArgumentException](
+      new Inference.TransportClient("vllm-test", _ => "", maxRetries = 0))
   }
 
   test("clientFor dispatch: heuristic by default, transport required otherwise") {

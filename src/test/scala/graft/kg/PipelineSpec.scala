@@ -856,6 +856,23 @@ class KgPipelineSpec extends SparkSpec {
     // both resumed runs process exactly the not-yet-done pages
     assert(!a.exists(_.head == "https://fixtures.graft/sauk"))
   }
+
+  test("Config rejects out-of-range parameters at construction") {
+    import KgPipeline.Config
+    val bad: Seq[() => Config] = Seq(
+      () => Config(numPartitions = 0),
+      () => Config(microBatch = 0),
+      () => Config(fuzzyAlignMinJaccard = Some(0.0)),
+      () => Config(fuzzyAlignMinJaccard = Some(1.5)),
+      () => Config(cosineAlignMinSim = Some(-0.1)),
+      () => Config(cosineAlignMinSim = Some(1.01)),
+      () => Config(dedupMinJaccard = Some(0.0)),
+      () => Config(dedupMinJaccard = Some(2.0)),
+      () => Config(fuzzyStopGramMaxDf = Some(0)))
+    bad.foreach(c => assertThrows[IllegalArgumentException](c()))
+    // the closed upper boundary stays valid (kg_pipeline_dedup runs with it)
+    assert(Config(dedupMinJaccard = Some(1.0)).dedupMinJaccard === Some(1.0))
+  }
 }
 
 class RdfSpec extends SparkSpec {
