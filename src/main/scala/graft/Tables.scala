@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 /** Parquet table loaders for the driver-generated synthetic star schema
@@ -30,12 +32,25 @@ object Tables {
     * deterministic under task retries (guide §2.5, SPARK-38388 note).
     * Filters written above this still push down to the parquet scan —
     * PushDownPredicates moves them through RepartitionByExpression
-    * (plan-audited: PushedFilters unchanged). */
+    * (plan-audited: PushedFilters unchanged). Spread never executes its
+    * input: a frame whose plan holds an exchange or a subquery comes back
+    * unchanged, because asking such a frame for its partition count runs
+    * its upstream stages (AQE) only to discard them. */
   def spread(spark: SparkSession, df: DataFrame, key: String): DataFrame = {
-    if (df.isStreaming) return df // .rdd is illegal on a streaming frame
+    // .rdd is illegal on a streaming frame and would run an exchange's stages
+    if (df.isStreaming || !exchangeFree(df)) return df
     val p = spark.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p, col(key)) else df
   }
+
+  /** No shuffle or broadcast exchange and no subquery in the physical
+    * plan. AQE wraps only plans that hold one of those. A cached input is
+    * a leaf here: its own stages run once, for the cache. */
+  private def exchangeFree(df: DataFrame): Boolean =
+    !df.queryExecution.executedPlan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case p => p.subqueries.nonEmpty
+    }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame    = load(spark, sfDir, "orders")

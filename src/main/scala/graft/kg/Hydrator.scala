@@ -146,15 +146,8 @@ object Hydrator {
   /** Hydrate canonicalized triples with strat, mineral, USGS-fallback and
     * gazetteer fields. Input needs: subj_name, predicate, obj_kind,
     * obj_final. Output adds nullable dim columns + subj_lat/subj_lon +
-    * elements + requested_at provenance timestamp.
-    *
-    * `broadcastDims = true` (default) pins all four dim joins as broadcast —
-    * right for dictionary-sized dims (~45k rows / ~9 MB). An explicit hint
-    * cannot be demoted by AQE, so for a web-scale dim snapshot that might
-    * outgrow executor memory, pass `false`: the joins become plain
-    * equi-joins and AQE picks broadcast vs shuffle from runtime sizes — the
-    * same escape hatch the alignment join has via align/alignSalted
-    * (identical output either way; parity-tested in KernelSpec).
+    * elements + requested_at provenance timestamp. The four dim joins are
+    * pinned broadcasts: `Dims.snapshot` bounds every dim to dictionary size.
     *
     * `requestedAt` overrides the provenance timestamp SOURCE: by default
     * every row stamps `lit(jobStart)` (one job, one timestamp — the batch
@@ -164,35 +157,32 @@ object Hydrator {
     * the provenance history of rows an earlier run committed. */
   def hydratePrepared(triples: DataFrame, prepared: Prepared,
                       jobStart: java.sql.Timestamp,
-                      broadcastDims: Boolean = true,
                       requestedAt: Option[Column] = None): DataFrame = {
     val Prepared(stratKeyed, mineralKeyed, gaz, lithKeyed) = prepared
-    val hint: DataFrame => DataFrame =
-      if (broadcastDims) broadcast else identity
 
     val withStrat = triples
       .withColumn("obj_join", Linker.normName(col("obj_final")))
-      .join(hint(stratKeyed.withColumnRenamed("join_norm", "strat_join")),
+      .join(broadcast(stratKeyed.withColumnRenamed("join_norm", "strat_join")),
         col("obj_kind") === Model.ObjKind.Strat && col("obj_join") === col("strat_join"),
         "left")
       .drop("strat_join")
 
     val withMineral = withStrat
-      .join(hint(mineralKeyed.withColumnRenamed("join_norm", "min_join")),
+      .join(broadcast(mineralKeyed.withColumnRenamed("join_norm", "min_join")),
         col("obj_kind") === Model.ObjKind.Mineral && col("obj_join") === col("min_join"),
         "left")
       .drop("min_join")
       .withColumn("elements", elementsUdf(col("formula")))
 
     val withLith = withMineral
-      .join(hint(lithKeyed.withColumnRenamed("join_norm", "lith_join")),
+      .join(broadcast(lithKeyed.withColumnRenamed("join_norm", "lith_join")),
         col("obj_kind") === Model.ObjKind.Lith && col("obj_join") === col("lith_join"),
         "left")
       .drop("lith_join")
 
     val hydrated = withLith
       .withColumn("subj_join", Linker.normName(col("subj_name")))
-      .join(hint(gaz.withColumnRenamed("join_norm", "gaz_join")),
+      .join(broadcast(gaz.withColumnRenamed("join_norm", "gaz_join")),
         col("subj_join") === col("gaz_join"), "left")
       .drop("gaz_join", "gaz_name", "subj_join", "obj_join")
       .withColumnRenamed("lat", "subj_lat")

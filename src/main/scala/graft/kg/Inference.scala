@@ -302,6 +302,8 @@ object Inference {
     * (reference: text2graph/llm.py:281-311). */
   def run(pages: DataFrame, client: InferenceClient, microBatch: Int = 200,
           prompting: Seq[HandlerDict] = Seq.empty): Dataset[Model.RawExtraction] = {
+    // 0 would otherwise fail only at task time, inside Iterator.grouped
+    require(microBatch > 0, s"microBatch must be > 0, got $microBatch")
     val spark = pages.sparkSession
     import spark.implicits._
     val pv = promptVersion(prompting)

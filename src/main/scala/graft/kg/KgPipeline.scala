@@ -79,14 +79,10 @@ object KgPipeline {
       // extracted text; only each duplicate cluster's min-id winner flows
       // into inference. Drops are counted in the lineage `dedup` stage.
       dedupMinJaccard: Option[Double] = None,
-      // true (default): pin `broadcast(done)` on the resume anti-join —
-      // optimal while the done-set fits in driver/executor memory. false:
-      // plain left_anti and let AQE size the build side — the scale path
-      // once `done` approaches page cardinality (10^12 urls cannot be a
-      // pinned broadcast; AQE still picks broadcast while it fits, and
-      // demotes to shuffle join when it does not). Mirrors the
-      // Hydrator.hydratePrepared(broadcastDims) duality.
-      broadcastDone: Boolean = true,
+      // This is the done-set scale path: the resume anti-join always pins
+      // the done-set as a broadcast, and bucket shards keep each run's
+      // slice of a page-cardinality done-set small enough to stay one
+      // (PLANS.md round 8).
       // Some(buckets) => bucket-sharded operation (the 10^12-url resume
       // shape PLANS.md round-4 named): this run processes ONLY pages whose
       // url bucket (pmod(xxhash64(url), 64) — the same transform the
@@ -185,7 +181,7 @@ object KgPipeline {
     val scoped = bucketFilter(pages0, cfg)
     val pages = cfg.checkpointDir match {
       case Some(dir) if fsExists(spark, s"$dir/done") =>
-        scoped.join(doneSide(readDone(spark, s"$dir/done", cfg), cfg),
+        scoped.join(broadcast(readDone(spark, s"$dir/done", cfg)),
           Seq("url"), "left_anti")
       case _ => scoped
     }
@@ -336,7 +332,7 @@ object KgPipeline {
       if (fsExists(spark, donePath)) {
         val done = readDone(spark, donePath, cfg)
         bucketFilter(pages.select("url"), cfg)
-          .join(doneSide(done, cfg), Seq("url"), "left_anti")
+          .join(broadcast(done), Seq("url"), "left_anti")
       } else bucketFilter(pages.select("url"), cfg)
     // done-set layout mirrors the triples sink: url_bucket-partitioned, so
     // a bucket-sharded resume prunes its scan to the shard's directories.
@@ -344,7 +340,7 @@ object KgPipeline {
     // files and partition dirs would break parquet partition discovery.)
     val doneIsFlat = fsExists(spark, donePath) &&
       !spark.read.parquet(donePath).columns.contains("url_bucket")
-    val committed = newUrls.join(doneSide(res.failedUrls, cfg), Seq("url"), "left_anti")
+    val committed = newUrls.join(broadcast(res.failedUrls), Seq("url"), "left_anti")
     if (doneIsFlat) committed.write.mode("append").parquet(donePath)
     else committed.withColumn("url_bucket", urlBucket(col("url")))
       .write.mode("append").partitionBy("url_bucket").parquet(donePath)
@@ -379,8 +375,7 @@ object KgPipeline {
     val scoped = bucketFilter(pages, cfg)
     val todo = done match {
       case Some(d) =>
-        scoped.join(
-          doneSide(bucketFilter(d.select("url"), cfg), cfg), Seq("url"), "left_anti")
+        scoped.join(broadcast(bucketFilter(d.select("url"), cfg)), Seq("url"), "left_anti")
       case None => scoped
     }
     val res = run(spark, todo, dims, client, cfg)
@@ -395,7 +390,7 @@ object KgPipeline {
       "triples" -> triples,
       "lineage" -> res.lineage,
       "done" -> todo.select("url")
-        .join(doneSide(res.failedUrls, cfg), Seq("url"), "left_anti")
+        .join(broadcast(res.failedUrls), Seq("url"), "left_anti")
         .withColumn("url_bucket", urlBucket(col("url")))),
       partitionBy = Map("triples" -> Seq("url_bucket"),
         "done" -> Seq("url_bucket")))
@@ -453,12 +448,6 @@ object KgPipeline {
       (clean.withColumn("url_bucket", urlBucket(col("url"))), Seq("url_bucket"))
     }
   }
-
-  /** Resume done-set build side: pinned broadcast (default, unbeatable
-    * while it fits) or un-hinted for AQE sizing (the page-cardinality
-    * scale path — an explicit hint cannot be demoted by AQE). */
-  private def doneSide(done: DataFrame, cfg: Config): DataFrame =
-    if (cfg.broadcastDone) broadcast(done) else done
 
   /** Narrow a url-keyed frame to the configured bucket shard (no-op when
     * bucket sharding is off). */

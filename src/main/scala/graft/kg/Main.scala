@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *     [--partitions N] [--salted] [--no-canonicalize] [--snapshot] \
   *     [--dedup <minJaccard>] [--open-vocabulary] [--buckets lo-hi] \
   *     [--fuzzy <minJaccard> [--fuzzy-cap <df>]] [--cosine <minSim>
-  *      [--cosine-lsh planes,bands]] [--no-broadcast-done]
+  *      [--cosine-lsh planes,bands]]
   *
   * Maintenance modes (snapshot stores; run instead of a pipeline pass):
   *     --out <dir> --compact            global CC canonicalization rewrite
@@ -62,7 +62,6 @@ object Main {
       fuzzyStopGramMaxDf = opts.get("fuzzy-cap").map(_.toInt),
       cosineAlignMinSim = opts.get("cosine").map(_.toDouble),
       cosineAlignLshPrune = opts.get("cosine-lsh").map(parsePair),
-      broadcastDone = !opts.contains("no-broadcast-done"),
       buckets = opts.get("buckets").map { r =>
         // anchored regexes, not split: "5-" / "-5" / "a-b" all fall through
         // to the usage error instead of silently sharding to one bucket or
@@ -192,7 +191,6 @@ object Main {
       case "--fuzzy-cap" :: v :: rest => parse(rest, acc + ("fuzzy-cap" -> v))
       case "--cosine" :: v :: rest => parse(rest, acc + ("cosine" -> v))
       case "--cosine-lsh" :: v :: rest => parse(rest, acc + ("cosine-lsh" -> v))
-      case "--no-broadcast-done" :: rest => parse(rest, acc + ("no-broadcast-done" -> "1"))
       case "--open-vocabulary" :: rest => parse(rest, acc + ("open-vocabulary" -> "1"))
       case "--compact" :: rest => parse(rest, acc + ("compact" -> "1"))
       case "--compact-dedup" :: v :: rest => parse(rest, acc + ("compact-dedup" -> v))

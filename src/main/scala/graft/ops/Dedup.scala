@@ -291,6 +291,9 @@ object Dedup {
     * distributed (identical output, no up-to-2M-edge driver collect). */
   def dedupe(docs: DataFrame, minJaccard: Double,
              localProbe: Boolean = true): DataFrame = {
+    // <= 0 dedups every candidate pair; > 1 silently dedups nothing
+    require(minJaccard > 0.0 && minJaccard <= 1.0,
+      s"minJaccard must be in (0, 1], got $minJaccard")
     // Tokenize the corpus text ONCE for the whole composition: the
     // signature stage and both verification sides consume the same
     // (doc_id, toks) frame — un-persisted it would be recomputed three

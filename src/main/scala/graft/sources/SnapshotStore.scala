@@ -299,6 +299,8 @@ object SnapshotStore {
                       graceMs: Long = 60 * 60 * 1000L,
                       nowMs: Long = System.currentTimeMillis()): (Int, Int) = {
     require(keepLast >= 1, "must retain at least the head snapshot")
+    // a negative grace puts the cutoff in the future: in-flight staging would go
+    require(graceMs >= 0, s"graceMs must be >= 0, got $graceMs")
     val f = fs(spark, dir)
     val head = currentVersion(spark, dir)
     if (head == 0) return (0, 0)

@@ -216,13 +216,6 @@ object StreamingKg {
     *     re-running converges (exactly-once via determinism, like every
     *     commit in this store).
     *
-    * `cfg.broadcastDone` pins the re-drive url set as a broadcast join
-    * build side — right while the failure log is incident-sized. A
-    * corpus-wide outage makes the log page-cardinality, and a pinned
-    * broadcast cannot be demoted by AQE — `false` gives a plain semi-join
-    * AQE sizes from runtime stats (the resume join's duality, same
-    * rationale).
-    *
     * Returns the committed version; None when the store has no failure
     * log (absent table, or already emptied by a prior re-drive — the job
     * is a read-only no-op then, committing nothing). A fully healed run
@@ -245,8 +238,7 @@ object StreamingKg {
       // pages to re-run: target urls the corpus still has. Target urls the
       // corpus LOST keep their old log rows — clearing them silently would
       // erase the only record that extraction never succeeded.
-      val targetSide = if (cfg.broadcastDone) broadcast(target) else target
-      val redrive = pages.join(targetSide, Seq("url"), "left_semi")
+      val redrive = pages.join(broadcast(target), Seq("url"), "left_semi")
       val res = KgPipeline.run(spark, redrive, dims, client, cfg.incremental)
       val stillMissing = target
         .join(pages.select("url").distinct(), Seq("url"), "left_anti")

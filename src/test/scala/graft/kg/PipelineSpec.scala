@@ -84,32 +84,6 @@ class CanonicalizerSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     assert(a === b)
   }
-
-  test("AQE-managed hydration equals the broadcast-hinted path") {
-    val dims = Dims.tiny(spark)
-    val prepared = Hydrator.prepare(dims)
-    val triples = Seq(
-      ("u1", "h1", "m", "Minnesota", "contains", "Shakopee Formation", "strat"),
-      ("u2", "h2", "m", "Minnesota", "contains", "gold", "mineral"),
-      ("u3", "h3", "m", "Wisconsin", "contains", "shale", "lith"))
-      .toDF("url", "hashed_text", "model_id", "subj_name", "predicate", "obj_name", "obj_kind")
-    val canonical = Canonicalizer(Linker.align(triples, Linker.aliasDim(dims)))
-    val ts = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
-    val cols = Seq("url", "obj_final", "strat_name", "mineral", "lith",
-      "subj_lat", "subj_lon", "formula")
-    val hinted = Hydrator.hydratePrepared(canonical, prepared, ts)
-    val aqe = Hydrator.hydratePrepared(canonical, prepared, ts, broadcastDims = false)
-    // hinted path: the four dim joins add four pinned broadcast hints over
-    // whatever the upstream (alignment) plan already carries; the AQE path
-    // adds none (AQE may still CHOOSE broadcast — the point is it can also
-    // demote if a web-scale dim outgrows memory)
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    def nHints(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.analyzed.collect { case h: ResolvedHint => h }.size
-    assert(nHints(hinted) === nHints(aqe) + 4)
-    assert(aqe.select(cols.map(col): _*).collect().map(_.toSeq).toSet ===
-      hinted.select(cols.map(col): _*).collect().map(_.toSeq).toSet)
-  }
 }
 
 /** JVM-shared prompt capture (local-mode executor threads share this
@@ -291,14 +265,24 @@ class KgPipelineSpec extends SparkSpec {
   test("plan discipline: no sort-merge/nested-loop/cartesian anywhere in the pipeline") {
     // regression guard for the PLANS.md audit: every enrichment join must
     // stay broadcast; any SMJ/BNLJ/cartesian appearing here means a hint
-    // or a key extraction silently broke.
-    val res = KgPipeline.run(spark, Pages.fixtures(spark), dims, client,
-      KgPipeline.Config(numPartitions = 2))
-    val plan = res.triples.queryExecution.executedPlan.toString
-    assert(!plan.contains("SortMergeJoin"), plan.linesIterator.take(40).mkString("\n"))
-    assert(!plan.contains("CartesianProduct"))
-    assert(!plan.contains("BroadcastNestedLoopJoin"))
-    assert(plan.contains("BroadcastHashJoin"))
+    // or a key extraction silently broke. The second run resumes from a
+    // checkpoint that already holds a done set, so the resume anti-join
+    // is held to the same rule.
+    val outDir = java.nio.file.Files.createTempDirectory("kgplanresume").toString
+    KgPipeline.runAndCommit(spark,
+      Pages.fixtures(spark).filter(col("url") === "https://fixtures.graft/sauk"),
+      dims, client, outDir, KgPipeline.Config(numPartitions = 2))
+    Seq(None, Some(s"$outDir/checkpoint")).foreach { checkpointDir =>
+      val res = KgPipeline.run(spark, Pages.fixtures(spark), dims, client,
+        KgPipeline.Config(numPartitions = 2, checkpointDir = checkpointDir))
+      val plan = res.triples.queryExecution.executedPlan.toString
+      assert(!plan.contains("SortMergeJoin"), plan.linesIterator.take(40).mkString("\n"))
+      assert(!plan.contains("CartesianProduct"))
+      assert(!plan.contains("BroadcastNestedLoopJoin"))
+      assert(plan.contains("BroadcastHashJoin"))
+      assert(checkpointDir.isEmpty || plan.linesIterator.exists(l =>
+        l.contains("BroadcastHashJoin") && l.contains("LeftAnti")), plan)
+    }
   }
 
   test("semantic query vector: driver-side Scala equals the engine expression") {
@@ -828,33 +812,6 @@ class KgPipelineSpec extends SparkSpec {
         "per-paragraph slow path) shares kg_search_to_graph's oracle on the " +
         "premise that corpus canonicalization is identity over the fixture " +
         "TTLs — a fixture edit broke that premise")
-  }
-
-  test("AQE-managed resume anti-join equals the broadcast-hinted path") {
-    val outDir = java.nio.file.Files.createTempDirectory("kgdonedual").toString
-    val pages = Pages.fixtures(spark)
-    val firstHalf = pages.filter(
-      col("url").isin("https://fixtures.graft/sauk", "https://fixtures.graft/gold"))
-    KgPipeline.runAndCommit(spark, firstHalf, dims, client,
-      outDir, KgPipeline.Config(numPartitions = 4))
-    val base = KgPipeline.Config(numPartitions = 4,
-      checkpointDir = Some(s"$outDir/checkpoint"))
-    val hinted = KgPipeline.run(spark, pages, dims, client, base)
-    val aqe = KgPipeline.run(spark, pages, dims, client,
-      base.copy(broadcastDone = false))
-    // hinted path pins one more broadcast (the done-set) than the AQE path,
-    // which carries no hint and lets AQE size the build side — the only
-    // posture that survives a page-cardinality done-set
-    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-    def nHints(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.analyzed.collect { case h: ResolvedHint => h }.size
-    assert(nHints(hinted.triples) === nHints(aqe.triples) + 1)
-    val key = Seq("url", "subj_name", "predicate", "obj_name")
-    val a = hinted.triples.select(key.map(col): _*).collect().map(_.toSeq).toSet
-    val b = aqe.triples.select(key.map(col): _*).collect().map(_.toSeq).toSet
-    assert(a === b)
-    // both resumed runs process exactly the not-yet-done pages
-    assert(!a.exists(_.head == "https://fixtures.graft/sauk"))
   }
 
   test("Config rejects out-of-range parameters at construction") {

@@ -310,6 +310,36 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("spread never executes its input: a shuffled frame comes back as is") {
+    // asking a frame with an exchange for its partition count would run its
+    // upstream stages under AQE, only for the repartition to discard them
+    val grouped = Seq((1L, "a"), (2L, "b"), (1L, "c")).toDF("k", "v")
+      .groupBy("k").agg(count(lit(1)).as("n"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "spread"))
+          jobs.incrementAndGet()
+    }
+    // LiveListenerBus.waitUntilEmpty is private[spark]: reach it reflectively
+    def drainBus(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("spread", "Tables.spread probe")
+    try {
+      val out = graft.Tables.spread(spark, grouped, "k")
+      drainBus()
+      assert(jobs.get === 0)
+      assert(out eq grouped)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("LSH near-dup: buckets split sign-opposed clusters, verify stage exact") {
     // two antipodal clusters: +e0-ish and -e0-ish — hyperplane signs
     // separate them, so no cross-cluster candidate can survive

@@ -273,6 +273,9 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(dDel2 === 0)
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$dir/stage/v9-inflight")), "fresh stage dir must survive grace")
+    // a negative grace would put the cutoff in the future and sweep it
+    assertThrows[IllegalArgumentException](
+      SnapshotStore.expireSnapshots(spark, dir, keepLast = 1, graceMs = -1))
   }
 
   test("repeated sweeps: a window covering already-expired versions doesn't crash") {

@@ -134,6 +134,10 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingKg.commitBatchTables(storeDir,
       Map("triples" -> triples.limit(1)), batchId = 0).isEmpty)
     assert(SnapshotStore.currentVersion(spark, storeDir) === v)
+    // no Config on this path: a zero batch size fails at plan time
+    assertThrows[IllegalArgumentException](StreamingKg.rawParsedStream(
+      StreamingKg.pagesStream(spark, pagesDir), dims,
+      new graft.kg.HealToggle.HealingClient, microBatch = 0))
   }
 
   test("failed-url re-drive: healed transport converges the store and empties the log") {
@@ -349,6 +353,9 @@ class StreamingSpec extends SparkSpec {
     assert(SnapshotStore.readSnapshot(spark, shard, v2.get)
       .meta("dedup_dropped_triples") === "0")
     assert(rows(shard) === rows(full))
+    // --compact-dedup's threshold reaches Dedup.dedupe unchecked by Config
+    assertThrows[IllegalArgumentException](StreamingKg.compactDedup(spark, shard,
+      pages.select("url", "text"), minJaccard = 0.0))
   }
 
   test("compaction re-hydration preserves each row's original requested_at provenance") {
