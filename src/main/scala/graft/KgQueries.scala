@@ -161,10 +161,6 @@ object KgQueries {
       .orderBy(desc("score"), col("url")).limit(SearchK)
   }
 
-  /** Unique memory-sink names for the streaming gate query (a restarted
-    * memory query may not reuse an active name). */
-  private val streamGateSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Per-(session, sf-dir, query) cache for the composed-pipeline gate
     * queries (kg_pipeline_dedup, kg_pipeline_failures). Each builds a FULL
     * fresh pipeline — LSH/CC rounds, inference, hydration, commit barriers —
@@ -789,11 +785,13 @@ object KgQueries {
     }},
 
     // §2.8 driver-gated STREAMING: a real Structured Streaming query —
-    // file source → extract → prompt → infer → parse → tier-1 align →
-    // hydrate (StreamingKg.triplesStream) → AvailableNow memory sink — over
-    // the fixture corpus, gated on the Sauk page's full triple set. The
-    // oracle rows are HAND-DERIVED: the 10 (subj, pred, obj) triplets are
-    // the reference's recorded extraction output (tests/conftest.py
+    // file source → extract → prompt → infer → parse
+    // (StreamingKg.rawParsedStream) → tier-1 align → hydrate → exactly-once
+    // snapshot commit (StreamingKg.snapshotSinkWithFailures), AvailableNow
+    // trigger — over the fixture corpus, gated on the Sauk page's full
+    // triple set as read back from the committed store. The oracle rows
+    // are HAND-DERIVED: the 10 (subj, pred, obj) triplets are the
+    // reference's recorded extraction output (tests/conftest.py
     // transcription, Fixtures.SaukGoldenTriples); every object is a
     // dictionary alias (pinned dims), so obj_linked=true; strat_name_id per
     // object read off the pinned dim rows (Dims.pinnedStrat) by the
@@ -801,34 +799,36 @@ object KgQueries {
     // two-sided check that the STREAMING path extracts, links and hydrates
     // exactly what batch fidelity demands.
     "kg_stream_triples" -> { (s, dir) => cachedPipelineQuery(s, dir, "stream") {
-      val tmpPath = java.nio.file.Files.createTempDirectory("gatestreampages")
-      val tmp = tmpPath.toString
-      Pages.fixtures(s).write.mode("overwrite").parquet(tmp)
+      import graft.streaming.StreamingKg
+      val tmps = Seq("gatestreampages", "gatestreamstore", "gatestreamckpt")
+        .map(java.nio.file.Files.createTempDirectory(_))
+      val Seq(pagesDir, storeDir, ckptDir) = tmps.map(_.toString)
+      Pages.fixtures(s).write.mode("overwrite").parquet(pagesDir)
       val (dims, prepared, alias) = cachedDims(s)
-      val client = Inference.pinnedClient
-      val qn = s"gate_stream_triples_${streamGateSeq.incrementAndGet()}"
-      val q = graft.streaming.StreamingKg.triplesStream(
-          graft.streaming.StreamingKg.pagesStream(s, tmp), dims, client,
-          KgPipeline.Config(prebuiltAlias = Some(alias), preparedDims = Some(prepared)))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      // a timed-out query is still appending: reading the memory table then
-      // would cache a PARTIAL result into the per-session gate cache
-      if (!q.awaitTermination(180000)) {
-        q.stop()
-        sys.error("kg_stream_triples: streaming query did not finish in 180 s")
+      val sink = StreamingKg.snapshotSinkWithFailures(
+        StreamingKg.rawParsedStream(StreamingKg.pagesStream(s, pagesDir),
+          dims, Inference.pinnedClient),
+        storeDir, dims,
+        KgPipeline.Config(prebuiltAlias = Some(alias), preparedDims = Some(prepared)))
+      try {
+        val q = sink.writer.option("checkpointLocation", ckptDir)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        // a timed-out query is still committing: reading the store then
+        // would cache a PARTIAL result into the per-session gate cache
+        if (!q.awaitTermination(180000)) {
+          q.stop()
+          sys.error("kg_stream_triples: streaming query did not finish in 180 s")
+        }
+        // the snapshot is eager, so the temp dirs can go in the finally
+        graft.sources.SnapshotStore.read(s, storeDir, "triples").get
+          .filter(col("url") === "https://fixtures.graft/sauk")
+          .select(col("subj_name"), col("predicate"), col("obj_name"),
+            col("obj_linked"), col("strat_name_id"))
+          .localCheckpoint(true)
+      } finally {
+        sink.release()
+        tmps.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
       }
-      val out = s.table(qn)
-        .filter(col("url") === "https://fixtures.graft/sauk")
-        .select(col("subj_name"), col("predicate"), col("obj_name"),
-          col("obj_linked"), col("strat_name_id"))
-        .localCheckpoint(true)
-      // the snapshot above is eager — release the full memory-sink table
-      // and the temp corpus copy
-      s.catalog.dropTempView(qn)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmpPath.toFile)
-      out
     }},
 
     // GraphOutput regrouping: the reference's output unit is a per-paragraph

@@ -120,20 +120,6 @@ object Canonicalizer {
     * fully distributed path runs. Both paths produce identical output. */
   val MaxLocalNames: Int = 500 * 1000
 
-  /** Driver-side normalization — must mirror [[Linker.normName]] exactly.
-    * Spark's `trim` strips only ASCII spaces (0x20), unlike Java's
-    * `String.trim` which strips all controls <= 0x20 — hand-rolled here so
-    * tab/newline-edged names normalize identically on both paths
-    * (divergence caught by NormParitySpec). */
-  private[kg] def normLocal(s: String): String = {
-    var a = 0
-    var b = s.length
-    while (a < b && s.charAt(a) == ' ') a += 1
-    while (b > a && s.charAt(b - 1) == ' ') b -= 1
-    s.substring(a, b).toLowerCase
-      .replaceAll("\\.+$", "").replaceAll("\\s+", " ")
-  }
-
   /** Canonical-name table for the aligned triples: every distinct
     * (kind, surface form) gets a `canonical_name` — the lexicographically
     * smallest clustered surface form (deterministic tie-break).
@@ -156,11 +142,16 @@ object Canonicalizer {
     // directly buys scaling efficiency (BASELINE.md serial-fraction
     // analysis). If the result fits the driver threshold, cluster locally
     // (union-find) instead of paying ~8 Spark job rounds for a
-    // dictionary-sized graph.
+    // dictionary-sized graph. The normalized forms come from the same
+    // Linker.normName expression the distributed path keys on, evaluated
+    // on the probe's distinct rows only.
     val probe = aligned
       .select(col("obj_kind").as("kind"), col("obj_name").as("name"),
         col("obj_canonical").as("canonical"), col("obj_linked").as("linked"))
-      .distinct().limit(MaxLocalNames + 1).collect()
+      .distinct().limit(MaxLocalNames + 1)
+      .withColumn("name_norm", Linker.normName(col("name")))
+      .withColumn("canonical_norm", Linker.normName(col("canonical")))
+      .collect()
 
     if (probe.length <= MaxLocalNames) {
       val linkPairs = probe.filter(_.getBoolean(3))
@@ -176,11 +167,13 @@ object Canonicalizer {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(if (ra._2 <= rb._2) rb else ra) = if (ra._2 <= rb._2) ra else rb
       }
-      // real surface forms: extracted names AND their alignment canonicals
-      val realNames = (probe.map(r => (r.getString(0), r.getString(1))) ++
-        probe.map(r => (r.getString(0), r.getString(2)))).distinct
-      realNames.foreach { case (kind, name) =>
-        union((kind, name), (kind, "\u0000norm:" + normLocal(name)))
+      // real surface forms: extracted names AND their alignment canonicals,
+      // each with its normalized form
+      val normed = (probe.map(r => ((r.getString(0), r.getString(1)), r.getString(4))) ++
+        probe.map(r => ((r.getString(0), r.getString(2)), r.getString(5)))).distinct
+      val realNames = normed.map(_._1)
+      normed.foreach { case ((kind, name), norm) =>
+        union((kind, name), (kind, "\u0000norm:" + norm))
       }
       linkPairs.foreach { r =>
         union((r.getString(0), r.getString(1)), (r.getString(0), r.getString(2)))

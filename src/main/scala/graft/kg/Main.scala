@@ -36,7 +36,8 @@ import org.apache.spark.sql.SparkSession
   * --dedup runs the corpus duplicate gate before inference (LSH →
   * verified Jaccard → CC resolution; drops counted in lineage);
   * --open-vocabulary skips the driver small-graph probes (unbounded
-  * entity/dedup spaces go straight to distributed CC);
+  * entity/dedup spaces go straight to distributed CC) in a pipeline run
+  * and in the --compact and --compact-dedup rewrites;
   * --buckets lo-hi (inclusive url-bucket range, 0-63) shards this run:
   * only pages in the shard's buckets process, and the resume anti-join
   * prunes the done-set scan to those bucket directories — a 64-shard
@@ -94,7 +95,7 @@ object Main {
       // — without it the compacted table would keep dim columns joined on
       // the pre-compaction name (stale next to the new obj_final)
       val v = graft.streaming.StreamingKg.compactCanonicalize(spark, outDir,
-        dims = Some(Dims.snapshot(spark)))
+        dims = Some(Dims.snapshot(spark)), cfg = cfg)
       println(v.map(v => s"[graft] compacted to snapshot v$v at $outDir")
         .getOrElse(s"[graft] nothing to compact at $outDir"))
       spark.stop(); return

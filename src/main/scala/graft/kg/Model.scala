@@ -5,8 +5,9 @@ import java.sql.Timestamp
 /** Typed stage boundaries of the KG-construction pipeline (SURVEY.md §1.1,
   * §3.4). Mirrors the reference's pydantic record tree
   * (reference: text2graph/schema.py:20-447) flattened for Spark:
-  *  - the recursive `Provenance.previous` chain becomes an ordered
-  *    `Seq[ProvRecord]` oldest-to-newest (schema.py:20-44),
+  *  - the recursive `Provenance.previous` chain becomes an inline struct
+  *    array ordered oldest-to-newest, built by Hydrator.hydratePrepared
+  *    (schema.py:20-44),
   *  - the `Stratigraphy | Mineral` union object becomes a discriminator
   *    column `obj_kind` plus nullable per-kind fields (schema.py:417-429),
   *  - nondeterministic uuid4/now() identities become content hashes and a
@@ -26,18 +27,6 @@ object Model {
     * (reference: text2graph/macrostrat.py:118-154). */
   final case class Mention(word: String, start: Int, end: Int)
 
-  final case class PageMentions(
-      url: String,
-      hashed_text: String,
-      mentions: Seq[Mention])
-
-  /** Provenance chain element, flattened (reference: text2graph/schema.py:20-44). */
-  final case class ProvRecord(
-      source_name: String,
-      source_url: String,
-      source_version: String,
-      requested: Timestamp)
-
   /** Raw model output per page — JSON string, shape of the reference's
     * `raw_llm_output` fixture (reference: tests/conftest.py:22-24).
     * `prompt_version` records which prompt handler(s) built the request —
@@ -50,16 +39,6 @@ object Model {
       raw: String,
       model_id: String,
       prompt_version: String)
-
-  /** Parsed, validated triple before linking
-    * (reference: text2graph/schema.py:417-429; llm.py:174-196). */
-  final case class Triple(
-      url: String,
-      hashed_text: String,
-      subj_name: String,
-      predicate: String,
-      obj_name: String,
-      obj_kind: String) // "strat" | "mineral"
 
   /** RDF triple row — final graph materialization unit
     * (reference: text2graph/gkm/convert.py:30-78). `obj_is_literal`

@@ -1,7 +1,7 @@
 package graft.kg
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Lenient raw-output parsing → validated triples (SURVEY.md P3/P4/P5).
@@ -125,21 +125,8 @@ object PostProcess {
     * (the reference logs and returns an empty GraphOutput). */
   def parseOne(raw: String): Seq[ParsedTriplet] = parsePage(raw).triplets
 
-  /** RawExtraction rows → exploded validated [[Model.Triple]] rows. */
-  def triples(raw: Dataset[Model.RawExtraction]): Dataset[Model.Triple] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    raw.mapPartitions { it =>
-      it.flatMap { r =>
-        parseOne(r.raw).map(p =>
-          Model.Triple(r.url, r.hashed_text, p.location, p.relationship,
-            p.obj_name, p.obj_kind))
-      }
-    }
-  }
-
-  /** DataFrame variants keeping extra columns. The UDF returns the
-    * ParsedPage case class so the plan carries a named (parse_status,
+  /** The parse stage keeps the raw frame's other columns. The UDF returns
+    * the ParsedPage case class so the plan carries a named (parse_status,
     * triplets) struct — one JSON parse per row yields both the failure
     * discriminator and the triplet array. */
   private val parseUdf = udf((raw: String) => parsePage(raw))

@@ -6,8 +6,9 @@ import org.apache.spark.storage.StorageLevel
 
 /** The per-page stage chain, wired once for every skin — the batch
   * pipeline ([[KgPipeline.run]], and through it the streaming re-drive),
-  * the streaming triples query and sink micro-batches
-  * (graft.streaming.StreamingKg), and the compaction re-hydration:
+  * the streaming sink's micro-batches
+  * (graft.streaming.StreamingKg.snapshotSinkWithFailures), and the
+  * compaction re-hydration:
   *
   *   parsed → explode → tier 1 (broadcast | salted) → [tier 2 fuzzy]
   *   → [tier 3 cosine] → canonicalize | identity → hydrate
@@ -25,11 +26,12 @@ import org.apache.spark.storage.StorageLevel
   *    batch stage boundary (canonicalization and the run's several outputs
   *    each read it).
   *  - `StageChain.cached(dims, cfg)`: a long-lived chain serving a
-  *    stream. The static sides it builds are cached once, since a
-  *    stream-static join re-evaluates its static side every micro-batch,
-  *    and [[release]] unpersists them. The aligned frame is not
-  *    persisted: a streaming frame cannot be, and a micro-batch is read
-  *    once by its commit.
+  *    stream's micro-batches. No chain runs on a streaming frame: the
+  *    sink applies it to each micro-batch, a batch frame. The static
+  *    sides it builds are cached once per query, since every micro-batch
+  *    would otherwise re-derive them, and [[release]] unpersists them.
+  *    The aligned frame is not persisted: a micro-batch is read once by
+  *    its commit.
   * A prebuilt alias or prepared dims passed in `cfg` stays the caller's:
   * the chain neither caches nor releases it. */
 final class StageChain private (dims: Dims.Snapshot, cfg: KgPipeline.Config,

@@ -124,7 +124,7 @@ object SnapshotStore {
     *
     * The prior snapshot's meta carries forward (new keys win): a compaction
     * must never erase watermarks other writers rely on — the streaming
-    * commitBatch exactly-once check reads meta.batch_id from the head
+    * commitBatchTables exactly-once check reads meta.batch_id from the head
     * snapshot, and a replace that dropped it would reset the watermark and
     * re-admit replayed micro-batches. The merge happens INSIDE the retry
     * loop against the base each attempt actually commits over, so a racing
@@ -222,7 +222,7 @@ object SnapshotStore {
       }.toMap
       // meta: prior snapshot's meta carries forward, new keys win — in BOTH
       // commit modes. Append commits must inherit too: a non-streaming
-      // appender writing into a store also fed by commitBatch would
+      // appender writing into a store also fed by commitBatchTables would
       // otherwise overwrite the head meta wholesale, dropping the batch_id
       // watermark and re-admitting replayed micro-batches (the exact
       // failure the replace-mode carry-forward guards against).

@@ -12,12 +12,13 @@ import graft.kg._
   * naturally a stream of WARC segments: this module runs the same stage
   * chain — extract → batched inference → lenient parse → alignment tiers →
   * hydration — as an incremental `readStream` over arriving page files.
-  * The extract step and the parse → hydrate chain are the batch
-  * pipeline's own, wired once in graft.kg.StageChain; every skin here
-  * configures it with one `KgPipeline.Config`. Every stage is either
-  * stateless (map/mapPartitions/UDF) or a join against a static side, so
-  * the streaming plan is the batch plan minus the inherently-global steps
-  * `Config.incremental` clears:
+  * There is one streaming protocol: [[rawParsedStream]] (extract → infer →
+  * parse, a stateless streaming frame) feeds [[snapshotSinkWithFailures]],
+  * which runs each micro-batch through the batch pipeline's own
+  * parse → hydrate chain (graft.kg.StageChain) and commits its triples and
+  * failure log in one exactly-once snapshot; [[redriveFailed]] heals the
+  * log. Every skin here configures the chain with one `KgPipeline.Config`,
+  * run as `Config.incremental`, which clears the inherently-global steps:
   *  - connected-components canonicalization (iterative; runs as a periodic
   *    batch compaction over the accumulated triples table instead),
   *  - cross-batch dedup (handled by the downstream table's merge keys).
@@ -51,40 +52,14 @@ object StreamingKg {
     pages.withWatermark("warc_ts", watermark)
       .dropDuplicatesWithinWatermark("hashed_text")
 
-  /** Streaming triple extraction: [[rawParsedStream]] → the shared
-    * StageChain, with the batch pipeline's exact `KgPipeline.TripleColumns`
-    * schema (the reference's output unit is always the hydrated triplet,
-    * text2graph/schema.py:441-447). `dedupWatermark = Some(horizon)`
-    * inserts [[dedupPagesStream]] between extraction and inference — the
-    * streaming counterpart of the batch `Config.dedupMinJaccard` gate, so
-    * re-fetched identical pages never reach the model.
-    *
-    * `cfg` runs as `cfg.incremental`: global canonicalization is deferred
-    * to [[compactCanonicalize]], and until then `obj_final =
-    * obj_canonical`, the batch `canonicalize = false` rule. Alignment
-    * tiers 2-3 compare each batch's unlinked names against themselves, a
-    * self-join a streaming frame cannot run: they run per micro-batch in
-    * [[snapshotSinkWithFailures]]. The chain caches the static sides it
-    * builds (alias table, prepared hydration keys) for the query's
-    * lifetime; a long-running caller passes its own
-    * `cfg.prebuiltAlias`/`cfg.preparedDims` and owns their lifetime. */
-  def triplesStream(pages: DataFrame, dims: Dims.Snapshot,
-                    client: Inference.InferenceClient,
-                    cfg: KgPipeline.Config = KgPipeline.Config(),
-                    dedupWatermark: Option[String] = None): DataFrame = {
-    require(cfg.fuzzyAlignMinJaccard.isEmpty && cfg.cosineAlignMinSim.isEmpty,
-      "alignment tiers 2-3 run per micro-batch: use snapshotSinkWithFailures")
-    val c = cfg.incremental
-    StageChain.triples(StageChain.cached(dims, c)(
-      rawParsedStream(pages, dims, client, c.microBatch, dedupWatermark, c.promptDicts)))
-  }
-
   /** The streaming pipeline's PRE-explode stage: extract → [exact-dedup
     * gate] → prompt-build → infer → lenient parse, keeping the per-page
     * `parse_status` discriminator (the batch pipeline's persisted stage
-    * boundary, PostProcess.withParsed). Feed this to
-    * [[snapshotSinkWithFailures]] when the stream must carry the failure
-    * bookkeeping; [[triplesStream]] is this plus the StageChain. */
+    * boundary, PostProcess.withParsed), to feed
+    * [[snapshotSinkWithFailures]]. `dedupWatermark = Some(horizon)` inserts
+    * [[dedupPagesStream]] between extraction and inference — the streaming
+    * counterpart of the batch `Config.dedupMinJaccard` gate, so re-fetched
+    * identical pages never reach the model. */
   def rawParsedStream(pages: DataFrame, dims: Dims.Snapshot,
                       client: Inference.InferenceClient,
                       microBatch: Int = 200,
@@ -105,13 +80,8 @@ object StreamingKg {
   /** Exactly-once micro-batch commit into the snapshot store: a restarted
     * query replays its last batch, so batches at-or-below the manifest's
     * committed batch_id are skipped — replay becomes a no-op instead of a
-    * duplicate append. Returns the committed version, None when skipped. */
-  def commitBatch(dir: String, table: String, batch: DataFrame,
-                  batchId: Long): Option[Int] =
-    commitBatchTables(dir, Map(table -> batch), batchId)
-
-  /** Multi-table form of [[commitBatch]]: all tables publish in the SAME
-    * atomic snapshot (or none, on batch replay). */
+    * duplicate append. All tables publish in the SAME atomic snapshot (or
+    * none, on replay). Returns the committed version, None when skipped. */
   def commitBatchTables(dir: String, tables: Map[String, DataFrame],
                         batchId: Long): Option[Int] = {
     require(tables.nonEmpty, "commitBatchTables needs at least one table")
@@ -126,15 +96,6 @@ object StreamingKg {
     else Some(SnapshotStore.commit(spark, dir, tables,
       meta = Map("batch_id" -> batchId.toString)))
   }
-
-  /** Streaming triples sink: every micro-batch publishes as one atomic
-    * snapshot (graft.sources.SnapshotStore), giving the streaming path the
-    * same snapshot-isolation + exactly-once story as the batch commit. */
-  def snapshotSink(df: DataFrame, dir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        commitBatch(dir, "triples", batch.toDF(), batchId); ()
-      }
 
   /** A started failure sink plus the release hook for its bootstrap
     * caches. [[snapshotSinkWithFailures]]'s StageChain caches the static
@@ -168,9 +129,11 @@ object StreamingKg {
     * dictionary — independent of which other names share the batch — so
     * micro-batch scoping changes nothing vs the batch pipeline on the same
     * pages (parity-tested in StreamingSpec). Unlike canonicalization
-    * (corpus-global, deferred to [[compactCanonicalize]]), the tiers need
-    * no cross-batch state. The chain is built once per query and cached;
-    * FailureSink.release() releases it. */
+    * (corpus-global, deferred to [[compactCanonicalize]]; until then
+    * `obj_final = obj_canonical`, the batch `canonicalize = false` rule),
+    * the tiers need no cross-batch state. The chain is built once per query
+    * and cached; FailureSink.release() releases it. A caller that passes
+    * its own `cfg.prebuiltAlias`/`cfg.preparedDims` owns their lifetime. */
   def snapshotSinkWithFailures(rawParsed: DataFrame, dir: String,
                                dims: Dims.Snapshot,
                                cfg: KgPipeline.Config = KgPipeline.Config()): FailureSink = {
@@ -278,13 +241,15 @@ object StreamingKg {
     *        `requested_at` is PRESERVED through re-hydration (passed as the
     *        provenance timestamp source), so compacting never restamps the
     *        provenance history of rows an earlier run committed —
-    *        `jobStart` is only the fallback for a store whose rows predate
-    *        the column (ADVICE round 5). Omitted, the hydration columns
-    *        pass through unchanged (pure-canonicalize compaction). */
+    *        `cfg.jobStart` is only the fallback for a store whose rows
+    *        predate the column (ADVICE round 5). Omitted, the hydration
+    *        columns pass through unchanged (pure-canonicalize compaction).
+    * @param cfg the deployment's Config: `jobStart` as above, and
+    *        `canonLocalProbe` — an open-vocabulary store skips the driver
+    *        probe here too, where the entity space is the whole store's. */
   def compactCanonicalize(spark: SparkSession, dir: String,
                           dims: Option[Dims.Snapshot] = None,
-                          jobStart: java.sql.Timestamp =
-                            java.sql.Timestamp.valueOf("2024-06-01 00:00:00")): Option[Int] = {
+                          cfg: KgPipeline.Config = KgPipeline.Config()): Option[Int] = {
     import graft.sources.SnapshotStore
     val readVersion = SnapshotStore.currentVersion(spark, dir)
     SnapshotStore.read(spark, dir, "triples",
@@ -294,14 +259,14 @@ object StreamingKg {
       // column set — later micro-batches append the same schema, so
       // SnapshotStore.read never sees a mixed-schema file list. Folding is
       // idempotent: re-canonicalizing already-canonical values is a no-op.
-      val canonicalized = Canonicalizer(triples)
+      val canonicalized = Canonicalizer(triples, cfg.canonLocalProbe)
       val rehydrated = dims match {
         case Some(d) =>
           val core = Seq("url", "hashed_text", "model_id", "prompt_version",
             "subj_name", "predicate", "obj_name", "obj_kind", "obj_canonical",
             "obj_linked", "obj_final", "entity_cluster_id", "requested_at")
             .filter(canonicalized.columns.contains)
-          StageChain(d, KgPipeline.Config(jobStart = jobStart)).hydrate(
+          StageChain(d, cfg).hydrate(
             canonicalized.select(core.map(col): _*),
             requestedAt =
               if (core.contains("requested_at")) Some(col("requested_at")) else None)
@@ -312,9 +277,10 @@ object StreamingKg {
         .select(triples.columns.map(col): _*)
       val (staged, parts) = bucketStaged(spark, dir, compacted)
       // commitReplace carries the prior snapshot's meta forward internally —
-      // commitBatch's exactly-once check reads meta.batch_id from the HEAD
-      // snapshot, and a compaction that dropped it would reset the watermark
-      // to -1 and let a restarted query re-append its replayed micro-batch.
+      // commitBatchTables' exactly-once check reads meta.batch_id from the
+      // HEAD snapshot, and a compaction that dropped it would reset the
+      // watermark to -1 and let a restarted query re-append its replayed
+      // micro-batch.
       SnapshotStore.commitReplace(spark, dir,
         Map("triples" -> staged),
         meta = Map("compaction" -> "canonicalize"),

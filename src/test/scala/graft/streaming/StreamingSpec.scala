@@ -15,25 +15,43 @@ class StreamingSpec extends SparkSpec {
     Dims.gazetteer.map(_.name).toArray,
     Dims.pinnedMinerals.map(_.mineral).toArray)
 
-  test("streaming triple extraction matches batch semantics per row") {
+  /** Streams `pagesDir` through rawParsedStream → snapshotSinkWithFailures
+    * to completion (AvailableNow) and returns the fresh store's dir. */
+  private def sinkRun(pagesDir: String,
+                      c: Inference.InferenceClient = client,
+                      cfg: KgPipeline.Config = KgPipeline.Config(),
+                      dedupWatermark: Option[String] = None): String = {
+    val storeDir = java.nio.file.Files.createTempDirectory("sinkstore").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("sinkckpt").toString
+    val stream = StreamingKg.pagesStream(spark, pagesDir)
+    assert(stream.isStreaming)
+    val sink = StreamingKg.snapshotSinkWithFailures(
+      StreamingKg.rawParsedStream(stream, dims, c, dedupWatermark = dedupWatermark),
+      storeDir, dims, cfg)
+    try {
+      val q = sink.writer.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(60000), "streaming query did not finish in 60 s")
+    } finally sink.release()
+    storeDir
+  }
+
+  private def fixturePagesDir(): String = {
     val dir = java.nio.file.Files.createTempDirectory("pagestream").toString
     Pages.fixtures(spark).write.mode("overwrite").parquet(dir)
+    dir
+  }
 
-    val stream = StreamingKg.pagesStream(spark, dir)
-    assert(stream.isStreaming)
-    val q = StreamingKg.triplesStream(stream, dims, client)
-      .writeStream.format("memory").queryName("triples_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-
-    val got = spark.table("triples_out")
+  test("streaming triple extraction matches batch semantics per row") {
+    import graft.sources.SnapshotStore
+    val triples = SnapshotStore.read(spark, sinkRun(fixturePagesDir()), "triples").get
+    val got = triples
       .filter(col("url") === "https://fixtures.graft/sauk")
       .select("subj_name", "predicate", "obj_name")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(got === Fixtures.SaukGoldenTriples)
     // alignment ran: canonical column exists and the long-form entity linked
-    val shak = spark.table("triples_out")
-      .filter(col("obj_name") === "Shakopee Formation").collect()
+    val shak = triples.filter(col("obj_name") === "Shakopee Formation").collect()
     assert(shak.forall(_.getAs[Boolean]("obj_linked")))
   }
 
@@ -42,38 +60,20 @@ class StreamingSpec extends SparkSpec {
     // pipeline's exact schema (reference: text2graph/schema.py:441-447);
     // only global canonicalization is deferred to compaction, so the batch
     // comparator runs canonicalize = false.
-    val dir = java.nio.file.Files.createTempDirectory("pagestreamhyd").toString
-    Pages.fixtures(spark).write.mode("overwrite").parquet(dir)
-    val q = StreamingKg.triplesStream(StreamingKg.pagesStream(spark, dir), dims, client)
-      .writeStream.format("memory").queryName("triples_hyd_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = spark.table("triples_hyd_out")
+    import graft.sources.SnapshotStore
+    val cfg = KgPipeline.Config(numPartitions = 4)
+    val got = SnapshotStore.read(spark, sinkRun(fixturePagesDir(), cfg = cfg), "triples").get
     assert(got.columns.toSeq === KgPipeline.TripleColumns)
     val batch = KgPipeline.run(spark, Pages.fixtures(spark), dims, client,
-      KgPipeline.Config(numPartitions = 4, canonicalize = false)).triples
-    val cols = Seq("url", "subj_name", "predicate", "obj_name", "obj_canonical",
-      "obj_final", "obj_linked", "entity_cluster_id", "strat_name",
-      "strat_name_long", "strat_name_id", "b_age", "t_age", "mineral",
-      "formula", "lith", "subj_lat", "subj_lon")
+      cfg.copy(canonicalize = false)).triples
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+      df.select(KgPipeline.TripleColumns.map(col): _*).collect().map(_.toSeq).toSet
     assert(rows(got) === rows(batch))
   }
 
   test("snapshot sink: per-batch atomic commits, replayed batch is a no-op") {
     import graft.sources.SnapshotStore
-    val pagesDir = java.nio.file.Files.createTempDirectory("snapsrc").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("snapsink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("snapckpt").toString
-    Pages.fixtures(spark).write.mode("overwrite").parquet(pagesDir)
-
-    val stream = StreamingKg.pagesStream(spark, pagesDir)
-    val q = StreamingKg.snapshotSink(
-        StreamingKg.triplesStream(stream, dims, client), storeDir)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
+    val storeDir = sinkRun(fixturePagesDir())
 
     val v = SnapshotStore.currentVersion(spark, storeDir)
     assert(v >= 1)
@@ -83,13 +83,13 @@ class StreamingSpec extends SparkSpec {
 
     // replay semantics: re-committing an already-committed batch id skips
     val n1 = committed.count()
-    val replayed = StreamingKg.commitBatch(storeDir, "triples",
-      committed.limit(1), batchId = 0)
+    val replayed = StreamingKg.commitBatchTables(storeDir,
+      Map("triples" -> committed.limit(1)), batchId = 0)
     assert(replayed.isEmpty)
     assert(SnapshotStore.read(spark, storeDir, "triples").get.count() === n1)
     // a NEW batch id commits and appends
-    val next = StreamingKg.commitBatch(storeDir, "triples",
-      committed.limit(1), batchId = 999)
+    val next = StreamingKg.commitBatchTables(storeDir,
+      Map("triples" -> committed.limit(1)), batchId = 999)
     assert(next.contains(v + 1))
     assert(SnapshotStore.read(spark, storeDir, "triples").get.count() === n1 + 1)
   }
@@ -97,8 +97,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming failure bookkeeping: failed urls commit atomically with triples") {
     import graft.sources.SnapshotStore
     val pagesDir = java.nio.file.Files.createTempDirectory("failsrc").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("failsink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("failckpt").toString
     def page(u: String, t: String) =
       (u, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
         HtmlText.render(t, "en"), t, "en")
@@ -109,16 +107,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("url", "warc_ts", "html", "text", "lang")
       .write.mode("overwrite").parquet(pagesDir)
     graft.kg.HealToggle.healed = false
-    val raw = StreamingKg.rawParsedStream(
-      StreamingKg.pagesStream(spark, pagesDir), dims,
-      new graft.kg.HealToggle.HealingClient)
-    val sink = StreamingKg.snapshotSinkWithFailures(raw, storeDir, dims)
-    try {
-      val q = sink.writer
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(60000)
-    } finally sink.release()
+    val storeDir = sinkRun(pagesDir, new graft.kg.HealToggle.HealingClient)
 
     // one atomic snapshot carries BOTH tables
     val failed = SnapshotStore.read(spark, storeDir, "failed").get
@@ -143,8 +132,6 @@ class StreamingSpec extends SparkSpec {
   test("failed-url re-drive: healed transport converges the store and empties the log") {
     import graft.sources.SnapshotStore
     val pagesDir = java.nio.file.Files.createTempDirectory("redrivesrc").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("redrivesink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("redriveckpt").toString
     def page(u: String, t: String) =
       (u, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
         HtmlText.render(t, "en"), t, "en")
@@ -156,15 +143,7 @@ class StreamingSpec extends SparkSpec {
     pagesDf.write.mode("overwrite").parquet(pagesDir)
     // 1. stream with a DOWN transport: 2 pages land in the failure log
     graft.kg.HealToggle.healed = false
-    val raw = StreamingKg.rawParsedStream(
-      StreamingKg.pagesStream(spark, pagesDir), dims,
-      new graft.kg.HealToggle.HealingClient)
-    val sink = StreamingKg.snapshotSinkWithFailures(raw, storeDir, dims)
-    try {
-      val q = sink.writer.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(60000))
-    } finally sink.release()
+    val storeDir = sinkRun(pagesDir, new graft.kg.HealToggle.HealingClient)
     assert(SnapshotStore.read(spark, storeDir, "failed").get.count() === 2L)
     // 2. transport heals; first re-drive sees a corpus MISSING one failed
     //    page — that url's log row is carried, the other heals
@@ -198,8 +177,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming alignment tiers: micro-batch fuzzy+cosine equal the batch pipeline") {
     import graft.sources.SnapshotStore
     val pagesDir = java.nio.file.Files.createTempDirectory("tiersrc").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("tiersink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("tierckpt").toString
     // dim knows only "Waldron Shale"; tier-1 misses the misspelling, the
     // capped fuzzy tier scores it below its bar (Jaccard 9/13 < 0.75) and
     // the cosine tier links it (sim 0.859 >= 0.8) — inside a micro-batch
@@ -214,16 +191,7 @@ class StreamingSpec extends SparkSpec {
       Dims.gazetteer.map(_.name).toArray, Array())
     val tiers = KgPipeline.Config(numPartitions = 2, fuzzyAlignMinJaccard = Some(0.75),
       fuzzyStopGramMaxDf = Some(2), cosineAlignMinSim = Some(0.8))
-    val raw = StreamingKg.rawParsedStream(
-      StreamingKg.pagesStream(spark, pagesDir), dims, tierClient)
-    val sink = StreamingKg.snapshotSinkWithFailures(raw, storeDir, dims, tiers)
-    try {
-      val q = sink.writer
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(60000), "streaming query did not finish in 60 s")
-    } finally sink.release()
-    val streamed = SnapshotStore.read(spark, storeDir, "triples").get
+    val streamed = SnapshotStore.read(spark, sinkRun(pagesDir, tierClient, tiers), "triples").get
     val on = streamed.filter(col("obj_name") === "Waldron Shael").collect().head
     assert(on.getAs[Boolean]("obj_linked"))
     assert(on.getAs[String]("obj_final") === "Waldron Shale")
@@ -246,10 +214,18 @@ class StreamingSpec extends SparkSpec {
       (url, "h", "m", "Minnesota", "contains", name, "strat", name, false))
       .toDF("url", "hashed_text", "model_id", "subj_name", "predicate",
         "obj_name", "obj_kind", "obj_canonical", "obj_linked")
+    def commit(dir: String, df: org.apache.spark.sql.DataFrame, batchId: Long) =
+      StreamingKg.commitBatchTables(dir, Map("triples" -> df), batchId)
     // two micro-batches carry dictionary-UNKNOWN variants of one entity —
     // per-batch alignment cannot unify them, only global CC can
-    StreamingKg.commitBatch(dir, "triples", aligned("u1", "Foo Formation"), 0)
-    StreamingKg.commitBatch(dir, "triples", aligned("u2", "foo formation."), 1)
+    def twoBatches(dir: String): Unit = {
+      commit(dir, aligned("u1", "Foo Formation"), 0)
+      commit(dir, aligned("u2", "foo formation."), 1)
+    }
+    def canonMap(dir: String) = SnapshotStore.read(spark, dir, "triples").get
+      .select("obj_name", "obj_canonical").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    twoBatches(dir)
     val before = SnapshotStore.read(spark, dir, "triples").get
 
     val v = StreamingKg.compactCanonicalize(spark, dir)
@@ -258,17 +234,22 @@ class StreamingSpec extends SparkSpec {
     // schema-stable rewrite: canonicalization folds into obj_canonical, the
     // column set never drifts from the stream's append schema
     assert(after.columns.toSeq === before.columns.toSeq)
-    val canon = after.select("obj_name", "obj_canonical").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val canon = canonMap(dir)
     assert(canon("Foo Formation") === "Foo Formation")
     assert(canon("foo formation.") === "Foo Formation")
+    // an open-vocabulary store (no driver probe) compacts to the same map
+    val openDir = java.nio.file.Files.createTempDirectory("compactopen").toString
+    twoBatches(openDir)
+    assert(StreamingKg.compactCanonicalize(spark, openDir,
+      cfg = KgPipeline.Config(canonLocalProbe = false)).contains(3))
+    assert(canonMap(openDir) === canon)
     // the batch_id watermark survives the replace-mode commit: a restarted
     // query replaying its last micro-batch must still be skipped
     assert(SnapshotStore.readSnapshot(spark, dir, 3).meta.get("batch_id")
       .contains("1"))
-    assert(StreamingKg.commitBatch(dir, "triples", aligned("u2", "foo formation."), 1).isEmpty)
+    assert(commit(dir, aligned("u2", "foo formation."), 1).isEmpty)
     // and later micro-batches append the same schema readably
-    StreamingKg.commitBatch(dir, "triples", aligned("u3", "FOO formation"), 2)
+    commit(dir, aligned("u3", "FOO formation"), 2)
     val mixed = SnapshotStore.read(spark, dir, "triples").get
     assert(mixed.columns.toSeq === before.columns.toSeq && mixed.count() === 3)
     // time travel: the pre-compaction version is still readable, uncompacted
@@ -366,12 +347,13 @@ class StreamingSpec extends SparkSpec {
     val committed = KgPipeline.run(spark, Pages.fixtures(spark), dims, client,
       KgPipeline.Config(numPartitions = 2, canonicalize = false, jobStart = t1))
       .triples.select(KgPipeline.TripleColumns.map(col): _*)
-    StreamingKg.commitBatch(dir, "triples", committed, 0)
+    StreamingKg.commitBatchTables(dir, Map("triples" -> committed), 0)
     // ...and a LATER compaction that re-hydrates (dims supplied) with its
     // own jobStart must not restamp them: requested_at and every
     // provenance-hop timestamp keep the original run's value (ADVICE r5)
     val t2 = java.sql.Timestamp.valueOf("2025-05-05 05:05:05")
-    StreamingKg.compactCanonicalize(spark, dir, dims = Some(dims), jobStart = t2)
+    StreamingKg.compactCanonicalize(spark, dir, dims = Some(dims),
+      cfg = KgPipeline.Config(jobStart = t2))
     val after = SnapshotStore.read(spark, dir, "triples").get
     assert(after.columns.toSeq === KgPipeline.TripleColumns)
     assert(after.count() === committed.count())
@@ -407,20 +389,16 @@ class StreamingSpec extends SparkSpec {
       ("2024-01-01 00:05:00.0", "view", 1L)))
   }
 
-  test("dedup gate inside triplesStream: identical page spends inference once") {
+  test("dedup gate in rawParsedStream: identical page spends inference once") {
     val dir = java.nio.file.Files.createTempDirectory("pagestreamdedup").toString
     val pages = Pages.fixtures(spark)
     pages.unionByName(
         pages.filter(col("url") === "https://fixtures.graft/sauk")
           .withColumn("url", lit("https://fixtures.graft/sauk-copy")))
       .write.mode("overwrite").parquet(dir)
-    val q = StreamingKg.triplesStream(StreamingKg.pagesStream(spark, dir),
-        dims, client, dedupWatermark = Some("1 hour"))
-      .writeStream.format("memory").queryName("triples_dedup_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val urls = spark.table("triples_dedup_out").select("url").distinct()
-      .collect().map(_.getString(0)).toSet
+    val store = sinkRun(dir, dedupWatermark = Some("1 hour"))
+    val urls = graft.sources.SnapshotStore.read(spark, store, "triples").get
+      .select("url").distinct().collect().map(_.getString(0)).toSet
     assert(urls.count(Set("https://fixtures.graft/sauk",
       "https://fixtures.graft/sauk-copy")) === 1)
   }
