@@ -161,23 +161,6 @@ object KgQueries {
       .orderBy(desc("score"), col("url")).limit(SearchK)
   }
 
-  /** Per-(session, sf-dir, query) cache for the composed-pipeline gate
-    * queries (kg_pipeline_dedup, kg_pipeline_failures). Each builds a FULL
-    * fresh pipeline — LSH/CC rounds, inference, hydration, commit barriers —
-    * whose output is a few dozen deterministic rows; re-building it for the
-    * Bench timed pass after the warmup pass measured only fixed bootstrap
-    * twice (19.4 s of a 58.6 s gate artifact in round 4). The builder must
-    * return an eagerly-materialized frame (localCheckpoint) and release its
-    * own pipeline intermediates, so the cache holds bounded row sets only. */
-  private val pipelineQueryCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-  private def cachedPipelineQuery(s: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    val it = pipelineQueryCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    pipelineQueryCache.computeIfAbsent((s, dir, name), _ => build)
-  }
-
   val queries: Map[String, Q] = Map(
     // P11 + §7.2-1: page synthesis + the byte-identical extract invariant.
     // extracted_hash is computed by running extract(render(text)) — it can
@@ -366,7 +349,7 @@ object KgQueries {
     // fingerprints and the inference-side drop count are deterministic even
     // though the per-cluster WINNER (min url-hash) is an engine detail the
     // oracle never needs to know.
-    "kg_pipeline_dedup" -> { (s, dir) => cachedPipelineQuery(s, dir, "dedup") {
+    "kg_pipeline_dedup" -> { (s, dir) =>
       import s.implicits._
       val (dims, prepared, alias) = cachedDims(s)
       val render = udf((t: String, l: String) => HtmlText.render(t, l))
@@ -396,7 +379,7 @@ object KgQueries {
       val out = kept.unionByName(drops).localCheckpoint(true)
       res.cleanup()
       out
-    }},
+    },
 
     // The failure-bookkeeping pipeline gate (SURVEY B7; the reference's
     // re-drivable "NA" placeholder semantics,
@@ -406,7 +389,7 @@ object KgQueries {
     // stage (unsalvageable output); the lineage stage rows and the
     // failed-url set must count exactly those pages, derivable from doc_id
     // arithmetic alone.
-    "kg_pipeline_failures" -> { (s, dir) => cachedPipelineQuery(s, dir, "failures") {
+    "kg_pipeline_failures" -> { (s, dir) =>
       val (dims, prepared, alias) = cachedDims(s)
       val render = udf((t: String, l: String) => HtmlText.render(t, l))
       val pages = Tables.documents(s, dir).filter(col("doc_id") < 40)
@@ -431,7 +414,7 @@ object KgQueries {
       val out = stages.unionByName(failed).localCheckpoint(true)
       res.cleanup()
       out
-    }},
+    },
 
     // Recall gate on the reference's OWN eval artifact
     // (data/testset_micro.parquet.gzip, 30 real xDD paragraphs transcribed
@@ -452,7 +435,7 @@ object KgQueries {
     // dictionary is the ubiquitous function words ("the", "of") — present
     // in every found paragraph (verified in the oracle derivation), making
     // the gate a pure object-recall measurement.
-    "kg_eval_recall" -> { (s, dir) => cachedPipelineQuery(s, dir, "evalrecall") {
+    "kg_eval_recall" -> { (s, dir) =>
       import s.implicits._
       val rows = EvalSet.testsetMicro
       val (dims, prepared, _) = cachedDims(s)
@@ -485,7 +468,7 @@ object KgQueries {
         .localCheckpoint(true)
       res.cleanup()
       out
-    }},
+    },
 
     // CC canonicalization: cluster surface variants, canonical = lexical min
     // of the cluster. Spark runs the real iterative connected-components;
@@ -768,7 +751,7 @@ object KgQueries {
     // spec test, so a fixture edit that breaks it fails with a clear
     // message, not a confusing oracle mismatch. A gate-proven twin across
     // ENTRY POINTS rather than physical plans.
-    "kg_search_to_graph_slow" -> { (s, dir) => cachedPipelineQuery(s, dir, "search_slow") {
+    "kg_search_to_graph_slow" -> { (s, dir) =>
       val scored = searchScored(s).localCheckpoint(true) // bounded: ≤ SearchK rows
       val (dims, prepared, alias) = cachedDims(s)
       val client = Inference.pinnedClient
@@ -782,7 +765,7 @@ object KgQueries {
         .localCheckpoint(true)
       res.cleanup()
       out
-    }},
+    },
 
     // §2.8 driver-gated STREAMING: a real Structured Streaming query —
     // file source → extract → prompt → infer → parse
@@ -798,7 +781,7 @@ object KgQueries {
     // firstHit key rule. The engine never produced these values — a
     // two-sided check that the STREAMING path extracts, links and hydrates
     // exactly what batch fidelity demands.
-    "kg_stream_triples" -> { (s, dir) => cachedPipelineQuery(s, dir, "stream") {
+    "kg_stream_triples" -> { (s, dir) =>
       import graft.streaming.StreamingKg
       val tmps = Seq("gatestreampages", "gatestreamstore", "gatestreamckpt")
         .map(java.nio.file.Files.createTempDirectory(_))
@@ -814,7 +797,7 @@ object KgQueries {
         val q = sink.writer.option("checkpointLocation", ckptDir)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
         // a timed-out query is still committing: reading the store then
-        // would cache a PARTIAL result into the per-session gate cache
+        // would return a PARTIAL result
         if (!q.awaitTermination(180000)) {
           q.stop()
           sys.error("kg_stream_triples: streaming query did not finish in 180 s")
@@ -829,7 +812,7 @@ object KgQueries {
         sink.release()
         tmps.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(p.toFile))
       }
-    }},
+    },
 
     // GraphOutput regrouping: the reference's output unit is a per-paragraph
     // graph (schema.py:432-447 GraphOutput = text hash + triplet list); this

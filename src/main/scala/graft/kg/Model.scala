@@ -1,7 +1,5 @@
 package graft.kg
 
-import java.sql.Timestamp
-
 /** Typed stage boundaries of the KG-construction pipeline (SURVEY.md §1.1,
   * §3.4). Mirrors the reference's pydantic record tree
   * (reference: text2graph/schema.py:20-447) flattened for Spark:
@@ -14,14 +12,6 @@ import java.sql.Timestamp
   *    pipeline-start timestamp (schema.py:23,27 — determinism requirement).
   */
 object Model {
-
-  /** Input row: Common-Crawl-style page (BASELINE.json input_hint). */
-  final case class Page(
-      url: String,
-      warc_ts: Timestamp,
-      html: Array[Byte],
-      text: String,
-      lang: String)
 
   /** One dictionary hit inside a page text
     * (reference: text2graph/macrostrat.py:118-154). */

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Large-scale corpus deduplication operators.
@@ -14,15 +15,20 @@ import org.apache.spark.sql.functions._
   *  - exact: one groupBy on a 128-bit content hash. Shuffle is the hash
   *    column only (project early, never the text).
   *  - MinHash + LSH: k independent min-hashes from seeded md5 over the
-  *    token set, banded so that only same-band collisions join — candidate
-  *    generation is an equi-join on (band index, band hash), never an
-  *    all-pairs comparison. At 10^12 docs the band join is the only
+  *    token set, banded so that only same-band collisions pair — candidates
+  *    are the pairs of each (band index, band hash) bucket, never an
+  *    all-pairs comparison. At 10^12 docs the bucket exchange is the only
   *    shuffle, sized |docs| x bands.
   *  - SimHash: 16-bit majority fingerprint; equality groups find
   *    near-identical token distributions with a single groupBy.
-  *  - n-gram Jaccard: verification stage for candidate pairs — exploded
-  *    token join + pair aggregation, restricted to candidates (or a bounded
-  *    id range in the driver-gate query) to stay sub-quadratic.
+  *  - n-gram Jaccard: verification stage for candidate pairs — array
+  *    intersection per pair, restricted to candidates (or a bounded id
+  *    range in the driver-gate query) to stay sub-quadratic.
+  *
+  * Every bucket-local pair generator (MinHash and SimHash candidates,
+  * all-pairs Jaccard, Similarity.lshNearDup) goes through one kernel,
+  * [[bucketPairs]], whose memory per key and per row is bounded by
+  * [[PairBlock]] however hot a bucket gets.
   *
   * Hash parity note: md5 (not xxhash64) everywhere so the DuckDB oracle can
   * reproduce signatures byte-for-byte; at production scale xxhash64 halves
@@ -36,18 +42,57 @@ object Dedup {
   def tokens(textCol: Column): Column =
     array_distinct(filter(split(textCol, " "), t => t =!= ""))
 
-  /** All ordered pairs (x, y) with x before y of a SORTED array column —
-    * the bucket-local pair generator that replaces a bucket self-join.
-    * A self-join evaluates the (often expensive) bucket-producing subtree
-    * once per join SIDE — Spark cannot reuse the exchange because the two
-    * sides' projections differ — while groupBy(bucket) + this expression
-    * computes it exactly once (round-7 plan audit: the simhash fingerprint
-    * subtree appeared 8x in dedup_simhash_near's physical plan). Work is
-    * O(pairs-per-bucket) either way. */
-  private[ops] def orderedPairs(ids: Column): Column =
+  /** All ordered pairs (x, y) with x before y of a SORTED array column:
+    * the within-block expansion of [[bucketPairs]]. */
+  private def orderedPairs(ids: Column): Column =
     flatten(transform(ids, (x, i) =>
       transform(slice(ids, i + lit(2), size(ids)),
         y => struct(x.as("a"), y.as("b")))))
+
+  /** Most distinct items of one bucket that [[bucketPairs]] expands in one
+    * block. A block pair's aggregation key then holds at most
+    * 2 * PairBlock items and its generated row at most PairBlock^2 pairs
+    * (65,536: about 2 MiB for long items), whatever the bucket size. */
+  private[ops] val PairBlock = 256
+
+  /** The pair kernel of every bucket-local pair generator: each pair
+    * (a, b), a < b, of the distinct non-null `item`s that share a
+    * `bucket`, once per bucket. Columns `a` and `b`.
+    *
+    * It replaces a bucket self-join, which evaluates the (often expensive)
+    * bucket-producing subtree once per join side — Spark cannot reuse the
+    * exchange because the two sides' projections differ (round-7 plan
+    * audit: the simhash fingerprint subtree appeared 8x in
+    * dedup_simhash_near's plan). Here one exchange on the bucket feeds two
+    * windows and the aggregation, so the subtree runs once.
+    *
+    * Skew bound: a dense_rank over the bucket cuts it into blocks of at
+    * most [[PairBlock]] distinct items, and each item is copied to every
+    * (p, q) block pair, p <= q, that holds its block. One groupBy on
+    * (bucket, p, q) collects at most 2 * PairBlock items per key; p = q
+    * expands by [[orderedPairs]], p < q takes the two blocks' cross
+    * product (every rank in p is below every rank in q). A hot bucket
+    * never lands whole in one aggregation buffer or one generated row,
+    * and the windows' row buffers spill. Work is O(pairs) as before. */
+  private[ops] def bucketPairs(df: DataFrame, bucket: Seq[Column], item: Column): DataFrame = {
+    val keys = bucket.indices.map(i => col(s"k$i"))
+    val w = Window.partitionBy(keys: _*)
+    // an item in block blk meets block o in key (least, greatest): it is
+    // that key's left block when blk <= o, its right block when blk > o
+    df.select(bucket.zipWithIndex.map { case (c, i) => c.as(s"k$i") } :+ item.as("x"): _*)
+      .filter(col("x").isNotNull)
+      .withColumn("blk", floor((dense_rank().over(w.orderBy(col("x"))) - 1) / PairBlock))
+      .withColumn("top", max(col("blk")).over(w)) // a window cannot sit in a generator
+      .withColumn("o", explode(sequence(lit(0L), col("top"))))
+      .groupBy(keys :+ least(col("blk"), col("o")).as("p")
+        :+ greatest(col("blk"), col("o")).as("q"): _*)
+      .agg(sort_array(collect_set(when(col("blk") <= col("o"), col("x")))).as("l"),
+        collect_set(when(col("blk") > col("o"), col("x"))).as("r"))
+      .select(explode(when(col("p") === col("q"), orderedPairs(col("l")))
+        .otherwise(flatten(transform(col("l"), a =>
+          transform(col("r"), b => struct(a.as("a"), b.as("b"))))))).as("pr"))
+      .select("pr.a", "pr.b")
+  }
 
   /** Distinct word n-gram shingles (n consecutive tokens joined by one
     * space) — pure array expressions, codegen'd. Documents shorter than n
@@ -94,9 +139,9 @@ object Dedup {
     *
     * One pass: the per-doc band hashes are emitted as an exploded array (the
     * signature aggregation runs ONCE — the former per-band unionAll + self-
-    * join evaluated it 4x), docs grouped per (band, band_hash) bucket, and
-    * pairs generated bucket-locally. Identical pair set; the bucket group
-    * is the same equi-key the join used, never all-pairs. */
+    * join evaluated it 4x) and [[bucketPairs]] pairs the docs of each
+    * (band, band_hash) bucket. Identical pair set; the bucket is the same
+    * equi-key the join used, never all-pairs. */
   def minhashCandidates(docs: DataFrame): DataFrame =
     minhashCandidatesToks(docTokens(docs))
 
@@ -108,12 +153,9 @@ object Dedup {
       val cols = (b * rows until (b + 1) * rows).map(i => col(s"h$i"))
       struct(lit(b).as("band"), md5(concat_ws("|", cols: _*)).as("band_hash"))
     }
-    sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .groupBy(col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))
-      .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(orderedPairs(col("ids"))).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+    bucketPairs(sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb")),
+        Seq(col("bb.band"), col("bb.band_hash")), col("doc_id"))
+      .select(col("a").as("doc_a"), col("b").as("doc_b"))
       .distinct()
   }
 
@@ -153,9 +195,9 @@ object Dedup {
   /** SimHash NEAR-duplicates: pairs within Hamming distance `maxHamming`.
     * Pigeonhole banding — the fingerprint splits into `nBlocks` equal bit
     * blocks; any pair within Hamming nBlocks-1 must agree exactly on at
-    * least one block, so candidates come from an equi-join on
-    * (block index, block bits) — never an all-pairs comparison — and the
-    * exact Hamming check is bit_count(xor) on the candidates. */
+    * least one block, so candidates are the pairs of each
+    * (block index, block bits) bucket — never an all-pairs comparison —
+    * and the exact Hamming check is bit_count(xor) on the candidates. */
   def simhashNearDup(docs: DataFrame, nBits: Int = 32, nBlocks: Int = 4,
                      maxHamming: Int = 3): DataFrame = {
     require(maxHamming < nBlocks,
@@ -168,23 +210,17 @@ object Dedup {
     // One pass over the fingerprint aggregation (the former per-block
     // unionAll + self-join evaluated the fp subtree 2*nBlocks times —
     // round-7 plan audit: 8 copies in the physical plan): posexplode the
-    // block values, group docs per (block index, block bits) bucket, and
-    // generate pairs bucket-locally. The bucket group is the same equi-key
-    // the join used — never an all-pairs comparison.
+    // block values and let bucketPairs pair the docs of each
+    // (block index, block bits) bucket, carrying the fingerprint along.
     val blockVals = array((0 until nBlocks).map(b =>
       shiftright(col("simhash"), b * blockBits)
         .bitwiseAND(lit((1L << blockBits) - 1))): _*)
-    fp.select(col("doc_id"), col("simhash"),
-        posexplode(blockVals).as(Seq("blk", "blk_val")))
-      .groupBy("blk", "blk_val")
-      .agg(sort_array(collect_set(struct(col("doc_id"), col("simhash")))).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(explode(orderedPairs(col("ds"))).as("p"))
-      .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        col("p.a.simhash").as("sh_a"), col("p.b.simhash").as("sh_b"))
-      .distinct() // (doc_a, doc_b) determine (sh_a, sh_b): same pair set
-      .select(col("doc_a"), col("doc_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
+    bucketPairs(fp.select(col("doc_id"), col("simhash"),
+        posexplode(blockVals).as(Seq("blk", "blk_val"))),
+        Seq(col("blk"), col("blk_val")), struct(col("doc_id"), col("simhash")))
+      .distinct() // a doc pair is one (doc_id, simhash) struct pair
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -194,40 +230,20 @@ object Dedup {
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("min_doc_id"))
       .filter(col("n_docs") > 1)
 
-  /** Attach per-doc set sizes (computed CLOSED-FORM from the doc scan —
-    * sz = size of the distinct element array, no explode + groupBy pass)
-    * and emit thresholded Jaccard rows. `inter` carries pairs with >= 1
-    * shared element only, matching the join-generated pair universe. */
-  private def jaccardOf(sizes: DataFrame, inter: DataFrame, minJaccard: Double): DataFrame =
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sz_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "sz_b"), "doc_b")
-      .withColumn("jaccard",
-        round(col("inter") / (col("sz_a") + col("sz_b") - col("inter")) + TextOps.RoundEps, 4))
-      .filter(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "jaccard")
-
-  /** Shared all-pairs intersection counter: explode the element array ONCE,
-    * group docs per element, generate bucket-local pairs, count shared
-    * elements per pair. The former element self-join evaluated the
-    * tokenize subtree once per side (plus once more for sizes); this runs
-    * it once and the sizes come closed-form from the scan. */
+  /** All-pairs Jaccard over the distinct element array `elems`: explode
+    * it ONCE, pair the docs that share an element by [[bucketPairs]]
+    * (bucket = element), and score the distinct pairs by [[jaccardToks]].
+    * Spread only the explode side: the per-row tokenize/shingle and the
+    * per-element fan-out are the compute worth parallelizing, while the
+    * scoring sides become BROADCAST builds, where a pre-broadcast
+    * repartition is pure overhead (round-7 plan audit, same pattern as
+    * Similarity.lshNearDup). */
   private def allPairsJaccard(docs: DataFrame, elems: Column, minJaccard: Double): DataFrame = {
-    // spread ONLY the explode side — the per-row tokenize/shingle + the
-    // per-element fan-out is the compute worth parallelizing; the sizes
-    // side becomes a BROADCAST build in jaccardOf, where a pre-broadcast
-    // repartition is pure overhead (round-7 plan audit, same pattern as
-    // Similarity.lshNearDup)
-    val tok = graft.Tables.spread(docs.sparkSession, docs, "doc_id")
-      .select(col("doc_id"), explode(elems).as("tok"))
-    val inter = tok.groupBy("tok")
-      .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(orderedPairs(col("ids"))).as("p"))
-      .groupBy(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    val sizes = docs.select(col("doc_id"), size(elems).as("sz"))
-    jaccardOf(sizes, inter, minJaccard)
+    val cands = bucketPairs(graft.Tables.spread(docs.sparkSession, docs, "doc_id")
+        .select(col("doc_id"), explode(elems).as("tok")), Seq(col("tok")), col("doc_id"))
+      .select(col("a").as("doc_a"), col("b").as("doc_b"))
+      .distinct()
+    jaccardToks(docs.select(col("doc_id"), elems.as("toks")), cands, minJaccard)
   }
 
   /** Token-set Jaccard over ALL pairs of `docs` — the verification baseline
@@ -246,8 +262,8 @@ object Dedup {
   /** Candidate-restricted token-set Jaccard — the 10^12-doc shape: token
     * intersections are computed ONLY for the supplied candidate pairs
     * (doc_a, doc_b), never all-pairs. Each side's distinct-token ARRAY is
-    * attached by an equi-join on doc id and the intersection is the
-    * codegen'd array_intersect — no token explode, no per-pair aggregation
+    * attached by an equi-join on doc id and the intersection is
+    * array_intersect — no token explode, no per-pair aggregation
     * pass; work is O(|candidates| x tokens-per-doc), as before, with two
     * joins instead of three plus a groupBy. Pairs with an empty
     * intersection are dropped exactly as the former inner token join
@@ -257,17 +273,19 @@ object Dedup {
 
   /** [[jaccard]] over a pre-tokenized (doc_id, toks) frame. */
   def jaccardToks(docsTok: DataFrame, candidates: DataFrame, minJaccard: Double): DataFrame = {
+    val (a, b) = (col("toks_a"), col("toks_b"))
+    // The intersection size binds to a lambda variable, so array_intersect
+    // runs once per evaluation: an aliased column would be inlined into
+    // each filter pushed into the join condition (three calls per pair).
+    // Null (no shared token) fails the threshold filter.
+    val jaccard = aggregate(array(size(array_intersect(a, b))), lit(null).cast("double"),
+      (_, inter) => when(inter > 0,
+        round(inter / (size(a) + size(b) - inter) + TextOps.RoundEps, 4)))
     candidates.select("doc_a", "doc_b")
       .join(docsTok.select(col("doc_id").as("doc_a"), col("toks").as("toks_a")), "doc_a")
       .join(docsTok.select(col("doc_id").as("doc_b"), col("toks").as("toks_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("toks_a"), col("toks_b"))).as("inter"),
-        size(col("toks_a")).as("sz_a"), size(col("toks_b")).as("sz_b"))
-      .filter(col("inter") > 0)
-      .withColumn("jaccard",
-        round(col("inter") / (col("sz_a") + col("sz_b") - col("inter")) + TextOps.RoundEps, 4))
+      .select(col("doc_a"), col("doc_b"), jaccard.as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "jaccard")
   }
 
   /** Duplicate-cluster resolution: connected components over verified

@@ -243,15 +243,19 @@ object Similarity {
     *     first `numHyperplanes` corpus vectors (deterministic and
     *     reproducible in any engine; a production run would use seeded
     *     Gaussian planes — only the anchor table changes).
-    *  2. banding: the signature splits into `bands` equal bit-groups;
-    *     vectors sharing ANY band's bit-pattern become candidates — an
-    *     equi-join on (band, band_sig), exactly the MinHash-LSH trick.
+    *  2. banding: the signature splits into `bands` equal bit-groups
+    *     (`numHyperplanes` must divide evenly); vectors sharing ANY band's
+    *     bit-pattern become candidates — the pairs of each
+    *     (band, band_sig) bucket by Dedup.bucketPairs, exactly the
+    *     MinHash-LSH trick.
     *  3. verify: exact cosine >= minCos on candidates only.
     *
     * The only crossJoin is against the broadcast `numHyperplanes`-row
     * anchor table (bounded by construction). */
   def lshNearDup(embeddings: DataFrame, numHyperplanes: Int, bands: Int,
                  minCos: Double): DataFrame = {
+    require(numHyperplanes > 0 && bands > 0 && numHyperplanes % bands == 0,
+      s"lshNearDup needs numHyperplanes > 0 divisible by bands, got ($numHyperplanes, $bands)")
     val rows = numHyperplanes / bands
     val e = embeddings.select(col("vec_id"), col("embedding"),
       norm(col("embedding")).as("nrm"))
@@ -283,18 +287,11 @@ object Similarity {
             .otherwise(lit("0"))), "").as("band_sig")))
     val sigs = eSig.crossJoin(broadcast(anchorsArr))
       .select(col("vec_id"), explode(sigArr).as("bs"))
-      .select(col("vec_id"), col("bs.band").as("band"),
-        col("bs.band_sig").as("band_sig"))
-    // bucket-local pair generation replaces the signature self-join (which
-    // evaluated the signature subtree once per side — same rationale as
-    // Dedup.minhashCandidates)
-    val cand = sigs.groupBy("band", "band_sig")
-      .agg(sort_array(collect_set(col("vec_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(Dedup.orderedPairs(col("ids"))).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
+    // candidates from the shared pair kernel, not a signature self-join
+    // (which evaluated the signature subtree once per side)
+    Dedup.bucketPairs(sigs, Seq(col("bs.band"), col("bs.band_sig")), col("vec_id"))
+      .select(col("a").as("id_a"), col("b").as("id_b"))
       .distinct()
-    cand
       .join(e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("nrm").as("nrm_a")), "id_a")
       .join(e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("nrm").as("nrm_b")), "id_b")
       .select(col("id_a"), col("id_b"),

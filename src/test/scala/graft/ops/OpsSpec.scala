@@ -151,8 +151,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("bucket-local pair generation equals a bucket self-join on a hot bucket") {
-    // round-7 internals change: candidate pairs come from groupBy(bucket) +
-    // ordered-pair expansion instead of a bucket self-join. Pin the pair
+    // round-7 internals change: candidate pairs come from the bucket-local
+    // pair kernel (bucketPairs) instead of a bucket self-join. Pin the pair
     // arithmetic on a bucket of five identical docs (all bands collide):
     // exactly C(5,2) ordered pairs, each with doc_a < doc_b, none dropped,
     // none duplicated across the two bands.
@@ -166,10 +166,10 @@ class DedupSpec extends SparkSpec {
     assert(pairs.forall { case (a, b) => a < b })
   }
 
-  test("orderedPairs over a sorted id set equals the a < b self-join pair set (seeded property)") {
-    // the bucket-local pair generator behind all four pair kernels, pinned
-    // against its definition over generated buckets: each (a, b) with
-    // a < b exactly once, nothing else
+  test("bucketPairs equals the a < b bucket self-join pair multiset (seeded property)") {
+    // the pair kernel behind all four pair generators, pinned against its
+    // definition over generated buckets keyed by one or by two columns:
+    // each (a, b) with a < b exactly once per bucket, nothing else
     import org.scalacheck.{Gen, Prop, Test => Check}
     import org.scalacheck.rng.Seed
     // small value range so duplicate rows and negatives occur
@@ -177,27 +177,58 @@ class DedupSpec extends SparkSpec {
       1 -> Gen.const(List.empty[Long]),
       1 -> Gen.choose(-3L, 3L).map(List(_)),
       4 -> Gen.listOf(Gen.choose(-12L, 12L)))
-    val prop = Prop.forAll(Gen.nonEmptyListOf(bucket)) { buckets =>
-      // an empty bucket is one null row, which collect_set skips
+    val prop = Prop.forAll(Gen.nonEmptyListOf(bucket), Gen.oneOf(1, 2)) { (buckets, nKeys) =>
+      // an empty bucket is one null row, which the kernel skips
       val rows = buckets.zipWithIndex.flatMap {
         case (Nil, g) => Seq((g, Option.empty[Long]))
         case (xs, g) => xs.map(x => (g, Option(x)))
       }
-      val got = rows.toDF("g", "x").groupBy("g")
-        .agg(sort_array(collect_set(col("x"))).as("ids"))
-        .select(col("g"), explode(Dedup.orderedPairs(col("ids"))).as("p"))
-        .select("g", "p.a", "p.b").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-      val naive = buckets.zipWithIndex.flatMap { case (xs, g) =>
+      // two columns (g % 3, g / 3): a kernel keying on either alone
+      // would merge buckets and emit extra pairs
+      val key = if (nKeys == 1) Seq(col("g")) else Seq(col("g") % 3, col("g").divide(3).cast("int"))
+      val got = Dedup.bucketPairs(rows.toDF("g", "x"), key, col("x")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val naive = buckets.flatMap { xs =>
         val s = xs.distinct
-        for (a <- s; b <- s if a < b) yield (g, a, b)
+        for (a <- s; b <- s if a < b) yield (a, b)
       }
-      got.length == naive.length && got.toSet == naive.toSet
+      got.sorted == naive.sorted
     }
     val res = Check.check(Check.Parameters.default
       .withMinSuccessfulTests(20).withMaxSize(30).withWorkers(1)
       .withInitialSeed(Seed(20261017L)), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("bucketPairs on a hot bucket: split blocks give the self-join set, one exchange, no join") {
+    // one bucket of 2.5 x PairBlock distinct items (three blocks, the last
+    // partial), a second copy of 50 of them and a null: every distinct
+    // pair exactly once, a < b, as the naive bucket self-join finds it
+    val n = Dedup.PairBlock * 5 / 2
+    val items = (0 until n).map(i => Option((i * 37L) % n - 300)) // a permutation
+    val df = (items ++ items.take(50) :+ None).map(x => (7, x)).toDF("g", "x")
+    val pairs = Dedup.bucketPairs(df, Seq(col("g")), col("x"))
+    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length === n * (n - 1) / 2)
+    assert(got.forall { case (a, b) => a < b })
+    val naive = df.as("l").join(df.as("r"), col("l.g") === col("r.g") && col("l.x") < col("r.x"))
+      .select(col("l.x"), col("r.x")).distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.toSet === naive.toSet)
+    // one exchange on the bucket feeds both windows and the aggregation,
+    // so the subtree that makes the buckets runs once
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val plan = nodes(pairs.queryExecution.executedPlan)
+    assert(plan.count(_.isInstanceOf[ShuffleExchangeLike]) === 1, plan.mkString("\n"))
+    assert(!plan.exists(_.isInstanceOf[BaseJoinExec]), plan.mkString("\n"))
   }
 
   test("candidate-restricted jaccard drops zero-intersection candidates like the token join did") {
@@ -394,6 +425,47 @@ class SimilaritySpec extends SparkSpec {
       r.getAs[Long]("id_a") % 2 === r.getAs[Long]("id_b") % 2 })
     // verification stage is exact cosine
     assert(pairs.forall(_.getAs[Double]("cos_sim") >= 0.9))
+  }
+
+  test("LSH near-dup rejects hyperplane counts that do not split into equal bands") {
+    // 8 / 3 would silently build 4 bands of 2 bits; 2 / 4 divides by zero
+    intercept[IllegalArgumentException] {
+      Similarity.lshNearDup(embs, numHyperplanes = 8, bands = 3, minCos = 0.9)
+    }
+    intercept[IllegalArgumentException] {
+      Similarity.lshNearDup(embs, numHyperplanes = 2, bands = 4, minCos = 0.9)
+    }
+  }
+
+  test("kmeansAssign equals the crossJoin argmin over (dist, cluster), ties included (seeded)") {
+    // array_min over the folded centroid array against its definition: a
+    // k-way crossJoin + groupBy(vec_id) min of the (dist, cluster) struct.
+    // Small integer coordinates and duplicated centroids force exact ties,
+    // which both forms must break on the smaller cluster id.
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    val vec = Gen.listOfN(3, Gen.choose(-2, 2).map(_.toDouble))
+    val cents = for {
+      base <- Gen.nonEmptyListOf(vec)
+      dups <- Gen.someOf(base)
+    } yield base ++ dups
+    val prop = Prop.forAll(Gen.nonEmptyListOf(vec), cents) { (vs, cs) =>
+      val e = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
+      val c = cs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cluster", "centroid")
+      val dist = round(Similarity.dot(col("embedding"), col("embedding"))
+        - lit(2.0) * Similarity.dot(col("embedding"), col("centroid"))
+        + Similarity.dot(col("centroid"), col("centroid")), 6)
+      val naive = e.crossJoin(c)
+        .groupBy("vec_id").agg(min(struct(dist.as("dist"), col("cluster"))).as("m"))
+        .select(col("vec_id"), col("m.cluster"), col("m.dist"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
+      rows(Similarity.kmeansAssign(e, c)) == rows(naive)
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(15).withMaxSize(12).withWorkers(1)
+      .withInitialSeed(Seed(20261018L)), prop)
+    assert(res.passed, res.status.toString)
   }
 }
 
