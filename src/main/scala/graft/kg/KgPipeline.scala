@@ -30,14 +30,58 @@ import org.apache.spark.sql.functions._
   */
 object KgPipeline {
 
-  /** Url-hash bucket count shared by the triples sink, the done-set layout
-    * and the bucket-sharded resume mode (the parquet stand-in for an
-    * Iceberg `bucket(url)` partition transform). */
+  /** Url-hash bucket count of the one store layout: every url-keyed table
+    * (the parquet sink's triples and done set; a snapshot store's triples,
+    * done and failed) is partitioned by it, and the bucket-sharded resume
+    * mode selects by it (the parquet stand-in for an Iceberg `bucket(url)`
+    * partition transform). */
   val UrlBuckets = 64
 
   /** The bucket of a url — MUST match the sink partitioning everywhere. */
   def urlBucket(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(xxhash64(url), lit(UrlBuckets))
+
+  /** `df` with its `url_bucket` partition column (recomputed from `url`,
+    * replacing any stale copy) — the one place the column is derived. */
+  private[graft] def bucketed(df: DataFrame): DataFrame =
+    df.withColumn("url_bucket", urlBucket(col("url")))
+
+  /** Commit KG-store tables in one atomic snapshot
+    * (graft.sources.SnapshotStore.commitMixed: `append` tables add files,
+    * `replace` tables' files become their full content). This is the store
+    * layout, decided once: a table with a `url` column (triples, done,
+    * failed) is staged under `url_bucket=N/` directories, so every reader
+    * can prune its file list by bucket ([[readBuckets]]); any other table
+    * (lineage) is staged flat. Every KG-store writer commits through here. */
+  private[graft] def commitStore(spark: SparkSession, dir: String,
+                                 append: Map[String, DataFrame],
+                                 replace: Map[String, DataFrame] = Map.empty,
+                                 meta: Map[String, String] = Map.empty,
+                                 requireVersion: Option[Int] = None): Int = {
+    def urlKeyed(df: DataFrame) = df.columns.contains("url")
+    def stage(ts: Map[String, DataFrame]) =
+      ts.map { case (t, df) => t -> (if (urlKeyed(df)) bucketed(df) else df) }
+    graft.sources.SnapshotStore.commitMixed(spark, dir, stage(append), stage(replace),
+      meta = meta,
+      partitionBy = (append ++ replace).collect {
+        case (t, df) if urlKeyed(df) => t -> Seq("url_bucket")
+      },
+      requireVersion = requireVersion)
+  }
+
+  /** Read a url-keyed store table's files for the given buckets only: the
+    * manifest prunes to their `url_bucket=N/` files before any IO. Files
+    * without a marker (written before every url-keyed table was
+    * partitioned) may hold any bucket and are kept, so the result can hold
+    * rows of other buckets — pruning saves IO, it never filters rows. None
+    * when no file survives. */
+  private[graft] def readBuckets(spark: SparkSession, dir: String, table: String,
+                                 buckets: Seq[Int],
+                                 version: Option[Int] = None): Option[DataFrame] = {
+    val markers = buckets.map(b => s"url_bucket=$b/")
+    graft.sources.SnapshotStore.readPruned(spark, dir, table,
+      f => !f.contains("url_bucket=") || markers.exists(f.contains), version)
+  }
 
   final case class Config(
       numPartitions: Int = 32,
@@ -306,70 +350,58 @@ object KgPipeline {
 
   /** Run + commit: write triples and lineage, then mark urls done so a
     * subsequent run with the same checkpointDir is incremental
-    * (idempotent re-entry — running twice yields the same table). */
+    * (idempotent re-entry — running twice yields the same table). Triples
+    * and the done set are written `url_bucket`-partitioned, the store
+    * layout of [[commitStore]]: point lookups by url prune to one bucket
+    * and a bucket-sharded resume reads only its shard's done directories.
+    * The run's caches are released whether or not the writes succeed. */
   def runAndCommit(spark: SparkSession, pages: DataFrame, dims: Dims.Snapshot,
                    client: Inference.InferenceClient, outDir: String,
                    cfg: Config = Config()): Unit = {
     val checkpointed = cfg.copy(checkpointDir = Some(s"$outDir/checkpoint"))
     val res = run(spark, pages, dims, client, checkpointed)
-    // 64-way url-hash bucketing — the parquet stand-in for the Iceberg
-    // `bucket(url)` partition transform (FIXTURES.md §5): point lookups by
-    // url prune to one bucket, appends from resumed runs stay co-located.
-    res.triples
-      .withColumn("url_bucket", urlBucket(col("url")))
-      .write.mode("append").partitionBy("url_bucket").parquet(s"$outDir/triples")
-    res.lineage.write.mode("append").parquet(s"$outDir/lineage")
-    res.rdf.foreach(_.write.mode("append").parquet(s"$outDir/rdf"))
-    // commit the done-set last: urls become "done" only after data landed;
-    // append only NEWLY processed urls so the checkpoint table doesn't
-    // accumulate duplicates across resumed runs. Urls that FAILED infer or
-    // parse this run are excluded — they stay not-done, so the next run's
-    // resume anti-join re-drives them (the reference's re-drivable "NA"
-    // placeholder semantics; with a deterministic client they fail again,
-    // with a healed transport they heal).
-    val donePath = s"$outDir/checkpoint/done"
-    val newUrls =
-      if (fsExists(spark, donePath)) {
-        val done = readDone(spark, donePath, cfg)
-        bucketFilter(pages.select("url"), cfg)
-          .join(broadcast(done), Seq("url"), "left_anti")
-      } else bucketFilter(pages.select("url"), cfg)
-    // done-set layout mirrors the triples sink: url_bucket-partitioned, so
-    // a bucket-sharded resume prunes its scan to the shard's directories.
-    // (Pre-bucketing checkpoint dirs keep their flat layout — mixing flat
-    // files and partition dirs would break parquet partition discovery.)
-    val doneIsFlat = fsExists(spark, donePath) &&
-      !spark.read.parquet(donePath).columns.contains("url_bucket")
-    val committed = newUrls.join(broadcast(res.failedUrls), Seq("url"), "left_anti")
-    if (doneIsFlat) committed.write.mode("append").parquet(donePath)
-    else committed.withColumn("url_bucket", urlBucket(col("url")))
-      .write.mode("append").partitionBy("url_bucket").parquet(donePath)
-    res.cleanup()
+    try {
+      bucketed(res.triples)
+        .write.mode("append").partitionBy("url_bucket").parquet(s"$outDir/triples")
+      res.lineage.write.mode("append").parquet(s"$outDir/lineage")
+      res.rdf.foreach(_.write.mode("append").parquet(s"$outDir/rdf"))
+      // commit the done-set last: urls become "done" only after data landed;
+      // append only NEWLY processed urls so the checkpoint table doesn't
+      // accumulate duplicates across resumed runs. Urls that FAILED infer or
+      // parse this run are excluded — they stay not-done, so the next run's
+      // resume anti-join re-drives them (the reference's re-drivable "NA"
+      // placeholder semantics; with a deterministic client they fail again,
+      // with a healed transport they heal).
+      val donePath = s"$outDir/checkpoint/done"
+      val newUrls =
+        if (fsExists(spark, donePath)) {
+          val done = readDone(spark, donePath, cfg)
+          bucketFilter(pages.select("url"), cfg)
+            .join(broadcast(done), Seq("url"), "left_anti")
+        } else bucketFilter(pages.select("url"), cfg)
+      bucketed(newUrls.join(broadcast(res.failedUrls), Seq("url"), "left_anti"))
+        .write.mode("append").partitionBy("url_bucket").parquet(donePath)
+    } finally res.cleanup()
   }
 
-  /** Run + snapshot-commit: triples and the resume `done` set publish in
-    * ONE atomic snapshot (graft.sources.SnapshotStore — the Iceberg-commit
-    * stand-in). Compared to [[runAndCommit]]'s write-data-then-mark-done
-    * two-step (the reference's shape, chtc/db.py:56-66), a crash anywhere
-    * here leaves the store exactly at the previous snapshot: no partial
-    * data, no done-urls without data, and a re-run converges to the same
-    * final table (exactly-once with deterministic stages). */
+  /** Run + snapshot-commit: triples, lineage and the resume `done` set
+    * publish in ONE atomic snapshot through [[commitStore]] (the
+    * Iceberg-commit stand-in). Compared to [[runAndCommit]]'s
+    * write-data-then-mark-done two-step (the reference's shape,
+    * chtc/db.py:56-66), a crash anywhere here leaves the store exactly at
+    * the previous snapshot: no partial data, no done-urls without data,
+    * and a re-run converges to the same final table (exactly-once with
+    * deterministic stages). The run's caches are released whether or not
+    * the commit succeeds. */
   def runAndCommitSnapshot(spark: SparkSession, pages: DataFrame, dims: Dims.Snapshot,
                            client: Inference.InferenceClient, tableDir: String,
                            cfg: Config = Config()): Int = {
     import graft.sources.SnapshotStore
-    // Done-set read: in bucket-sharded mode the store's url_bucket=N/
-    // staging layout lets the MANIFEST prune the file list to the shard's
-    // buckets before any IO — the snapshot-store counterpart of the parquet
-    // checkpoint's PartitionFilters scan. Files from pre-partitioning
-    // snapshots carry no path marker and are kept (then row-filtered below);
-    // pruning is the IO saver, the bucketFilter row predicate remains the
-    // correctness filter either way.
+    // Done-set read: in bucket-sharded mode the manifest prunes the file
+    // list to the shard's buckets before any IO; the bucketFilter row
+    // predicate below stays the correctness filter.
     val done = cfg.buckets match {
-      case Some(bs) =>
-        val markers = bs.map(b => s"url_bucket=$b/")
-        SnapshotStore.readPruned(spark, tableDir, "done",
-          f => !f.contains("url_bucket=") || markers.exists(f.contains))
+      case Some(bs) => readBuckets(spark, tableDir, "done", bs)
       case None => SnapshotStore.read(spark, tableDir, "done")
     }
     val scoped = bucketFilter(pages, cfg)
@@ -379,23 +411,14 @@ object KgPipeline {
       case None => scoped
     }
     val res = run(spark, todo, dims, client, cfg)
-    val triples = res.triples
-      .withColumn("url_bucket", urlBucket(col("url")))
     // failed-url exclusion: same re-drivable semantics as runAndCommit —
     // the snapshot's done table never claims a page whose infer/parse
-    // failed this run. Both url-keyed tables stage url_bucket-partitioned,
-    // so every later sharded run (and url point lookup) prunes at the
-    // manifest.
-    val snap = SnapshotStore.commit(spark, tableDir, Map(
-      "triples" -> triples,
+    // failed this run
+    try commitStore(spark, tableDir, append = Map(
+      "triples" -> res.triples,
       "lineage" -> res.lineage,
-      "done" -> todo.select("url")
-        .join(broadcast(res.failedUrls), Seq("url"), "left_anti")
-        .withColumn("url_bucket", urlBucket(col("url")))),
-      partitionBy = Map("triples" -> Seq("url_bucket"),
-        "done" -> Seq("url_bucket")))
-    res.cleanup()
-    snap
+      "done" -> todo.select("url").join(broadcast(res.failedUrls), Seq("url"), "left_anti")))
+    finally res.cleanup()
   }
 
   /** Small-file compaction for a KG snapshot store (the
@@ -404,49 +427,20 @@ object KgPipeline {
     * store's manifest file list — and with it scan planning and per-file
     * open cost — grows without bound even at stable data volume. This
     * rewrites the store's current content into a compact file set in one
-    * replace-mode snapshot: the url-keyed tables re-establish the
-    * `url_bucket=N/` layout (recomputed from `url` — the file data cannot
-    * carry it, staging strips partition columns) at roughly one file per
-    * bucket, so manifest pruning keeps working; log tables (lineage,
-    * failed) coalesce to a bounded count. Row sets are byte-identical —
-    * pure layout maintenance, schedule-composable; [[graft.sources
+    * replace-mode snapshot: the url-keyed tables (triples, done, failed)
+    * are staged in the [[commitStore]] layout — the bucket recomputed from
+    * `url`, since staging strips partition columns from the file data — at
+    * roughly one file per bucket, so manifest pruning keeps working and
+    * unmarked files of older stores converge to the layout; lineage
+    * coalesces to a bounded count. Row sets are byte-identical — pure
+    * layout maintenance, schedule-composable; [[graft.sources
     * .SnapshotStore.expireSnapshots]] reclaims the replaced files. */
   def compactStoreFiles(spark: SparkSession, tableDir: String): Option[Int] = {
-    def bucketed(table: String)(df: DataFrame): (DataFrame, Seq[String]) =
-      stageBucketLayout(spark, tableDir, table, df) match {
-        case (d, Seq()) => (d.coalesce(8), Seq.empty)
-        case (d, cols) => (d.repartition(UrlBuckets, col("url_bucket")), cols)
-      }
+    val stage = (df: DataFrame) =>
+      (bucketed(df).repartition(UrlBuckets, col("url_bucket")), Seq("url_bucket"))
     graft.sources.SnapshotStore.rewriteTables(spark, tableDir,
       Seq("triples", "done", "lineage", "failed"),
-      stage = Map("triples" -> bucketed("triples") _,
-        "done" -> bucketed("done") _))
-  }
-
-  /** Decide a url-keyed store table's rewrite staging layout from the
-    * MANIFEST, not the read schema. A mixed store (old flat files carrying
-    * url_bucket as a data column + new Hive-partitioned files without it)
-    * resolves its merged read schema from whichever file Spark samples
-    * first — schema-based detection would then either persist NULL buckets
-    * or silently drop the layout. Manifest rule instead:
-    *  - any `url_bucket=` path marker ⇒ the store is on (or migrating to)
-    *    the partitioned layout: recompute the bucket from `url` (dropping
-    *    a stale data column if the merged schema surfaced one) and stage
-    *    partitioned — mixed stores CONVERGE to the pure layout;
-    *  - no markers and the data carries url_bucket ⇒ pure legacy store:
-    *    keep the schema byte-stable, no partitioning;
-    *  - no url column at all ⇒ not url-keyed, stage as-is. */
-  private[graft] def stageBucketLayout(spark: SparkSession, dir: String,
-      table: String, df: DataFrame): (DataFrame, Seq[String]) = {
-    val hasMarkers = graft.sources.SnapshotStore
-      .fileCount(spark, dir, table, _.contains("url_bucket=")) > 0
-    if (!df.columns.contains("url")) (df, Seq.empty)
-    else if (!hasMarkers && df.columns.contains("url_bucket")) (df, Seq.empty)
-    else {
-      val clean =
-        if (df.columns.contains("url_bucket")) df.drop("url_bucket") else df
-      (clean.withColumn("url_bucket", urlBucket(col("url"))), Seq("url_bucket"))
-    }
+      stage = Seq("triples", "done", "failed").map(_ -> stage).toMap)
   }
 
   /** Narrow a url-keyed frame to the configured bucket shard (no-op when
@@ -457,21 +451,14 @@ object KgPipeline {
       case None => df
     }
 
-  /** Read the done-set. In bucket-sharded mode against the partitioned
-    * layout the url_bucket predicate is a PARTITION filter: the scan reads
-    * only the shard's bucket directories (verified executed-plan evidence
-    * in PLANS.md round-5 — `PartitionFilters: [url_bucket IN (...)]`,
-    * no full done-set IO). Flat (pre-bucketing) layouts fall back to a
-    * recomputed-bucket row filter — same rows, no pruning. */
+  /** Read the done-set. In bucket-sharded mode the url_bucket predicate is
+    * a PARTITION filter: the scan reads only the shard's bucket directories
+    * (verified executed-plan evidence in PLANS.md round-5 —
+    * `PartitionFilters: [url_bucket IN (...)]`, no full done-set IO). */
   private def readDone(spark: SparkSession, path: String, cfg: Config): DataFrame = {
-    val done0 = spark.read.parquet(path)
-    val pruned = cfg.buckets match {
-      case Some(bs) if done0.columns.contains("url_bucket") =>
-        done0.filter(col("url_bucket").isin(bs.map(_.toLong): _*))
-      case Some(bs) => done0.filter(urlBucket(col("url")).isin(bs.map(_.toLong): _*))
-      case None => done0
-    }
-    pruned.select("url")
+    val done = spark.read.parquet(path)
+    cfg.buckets.fold(done)(bs => done.filter(col("url_bucket").isin(bs.map(_.toLong): _*)))
+      .select("url")
   }
 
   private def fsExists(spark: SparkSession, path: String): Boolean = {

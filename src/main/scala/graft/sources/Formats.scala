@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Multi-format table export/import for the triples sink (SURVEY S9/S11).
   *
@@ -14,8 +13,9 @@ import org.apache.spark.sql.functions._
   * spark-avro is an external module absent from /opt/spark/jars, so avro
   * is intentionally not offered rather than stubbed.
   *
-  * All writers keep the `url_bucket` partition column so point lookups by
-  * url prune to one bucket regardless of format (FIXTURES.md §5).
+  * All writers keep the KG store's `url_bucket` partition column
+  * (graft.kg.KgPipeline.bucketed) so point lookups by url prune to one
+  * bucket regardless of format (FIXTURES.md §5).
   */
 object Formats {
 
@@ -23,8 +23,7 @@ object Formats {
 
   def writeTriples(triples: DataFrame, outDir: String, format: String = "parquet"): Unit = {
     require(Supported.contains(format), s"unsupported format $format (${Supported.mkString("/")})")
-    triples
-      .withColumn("url_bucket", pmod(xxhash64(col("url")), lit(64)))
+    graft.kg.KgPipeline.bucketed(triples)
       .write.mode("append").partitionBy("url_bucket")
       .format(format).save(s"$outDir/triples_$format")
   }

@@ -77,8 +77,11 @@ object SnapshotStore {
     * Callers MUST keep files whose path carries no partition marker (a
     * pre-partitioning append has no `col=value/` segment and may hold any
     * rows) and re-filter rows after the read — pruning is an IO
-    * optimization, never the correctness filter. Returns None when no file
-    * survives (then there are no matching rows at all). */
+    * optimization, never the correctness filter. A KG store stages every
+    * url-keyed table partitioned (graft.kg.KgPipeline.commitStore), so
+    * unmarked files there come only from stores written before that
+    * layout; KgPipeline.readBuckets is its bucket reader. Returns None when
+    * no file survives (then there are no matching rows at all). */
   def readPruned(spark: SparkSession, dir: String, table: String,
                  keepFile: String => Boolean,
                  version: Option[Int] = None): Option[DataFrame] = {

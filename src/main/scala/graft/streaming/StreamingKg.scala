@@ -81,7 +81,9 @@ object StreamingKg {
     * query replays its last batch, so batches at-or-below the manifest's
     * committed batch_id are skipped — replay becomes a no-op instead of a
     * duplicate append. All tables publish in the SAME atomic snapshot (or
-    * none, on replay). Returns the committed version, None when skipped. */
+    * none, on replay), appended through KgPipeline.commitStore, so the
+    * url-keyed ones land `url_bucket`-partitioned like every other store
+    * write. Returns the committed version, None when skipped. */
   def commitBatchTables(dir: String, tables: Map[String, DataFrame],
                         batchId: Long): Option[Int] = {
     require(tables.nonEmpty, "commitBatchTables needs at least one table")
@@ -93,7 +95,7 @@ object StreamingKg {
       else SnapshotStore.readSnapshot(spark, dir, cur)
         .meta.get("batch_id").map(_.toLong).getOrElse(-1L)
     if (batchId <= last) None
-    else Some(SnapshotStore.commit(spark, dir, tables,
+    else Some(KgPipeline.commitStore(spark, dir, append = tables,
       meta = Map("batch_id" -> batchId.toString)))
   }
 
@@ -122,7 +124,10 @@ object StreamingKg {
     *    failed this batch — an append-only failure log a re-drive job
     *    anti-joins against the accumulated triples table,
     * committed together in ONE atomic snapshot (exactly-once via the
-    * batch_id watermark: a replayed micro-batch re-commits neither).
+    * batch_id watermark: a replayed micro-batch re-commits neither). Both
+    * tables are url-keyed, so [[commitBatchTables]] stages both
+    * `url_bucket`-partitioned: a micro-batch writes one file per url
+    * bucket each write task holds.
     *
     * `cfg` runs as `cfg.incremental`, so its alignment tiers run INSIDE
     * each micro-batch: every tier is a per-name argmax against the STATIC
@@ -175,51 +180,60 @@ object StreamingKg {
     *  3. commit healed pages' triples (APPEND) and the rewritten failure
     *     log (REPLACE: fresh failure rows for pages that failed again,
     *     carried rows for target urls absent from `pages`) in ONE atomic
-    *     snapshot — a crash leaves the store at the prior version, and
-    *     re-running converges (exactly-once via determinism, like every
-    *     commit in this store).
+    *     snapshot through KgPipeline.commitStore — a crash leaves the store
+    *     at the prior version, and re-running converges (exactly-once via
+    *     determinism, like every commit in this store).
+    *
+    * Step 1 reads only the `triples` files of the failed urls' buckets
+    * (KgPipeline.readBuckets): a failed url can only match triples of its
+    * own bucket, so the re-drive's read grows with the failures, not with
+    * the store. The run's caches are released whether or not the commit
+    * succeeds.
     *
     * Returns the committed version; None when the store has no failure
     * log (absent table, or already emptied by a prior re-drive — the job
     * is a read-only no-op then, committing nothing). A fully healed run
-    * leaves the `failed` table with ZERO rows. */
+    * leaves the `failed` table with no file. */
   def redriveFailed(spark: SparkSession, dir: String, pages: DataFrame,
                     dims: Dims.Snapshot, client: Inference.InferenceClient,
                     cfg: KgPipeline.Config = KgPipeline.Config()): Option[Int] = {
     import graft.sources.SnapshotStore
     val readVersion = SnapshotStore.currentVersion(spark, dir)
-    SnapshotStore.read(spark, dir, "failed", Some(readVersion).filter(_ > 0))
-      .filterNot(_.isEmpty).map { failed =>
-      val triplesUrls = SnapshotStore
-        .read(spark, dir, "triples", Some(readVersion))
+    val failedLog = SnapshotStore.read(spark, dir, "failed", Some(readVersion).filter(_ > 0))
+    // the failed urls' buckets: at most UrlBuckets rows reach the driver,
+    // and none means an empty log
+    val buckets = failedLog.toSeq.flatMap(_.select(KgPipeline.urlBucket(col("url")))
+      .distinct().collect().map(_.getLong(0).toInt))
+    failedLog.filter(_ => buckets.nonEmpty).map { failed =>
+      val triplesUrls = KgPipeline
+        .readBuckets(spark, dir, "triples", buckets, Some(readVersion))
         .map(_.select("url").distinct())
       val target0 = failed.select("url").distinct()
       val target = triplesUrls
         .map(t => target0.join(t, Seq("url"), "left_anti"))
         .getOrElse(target0)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // pages to re-run: target urls the corpus still has. Target urls the
-      // corpus LOST keep their old log rows — clearing them silently would
-      // erase the only record that extraction never succeeded.
-      val redrive = pages.join(broadcast(target), Seq("url"), "left_semi")
-      val res = KgPipeline.run(spark, redrive, dims, client, cfg.incremental)
-      val stillMissing = target
-        .join(pages.select("url").distinct(), Seq("url"), "left_anti")
-      val carried = failed
-        .join(stillMissing, Seq("url"), "left_semi")
-        .groupBy("url").agg(min("failed_stage").as("failed_stage"))
-      val newLog = res.failedUrls.unionByName(carried)
-      // requireVersion: a micro-batch appending to `failed` between our
-      // read and this publish must fail the rewrite (re-run the job), not
-      // silently vanish under the replaced log
-      val v = SnapshotStore.commitMixed(spark, dir,
-        append = Map("triples" -> res.triples),
-        replace = Map("failed" -> newLog),
-        meta = Map("compaction" -> "redrive"),
-        requireVersion = Some(readVersion))
-      res.cleanup()
-      target.unpersist(blocking = false)
-      v
+      try {
+        // pages to re-run: target urls the corpus still has. Target urls
+        // the corpus LOST keep their old log rows — clearing them silently
+        // would erase the only record that extraction never succeeded.
+        val redrive = pages.join(broadcast(target), Seq("url"), "left_semi")
+        val res = KgPipeline.run(spark, redrive, dims, client, cfg.incremental)
+        val stillMissing = target
+          .join(pages.select("url").distinct(), Seq("url"), "left_anti")
+        val carried = failed
+          .join(stillMissing, Seq("url"), "left_semi")
+          .groupBy("url").agg(min("failed_stage").as("failed_stage"))
+        // requireVersion: a micro-batch appending to `failed` between our
+        // read and this publish must fail the rewrite (re-run the job), not
+        // silently vanish under the replaced log
+        try KgPipeline.commitStore(spark, dir,
+          append = Map("triples" -> res.triples),
+          replace = Map("failed" -> res.failedUrls.unionByName(carried)),
+          meta = Map("compaction" -> "redrive"),
+          requireVersion = Some(readVersion))
+        finally res.cleanup()
+      } finally target.unpersist(blocking = false)
     }
   }
 
@@ -227,7 +241,8 @@ object StreamingKg {
     * stream cannot do: global connected-components canonicalization over
     * the ACCUMULATED triples table, so surface variants that arrived in
     * different micro-batches collapse to one canonical entity. Publishes
-    * as a replace-mode snapshot (readers of older versions still see the
+    * as a replace-mode snapshot through KgPipeline.commitStore, in the
+    * store's `url_bucket` layout (readers of older versions still see the
     * uncompacted files — time travel). Returns the new version, None when
     * the store has no triples yet.
     *
@@ -275,16 +290,14 @@ object StreamingKg {
       val compacted = rehydrated
         .withColumn("obj_canonical", col("obj_final"))
         .select(triples.columns.map(col): _*)
-      val (staged, parts) = bucketStaged(spark, dir, compacted)
-      // commitReplace carries the prior snapshot's meta forward internally —
+      // the store commit carries the prior snapshot's meta forward —
       // commitBatchTables' exactly-once check reads meta.batch_id from the
       // HEAD snapshot, and a compaction that dropped it would reset the
       // watermark to -1 and let a restarted query re-append its replayed
       // micro-batch.
-      SnapshotStore.commitReplace(spark, dir,
-        Map("triples" -> staged),
+      KgPipeline.commitStore(spark, dir, append = Map.empty,
+        replace = Map("triples" -> compacted),
         meta = Map("compaction" -> "canonicalize"),
-        partitionBy = parts,
         requireVersion = Some(readVersion))
     }
   }
@@ -299,7 +312,7 @@ object StreamingKg {
     * graft.ops.Dedup.dedupe, winner = cluster-min doc_id = xxhash64(url))
     * GLOBALLY and drops losers' triples, committing the rewritten table
     * and a `compact_dedup` lineage row in ONE atomic snapshot (replace
-    * triples + append lineage — commitMixed). The reference's analog is
+    * triples + append lineage — KgPipeline.commitStore). The reference's analog is
     * its frozen global id list, the one corpus-global artifact its batch
     * jobs share (chtc/preprocess_extraction_direct.py:19-28).
     *
@@ -314,7 +327,8 @@ object StreamingKg {
     * stored row, and everything else drops (parity-tested).
     *
     * Done/failed tables are untouched: dropped urls WERE processed — they
-    * must not be re-driven, they are duplicates. Returns the committed
+    * must not be re-driven, they are duplicates. The pass's caches are
+    * released whether or not the commit succeeds. Returns the committed
     * version, None when the store has no triples. */
   def compactDedup(spark: SparkSession, dir: String, corpus: DataFrame,
                    minJaccard: Double, localProbe: Boolean = true,
@@ -339,65 +353,47 @@ object StreamingKg {
       val loserUrls = docs.join(losers, docs("doc_id") === losers("drop_id"))
         .select("url").distinct() // one row per url even on a dup-url corpus
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val kept = triples.join(loserUrls, Seq("url"), "left_anti")
-      val (keptStaged, keptParts) = bucketStaged(spark, dir, kept)
-      // ONE bookkeeping pass: total rows + dropped rows + dropped urls
-      // from a single aggregation over the store join (meta counts are
-      // STORE-level: corpus losers with no stored triples — e.g. pages a
-      // shard's own gate already dropped — don't inflate the numbers)
-      val stats = triples
-        .join(loserUrls.withColumn("is_drop", lit(true)), Seq("url"), "left")
-        .agg(count(lit(1)).as("in_rows"),
-          coalesce(sum(when(col("is_drop"), 1L)), lit(0L)).as("drop_rows"),
-          count_distinct(when(col("is_drop"), col("url"))).as("drop_urls"))
-        .collect().head
-      val inRows = stats.getLong(0)
-      val dropRows = stats.getLong(1)
-      val droppedUrls = stats.getLong(2)
-      val lineageRow = {
-        import spark.implicits._
-        Seq(("compact_dedup", null.asInstanceOf[java.lang.Long],
-          inRows, inRows - dropRows, dropRows))
-          .toDF("stage", "partition_id", "input_rows", "output_rows",
-            "failed_rows")
-          // match the pipeline lineage schema exactly (partition_id is the
-          // int spark_partition_id(); a global pass has none)
-          .withColumn("partition_id", col("partition_id").cast("int"))
-          .withColumn("job_start", lit(jobStart))
+      try {
+        // ONE bookkeeping pass: total rows + dropped rows + dropped urls
+        // from a single aggregation over the store join (meta counts are
+        // STORE-level: corpus losers with no stored triples — e.g. pages a
+        // shard's own gate already dropped — don't inflate the numbers)
+        val stats = triples
+          .join(loserUrls.withColumn("is_drop", lit(true)), Seq("url"), "left")
+          .agg(count(lit(1)).as("in_rows"),
+            coalesce(sum(when(col("is_drop"), 1L)), lit(0L)).as("drop_rows"),
+            count_distinct(when(col("is_drop"), col("url"))).as("drop_urls"))
+          .collect().head
+        val inRows = stats.getLong(0)
+        val dropRows = stats.getLong(1)
+        val droppedUrls = stats.getLong(2)
+        val lineageRow = {
+          import spark.implicits._
+          Seq(("compact_dedup", null.asInstanceOf[java.lang.Long],
+            inRows, inRows - dropRows, dropRows))
+            .toDF("stage", "partition_id", "input_rows", "output_rows",
+              "failed_rows")
+            // match the pipeline lineage schema exactly (partition_id is the
+            // int spark_partition_id(); a global pass has none)
+            .withColumn("partition_id", col("partition_id").cast("int"))
+            .withColumn("job_start", lit(jobStart))
+        }
+        // requireVersion: a concurrent append to triples between our read
+        // and this publish must abort the rewrite, not vanish under it
+        KgPipeline.commitStore(spark, dir,
+          append = Map("lineage" -> lineageRow),
+          replace = Map("triples" -> triples.join(loserUrls, Seq("url"), "left_anti")),
+          meta = Map("compaction" -> "dedup",
+            "dedup_dropped_urls" -> droppedUrls.toString,
+            "dedup_dropped_triples" -> dropRows.toString),
+          requireVersion = Some(readVersion))
+      } finally {
+        triples.unpersist(blocking = false)
+        docs.unpersist(blocking = false)
+        loserUrls.unpersist(blocking = false)
       }
-      // requireVersion: a concurrent append to triples between our read
-      // and this publish must abort the rewrite, not vanish under it
-      val v = SnapshotStore.commitMixed(spark, dir,
-        append = Map("lineage" -> lineageRow),
-        replace = Map("triples" -> keptStaged),
-        meta = Map("compaction" -> "dedup",
-          "dedup_dropped_urls" -> droppedUrls.toString,
-          "dedup_dropped_triples" -> dropRows.toString),
-        partitionBy = keptParts,
-        requireVersion = Some(readVersion))
-      triples.unpersist(blocking = false)
-      docs.unpersist(blocking = false)
-      loserUrls.unpersist(blocking = false)
-      v
     }
   }
-
-  /** Preserve (or establish) the url_bucket staging layout on a triples
-    * rewrite, so manifest-level pruning ([[graft.sources.SnapshotStore
-    * .readPruned]]) keeps working after a compaction. A legacy store whose
-    * FILES carry url_bucket as a data column keeps its schema untouched
-    * (no partitioning — mixing would drift the read schema); everything
-    * else is staged Hive-partitioned on the recomputed bucket, which the
-    * partitionBy write strips from the file data — reads stay
-    * schema-identical to the streaming sink's TripleColumns. Layout is
-    * decided from the MANIFEST via [[KgPipeline.stageBucketLayout]]
-    * (read-schema detection misclassifies mixed old/new stores). */
-  private def bucketStaged(spark: SparkSession, dir: String,
-                           df: DataFrame): (DataFrame, Map[String, Seq[String]]) =
-    KgPipeline.stageBucketLayout(spark, dir, "triples", df) match {
-      case (d, Seq()) => (d, Map.empty)
-      case (d, cols) => (d, Map("triples" -> cols))
-    }
 
   /** Cross-micro-batch exactly-once on the EVENT side: duplicate ids
     * arriving within the lateness horizon are dropped with bounded state —

@@ -536,6 +536,21 @@ class KgPipelineSpec extends SparkSpec {
     assert(SnapshotStore.read(spark, shard, "triples").get.count() === before)
   }
 
+  test("a store commit that throws still releases the run's caches") {
+    // the publish fails (the manifest dir is a plain file) after the run's
+    // caches materialized while staging; a re-run after a commit conflict
+    // must not leak one set of caches per attempt
+    val dir = java.nio.file.Files.createTempDirectory("snapfail")
+    try {
+      assert(dir.resolve("snapshots").toFile.createNewFile())
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.size
+      intercept[Exception](KgPipeline.runAndCommitSnapshot(spark, Pages.fixtures(spark),
+        dims, client, dir.toString, KgPipeline.Config(numPartitions = 2)))
+      assert(sc.getPersistentRDDs.size === before)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   test("store file compaction: rows identical, fewer files, bucket layout re-established") {
     import graft.sources.SnapshotStore
     val dir = java.nio.file.Files.createTempDirectory("snaprewrite").toString
@@ -554,6 +569,12 @@ class KgPipelineSpec extends SparkSpec {
     def rows(v: Option[Int] = None) = SnapshotStore.read(spark, dir, "triples", v).get
       .select("url", "subj_name", "predicate", "obj_name", "obj_final")
       .collect().map(_.toSeq).toSet
+    // a failure log staged flat, as a store written before the one layout
+    // holds it: the rewrite converges it to the url_bucket layout too
+    val failedRows = pages.select(col("url"), lit("infer").as("failed_stage")).limit(20)
+    SnapshotStore.commit(spark, dir, Map("failed" -> failedRows))
+    def failed() = SnapshotStore.read(spark, dir, "failed").get.collect().toSet
+    val beforeFailed = failed()
     val beforeRows = rows()
     val beforeFiles = SnapshotStore.fileCount(spark, dir, "triples") +
       SnapshotStore.fileCount(spark, dir, "done")
@@ -561,12 +582,15 @@ class KgPipelineSpec extends SparkSpec {
     assert(v.nonEmpty)
     // byte-identical row sets, strictly fewer files, layout preserved
     assert(rows() === beforeRows)
+    assert(failed() === beforeFailed)
     val afterFiles = SnapshotStore.fileCount(spark, dir, "triples") +
       SnapshotStore.fileCount(spark, dir, "done")
     assert(afterFiles < beforeFiles)
-    assert(SnapshotStore.fileCount(spark, dir, "triples",
-      _.contains("url_bucket=")) ===
-      SnapshotStore.fileCount(spark, dir, "triples"))
+    Seq("triples", "done", "failed").foreach { t =>
+      val n = SnapshotStore.fileCount(spark, dir, t)
+      assert(n > 0 && SnapshotStore.fileCount(spark, dir, t,
+        _.contains("url_bucket=")) === n, t)
+    }
     // a later sharded run still resumes incrementally off the rewritten
     // done table (nothing re-processes; version still advances)
     val n = SnapshotStore.read(spark, dir, "triples").get.count()

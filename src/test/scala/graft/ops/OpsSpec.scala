@@ -177,7 +177,8 @@ class DedupSpec extends SparkSpec {
       1 -> Gen.const(List.empty[Long]),
       1 -> Gen.choose(-3L, 3L).map(List(_)),
       4 -> Gen.listOf(Gen.choose(-12L, 12L)))
-    val prop = Prop.forAll(Gen.nonEmptyListOf(bucket), Gen.oneOf(1, 2)) { (buckets, nKeys) =>
+    // no shrinking: every shrink step would run Spark jobs
+    val prop = Prop.forAllNoShrink(Gen.nonEmptyListOf(bucket), Gen.oneOf(1, 2)) { (buckets, nKeys) =>
       // an empty bucket is one null row, which the kernel skips
       val rows = buckets.zipWithIndex.flatMap {
         case (Nil, g) => Seq((g, Option.empty[Long]))
@@ -449,7 +450,8 @@ class SimilaritySpec extends SparkSpec {
       base <- Gen.nonEmptyListOf(vec)
       dups <- Gen.someOf(base)
     } yield base ++ dups
-    val prop = Prop.forAll(Gen.nonEmptyListOf(vec), cents) { (vs, cs) =>
+    // no shrinking: every shrink step would run Spark jobs
+    val prop = Prop.forAllNoShrink(Gen.nonEmptyListOf(vec), cents) { (vs, cs) =>
       val e = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
       val c = cs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cluster", "centroid")
       val dist = round(Similarity.dot(col("embedding"), col("embedding"))

@@ -36,6 +36,14 @@ class StreamingSpec extends SparkSpec {
     storeDir
   }
 
+  /** (files carrying a `url_bucket=` marker, all files) of a store table
+    * in the head manifest. */
+  private def marked(dir: String, table: String): (Int, Int) = {
+    import graft.sources.SnapshotStore
+    (SnapshotStore.fileCount(spark, dir, table, _.contains("url_bucket=")),
+      SnapshotStore.fileCount(spark, dir, table))
+  }
+
   private def fixturePagesDir(): String = {
     val dir = java.nio.file.Files.createTempDirectory("pagestream").toString
     Pages.fixtures(spark).write.mode("overwrite").parquet(dir)
@@ -145,6 +153,13 @@ class StreamingSpec extends SparkSpec {
     graft.kg.HealToggle.healed = false
     val storeDir = sinkRun(pagesDir, new graft.kg.HealToggle.HealingClient)
     assert(SnapshotStore.read(spark, storeDir, "failed").get.count() === 2L)
+    // the sink stages both url-keyed tables in the url_bucket layout
+    def assertLayout(): Unit = Seq("triples", "failed").foreach { t =>
+      val (m, n) = marked(storeDir, t)
+      assert(m === n, s"$m of $n $t files carry a url_bucket marker")
+    }
+    assert(marked(storeDir, "triples")._2 > 0 && marked(storeDir, "failed")._2 > 0)
+    assertLayout()
     // 2. transport heals; first re-drive sees a corpus MISSING one failed
     //    page — that url's log row is carried, the other heals
     graft.kg.HealToggle.healed = true
@@ -156,6 +171,7 @@ class StreamingSpec extends SparkSpec {
     val logAfter1 = SnapshotStore.read(spark, storeDir, "failed").get
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(logAfter1 === Map("https://t/fail-parse" -> "parse"))
+    assertLayout()
     // 3. second re-drive with the full corpus: the store CONVERGES to the
     //    all-healthy run's triples and the failure log is EMPTY
     val v2 = StreamingKg.redriveFailed(spark, storeDir,
@@ -168,6 +184,20 @@ class StreamingSpec extends SparkSpec {
       df.select(KgPipeline.TripleColumns.map(col): _*).collect().map(_.toSeq).toSet
     assert(rows(SnapshotStore.read(spark, storeDir, "triples").get) === rows(healthy))
     assert(SnapshotStore.read(spark, storeDir, "failed").forall(_.count() === 0L))
+    // the emptied log lists no file; the healed triples keep the layout
+    assertLayout()
+    assert(marked(storeDir, "failed")._2 === 0)
+    // the re-drive's bucket read: a bucket set without a stored url's
+    // bucket opens none of that bucket's files, and its own bucket finds it
+    val okBucket = Seq("https://t/ok").toDF("url")
+      .select(KgPipeline.urlBucket(col("url"))).head().getLong(0).toInt
+    val others = KgPipeline.readBuckets(spark, storeDir, "triples",
+      (0 until KgPipeline.UrlBuckets).filterNot(_ == okBucket))
+    assert(others.toSeq.flatMap(_.inputFiles).forall(!_.contains(s"url_bucket=$okBucket/")))
+    val own = KgPipeline.readBuckets(spark, storeDir, "triples", Seq(okBucket)).get
+    assert(own.inputFiles.nonEmpty &&
+      own.inputFiles.forall(_.contains(s"url_bucket=$okBucket/")))
+    assert(own.filter(col("url") === "https://t/ok").count() > 0)
     // 4. with an empty log the job is a no-op (None — nothing to re-drive)
     assert(StreamingKg.redriveFailed(spark, storeDir,
       spark.read.parquet(pagesDir), dims,
@@ -230,6 +260,8 @@ class StreamingSpec extends SparkSpec {
 
     val v = StreamingKg.compactCanonicalize(spark, dir)
     assert(v.contains(3))
+    // the rewrite stages triples in the url_bucket layout
+    assert(marked(dir, "triples") === ((2, 2)))
     val after = SnapshotStore.read(spark, dir, "triples").get
     // schema-stable rewrite: canonicalization folds into obj_canonical, the
     // column set never drifts from the stream's append schema
@@ -315,6 +347,9 @@ class StreamingSpec extends SparkSpec {
       .select("url", "subj_name", "predicate", "obj_name", "obj_final")
       .collect().map(_.toSeq).toSet
     assert(rows(shard) === rows(full))
+    // the rewritten triples stay in the url_bucket layout
+    val (m, n) = marked(shard, "triples")
+    assert(n > 0 && m === n)
     // meta + lineage record the drop
     val snap = SnapshotStore.readSnapshot(spark, shard, v.get)
     assert(snap.meta.get("compaction").contains("dedup"))
