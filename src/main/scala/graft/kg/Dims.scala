@@ -1,6 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Versioned dimension-table snapshots (SURVEY.md S4-S7).
@@ -216,8 +218,8 @@ object Dims {
   }
 
   /** Full dims at reference cardinality. Small enough to broadcast
-    * (45k rows x ~200 B ≈ 9 MB — under the default 10 MB
-    * autoBroadcastJoinThreshold; the pipeline broadcasts explicitly anyway).
+    * (45k rows x ~200 B ≈ 9 MB); every join against a dim is a pinned
+    * `broadcast(…)`, so no join depends on a dim's size statistics.
     */
   final case class Snapshot(
       stratDim: DataFrame, mineralDim: DataFrame, intervalDim: DataFrame,
@@ -226,21 +228,27 @@ object Dims {
     def map(f: DataFrame => DataFrame): Snapshot =
       Snapshot(f(stratDim), f(mineralDim), f(intervalDim), f(gazetteerDim),
         f(stratGpsDim), f(lithDim))
-    /** Cache every dim (driver-built LocalRelations re-encode on each use
-      * otherwise — snapshot tables are read-many by design). */
+    /** Cache every dim (a driver-built leaf re-encodes its rows on each
+      * scan otherwise — snapshot tables are read-many by design). */
     def persisted(): Snapshot = map(_.cache())
   }
 
+  /** The full dims, each a one-slice RDD leaf. A `Seq.toDF()` would leave
+    * a `LocalRelation` holding every row in each plan built on the dim, and
+    * the analyzer walks every element of it once per new `Dataset`: at 45k
+    * rows that made planning cost proportional to data, not operators. */
   def snapshot(spark: SparkSession, bulkStrat: Int = 45646 - 13,
                bulkMinerals: Int = 6387 - 3): Snapshot = {
     import spark.implicits._
+    def leaf[T: Encoder: ClassTag](rows: Seq[T]): DataFrame =
+      spark.createDataset(spark.sparkContext.parallelize(rows, 1)).toDF()
     Snapshot(
-      (pinnedStrat ++ syntheticStrat(bulkStrat)).toDF(),
-      (pinnedMinerals ++ syntheticMinerals(bulkMinerals)).toDF(),
-      intervals.toDF(),
-      gazetteer.toDF(),
-      stratGps.toDF(),
-      pinnedLith.toDF())
+      leaf(pinnedStrat ++ syntheticStrat(bulkStrat)),
+      leaf(pinnedMinerals ++ syntheticMinerals(bulkMinerals)),
+      leaf(intervals),
+      leaf(gazetteer),
+      leaf(stratGps),
+      leaf(pinnedLith))
   }
 
   /** Tiny snapshot for unit tests and the driver-gate oracle queries. */

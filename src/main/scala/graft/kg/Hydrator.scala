@@ -102,7 +102,9 @@ object Hydrator {
     // fallback rows (mineral=null, formula from Mindat) so hydration pays
     // one mineral broadcast join instead of two; the reference's "only when
     // Macrostrat misses" ordering (schema.py:358-366) is preserved because
-    // merge happens via anti-join on the normalized key.
+    // merge happens via anti-join on the normalized key — a pinned
+    // broadcast like every other dim join (a dim leaf carries no size
+    // statistics to pick one by).
     val macroMinerals = firstHit(
       dims.mineralDim.select("mineral", "mineral_id", "mineral_type",
         "formula", "url", "macrostrat_version"),
@@ -113,7 +115,7 @@ object Hydrator {
     val usgs = Chem.UsgsFormulas.toSeq.sorted
       .toDF("usgs_name", "usgs_formula")
       .withColumn("join_norm", Linker.normName(col("usgs_name")))
-    val usgsOnly = usgs.join(macroMinerals.select("join_norm"), Seq("join_norm"), "left_anti")
+    val usgsOnly = usgs.join(broadcast(macroMinerals.select("join_norm")), Seq("join_norm"), "left_anti")
       .select(col("join_norm"),
         lit(null).cast("string").as("mineral"),
         lit(null).cast("long").as("mineral_id"),

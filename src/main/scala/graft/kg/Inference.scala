@@ -1,5 +1,6 @@
 package graft.kg
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,10 +14,12 @@ import org.apache.spark.sql.functions._
   * single genuinely imperative boundary in the whole plan (everything before
   * and after is declarative DataFrame code).
   *
-  * Clients are executor-singletons — constructed lazily once per JVM and
-  * shared by all tasks (reference: chtc/preprocess_extraction_direct.py:44-66
-  * loads vLLM/Weaviate once per process), so at 1000 executors there are
-  * 1000 client instances, not one per task.
+  * Clients are executor-singletons: [[run]] ships the client and its prompt
+  * dictionaries in one broadcast, deserialized once per executor JVM and
+  * shared by all its tasks (reference: chtc/preprocess_extraction_direct.py:
+  * 44-66 loads vLLM/Weaviate once per process), so at 1000 executors there
+  * are 1000 client instances, not one per task, and every task binary
+  * carries a broadcast handle instead of the dictionaries.
   *
   * Determinism: all shipped clients are pure functions of the page text, so
   * the stage is retry-safe (a re-executed task emits identical rows) — the
@@ -32,6 +35,9 @@ object Inference {
   final case class Request(url: String, hashed_text: String, text: String,
                            lang: String, prompt: String = "")
 
+  /** One instance serves every task of an executor concurrently (see
+    * [[run]]), so an implementation must be thread-safe: immutable state,
+    * thread-safe lazy initialization, or synchronized/atomic counters. */
   trait InferenceClient extends Serializable {
     def modelId: String
     /** One raw JSON string per request, same order. */
@@ -299,18 +305,28 @@ object Inference {
     * before the client call: per-handler dictionary scan (JVM-cached
     * Aho-Corasick automaton, B5) → known-entity system prompt → Mixtral
     * instruction wrap — the seam a real LLM client plugs into
-    * (reference: text2graph/llm.py:281-311). */
+    * (reference: text2graph/llm.py:281-311).
+    *
+    * `client` and `prompting` ship in ONE broadcast that the task body reads
+    * through `.value`; `registerBroadcast` receives it so a run's owner can
+    * unpersist it with the run's caches (a streaming query keeps it for its
+    * lifetime). */
   def run(pages: DataFrame, client: InferenceClient, microBatch: Int = 200,
-          prompting: Seq[HandlerDict] = Seq.empty): Dataset[Model.RawExtraction] = {
+          prompting: Seq[HandlerDict] = Seq.empty,
+          registerBroadcast: Broadcast[_] => Unit = _ => ()): Dataset[Model.RawExtraction] = {
     // 0 would otherwise fail only at task time, inside Iterator.grouped
     require(microBatch > 0, s"microBatch must be > 0, got $microBatch")
     val spark = pages.sparkSession
     import spark.implicits._
     val pv = promptVersion(prompting)
+    val shipped = spark.sparkContext.broadcast((client, prompting))
+    registerBroadcast(shipped)
     pages.select(col("url"), col("hashed_text"), col("text"), col("lang"),
         lit("").as("prompt")).as[Request]
       .mapPartitions { it =>
-        val handlers = prompting.map { case (h, terms) =>
+        // the closure captures the handle only, never `client`/`prompting`
+        val (c, dicts) = shipped.value
+        val handlers = dicts.map { case (h, terms) =>
           (h, MentionScanner(terms, h.ignoreCase))
         }
         it.grouped(microBatch).flatMap { batch =>
@@ -322,9 +338,9 @@ object Inference {
               }.mkString("\n\n")
               r.copy(prompt = prompt)
             }
-          val outs = client.infer(reqs)
+          val outs = c.infer(reqs)
           reqs.iterator.zip(outs.iterator).map { case (r, raw) =>
-            Model.RawExtraction(r.url, r.hashed_text, r.lang, raw, client.modelId, pv)
+            Model.RawExtraction(r.url, r.hashed_text, r.lang, raw, c.modelId, pv)
           }
         }
       }

@@ -196,9 +196,10 @@ object KgPipeline {
       // with zero triples.
       failedUrls: DataFrame,
       // Unpersists this run's cached intermediates (dedup marks, parsed,
-      // aligned). Call AFTER all outputs have materialized — a long-lived
-      // session (e.g. one SparkSession serving many runs) leaks the cached
-      // frames otherwise; the commit entry points below call it for you.
+      // aligned) and its inference broadcast. Call AFTER all outputs have
+      // materialized — a long-lived session (e.g. one SparkSession serving
+      // many runs) leaks the cached frames otherwise; the commit entry
+      // points below call it for you.
       cleanup: () => Unit = () => ())
 
   /** Columns of the output triples table (FIXTURES.md §5). */
@@ -272,9 +273,12 @@ object KgPipeline {
     val extracted = deduped.repartition(cfg.numPartitions, col("url"))
 
     // P2 + B2/B3: prompt construction + batched inference in mapPartitions.
+    // The client and its dictionaries ship in one broadcast that
+    // Result.cleanup unpersists with the run's caches.
     val prompting = cfg.promptDicts
       .getOrElse(Inference.promptDictsFromDims(dims))
-    val raw = Inference.run(extracted, client, cfg.microBatch, prompting)
+    val shipped = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.broadcast.Broadcast[_]]
+    val raw = Inference.run(extracted, client, cfg.microBatch, prompting, shipped += _)
 
     // P3/P4/P5: lenient parse → validated triples. The PRE-explode frame is
     // the persisted stage boundary — the downstream triple chain explodes
@@ -345,7 +349,10 @@ object KgPipeline {
     val rdf = if (cfg.emitRdf) Some(Rdf.fromHydrated(hydrated, dims)) else None
     val cached = dedupCached ++ chainCached :+ rawParsed
     Result(triples, lineage, rdf, StageChain.failedUrls(rawParsed),
-      () => cached.foreach(_.unpersist(blocking = false)))
+      () => {
+        cached.foreach(_.unpersist(blocking = false))
+        shipped.foreach(_.unpersist(blocking = false))
+      })
   }
 
   /** Run + commit: write triples and lineage, then mark urls done so a

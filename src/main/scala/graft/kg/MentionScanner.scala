@@ -7,7 +7,8 @@ import scala.collection.mutable
   * Replaces the reference's O(|dict| * |text|) per-term regex loop
   * (reference: text2graph/macrostrat.py:118-154 — `\b{term}\b` finditer per
   * dictionary word) with a single-pass Aho-Corasick automaton built once per
-  * executor from a broadcast dictionary. Semantics preserved exactly:
+  * executor from the dictionary that `Inference.run` broadcasts. Semantics
+  * preserved exactly:
   *  - whole-word matches only: the char before the match start and after the
   *    match end must not be ASCII word chars [A-Za-z0-9_] (same boundary
   *    class as Python/RE2 `\b` on ASCII),
@@ -20,8 +21,9 @@ import scala.collection.mutable
   *
   * Scale posture: the automaton is ~O(total dict chars) of int arrays, built
   * lazily once per (dictionary identity, case-mode) per JVM and shared by
-  * all tasks — with a 45,646-term dictionary this is a few MB, broadcast
-  * once, never rebuilt per row or per partition.
+  * all tasks — with a 45,646-term dictionary this is a few MB, never
+  * shipped and never rebuilt per row or per partition. Only the term array
+  * travels, in the inference broadcast, once per executor.
   */
 final class MentionScanner private (
     terms: Array[String],

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Snapshot-isolated multi-table store — the offline stand-in for the
@@ -204,15 +204,11 @@ object SnapshotStore {
         }
         writer.mode("overwrite").parquet(stageDir)
         // partitioned stages nest files under col=value/ subdirectories —
-        // list recursively so the manifest records every leaf
-        val it = f.listFiles(new Path(stageDir), true)
-        val files = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val s = it.next()
-          if (s.isFile && s.getPath.getName.endsWith(".parquet"))
-            files += s.getPath.toString
-        }
-        name -> files.toSeq.sorted
+        // walk the tree so the manifest records every leaf
+        name -> walk(f, new Path(stageDir))
+          .collect { case s if s.isFile && s.getPath.getName.endsWith(".parquet") =>
+            s.getPath.toString }
+          .sorted
       }
       val prevSnap: Option[Snapshot] =
         if (base == 0) None else Some(readSnapshot(spark, dir, base))
@@ -322,38 +318,40 @@ object SnapshotStore {
     val stage = new Path(s"$dir/stage")
     if (f.exists(stage)) {
       val cutoff = nowMs - graceMs
-      val it = f.listFiles(stage, true)
-      val doomed = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && !referenced.contains(s.getPath.toString) &&
-            s.getModificationTime < cutoff)
-          doomed += s.getPath
+      // One walk records every stage entry BEFORE anything is deleted:
+      // removing a dir's entries bumps its mtime to "now", so a
+      // post-deletion mtime check would always fail the grace cutoff and
+      // the emptied dirs would survive every sweep. The pre-sweep mtime is
+      // the honest age signal.
+      val (files, dirs) = walk(f, stage).partition(_.isFile)
+      files.foreach { s =>
+        if (!referenced.contains(s.getPath.toString) && s.getModificationTime < cutoff &&
+            f.delete(s.getPath, false)) dDel += 1
       }
-      // Record stage-dir mtimes BEFORE deleting files: removing a dir's
-      // entries bumps its mtime to "now", so a post-deletion mtime check
-      // would always fail the grace cutoff and the emptied dirs would
-      // survive every sweep. The pre-sweep mtime is the honest age signal.
-      val dirAge = scala.collection.mutable.LinkedHashMap.empty[Path, Long]
-      def walk(p: Path): Unit =
-        f.listStatus(p).foreach { s =>
-          // deepest-first: children recorded (and later deleted) before
-          // their parents, so an emptied parent is seen empty in its turn
-          if (s.isDirectory) { walk(s.getPath); dirAge(s.getPath) = s.getModificationTime }
-        }
-      walk(stage)
-      doomed.foreach(p => if (f.delete(p, false)) dDel += 1)
       // sweep now-empty stage directories: every commit attempt creates a
       // writer-unique stage/v<N>-<token> dir, so without this the empty
       // dirs accumulate forever. Same grace cutoff on the PRE-sweep mtime —
       // a concurrent writer's freshly-made (still empty) stage dir survives.
-      dirAge.foreach { case (p, mtime) =>
-        if (mtime < cutoff && f.exists(p) && f.listStatus(p).isEmpty)
-          f.delete(p, false)
+      // `walk` lists children before their parent, so an emptied parent is
+      // seen empty in its turn.
+      dirs.foreach { s =>
+        if (s.getModificationTime < cutoff && f.exists(s.getPath) &&
+            f.listStatus(s.getPath).isEmpty)
+          f.delete(s.getPath, false)
       }
     }
     (mDel, dDel)
   }
+
+  /** Every entry below `root`, each directory after its children. Plain
+    * `listStatus` calls, not `listFiles(…, recursive = true)`: the latter
+    * returns `LocatedFileStatus`es, which load permissions eagerly — on the
+    * local FS without native Hadoop, one `ls -ld` fork per file and per
+    * directory. */
+  private def walk(f: FileSystem, root: Path): Seq[FileStatus] =
+    f.listStatus(root).toSeq.flatMap { s =>
+      if (s.isDirectory) walk(f, s.getPath) :+ s else Seq(s)
+    }
 
   // ---- minimal deterministic JSON (no extra deps) -------------------------
 

@@ -34,21 +34,19 @@ class QueriesSpec extends SparkSpec {
             math.pow(10, v(5)), flags(v(6)))
         }
       }
-      val dir = java.nio.file.Files.createTempDirectory("firsthit")
-      try {
-        rows.toDF("l_orderkey" +: order: _*)
-          .write.parquet(s"$dir/lineitem.parquet")
-        val naive = Tables.lineitem(spark, dir.toString)
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("l_orderkey").orderBy(order.map(col): _*)))
-          .filter(col("rn") === 1)
-          .groupBy("l_returnflag")
-          .agg(count(lit(1)).as("n_first"), round(sum(col("l_quantity")), 2).as("qty_first"))
-        def collected(df: org.apache.spark.sql.DataFrame) =
-          df.select("l_returnflag", "n_first", "qty_first").collect()
-            .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-        collected(Queries.relational("q_window_firsthit")(spark, dir.toString)) == collected(naive)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+      val dir = tempDir("firsthit")
+      rows.toDF("l_orderkey" +: order: _*)
+        .write.parquet(s"$dir/lineitem.parquet")
+      val naive = Tables.lineitem(spark, dir)
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("l_orderkey").orderBy(order.map(col): _*)))
+        .filter(col("rn") === 1)
+        .groupBy("l_returnflag")
+        .agg(count(lit(1)).as("n_first"), round(sum(col("l_quantity")), 2).as("qty_first"))
+      def collected(df: org.apache.spark.sql.DataFrame) =
+        df.select("l_returnflag", "n_first", "qty_first").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+      collected(Queries.relational("q_window_firsthit")(spark, dir)) == collected(naive)
     }
     val res = Check.check(Check.Parameters.default
       .withMinSuccessfulTests(12).withMaxSize(8).withWorkers(1)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -19,6 +20,20 @@ object TestSpark {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  private val temps = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh temp directory; it and everything in it is deleted after the
+    * suite. */
+  protected def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    temps.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try temps.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
 }

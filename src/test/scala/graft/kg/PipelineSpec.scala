@@ -268,7 +268,7 @@ class KgPipelineSpec extends SparkSpec {
     // or a key extraction silently broke. The second run resumes from a
     // checkpoint that already holds a done set, so the resume anti-join
     // is held to the same rule.
-    val outDir = java.nio.file.Files.createTempDirectory("kgplanresume").toString
+    val outDir = tempDir("kgplanresume")
     KgPipeline.runAndCommit(spark,
       Pages.fixtures(spark).filter(col("url") === "https://fixtures.graft/sauk"),
       dims, client, outDir, KgPipeline.Config(numPartitions = 2))
@@ -332,7 +332,7 @@ class KgPipelineSpec extends SparkSpec {
   }
 
   test("resume: second run is incremental and idempotent") {
-    val outDir = java.nio.file.Files.createTempDirectory("kgresume").toString
+    val outDir = tempDir("kgresume")
     val pages = Pages.fixtures(spark)
     KgPipeline.runAndCommit(spark, pages, dims, client, outDir,
       KgPipeline.Config(numPartitions = 4))
@@ -345,8 +345,8 @@ class KgPipelineSpec extends SparkSpec {
   }
 
   test("resume after partial failure: union of runs equals one clean run") {
-    val cleanDir = java.nio.file.Files.createTempDirectory("kgclean").toString
-    val partialDir = java.nio.file.Files.createTempDirectory("kgpartial").toString
+    val cleanDir = tempDir("kgclean")
+    val partialDir = tempDir("kgpartial")
     val pages = Pages.fixtures(spark)
     // ground truth: one clean run over everything
     KgPipeline.runAndCommit(spark, pages, dims, client, cleanDir,
@@ -372,7 +372,7 @@ class KgPipelineSpec extends SparkSpec {
     // (chtc/preprocess_extraction_direct.py:99-110); here the equivalents
     // are the infer/parse lineage stages + Result.failedUrls + the
     // done-set exclusion that makes a failed page re-drivable.
-    val outDir = java.nio.file.Files.createTempDirectory("kgfail").toString
+    val outDir = tempDir("kgfail")
     def page(u: String, t: String) =
       (u, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
         HtmlText.render(t, "en"), t, "en")
@@ -453,8 +453,8 @@ class KgPipelineSpec extends SparkSpec {
   }
 
   test("bucket-sharded resume: disjoint bucket runs union to one full run; done layout prunes") {
-    val outFull = java.nio.file.Files.createTempDirectory("kgbucketfull").toString
-    val outShard = java.nio.file.Files.createTempDirectory("kgbucketshard").toString
+    val outFull = tempDir("kgbucketfull")
+    val outShard = tempDir("kgbucketshard")
     val pages = Pages.fixtures(spark)
     // canonicalize = false: sharding is exact for the per-page stages;
     // canonicalization is corpus-global by nature and runs per-shard in
@@ -496,8 +496,8 @@ class KgPipelineSpec extends SparkSpec {
 
   test("snapshot-store sharded resume: manifest prunes done files to the shard; union parity") {
     import graft.sources.SnapshotStore
-    val full = java.nio.file.Files.createTempDirectory("snapfull").toString
-    val shard = java.nio.file.Files.createTempDirectory("snapshard").toString
+    val full = tempDir("snapfull")
+    val shard = tempDir("snapshard")
     val pages = Pages.fixtures(spark)
     KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, full,
       KgPipeline.Config(numPartitions = 2, canonicalize = false))
@@ -540,20 +540,18 @@ class KgPipelineSpec extends SparkSpec {
     // the publish fails (the manifest dir is a plain file) after the run's
     // caches materialized while staging; a re-run after a commit conflict
     // must not leak one set of caches per attempt
-    val dir = java.nio.file.Files.createTempDirectory("snapfail")
-    try {
-      assert(dir.resolve("snapshots").toFile.createNewFile())
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.size
-      intercept[Exception](KgPipeline.runAndCommitSnapshot(spark, Pages.fixtures(spark),
-        dims, client, dir.toString, KgPipeline.Config(numPartitions = 2)))
-      assert(sc.getPersistentRDDs.size === before)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    val dir = tempDir("snapfail")
+    assert(new java.io.File(dir, "snapshots").createNewFile())
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    intercept[Exception](KgPipeline.runAndCommitSnapshot(spark, Pages.fixtures(spark),
+      dims, client, dir, KgPipeline.Config(numPartitions = 2)))
+    assert(sc.getPersistentRDDs.size === before)
   }
 
   test("store file compaction: rows identical, fewer files, bucket layout re-established") {
     import graft.sources.SnapshotStore
-    val dir = java.nio.file.Files.createTempDirectory("snaprewrite").toString
+    val dir = tempDir("snaprewrite")
     // amplified corpus (240 urls across all buckets) so each sharded
     // commit's multi-task staging leaves several files per bucket — the
     // append-per-run accumulation the rewrite exists to collapse

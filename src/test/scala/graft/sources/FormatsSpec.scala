@@ -21,7 +21,7 @@ class FormatsSpec extends SparkSpec {
   test("triples round-trip identically through every supported format") {
     val want = triples.select(key.map(col): _*).collect().map(_.toSeq).toSet
     assert(want.nonEmpty)
-    val outDir = java.nio.file.Files.createTempDirectory("fmt").toString
+    val outDir = tempDir("fmt")
     Formats.Supported.foreach { fmt =>
       Formats.writeTriples(triples, outDir, fmt)
       val got = Formats.readTriples(spark, outDir, fmt)
@@ -31,7 +31,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("bucketed layout prunes url point lookups in orc too") {
-    val outDir = java.nio.file.Files.createTempDirectory("fmtorc").toString
+    val outDir = tempDir("fmtorc")
     Formats.writeTriples(triples, outDir, "orc")
     // layout: one directory per url_bucket, like the parquet sink
     val buckets = new java.io.File(s"$outDir/triples_orc").listFiles()

@@ -7,11 +7,8 @@ import org.apache.spark.sql.functions._
 class SnapshotStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("commit/read roundtrip; appends union across versions; time travel") {
-    val dir = tmp("snap")
+    val dir = tempDir("snap")
     val v1 = SnapshotStore.commit(spark, dir,
       Map("t" -> Seq((1L, "a"), (2L, "b")).toDF("id", "v")))
     assert(v1 === 1)
@@ -28,7 +25,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("partitioned staging: manifest paths prune by partition; mixed flat files kept") {
-    val dir = tmp("snappart")
+    val dir = tempDir("snappart")
     // flat append first (pre-partitioning layout), then a partitioned one
     SnapshotStore.commit(spark, dir,
       Map("t" -> Seq((0L, 0L)).toDF("id", "part")))
@@ -55,7 +52,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("commitMixed: append and replace land in one atomic snapshot") {
-    val dir = tmp("snapmixed")
+    val dir = tempDir("snapmixed")
     SnapshotStore.commit(spark, dir, Map(
       "log" -> Seq(("u1", "infer"), ("u2", "parse")).toDF("url", "stage"),
       "data" -> Seq((1L, "a")).toDF("id", "v")))
@@ -77,7 +74,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("replace rewrite aborts when the store moved past its read version") {
-    val dir = tmp("snapocc")
+    val dir = tempDir("snapocc")
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((1L, "a")).toDF("id", "v")))
     val readV = SnapshotStore.currentVersion(spark, dir)
     // a concurrent appender (e.g. a streaming micro-batch) lands between
@@ -100,7 +97,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("snapshot isolation: staged-but-unpublished data is invisible") {
-    val dir = tmp("snapiso")
+    val dir = tempDir("snapiso")
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((1L, "a")).toDF("id", "v")))
     // simulate a writer that crashed after staging, before publish
     Seq((99L, "crash")).toDF("id", "v")
@@ -112,7 +109,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("snapshot commit excludes failed urls from done; heal re-drives them") {
-    val dir = tmp("snapfail")
+    val dir = tempDir("snapfail")
     val dims = Dims.tiny(spark)
     def page(u: String, t: String) =
       (u, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
@@ -140,7 +137,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("optimistic concurrency: a taken version is retried, not clobbered") {
-    val dir = tmp("snapocc")
+    val dir = tempDir("snapocc")
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((1L, "a")).toDF("id", "v")))
     // occupy v2 manually (a concurrent winner)
     val f = new org.apache.hadoop.fs.Path(s"$dir/snapshots/v00002.json")
@@ -157,7 +154,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("pipeline atomic commit: triples + done move together; rerun is exactly-once") {
-    val dir = tmp("snappipe")
+    val dir = tempDir("snappipe")
     val dims = Dims.tiny(spark)
     val client = Inference.defaultClient(
       Dims.pinnedStrat.map(_.strat_name).toArray,
@@ -166,7 +163,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val pages = Pages.fixtures(spark)
 
     // clean ground truth in one commit
-    val cleanDir = tmp("snapclean")
+    val cleanDir = tempDir("snapclean")
     KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, cleanDir,
       KgPipeline.Config(numPartitions = 4))
     val key = Seq("url", "subj_name", "predicate", "obj_name")
@@ -200,7 +197,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("concurrent writers: racing commits never clobber each other's staged files") {
-    val dir = tmp("snaprace")
+    val dir = tempDir("snaprace")
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((0L, "base")).toDF("id", "v")))
     // Both writers race for v2 with the SAME table name: before stage paths
     // were writer-unique, the loser's mode-overwrite deleted the winner's
@@ -230,7 +227,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("retention sweep: expired manifests + unreferenced data go; retained versions intact") {
-    val dir = tmp("snapexpire")
+    val dir = tempDir("snapexpire")
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((1L, "a")).toDF("id", "v")))
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((2L, "b")).toDF("id", "v")))
     // v3 is a compaction: v1/v2's data files become unreferenced by v3
@@ -279,7 +276,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("repeated sweeps: a window covering already-expired versions doesn't crash") {
-    val dir = tmp("snapresweep")
+    val dir = tempDir("snapresweep")
     (1 to 3).foreach(i =>
       SnapshotStore.commit(spark, dir, Map("t" -> Seq((i.toLong, s"v$i")).toDF("id", "v"))))
     SnapshotStore.expireSnapshots(spark, dir, keepLast = 1, graceMs = 0,
@@ -295,7 +292,7 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("replace-mode commit carries prior meta forward; new keys win") {
-    val dir = tmp("snapmeta")
+    val dir = tempDir("snapmeta")
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((1L, "a")).toDF("id", "v")),
       meta = Map("batch_id" -> "7", "owner" -> "stream"))
     SnapshotStore.commitReplace(spark, dir,

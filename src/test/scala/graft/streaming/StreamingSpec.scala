@@ -21,8 +21,8 @@ class StreamingSpec extends SparkSpec {
                       c: Inference.InferenceClient = client,
                       cfg: KgPipeline.Config = KgPipeline.Config(),
                       dedupWatermark: Option[String] = None): String = {
-    val storeDir = java.nio.file.Files.createTempDirectory("sinkstore").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sinkckpt").toString
+    val storeDir = tempDir("sinkstore")
+    val ckpt = tempDir("sinkckpt")
     val stream = StreamingKg.pagesStream(spark, pagesDir)
     assert(stream.isStreaming)
     val sink = StreamingKg.snapshotSinkWithFailures(
@@ -45,7 +45,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   private def fixturePagesDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("pagestream").toString
+    val dir = tempDir("pagestream")
     Pages.fixtures(spark).write.mode("overwrite").parquet(dir)
     dir
   }
@@ -104,7 +104,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming failure bookkeeping: failed urls commit atomically with triples") {
     import graft.sources.SnapshotStore
-    val pagesDir = java.nio.file.Files.createTempDirectory("failsrc").toString
+    val pagesDir = tempDir("failsrc")
     def page(u: String, t: String) =
       (u, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
         HtmlText.render(t, "en"), t, "en")
@@ -139,7 +139,7 @@ class StreamingSpec extends SparkSpec {
 
   test("failed-url re-drive: healed transport converges the store and empties the log") {
     import graft.sources.SnapshotStore
-    val pagesDir = java.nio.file.Files.createTempDirectory("redrivesrc").toString
+    val pagesDir = tempDir("redrivesrc")
     def page(u: String, t: String) =
       (u, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
         HtmlText.render(t, "en"), t, "en")
@@ -206,7 +206,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming alignment tiers: micro-batch fuzzy+cosine equal the batch pipeline") {
     import graft.sources.SnapshotStore
-    val pagesDir = java.nio.file.Files.createTempDirectory("tiersrc").toString
+    val pagesDir = tempDir("tiersrc")
     // dim knows only "Waldron Shale"; tier-1 misses the misspelling, the
     // capped fuzzy tier scores it below its bar (Jaccard 9/13 < 0.75) and
     // the cosine tier links it (sim 0.859 >= 0.8) — inside a micro-batch
@@ -239,7 +239,7 @@ class StreamingSpec extends SparkSpec {
 
   test("compaction: cross-batch surface variants collapse to one canonical entity") {
     import graft.sources.SnapshotStore
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString
+    val dir = tempDir("compact")
     def aligned(url: String, name: String) = Seq(
       (url, "h", "m", "Minnesota", "contains", name, "strat", name, false))
       .toDF("url", "hashed_text", "model_id", "subj_name", "predicate",
@@ -270,7 +270,7 @@ class StreamingSpec extends SparkSpec {
     assert(canon("Foo Formation") === "Foo Formation")
     assert(canon("foo formation.") === "Foo Formation")
     // an open-vocabulary store (no driver probe) compacts to the same map
-    val openDir = java.nio.file.Files.createTempDirectory("compactopen").toString
+    val openDir = tempDir("compactopen")
     twoBatches(openDir)
     assert(StreamingKg.compactCanonicalize(spark, openDir,
       cfg = KgPipeline.Config(canonLocalProbe = false)).contains(3))
@@ -324,8 +324,8 @@ class StreamingSpec extends SparkSpec {
         HtmlText.render(t, "en"), t, "en")
     val pages = Seq(page(uA, tA), page(uX, tX), page(uB, tB), page(uC, tC))
       .toDF("url", "warc_ts", "html", "text", "lang")
-    val full = java.nio.file.Files.createTempDirectory("dedupfull").toString
-    val shard = java.nio.file.Files.createTempDirectory("dedupshard").toString
+    val full = tempDir("dedupfull")
+    val shard = tempDir("dedupshard")
     val cfg = KgPipeline.Config(numPartitions = 2, canonicalize = false,
       dedupMinJaccard = Some(0.5))
     KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, full, cfg)
@@ -376,7 +376,7 @@ class StreamingSpec extends SparkSpec {
 
   test("compaction re-hydration preserves each row's original requested_at provenance") {
     import graft.sources.SnapshotStore
-    val dir = java.nio.file.Files.createTempDirectory("compactprov").toString
+    val dir = tempDir("compactprov")
     // rows committed by an earlier run carry THAT run's timestamp...
     val t1 = java.sql.Timestamp.valueOf("2023-03-03 03:03:03")
     val committed = KgPipeline.run(spark, Pages.fixtures(spark), dims, client,
@@ -425,7 +425,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedup gate in rawParsedStream: identical page spends inference once") {
-    val dir = java.nio.file.Files.createTempDirectory("pagestreamdedup").toString
+    val dir = tempDir("pagestreamdedup")
     val pages = Pages.fixtures(spark)
     pages.unionByName(
         pages.filter(col("url") === "https://fixtures.graft/sauk")
