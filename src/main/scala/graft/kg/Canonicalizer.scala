@@ -132,7 +132,7 @@ object Canonicalizer {
     // Guard for known-unbounded entity spaces (open-vocabulary web
     // extraction): skip the driver probe entirely — every job would
     // otherwise pay a wasted up-to-500k-row collect before falling back.
-    if (!localProbe) return distributedCanonicalize(aligned)
+    if (!localProbe) return distributedCanonicalize(aligned, localProbe = false)
     val spark = aligned.sparkSession
     import spark.implicits._
 
@@ -201,11 +201,14 @@ object Canonicalizer {
         val root = find(v)
         (v._1, v._2, linkedOfRoot.getOrElse(root, canonOfRoot(root)))
       }.toSeq.toDF("kind", "name", "canonical_name")
-    } else distributedCanonicalize(aligned)
+    } else distributedCanonicalize(aligned, localProbe = true)
   }
 
-  /** Distributed path: CC over hashed vertex ids. */
-  private def distributedCanonicalize(aligned: DataFrame): DataFrame = {
+  /** Distributed path: CC over hashed vertex ids. `localProbe` passes on
+    * to [[connectedComponents]]: an open-vocabulary run skips its edge
+    * probe too, while a name-probe overflow still tries it (the edge set
+    * can fit where the name set did not). */
+  private def distributedCanonicalize(aligned: DataFrame, localProbe: Boolean): DataFrame = {
     def nid(kindCol: Column, nameCol: Column): Column = xxhash64(kindCol, nameCol)
 
     val names = aligned.select(col("obj_kind").as("kind"), col("obj_name").as("name"))
@@ -226,7 +229,7 @@ object Canonicalizer {
               nid(col("obj_kind"), col("obj_canonical")).as("dst"))
       .distinct()
 
-    val comp = connectedComponents(normEdges.unionAll(alignEdges))
+    val comp = connectedComponents(normEdges.unionAll(alignEdges), localProbe = localProbe)
 
     val withComp = vertices.join(comp, Seq("id"), "left")
       .withColumn("component", coalesce(col("component"), col("id")))

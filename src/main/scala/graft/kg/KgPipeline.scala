@@ -46,8 +46,12 @@ object KgPipeline {
   private[graft] def bucketed(df: DataFrame): DataFrame =
     df.withColumn("url_bucket", urlBucket(col("url")))
 
+  /** A store table is url-keyed — staged under `url_bucket=N/` — iff it
+    * has a `url` column. */
+  private def urlKeyed(df: DataFrame): Boolean = df.columns.contains("url")
+
   /** Commit KG-store tables in one atomic snapshot
-    * (graft.sources.SnapshotStore.commitMixed: `append` tables add files,
+    * (graft.sources.SnapshotStore.commit: `append` tables add files,
     * `replace` tables' files become their full content). This is the store
     * layout, decided once: a table with a `url` column (triples, done,
     * failed) is staged under `url_bucket=N/` directories, so every reader
@@ -58,10 +62,9 @@ object KgPipeline {
                                  replace: Map[String, DataFrame] = Map.empty,
                                  meta: Map[String, String] = Map.empty,
                                  requireVersion: Option[Int] = None): Int = {
-    def urlKeyed(df: DataFrame) = df.columns.contains("url")
     def stage(ts: Map[String, DataFrame]) =
       ts.map { case (t, df) => t -> (if (urlKeyed(df)) bucketed(df) else df) }
-    graft.sources.SnapshotStore.commitMixed(spark, dir, stage(append), stage(replace),
+    graft.sources.SnapshotStore.commit(spark, dir, stage(append), stage(replace),
       meta = meta,
       partitionBy = (append ++ replace).collect {
         case (t, df) if urlKeyed(df) => t -> Seq("url_bucket")
@@ -79,8 +82,8 @@ object KgPipeline {
                                  buckets: Seq[Int],
                                  version: Option[Int] = None): Option[DataFrame] = {
     val markers = buckets.map(b => s"url_bucket=$b/")
-    graft.sources.SnapshotStore.readPruned(spark, dir, table,
-      f => !f.contains("url_bucket=") || markers.exists(f.contains), version)
+    graft.sources.SnapshotStore.read(spark, dir, table, version,
+      f => !f.contains("url_bucket=") || markers.exists(f.contains))
   }
 
   final case class Config(
@@ -219,17 +222,8 @@ object KgPipeline {
           client: Inference.InferenceClient, cfg: Config = Config()): Result = {
 
     // J1: resume anti-join against previously committed urls — FIRST, so
-    // already-done pages are pruned before any per-page work (broadcast
-    // anti-join: no shuffle of the page side). In bucket-sharded mode both
-    // sides narrow to the shard's buckets before the join: the page side by
-    // filter, the done side by partition-pruned scan.
-    val scoped = bucketFilter(pages0, cfg)
-    val pages = cfg.checkpointDir match {
-      case Some(dir) if fsExists(spark, s"$dir/done") =>
-        scoped.join(broadcast(readDone(spark, s"$dir/done", cfg)),
-          Seq("url"), "left_anti")
-      case _ => scoped
-    }
+    // already-done pages are pruned before any per-page work.
+    val pages = resume(pages0, cfg.checkpointDir.flatMap(readDone(spark, _, cfg)), cfg)
 
     // Extract stage (StageChain.extract): runs BEFORE the repartition and
     // drops `html` + the golden column on the spot — shuffling both the raw
@@ -365,29 +359,23 @@ object KgPipeline {
   def runAndCommit(spark: SparkSession, pages: DataFrame, dims: Dims.Snapshot,
                    client: Inference.InferenceClient, outDir: String,
                    cfg: Config = Config()): Unit = {
-    val checkpointed = cfg.copy(checkpointDir = Some(s"$outDir/checkpoint"))
-    val res = run(spark, pages, dims, client, checkpointed)
+    val checkpoint = s"$outDir/checkpoint"
+    val todo = resume(pages, readDone(spark, checkpoint, cfg), cfg)
+    val res = run(spark, todo, dims, client, cfg.copy(checkpointDir = None))
     try {
       bucketed(res.triples)
         .write.mode("append").partitionBy("url_bucket").parquet(s"$outDir/triples")
       res.lineage.write.mode("append").parquet(s"$outDir/lineage")
       res.rdf.foreach(_.write.mode("append").parquet(s"$outDir/rdf"))
-      // commit the done-set last: urls become "done" only after data landed;
-      // append only NEWLY processed urls so the checkpoint table doesn't
+      // commit the done-set last: urls become "done" only after data landed.
+      // Only this run's urls are appended, so the checkpoint table doesn't
       // accumulate duplicates across resumed runs. Urls that FAILED infer or
       // parse this run are excluded — they stay not-done, so the next run's
       // resume anti-join re-drives them (the reference's re-drivable "NA"
       // placeholder semantics; with a deterministic client they fail again,
       // with a healed transport they heal).
-      val donePath = s"$outDir/checkpoint/done"
-      val newUrls =
-        if (fsExists(spark, donePath)) {
-          val done = readDone(spark, donePath, cfg)
-          bucketFilter(pages.select("url"), cfg)
-            .join(broadcast(done), Seq("url"), "left_anti")
-        } else bucketFilter(pages.select("url"), cfg)
-      bucketed(newUrls.join(broadcast(res.failedUrls), Seq("url"), "left_anti"))
-        .write.mode("append").partitionBy("url_bucket").parquet(donePath)
+      bucketed(todo.select("url").join(broadcast(res.failedUrls), Seq("url"), "left_anti"))
+        .write.mode("append").partitionBy("url_bucket").parquet(s"$checkpoint/done")
     } finally res.cleanup()
   }
 
@@ -403,20 +391,11 @@ object KgPipeline {
   def runAndCommitSnapshot(spark: SparkSession, pages: DataFrame, dims: Dims.Snapshot,
                            client: Inference.InferenceClient, tableDir: String,
                            cfg: Config = Config()): Int = {
-    import graft.sources.SnapshotStore
     // Done-set read: in bucket-sharded mode the manifest prunes the file
-    // list to the shard's buckets before any IO; the bucketFilter row
-    // predicate below stays the correctness filter.
-    val done = cfg.buckets match {
-      case Some(bs) => readBuckets(spark, tableDir, "done", bs)
-      case None => SnapshotStore.read(spark, tableDir, "done")
-    }
-    val scoped = bucketFilter(pages, cfg)
-    val todo = done match {
-      case Some(d) =>
-        scoped.join(broadcast(bucketFilter(d.select("url"), cfg)), Seq("url"), "left_anti")
-      case None => scoped
-    }
+    // list to the shard's buckets before any IO.
+    val done = cfg.buckets.fold(graft.sources.SnapshotStore.read(spark, tableDir, "done"))(
+      readBuckets(spark, tableDir, "done", _))
+    val todo = resume(pages, done, cfg)
     val res = run(spark, todo, dims, client, cfg)
     // failed-url exclusion: same re-drivable semantics as runAndCommit —
     // the snapshot's done table never claims a page whose infer/parse
@@ -441,32 +420,43 @@ object KgPipeline {
     * unmarked files of older stores converge to the layout; lineage
     * coalesces to a bounded count. Row sets are byte-identical — pure
     * layout maintenance, schedule-composable; [[graft.sources
-    * .SnapshotStore.expireSnapshots]] reclaims the replaced files. */
+    * .SnapshotStore.expireSnapshots]] reclaims the replaced files. Returns
+    * the committed version, None when the store holds no data. */
   def compactStoreFiles(spark: SparkSession, tableDir: String): Option[Int] = {
-    val stage = (df: DataFrame) =>
-      (bucketed(df).repartition(UrlBuckets, col("url_bucket")), Seq("url_bucket"))
-    graft.sources.SnapshotStore.rewriteTables(spark, tableDir,
-      Seq("triples", "done", "lineage", "failed"),
-      stage = Seq("triples", "done", "failed").map(_ -> stage).toMap)
+    val readVersion = graft.sources.SnapshotStore.currentVersion(spark, tableDir)
+    val present = Seq("triples", "done", "lineage", "failed").flatMap { t =>
+      graft.sources.SnapshotStore.read(spark, tableDir, t, Some(readVersion)).map(t -> _)
+    }.toMap
+    if (present.isEmpty) None
+    else Some(commitStore(spark, tableDir, append = Map.empty,
+      replace = present.map { case (t, df) =>
+        t -> (if (urlKeyed(df)) df.repartition(UrlBuckets, urlBucket(col("url"))) else df.coalesce(8))
+      },
+      meta = Map("compaction" -> "rewrite"), requireVersion = Some(readVersion)))
   }
 
-  /** Narrow a url-keyed frame to the configured bucket shard (no-op when
-    * bucket sharding is off). */
-  private def bucketFilter(df: DataFrame, cfg: Config): DataFrame =
-    cfg.buckets match {
-      case Some(bs) => df.filter(urlBucket(col("url")).isin(bs.map(_.toLong): _*))
-      case None => df
-    }
+  /** The pages a run still owes: the configured bucket shard (no-op when
+    * bucket sharding is off), minus the done set when there is one — a
+    * broadcast left-anti join, so the page side never shuffles. Every
+    * resume ([[run]]'s checkpoint, [[runAndCommit]],
+    * [[runAndCommitSnapshot]]) goes through here. */
+  private def resume(pages: DataFrame, done: Option[DataFrame], cfg: Config): DataFrame =
+    done.foldLeft(bucketFilter(pages, cfg))((todo, d) =>
+      todo.join(broadcast(d.select("url")), Seq("url"), "left_anti"))
 
-  /** Read the done-set. In bucket-sharded mode the url_bucket predicate is
-    * a PARTITION filter: the scan reads only the shard's bucket directories
+  private def bucketFilter(df: DataFrame, cfg: Config): DataFrame =
+    cfg.buckets.fold(df)(bs => df.filter(urlBucket(col("url")).isin(bs.map(_.toLong): _*)))
+
+  /** The parquet sink's done set under `checkpoint`, None before its first
+    * commit. In bucket-sharded mode the url_bucket predicate is a
+    * PARTITION filter: the scan reads only the shard's bucket directories
     * (verified executed-plan evidence in PLANS.md round-5 —
     * `PartitionFilters: [url_bucket IN (...)]`, no full done-set IO). */
-  private def readDone(spark: SparkSession, path: String, cfg: Config): DataFrame = {
-    val done = spark.read.parquet(path)
-    cfg.buckets.fold(done)(bs => done.filter(col("url_bucket").isin(bs.map(_.toLong): _*)))
-      .select("url")
-  }
+  private def readDone(spark: SparkSession, checkpoint: String, cfg: Config): Option[DataFrame] =
+    Some(s"$checkpoint/done").filter(fsExists(spark, _)).map { path =>
+      val done = spark.read.parquet(path)
+      cfg.buckets.fold(done)(bs => done.filter(col("url_bucket").isin(bs.map(_.toLong): _*)))
+    }
 
   private def fsExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

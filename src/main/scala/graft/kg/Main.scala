@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   *
   *   spark-submit --class graft.kg.Main <jar> \
   *     --pages <parquet dir | "synthetic:<sfDir>"> --out <dir> \
-  *     [--partitions N] [--salted] [--no-canonicalize] [--snapshot] \
+  *     [--partitions N] [--salted] [--no-canonicalize] \
   *     [--dedup <minJaccard>] [--open-vocabulary] [--buckets lo-hi] \
   *     [--fuzzy <minJaccard> [--fuzzy-cap <df>]] [--cosine <minSim>
   *      [--cosine-lsh planes,bands]]
@@ -26,13 +26,12 @@ import org.apache.spark.sql.SparkSession
   *                                      (files younger than the grace
   *                                      period survive; default 1 h)
   *
-  * Reruns with the same --out resume incrementally (left-anti join against
-  * committed urls). Two sink protocols:
-  *  - default: append to a 64-way url-bucketed parquet table + a separate
-  *    checkpoint `done` table (the reference's commit shape);
-  *  - --snapshot: triples/lineage/done publish in ONE atomic snapshot via
-  *    graft.sources.SnapshotStore (Iceberg commit semantics — snapshot
-  *    isolation, optimistic concurrency, time travel).
+  * --out is a snapshot store: triples, lineage and the resume `done` set
+  * publish in ONE atomic snapshot via graft.sources.SnapshotStore (Iceberg
+  * commit semantics — snapshot isolation, optimistic concurrency, time
+  * travel), through the same KgPipeline.commitStore layout the
+  * maintenance modes write. Reruns with the same --out resume
+  * incrementally (left-anti join against the committed `done` set).
   * --dedup runs the corpus duplicate gate before inference (LSH →
   * verified Jaccard → CC resolution; drops counted in lineage);
   * --open-vocabulary skips the driver small-graph probes (unbounded
@@ -143,10 +142,8 @@ object Main {
 
     val pages = loadPages(spark, pagesSrc)
     val (dims, client) = bootstrap(spark)
-    if (opts.contains("snapshot")) {
-      val v = KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, outDir, cfg)
-      println(s"[graft] committed snapshot v$v at $outDir")
-    } else KgPipeline.runAndCommit(spark, pages, dims, client, outDir, cfg)
+    val v = KgPipeline.runAndCommitSnapshot(spark, pages, dims, client, outDir, cfg)
+    println(s"[graft] committed snapshot v$v at $outDir")
     spark.stop()
   }
 
@@ -186,7 +183,6 @@ object Main {
       case "--partitions" :: v :: rest => parse(rest, acc + ("partitions" -> v))
       case "--salted" :: rest => parse(rest, acc + ("salted" -> "1"))
       case "--no-canonicalize" :: rest => parse(rest, acc + ("no-canonicalize" -> "1"))
-      case "--snapshot" :: rest => parse(rest, acc + ("snapshot" -> "1"))
       case "--dedup" :: v :: rest => parse(rest, acc + ("dedup" -> v))
       case "--fuzzy" :: v :: rest => parse(rest, acc + ("fuzzy" -> v))
       case "--fuzzy-cap" :: v :: rest => parse(rest, acc + ("fuzzy-cap" -> v))

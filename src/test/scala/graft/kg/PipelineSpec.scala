@@ -45,10 +45,35 @@ class CanonicalizerSpec extends SparkSpec {
     val local = Canonicalizer(aligned, localProbe = true)
       .select("obj_name", "obj_final", "entity_cluster_id")
       .collect().map(_.toSeq).toSet
-    val dist = Canonicalizer(aligned, localProbe = false)
-      .select("obj_name", "obj_final", "entity_cluster_id")
-      .collect().map(_.toSeq).toSet
+    // without the probe, no action may be a driver probe: both probes
+    // (names and CC edges) plan as CollectLimit
+    import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+    }
+    // LiveListenerBus.waitUntilEmpty is private[spark]: reach it reflectively
+    def drainBus(): Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    drainBus()
+    spark.listenerManager.register(listener)
+    val dist = try {
+      val rows = Canonicalizer(aligned, localProbe = false)
+        .select("obj_name", "obj_final", "entity_cluster_id")
+        .collect().map(_.toSeq).toSet
+      drainBus()
+      rows
+    } finally spark.listenerManager.unregister(listener)
     assert(dist === local)
+    // the physical plan before adaptive execution: AQE's final plan folds
+    // the CollectLimit into its result stage
+    val probes = plans.toArray(Array.empty[QueryExecution])
+      .map(_.sparkPlan).filter(_.exists(_.isInstanceOf[CollectLimitExec]))
+    assert(!plans.isEmpty && probes.isEmpty, probes.mkString("\n"))
   }
 
   test("connectedComponents localProbe=false: distributed rounds engage, same output") {

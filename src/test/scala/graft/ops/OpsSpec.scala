@@ -664,6 +664,37 @@ class TextOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2), r.getString(3))).toSet
     assert(onePass === joined)
   }
+
+  test("qualityLang equals quality joined 1:1 with langId on generated texts (seeded property)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    // stopwords (also glued to punctuation or to each other, where \b
+    // decides), other words in mixed case, punctuation, ragged spacing
+    val token = Gen.frequency(
+      3 -> Gen.oneOf(TextOps.EnStopwords),
+      3 -> Gen.oneOf("cat", "The", "Wort", "formation", "Sauk", "x", "AND", "i18n"),
+      2 -> Gen.oneOf(".", ",", "!", "--", "(", ")", "42"))
+    val text = for {
+      toks <- Gen.nonEmptyListOf(token)
+      seps <- Gen.listOfN(toks.size, Gen.oneOf(" ", " ", "  ", "", ", "))
+    } yield toks.head + toks.tail.zip(seps).map { case (t, sep) => sep + t }.mkString
+    val cols = Seq("doc_id", "n_chars", "n_tok", "mean_tok_len", "stop_ratio",
+      "alpha_ratio", "quality_score", "predicted_lang")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+    // no shrinking: every shrink step would run Spark jobs
+    val prop = Prop.forAllNoShrink(Gen.nonEmptyListOf(text)) { texts =>
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en") }
+        .toDF("doc_id", "text", "lang")
+      val joined = TextOps.quality(docs)
+        .join(TextOps.langId(docs).select("doc_id", "predicted_lang"), "doc_id")
+      rows(TextOps.qualityLang(docs)) == rows(joined)
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(20).withMaxSize(30).withWorkers(1)
+      .withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, res.status.toString)
+  }
 }
 
 class MultimodalSpec extends SparkSpec {

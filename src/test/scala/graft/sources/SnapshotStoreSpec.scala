@@ -32,14 +32,14 @@ class SnapshotStoreSpec extends SparkSpec {
     SnapshotStore.commit(spark, dir,
       Map("t" -> Seq((1L, 1L), (2L, 2L), (3L, 1L)).toDF("id", "part")),
       partitionBy = Map("t" -> Seq("part")))
-    // manifest lists flat + Hive-style leaves; readPruned keeps unmarked
+    // manifest lists flat + Hive-style leaves; a pruning read keeps unmarked
     // files plus the wanted partition, so a pruning read sees exactly the
     // flat rows (unprunable) + the kept partition's rows
     val total = SnapshotStore.fileCount(spark, dir, "t")
     val marked = SnapshotStore.fileCount(spark, dir, "t", _.contains("part="))
     assert(marked > 0 && marked < total)
-    val pruned = SnapshotStore.readPruned(spark, dir, "t",
-      f => !f.contains("part=") || f.contains("part=1/")).get
+    val pruned = SnapshotStore.read(spark, dir, "t",
+      keepFile = f => !f.contains("part=") || f.contains("part=1/")).get
       .select("id").collect().map(_.getLong(0)).toSet
     assert(pruned === Set(0L, 1L, 3L))
     // the partition column is a PATH property, not file data: the full
@@ -51,12 +51,12 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(all === Set(0L, 1L, 2L, 3L))
   }
 
-  test("commitMixed: append and replace land in one atomic snapshot") {
+  test("commit: append and replace land in one atomic snapshot") {
     val dir = tempDir("snapmixed")
     SnapshotStore.commit(spark, dir, Map(
       "log" -> Seq(("u1", "infer"), ("u2", "parse")).toDF("url", "stage"),
       "data" -> Seq((1L, "a")).toDF("id", "v")))
-    val v = SnapshotStore.commitMixed(spark, dir,
+    val v = SnapshotStore.commit(spark, dir,
       append = Map("data" -> Seq((2L, "b")).toDF("id", "v")),
       replace = Map("log" -> Seq(("u2", "parse")).toDF("url", "stage")))
     assert(v === 2)
@@ -67,7 +67,7 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(SnapshotStore.read(spark, dir, "log", Some(1)).get.count() === 2L)
     // a table in both maps is a caller error
     intercept[IllegalArgumentException] {
-      SnapshotStore.commitMixed(spark, dir,
+      SnapshotStore.commit(spark, dir,
         append = Map("log" -> Seq(("x", "y")).toDF("url", "stage")),
         replace = Map("log" -> Seq(("x", "y")).toDF("url", "stage")))
     }
@@ -82,14 +82,14 @@ class SnapshotStoreSpec extends SparkSpec {
     // drop that append; requireVersion turns it into a retryable abort
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((2L, "b")).toDF("id", "v")))
     intercept[java.util.ConcurrentModificationException] {
-      SnapshotStore.commitReplace(spark, dir,
+      SnapshotStore.commit(spark, dir, Map.empty,
         Map("t" -> Seq((9L, "z")).toDF("id", "v")),
         requireVersion = Some(readV))
     }
     // nothing replaced: the concurrent append is intact
     assert(SnapshotStore.read(spark, dir, "t").get.count() === 2L)
     // re-running the read-compute-replace cycle at the new head succeeds
-    val v = SnapshotStore.commitReplace(spark, dir,
+    val v = SnapshotStore.commit(spark, dir, Map.empty,
       Map("t" -> Seq((9L, "z")).toDF("id", "v")),
       requireVersion = Some(SnapshotStore.currentVersion(spark, dir)))
     assert(v === 3)
@@ -231,7 +231,7 @@ class SnapshotStoreSpec extends SparkSpec {
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((1L, "a")).toDF("id", "v")))
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((2L, "b")).toDF("id", "v")))
     // v3 is a compaction: v1/v2's data files become unreferenced by v3
-    SnapshotStore.commitReplace(spark, dir,
+    SnapshotStore.commit(spark, dir, Map.empty,
       Map("t" -> Seq((1L, "a"), (2L, "b")).toDF("id", "v")))
     // plus an orphan from a "crashed writer": staged, never published
     Seq((99L, "crash")).toDF("id", "v")
@@ -295,7 +295,7 @@ class SnapshotStoreSpec extends SparkSpec {
     val dir = tempDir("snapmeta")
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((1L, "a")).toDF("id", "v")),
       meta = Map("batch_id" -> "7", "owner" -> "stream"))
-    SnapshotStore.commitReplace(spark, dir,
+    SnapshotStore.commit(spark, dir, Map.empty,
       Map("t" -> Seq((1L, "a2")).toDF("id", "v")),
       meta = Map("compaction" -> "canonicalize", "owner" -> "compactor"))
     val m = SnapshotStore.readSnapshot(spark, dir, 2).meta
@@ -314,5 +314,56 @@ class SnapshotStoreSpec extends SparkSpec {
     SnapshotStore.commit(spark, dir, Map("t" -> Seq((3L, "c")).toDF("id", "v")))
     val m4 = SnapshotStore.readSnapshot(spark, dir, 4).meta
     assert(m4.get("batch_id").contains("8"))
+  }
+
+  test("a store under a directory whose name holds a quote round-trips its manifest") {
+    // the path is written into the manifest as a JSON string: an escape
+    // that does not parse back would point the head at files that do not
+    // exist, and the sweep would take the live files for unreferenced
+    val dir = tempDir("snapquote") + "/say \"when\""
+    SnapshotStore.commit(spark, dir, Map("t" -> Seq((1L, "a")).toDF("id", "v")))
+    SnapshotStore.commit(spark, dir, Map("t" -> Seq((2L, "b")).toDF("id", "v")))
+    def rows() = SnapshotStore.read(spark, dir, "t").get
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(rows() === Set((1L, "a"), (2L, "b")))
+    SnapshotStore.expireSnapshots(spark, dir, keepLast = 1, graceMs = 0,
+      nowMs = System.currentTimeMillis() + 10000)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = SnapshotStore.readSnapshot(spark, dir, 2).tables("t")
+    assert(live.size === 2)
+    live.foreach(p => assert(fs.exists(new org.apache.hadoop.fs.Path(p)), s"swept live file $p"))
+    assert(rows() === Set((1L, "a"), (2L, "b")))
+  }
+
+  test("manifest codec: the earlier hand-written text parses unchanged; renders are byte-identical") {
+    // a store's v5 after a stream and a re-drive (the earlier codec's
+    // exact spacing; leaves shortened to two per table, prefix replaced)
+    val stage = "file:/data/kg/stage"
+    val text = s"""{"version": 5, "meta": {"batch_id": "2", "compaction": "redrive"}, """ +
+      s""""tables": {"done": ["$stage/v1-1821-1-0/done/url_bucket=0/part-00000-751d5472-fff2-4f47-94d7-ce55c6ea7a2b.c000.snappy.parquet", """ +
+      s""""$stage/v1-1821-1-0/done/url_bucket=1/part-00000-751d5472-fff2-4f47-94d7-ce55c6ea7a2b.c000.snappy.parquet"], """ +
+      s""""failed": [], "lineage": ["$stage/v1-1821-1-0/lineage/part-00000-029f9bf4-d178-483e-a3a5-499e6289f3de-c000.snappy.parquet"], """ +
+      s""""triples": ["$stage/v1-1821-1-0/triples/url_bucket=0/part-00004-47acfb8b-bee5-47ac-91c0-77caf56909fa.c000.snappy.parquet", """ +
+      s""""$stage/v5-1821-1-0/triples/url_bucket=49/part-00001-1880d037-f159-4e81-bcb1-2c3992858abe.c000.snappy.parquet"]}}"""
+    val snap = SnapshotStore.Snapshot(5, Map(
+      "done" -> Seq(
+        s"$stage/v1-1821-1-0/done/url_bucket=0/part-00000-751d5472-fff2-4f47-94d7-ce55c6ea7a2b.c000.snappy.parquet",
+        s"$stage/v1-1821-1-0/done/url_bucket=1/part-00000-751d5472-fff2-4f47-94d7-ce55c6ea7a2b.c000.snappy.parquet"),
+      "failed" -> Seq(),
+      "lineage" -> Seq(
+        s"$stage/v1-1821-1-0/lineage/part-00000-029f9bf4-d178-483e-a3a5-499e6289f3de-c000.snappy.parquet"),
+      "triples" -> Seq(
+        s"$stage/v1-1821-1-0/triples/url_bucket=0/part-00004-47acfb8b-bee5-47ac-91c0-77caf56909fa.c000.snappy.parquet",
+        s"$stage/v5-1821-1-0/triples/url_bucket=49/part-00001-1880d037-f159-4e81-bcb1-2c3992858abe.c000.snappy.parquet")),
+      Map("batch_id" -> "2", "compaction" -> "redrive"))
+    assert(SnapshotStore.parse(text.getBytes("UTF-8"), 5) === snap)
+    // the same snapshot built in the opposite key order renders the same
+    // bytes, and the render parses back to it
+    val reordered = snap.copy(
+      tables = scala.collection.immutable.ListMap(snap.tables.toSeq.sortBy(_._1).reverse: _*),
+      meta = scala.collection.immutable.ListMap(snap.meta.toSeq.sortBy(_._1).reverse: _*))
+    assert(SnapshotStore.render(snap).sameElements(SnapshotStore.render(reordered)))
+    assert(SnapshotStore.parse(SnapshotStore.render(snap), 5) === snap)
   }
 }
