@@ -440,12 +440,12 @@ object KgPipeline {
     * broadcast left-anti join, so the page side never shuffles. Every
     * resume ([[run]]'s checkpoint, [[runAndCommit]],
     * [[runAndCommitSnapshot]]) goes through here. */
-  private def resume(pages: DataFrame, done: Option[DataFrame], cfg: Config): DataFrame =
-    done.foldLeft(bucketFilter(pages, cfg))((todo, d) =>
+  private def resume(pages: DataFrame, done: Option[DataFrame], cfg: Config): DataFrame = {
+    val scoped = cfg.buckets.fold(pages)(bs =>
+      pages.filter(urlBucket(col("url")).isin(bs.map(_.toLong): _*)))
+    done.foldLeft(scoped)((todo, d) =>
       todo.join(broadcast(d.select("url")), Seq("url"), "left_anti"))
-
-  private def bucketFilter(df: DataFrame, cfg: Config): DataFrame =
-    cfg.buckets.fold(df)(bs => df.filter(urlBucket(col("url")).isin(bs.map(_.toLong): _*)))
+  }
 
   /** The parquet sink's done set under `checkpoint`, None before its first
     * commit. In bucket-sharded mode the url_bucket predicate is a
@@ -453,13 +453,10 @@ object KgPipeline {
     * (verified executed-plan evidence in PLANS.md round-5 —
     * `PartitionFilters: [url_bucket IN (...)]`, no full done-set IO). */
   private def readDone(spark: SparkSession, checkpoint: String, cfg: Config): Option[DataFrame] =
-    Some(s"$checkpoint/done").filter(fsExists(spark, _)).map { path =>
-      val done = spark.read.parquet(path)
-      cfg.buckets.fold(done)(bs => done.filter(col("url_bucket").isin(bs.map(_.toLong): _*)))
-    }
-
-  private def fsExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+    Some(new org.apache.hadoop.fs.Path(s"$checkpoint/done"))
+      .filter(p => p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      .map { p =>
+        val done = spark.read.parquet(p.toString)
+        cfg.buckets.fold(done)(bs => done.filter(col("url_bucket").isin(bs.map(_.toLong): _*)))
+      }
 }

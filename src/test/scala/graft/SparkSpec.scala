@@ -33,6 +33,15 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.toString
   }
 
+  /** Wait until every event posted so far has reached the listeners.
+    * LiveListenerBus.waitUntilEmpty is private[spark]: reach it
+    * reflectively. */
+  protected def drainBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   override protected def afterAll(): Unit =
     try temps.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
     finally super.afterAll()

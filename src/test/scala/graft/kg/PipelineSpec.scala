@@ -53,12 +53,6 @@ class CanonicalizerSpec extends SparkSpec {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
     }
-    // LiveListenerBus.waitUntilEmpty is private[spark]: reach it reflectively
-    def drainBus(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
     drainBus()
     spark.listenerManager.register(listener)
     val dist = try {

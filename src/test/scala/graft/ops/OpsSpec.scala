@@ -388,11 +388,6 @@ class SimilaritySpec extends SparkSpec {
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "spread"))
           jobs.incrementAndGet()
     }
-    // LiveListenerBus.waitUntilEmpty is private[spark]: reach it reflectively
-    def drainBus(): Unit = {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
     sc.addSparkListener(listener)
     sc.setJobGroup("spread", "Tables.spread probe")
     try {
