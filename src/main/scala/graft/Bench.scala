@@ -76,7 +76,7 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def newSession(cores: Int): SparkSession = {
+  private[graft] def newSession(cores: Int): SparkSession = {
     // shuffle/spill on tmpfs: the host's virtio disk turns the concurrent
     // executor-JVM phase into kernel-time soup; RAM-backed local dirs are
     // the sandbox stand-in for the NVMe scratch real executors get.

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Round-7 optimization harness (guide §1.4): per-query timing with
@@ -17,8 +16,8 @@ import scala.collection.mutable
   *   sbt "runMain graft.BenchExtra explain OUTDIR SUFFIX q1 q2 ..." —
   *       writes OUTDIR/<query>_<SUFFIX>.txt with explain("formatted").
   *
-  * Session config mirrors graft.Bench.newSession exactly so numbers and
-  * plans are comparable with the graded bench.
+  * The session comes from graft.Bench.newSession, so numbers and plans
+  * are comparable with the graded bench.
   */
 object BenchExtra {
 
@@ -51,28 +50,12 @@ object BenchExtra {
     }
   }
 
-  private def newSession(cores: Int): SparkSession = {
-    val localDir = s"/dev/shm/graft-spark-${sys.props.getOrElse("user.name", "u")}"
-    new java.io.File(localDir).mkdirs()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-benchextra-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val repeats = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPEATS", "3").toInt
     val mode = args.headOption.getOrElse("time")
-    val spark = newSession(cpus)
+    val spark = Bench.newSession(cpus)
 
     mode match {
       case "explain" =>

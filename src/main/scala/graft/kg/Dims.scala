@@ -1,7 +1,5 @@
 package graft.kg
 
-import scala.reflect.ClassTag
-
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -196,25 +194,25 @@ object Dims {
   private val RankWord = Map("Fm" -> "Formation", "Mbr" -> "Member",
     "Gp" -> "Group", "Bed" -> "Bed")
 
-  def syntheticStrat(n: Int): Seq[StratRow] =
-    (0 until n).map { i =>
-      val name = s"${W1(i % W1.size)} ${W2((i / W1.size) % W2.size)} ${i / (W1.size * W2.size)}"
-      val rank = Ranks(i % Ranks.size)
-      val period = intervals(i % 15).name
-      strat(name, s"$name ${RankWord(rank)}", rank, 100000L + i, 200000L + i,
-        bAge = 100.0 + (i % 400), tAge = 95.0 + (i % 400),
-        bPeriod = period, tPeriod = period)
-    }
+  def syntheticStrat(n: Int): Seq[StratRow] = (0 until n).map(syntheticStratAt)
 
-  def syntheticMinerals(n: Int): Seq[MineralRow] = {
-    val syms = Chem.ElementSymbols.toVector.sorted
-    (0 until n).map { i =>
-      val name = s"${W1(i % W1.size).toLowerCase}ite ${i / W1.size}"
-      MineralRow(name, 1000L + i, "synthetic",
-        s"${syms(i % syms.size)}${syms((i * 7) % syms.size)}O2", "",
-        s"$BaseUrl/defs/minerals?mineral_id=${1000 + i}",
-        (i % 9) + 1.0, (i % 9) + 1.5, "cubic", "gray", "dull", MacrostratVersion)
-    }
+  private def syntheticStratAt(i: Int): StratRow = {
+    val name = s"${W1(i % W1.size)} ${W2((i / W1.size) % W2.size)} ${i / (W1.size * W2.size)}"
+    val rank = Ranks(i % Ranks.size)
+    val period = intervals(i % 15).name
+    strat(name, s"$name ${RankWord(rank)}", rank, 100000L + i, 200000L + i,
+      bAge = 100.0 + (i % 400), tAge = 95.0 + (i % 400),
+      bPeriod = period, tPeriod = period)
+  }
+
+  private val syms = Chem.ElementSymbols.toVector.sorted
+
+  private[kg] def syntheticMineralAt(i: Int): MineralRow = {
+    val name = s"${W1(i % W1.size).toLowerCase}ite ${i / W1.size}"
+    MineralRow(name, 1000L + i, "synthetic",
+      s"${syms(i % syms.size)}${syms((i * 7) % syms.size)}O2", "",
+      s"$BaseUrl/defs/minerals?mineral_id=${1000 + i}",
+      (i % 9) + 1.0, (i % 9) + 1.5, "cubic", "gray", "dull", MacrostratVersion)
   }
 
   /** Full dims at reference cardinality. Small enough to broadcast
@@ -228,27 +226,38 @@ object Dims {
     def map(f: DataFrame => DataFrame): Snapshot =
       Snapshot(f(stratDim), f(mineralDim), f(intervalDim), f(gazetteerDim),
         f(stratGpsDim), f(lithDim))
-    /** Cache every dim (a driver-built leaf re-encodes its rows on each
-      * scan otherwise — snapshot tables are read-many by design). */
+    /** Cache every dim (a generated leaf rebuilds its rows on each scan
+      * otherwise — snapshot tables are read-many by design). */
     def persisted(): Snapshot = map(_.cache())
   }
 
-  /** The full dims, each a one-slice RDD leaf. A `Seq.toDF()` would leave
-    * a `LocalRelation` holding every row in each plan built on the dim, and
-    * the analyzer walks every element of it once per new `Dataset`: at 45k
-    * rows that made planning cost proportional to data, not operators. */
+  /** The full dims, each generated in the one task that scans it: a
+    * one-slice `spark.range` mapped through a per-index row function
+    * (pinned rows first, then the synthetic row for `i - pinned.size`).
+    * A `Seq.toDF()` would leave a `LocalRelation` holding every row in each
+    * plan built on the dim, and the analyzer walks every element of it once
+    * per new `Dataset`; a parallelized `Seq` would ship every row inside
+    * each task over the dim (8.8 MiB for the strat dim), cached or not.
+    * The one-slice range also reports a single partition, so the
+    * first-hit windows of Hydrator.prepare over a dim plan no shuffle. */
   def snapshot(spark: SparkSession, bulkStrat: Int = 45646 - 13,
                bulkMinerals: Int = 6387 - 3): Snapshot = {
     import spark.implicits._
-    def leaf[T: Encoder: ClassTag](rows: Seq[T]): DataFrame =
-      spark.createDataset(spark.sparkContext.parallelize(rows, 1)).toDF()
+    def leaf[T: Encoder](n: Int)(rowAt: Int => T): DataFrame =
+      spark.range(0, n, 1, 1).map(i => rowAt(i.toInt)).toDF()
     Snapshot(
-      leaf(pinnedStrat ++ syntheticStrat(bulkStrat)),
-      leaf(pinnedMinerals ++ syntheticMinerals(bulkMinerals)),
-      leaf(intervals),
-      leaf(gazetteer),
-      leaf(stratGps),
-      leaf(pinnedLith))
+      leaf(pinnedStrat.size + bulkStrat) { i =>
+        if (i < pinnedStrat.size) pinnedStrat(i)
+        else syntheticStratAt(i - pinnedStrat.size)
+      },
+      leaf(pinnedMinerals.size + bulkMinerals) { i =>
+        if (i < pinnedMinerals.size) pinnedMinerals(i)
+        else syntheticMineralAt(i - pinnedMinerals.size)
+      },
+      leaf(intervals.size)(intervals(_)),
+      leaf(gazetteer.size)(gazetteer(_)),
+      leaf(stratGps.size)(stratGps(_)),
+      leaf(pinnedLith.size)(pinnedLith(_)))
   }
 
   /** Tiny snapshot for unit tests and the driver-gate oracle queries. */

@@ -103,8 +103,7 @@ object Hydrator {
     // one mineral broadcast join instead of two; the reference's "only when
     // Macrostrat misses" ordering (schema.py:358-366) is preserved because
     // merge happens via anti-join on the normalized key — a pinned
-    // broadcast like every other dim join (a dim leaf carries no size
-    // statistics to pick one by).
+    // broadcast like every other dim join.
     val macroMinerals = firstHit(
       dims.mineralDim.select("mineral", "mineral_id", "mineral_type",
         "formula", "url", "macrostrat_version"),

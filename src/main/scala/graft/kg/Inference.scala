@@ -272,21 +272,6 @@ object Inference {
     }
   }
 
-  /** Model dispatch (llm.py:283-295): recorded-fixture + heuristic stand-in
-    * by default; any other model id requires a transport to its endpoint. */
-  def clientFor(model: String, transport: Option[String => String],
-                stratNames: Array[String], locationNames: Array[String],
-                mineralNames: Array[String]): InferenceClient =
-    (model, transport) match {
-      case ("graft-heuristic-v1", _) | ("", _) =>
-        defaultClient(stratNames, locationNames, mineralNames)
-      case (m, Some(t)) => new TransportClient(m, t)
-      case (m, None) =>
-        throw new IllegalArgumentException(
-          s"model '$m' needs a transport (no network egress in-engine; " +
-            "inject the endpoint POST)")
-    }
-
   /** Prompt-stage spec: one handler plus the dictionary whose mentions are
     * injected into its system prompt (reference builds one handler per job,
     * text2graph/llm.py:281 `prompt_handler.get_gpt_messages(text)`; our

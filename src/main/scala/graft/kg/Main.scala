@@ -90,11 +90,9 @@ object Main {
 
     // maintenance modes: operate on an existing snapshot store and exit
     if (opts.contains("compact")) {
-      // pass the dim snapshot so rows whose canonical moved are RE-hydrated
-      // — without it the compacted table would keep dim columns joined on
-      // the pre-compaction name (stale next to the new obj_final)
+      // rows whose canonical moved are RE-hydrated against the dims
       val v = graft.streaming.StreamingKg.compactCanonicalize(spark, outDir,
-        dims = Some(Dims.snapshot(spark)), cfg = cfg)
+        Dims.snapshot(spark), cfg)
       println(v.map(v => s"[graft] compacted to snapshot v$v at $outDir")
         .getOrElse(s"[graft] nothing to compact at $outDir"))
       spark.stop(); return

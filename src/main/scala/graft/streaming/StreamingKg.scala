@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.kg._
 
 /** Structured Streaming skin over the KG pipeline.
@@ -22,9 +21,6 @@ import graft.kg._
   *  - connected-components canonicalization (iterative; runs as a periodic
   *    batch compaction over the accumulated triples table instead),
   *  - cross-batch dedup (handled by the downstream table's merge keys).
-  *
-  * Plus the event-side streaming operators: watermarked tumbling-window
-  * aggregation and mapGroupsWithState sessionization.
   */
 object StreamingKg {
 
@@ -39,42 +35,23 @@ object StreamingKg {
   def pagesStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(PageSchema).parquet(dir)
 
-  /** Streaming corpus dedup gate — the incremental counterpart of the
-    * batch pipeline's `dedupMinJaccard`: exact-duplicate pages (same
-    * extracted-text hash) arriving within the lateness horizon are dropped
-    * with watermark-bounded state, so a crawl that re-fetches a page (or
-    * mirrors serving identical content) spends inference once. Near-dup
-    * (Jaccard) clustering is inherently corpus-global and stays in the
-    * periodic batch compaction, like canonicalization. Input must carry
-    * `warc_ts` and a `hashed_text` column (or call after the extract
-    * stage). */
-  def dedupPagesStream(pages: DataFrame, watermark: String = "1 hour"): DataFrame =
-    pages.withWatermark("warc_ts", watermark)
-      .dropDuplicatesWithinWatermark("hashed_text")
-
-  /** The streaming pipeline's PRE-explode stage: extract → [exact-dedup
-    * gate] → prompt-build → infer → lenient parse, keeping the per-page
-    * `parse_status` discriminator (the batch pipeline's persisted stage
-    * boundary, PostProcess.withParsed), to feed
-    * [[snapshotSinkWithFailures]]. `dedupWatermark = Some(horizon)` inserts
-    * [[dedupPagesStream]] between extraction and inference — the streaming
-    * counterpart of the batch `Config.dedupMinJaccard` gate, so re-fetched
-    * identical pages never reach the model. */
+  /** The streaming pipeline's PRE-explode stage: extract → prompt-build →
+    * infer → lenient parse, keeping the per-page `parse_status`
+    * discriminator (the batch pipeline's persisted stage boundary,
+    * PostProcess.withParsed), to feed [[snapshotSinkWithFailures]]. Page
+    * dedup is not a stream step: exact and near duplicates collapse in the
+    * periodic [[compactDedup]], like canonicalization. */
   def rawParsedStream(pages: DataFrame, dims: Dims.Snapshot,
                       client: Inference.InferenceClient,
                       microBatch: Int = 200,
-                      dedupWatermark: Option[String] = None,
                       promptDicts: Option[Seq[Inference.HandlerDict]] = None): DataFrame = {
     // shared bounded bootstrap (Inference.promptDictsFromDims guards the
     // driver collect); an open-vocabulary deployment passes its capped
     // top-df dictionary slice via promptDicts instead
     val prompting = promptDicts
       .getOrElse(Inference.promptDictsFromDims(dims))
-    val extracted0 = StageChain.extract(pages)
-    val extracted = dedupWatermark
-      .map(w => dedupPagesStream(extracted0, w)).getOrElse(extracted0)
     PostProcess.withParsed(
-      Inference.run(extracted, client, microBatch, prompting).toDF())
+      Inference.run(StageChain.extract(pages), client, microBatch, prompting).toDF())
   }
 
   /** Exactly-once micro-batch commit into the snapshot store: a restarted
@@ -246,24 +223,22 @@ object StreamingKg {
     * uncompacted files — time travel). Returns the new version, None when
     * the store has no triples yet.
     *
-    * @param dims when supplied, rows are RE-hydrated after
-    *        canonicalization through the StageChain's hydrate step: a row
-    *        whose obj_final moved to a new cluster canonical carries
-    *        hydration columns joined on the OLD name — re-running the
-    *        (stateless, broadcast) hydration joins on the compacted names
-    *        brings the dim columns back in line with the batch pipeline's
-    *        canonicalize-then-hydrate order. The stored per-row
-    *        `requested_at` is PRESERVED through re-hydration (passed as the
-    *        provenance timestamp source), so compacting never restamps the
-    *        provenance history of rows an earlier run committed —
-    *        `cfg.jobStart` is only the fallback for a store whose rows
-    *        predate the column (ADVICE round 5). Omitted, the hydration
-    *        columns pass through unchanged (pure-canonicalize compaction).
+    * @param dims rows are RE-hydrated after canonicalization through the
+    *        StageChain's hydrate step: a row whose obj_final moved to a new
+    *        cluster canonical carries hydration columns joined on the OLD
+    *        name — re-running the (stateless, broadcast) hydration joins on
+    *        the compacted names brings the dim columns back in line with
+    *        the batch pipeline's canonicalize-then-hydrate order. The stored
+    *        per-row `requested_at` is PRESERVED through re-hydration (passed
+    *        as the provenance timestamp source), so compacting never
+    *        restamps the provenance history of rows an earlier run
+    *        committed — `cfg.jobStart` is only the fallback for a store
+    *        whose rows predate the column (ADVICE round 5).
     * @param cfg the deployment's Config: `jobStart` as above, and
     *        `canonLocalProbe` — an open-vocabulary store skips the driver
     *        probe here too, where the entity space is the whole store's. */
   def compactCanonicalize(spark: SparkSession, dir: String,
-                          dims: Option[Dims.Snapshot] = None,
+                          dims: Dims.Snapshot,
                           cfg: KgPipeline.Config = KgPipeline.Config()): Option[Int] = {
     import graft.sources.SnapshotStore
     val readVersion = SnapshotStore.currentVersion(spark, dir)
@@ -275,18 +250,14 @@ object StreamingKg {
       // SnapshotStore.read never sees a mixed-schema file list. Folding is
       // idempotent: re-canonicalizing already-canonical values is a no-op.
       val canonicalized = Canonicalizer(triples, cfg.canonLocalProbe)
-      val rehydrated = dims match {
-        case Some(d) =>
-          val core = Seq("url", "hashed_text", "model_id", "prompt_version",
-            "subj_name", "predicate", "obj_name", "obj_kind", "obj_canonical",
-            "obj_linked", "obj_final", "entity_cluster_id", "requested_at")
-            .filter(canonicalized.columns.contains)
-          StageChain(d, cfg).hydrate(
-            canonicalized.select(core.map(col): _*),
-            requestedAt =
-              if (core.contains("requested_at")) Some(col("requested_at")) else None)
-        case None => canonicalized
-      }
+      val core = Seq("url", "hashed_text", "model_id", "prompt_version",
+        "subj_name", "predicate", "obj_name", "obj_kind", "obj_canonical",
+        "obj_linked", "obj_final", "entity_cluster_id", "requested_at")
+        .filter(canonicalized.columns.contains)
+      val rehydrated = StageChain(dims, cfg).hydrate(
+        canonicalized.select(core.map(col): _*),
+        requestedAt =
+          if (core.contains("requested_at")) Some(col("requested_at")) else None)
       val compacted = rehydrated
         .withColumn("obj_canonical", col("obj_final"))
         .select(triples.columns.map(col): _*)
@@ -393,112 +364,5 @@ object StreamingKg {
         loserUrls.unpersist(blocking = false)
       }
     }
-  }
-
-  /** Cross-micro-batch exactly-once on the EVENT side: duplicate ids
-    * arriving within the lateness horizon are dropped with bounded state —
-    * the watermark ages dedup state out, so state size tracks the horizon,
-    * not the stream length (at-least-once upstreams become effectively
-    * exactly-once without unbounded keys). */
-  def dedupEvents(events: DataFrame, idCol: String = "event_id",
-                  watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(idCol)
-
-  /** Watermarked stream-stream inner join: clicks landing within
-    * `windowMinutes` AFTER an error by the same user — the streaming form
-    * of the batch `events_range_join` (graft.ops.RangeJoin). Both inputs
-    * are watermarked and the join predicate bounds event time in BOTH
-    * directions (ts >= err_ts and ts <= err_ts + window), so Spark derives
-    * state-eviction watermarks for both buffers: state size tracks the
-    * lateness horizon + join window, never the stream length.
-    *
-    * @param joinType "inner" (matches only) or "left_outer": a click with
-    *        no error in its window emits once with a null err_id AFTER the
-    *        watermark proves no matching error can still arrive — the
-    *        streaming form of the batch left join's null-keeping. */
-  def clicksAfterErrors(clicks: DataFrame, errors: DataFrame,
-                        windowMinutes: Int = 10,
-                        watermark: String = "10 minutes",
-                        joinType: String = "inner"): DataFrame = {
-    val c = clicks.select(col("event_id").as("click_id"),
-        col("user_id"), col("ts"))
-      .withWatermark("ts", watermark)
-    val e = errors.select(col("event_id").as("err_id"),
-        col("user_id").as("err_user_id"), col("ts").as("err_ts"))
-      .withWatermark("err_ts", watermark)
-    c.join(e,
-        col("user_id") === col("err_user_id") &&
-          col("ts") >= col("err_ts") &&
-          col("ts") <= col("err_ts") + expr(s"INTERVAL $windowMinutes MINUTES"),
-        joinType)
-      .select(col("err_id"), col("click_id"), col("user_id"),
-        col("ts"), col("err_ts"))
-  }
-
-  /** Watermarked tumbling-window aggregation over the event stream. */
-  def windowedEventCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n"), col("sum_value"))
-
-  // --- stateful sessionization -------------------------------------------
-
-  final case class Event(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class SessionState(start: Long, lastSeen: Long, nEvents: Long, value: Double)
-  final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
-      n_events: Long, session_value: Double, duration_secs: Long)
-
-  val SessionGapMs: Long = 30 * 60 * 1000
-
-  /** Gap-based sessionization with explicit state — the streaming form of
-    * the batch `events_sessionize` query. A session closes when a later
-    * event arrives past the gap; with `idleTimeout` also after 30 min of
-    * processing-time inactivity (leave off for deterministic tests —
-    * timeout batches fire on the wall clock, which `processAllAvailable`
-    * does not drive). */
-  def sessionize(events: Dataset[Event], idleTimeout: Boolean = true): Dataset[SessionOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (idleTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, timeoutConf) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(userId, new java.sql.Timestamp(s.start),
-              s.nEvents, s.value, (s.lastSeen - s.start) / 1000))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.lastSeen <= SessionGapMs =>
-                  cur = Some(s.copy(lastSeen = t, nEvents = s.nEvents + 1,
-                    value = s.value + e.value))
-                case Some(s) =>
-                  closed ::= SessionOut(userId, new java.sql.Timestamp(s.start),
-                    s.nEvents, s.value, (s.lastSeen - s.start) / 1000)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              if (idleTimeout) state.setTimeoutDuration(SessionGapMs)
-            }
-            closed.reverseIterator
-          }
-      }
   }
 }

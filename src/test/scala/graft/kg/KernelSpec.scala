@@ -244,15 +244,4 @@ class PostProcessSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](
       new Inference.TransportClient("vllm-test", _ => "", maxRetries = 0))
   }
-
-  test("clientFor dispatch: heuristic by default, transport required otherwise") {
-    val h = Inference.clientFor("", None, Array("Sauk"), Array("Minnesota"), Array())
-    assert(h.modelId.contains("graft"))
-    val t = Inference.clientFor("mixtral-8x7b", Some(_ => """{"outputs": []}"""),
-      Array(), Array(), Array())
-    assert(t.modelId === "mixtral-8x7b")
-    intercept[IllegalArgumentException] {
-      Inference.clientFor("mixtral-8x7b", None, Array(), Array(), Array())
-    }
-  }
 }

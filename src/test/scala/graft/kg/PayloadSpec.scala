@@ -34,9 +34,31 @@ class PayloadSpec extends SparkSpec {
     // the leaves still hold the reference-size dictionaries
     assert(dims.stratDim.count() === 45646)
     assert(dims.mineralDim.count() === 6387)
-    // a leaf has no size statistics, so the USGS merge pins its broadcast
+    // the USGS merge pins its broadcast
     val plan = p.mineralKeyed.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"), plan)
+  }
+
+  test("a task over a full dim ships no dim rows") {
+    val ser = SparkEnv.get.closureSerializer.newInstance()
+    Seq("stratDim" -> dims.stratDim, "mineralDim" -> dims.mineralDim,
+      "intervalDim" -> dims.intervalDim, "gazetteerDim" -> dims.gazetteerDim,
+      "stratGpsDim" -> dims.stratGpsDim, "lithDim" -> dims.lithDim)
+      .foreach { case (name, df) =>
+        // what the DAGScheduler serializes into each task next to the
+        // stage's binary: the task's partition of the scanned leaf
+        df.queryExecution.toRdd.partitions.foreach { p =>
+          val bytes = ser.serialize(p).limit()
+          assert(bytes < 64 * 1024, s"$name: $bytes bytes")
+        }
+      }
+    // generated executor-side, the rows are the pinned ones first, then
+    // the synthetic bulk, in the order the dictionaries list them
+    val strat = dims.stratDim.as[Dims.StratRow].collect().toSeq
+    assert(strat === Dims.pinnedStrat ++ Dims.syntheticStrat(45646 - 13))
+    val minerals = dims.mineralDim.as[Dims.MineralRow].collect().toSeq
+    assert(minerals === Dims.pinnedMinerals ++ (0 until 6387 - 3).map(Dims.syntheticMineralAt))
+    assert(dims.lithDim.as[Dims.LithRow].collect().toSeq === Dims.pinnedLith)
   }
 
   test("an inference task binary carries a broadcast handle, not the dictionaries") {

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.SparkSpec
 import graft.kg._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 class StreamingSpec extends SparkSpec {
@@ -19,14 +18,13 @@ class StreamingSpec extends SparkSpec {
     * to completion (AvailableNow) and returns the fresh store's dir. */
   private def sinkRun(pagesDir: String,
                       c: Inference.InferenceClient = client,
-                      cfg: KgPipeline.Config = KgPipeline.Config(),
-                      dedupWatermark: Option[String] = None): String = {
+                      cfg: KgPipeline.Config = KgPipeline.Config()): String = {
     val storeDir = tempDir("sinkstore")
     val ckpt = tempDir("sinkckpt")
     val stream = StreamingKg.pagesStream(spark, pagesDir)
     assert(stream.isStreaming)
     val sink = StreamingKg.snapshotSinkWithFailures(
-      StreamingKg.rawParsedStream(stream, dims, c, dedupWatermark = dedupWatermark),
+      StreamingKg.rawParsedStream(stream, dims, c),
       storeDir, dims, cfg)
     try {
       val q = sink.writer.option("checkpointLocation", ckpt)
@@ -258,7 +256,7 @@ class StreamingSpec extends SparkSpec {
     twoBatches(dir)
     val before = SnapshotStore.read(spark, dir, "triples").get
 
-    val v = StreamingKg.compactCanonicalize(spark, dir)
+    val v = StreamingKg.compactCanonicalize(spark, dir, dims)
     assert(v.contains(3))
     // the rewrite stages triples in the url_bucket layout
     assert(marked(dir, "triples") === ((2, 2)))
@@ -272,8 +270,8 @@ class StreamingSpec extends SparkSpec {
     // an open-vocabulary store (no driver probe) compacts to the same map
     val openDir = tempDir("compactopen")
     twoBatches(openDir)
-    assert(StreamingKg.compactCanonicalize(spark, openDir,
-      cfg = KgPipeline.Config(canonLocalProbe = false)).contains(3))
+    assert(StreamingKg.compactCanonicalize(spark, openDir, dims,
+      KgPipeline.Config(canonLocalProbe = false)).contains(3))
     assert(canonMap(openDir) === canon)
     // the batch_id watermark survives the replace-mode commit: a restarted
     // query replaying its last micro-batch must still be skipped
@@ -383,12 +381,12 @@ class StreamingSpec extends SparkSpec {
       KgPipeline.Config(numPartitions = 2, canonicalize = false, jobStart = t1))
       .triples.select(KgPipeline.TripleColumns.map(col): _*)
     StreamingKg.commitBatchTables(dir, Map("triples" -> committed), 0)
-    // ...and a LATER compaction that re-hydrates (dims supplied) with its
-    // own jobStart must not restamp them: requested_at and every
-    // provenance-hop timestamp keep the original run's value (ADVICE r5)
+    // ...and a LATER compaction that re-hydrates with its own jobStart
+    // must not restamp them: requested_at and every provenance-hop
+    // timestamp keep the original run's value (ADVICE r5)
     val t2 = java.sql.Timestamp.valueOf("2025-05-05 05:05:05")
-    StreamingKg.compactCanonicalize(spark, dir, dims = Some(dims),
-      cfg = KgPipeline.Config(jobStart = t2))
+    StreamingKg.compactCanonicalize(spark, dir, dims,
+      KgPipeline.Config(jobStart = t2))
     val after = SnapshotStore.read(spark, dir, "triples").get
     assert(after.columns.toSeq === KgPipeline.TripleColumns)
     assert(after.count() === committed.count())
@@ -403,181 +401,5 @@ class StreamingSpec extends SparkSpec {
     // hydration columns survived the round trip (joined on the same names)
     val shak = after.filter(col("obj_name") === "Shakopee Formation").collect()
     assert(shak.nonEmpty && shak.forall(_.getAs[Long]("strat_name_id") === 1278L))
-  }
-
-  test("watermarked windowed aggregation over an event stream") {
-    val input = MemoryStream[(java.sql.Timestamp, String, Double)](spark)
-    val events = input.toDF().toDF("ts", "event_type", "value")
-    val q = StreamingKg.windowedEventCounts(events)
-      .writeStream.format("memory").queryName("win_out")
-      .outputMode("complete").start()
-    input.addData(
-      (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "click", 1.0),
-      (java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), "click", 2.0),
-      (java.sql.Timestamp.valueOf("2024-01-01 00:07:00"), "view", 5.0))
-    q.processAllAvailable()
-    val rows = spark.table("win_out").collect()
-      .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2))).toSet
-    q.stop()
-    assert(rows === Set(
-      ("2024-01-01 00:00:00.0", "click", 2L),
-      ("2024-01-01 00:05:00.0", "view", 1L)))
-  }
-
-  test("dedup gate in rawParsedStream: identical page spends inference once") {
-    val dir = tempDir("pagestreamdedup")
-    val pages = Pages.fixtures(spark)
-    pages.unionByName(
-        pages.filter(col("url") === "https://fixtures.graft/sauk")
-          .withColumn("url", lit("https://fixtures.graft/sauk-copy")))
-      .write.mode("overwrite").parquet(dir)
-    val store = sinkRun(dir, dedupWatermark = Some("1 hour"))
-    val urls = graft.sources.SnapshotStore.read(spark, store, "triples").get
-      .select("url").distinct().collect().map(_.getString(0)).toSet
-    assert(urls.count(Set("https://fixtures.graft/sauk",
-      "https://fixtures.graft/sauk-copy")) === 1)
-  }
-
-  test("streaming page dedup: re-fetched identical pages drop cross-batch") {
-    def t(m: String) = java.sql.Timestamp.valueOf(m)
-    val input = MemoryStream[(String, java.sql.Timestamp, String)](spark)
-    val pages = input.toDF().toDF("url", "warc_ts", "text")
-      .withColumn("hashed_text", sha2(col("text"), 256))
-    val q = StreamingKg.dedupPagesStream(pages)
-      .writeStream.format("memory").queryName("pagededup_out")
-      .outputMode("append").start()
-    input.addData(("u1", t("2024-01-01 00:00:00"), "same text"),
-      ("u2", t("2024-01-01 00:01:00"), "other text"))
-    q.processAllAvailable()
-    // the crawl re-fetches identical content under a new url, later batch
-    input.addData(("u3", t("2024-01-01 00:05:00"), "same text"))
-    q.processAllAvailable()
-    val urls = spark.table("pagededup_out").select("url")
-      .collect().map(_.getString(0)).sorted.toSeq
-    q.stop()
-    assert(urls === Seq("u1", "u2"))
-  }
-
-  test("watermarked dedup drops cross-batch duplicate event ids") {
-    val input = MemoryStream[(Long, java.sql.Timestamp, Double)](spark)
-    val events = input.toDF().toDF("event_id", "ts", "value")
-    val q = StreamingKg.dedupEvents(events)
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    input.addData((1L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 1.0),
-      (2L, java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), 2.0))
-    q.processAllAvailable()
-    // the same event id replays in a later micro-batch (at-least-once feed)
-    input.addData((1L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 1.0),
-      (3L, java.sql.Timestamp.valueOf("2024-01-01 00:03:00"), 3.0))
-    q.processAllAvailable()
-    val ids = spark.table("dedup_out").collect().map(_.getLong(0)).sorted
-    q.stop()
-    assert(ids.toSeq === Seq(1L, 2L, 3L))
-  }
-
-  test("stream-stream join equals the batch range join; watermark bounds state") {
-    def t(m: String) = java.sql.Timestamp.valueOf(m)
-    val clickIn = MemoryStream[(Long, Long, java.sql.Timestamp)](spark)
-    val errIn = MemoryStream[(Long, Long, java.sql.Timestamp)](spark)
-    val q = StreamingKg.clicksAfterErrors(
-        clickIn.toDF().toDF("event_id", "user_id", "ts"),
-        errIn.toDF().toDF("event_id", "user_id", "ts"))
-      .writeStream.format("memory").queryName("ssj_out")
-      .outputMode("append").start()
-    // batch 1: one error, clicks inside/outside its window, one other user
-    errIn.addData((100L, 1L, t("2024-01-01 00:00:00")))
-    clickIn.addData((1L, 1L, t("2024-01-01 00:05:00")),
-      (2L, 1L, t("2024-01-01 00:15:00")), (3L, 2L, t("2024-01-01 00:05:00")))
-    q.processAllAvailable()
-    // batch 2: a cross-batch match against the buffered error + a new pair
-    clickIn.addData((4L, 1L, t("2024-01-01 00:08:00")))
-    errIn.addData((101L, 2L, t("2024-01-01 00:30:00")))
-    clickIn.addData((5L, 2L, t("2024-01-01 00:31:00")))
-    q.processAllAvailable()
-    // far-future events advance the watermark so old state is evictable
-    errIn.addData((999L, 9L, t("2024-01-02 12:00:00")))
-    clickIn.addData((99L, 9L, t("2024-01-02 12:00:00")))
-    q.processAllAvailable()
-    clickIn.addData((98L, 9L, t("2024-01-02 12:00:01")))
-    q.processAllAvailable()
-    val got = spark.table("ssj_out").select("err_id", "click_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    // batch oracle: the SAME data through ops.RangeJoin
-    import spark.implicits._
-    import org.apache.spark.sql.functions.expr
-    val allClicks = Seq((1L, 1L, t("2024-01-01 00:05:00")),
-      (2L, 1L, t("2024-01-01 00:15:00")), (3L, 2L, t("2024-01-01 00:05:00")),
-      (4L, 1L, t("2024-01-01 00:08:00")), (5L, 2L, t("2024-01-01 00:31:00")),
-      (99L, 9L, t("2024-01-02 12:00:00")), (98L, 9L, t("2024-01-02 12:00:01")))
-      .toDF("click_id", "user_id", "ts")
-    val allErrors = Seq((100L, 1L, t("2024-01-01 00:00:00")),
-      (101L, 2L, t("2024-01-01 00:30:00")), (999L, 9L, t("2024-01-02 12:00:00")))
-      .toDF("err_id", "user_id", "w_start")
-      .withColumn("w_end", col("w_start") + expr("INTERVAL 10 MINUTES"))
-    val batch = graft.ops.RangeJoin.pointsInRanges(allClicks, allErrors,
-        key = "user_id", ptsCol = "ts", startCol = "w_start", endCol = "w_end",
-        binSeconds = 600)
-      .select("err_id", "click_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === batch)
-    assert(got.contains((100L, 4L))) // the cross-micro-batch match happened
-    // bounded state: the day-old clicks/errors were evicted by the
-    // watermark — only the recent horizon remains buffered
-    val st = q.lastProgress.stateOperators
-    assert(st.nonEmpty && st.head.numRowsTotal < 10,
-      s"state not bounded: ${st.map(_.numRowsTotal).mkString(",")}")
-    q.stop()
-  }
-
-  test("left-outer stream-stream join: unmatched clicks emit nulls after the watermark") {
-    def t(m: String) = java.sql.Timestamp.valueOf(m)
-    val clickIn = MemoryStream[(Long, Long, java.sql.Timestamp)](spark)
-    val errIn = MemoryStream[(Long, Long, java.sql.Timestamp)](spark)
-    val q = StreamingKg.clicksAfterErrors(
-        clickIn.toDF().toDF("event_id", "user_id", "ts"),
-        errIn.toDF().toDF("event_id", "user_id", "ts"),
-        joinType = "left_outer")
-      .writeStream.format("memory").queryName("ssj_outer_out")
-      .outputMode("append").start()
-    // click 1 matches; click 2 has no error in its user's window
-    errIn.addData((100L, 1L, t("2024-01-01 00:00:00")))
-    clickIn.addData((1L, 1L, t("2024-01-01 00:05:00")),
-      (2L, 2L, t("2024-01-01 00:05:00")))
-    q.processAllAvailable()
-    // advance the watermark well past click 2's match horizon, then let a
-    // further batch run the state-eviction pass that emits the null row
-    clickIn.addData((50L, 5L, t("2024-01-01 06:00:00")))
-    errIn.addData((500L, 5L, t("2024-01-01 06:00:00")))
-    q.processAllAvailable()
-    clickIn.addData((51L, 5L, t("2024-01-01 06:00:01")))
-    q.processAllAvailable()
-    val rows = spark.table("ssj_outer_out")
-      .select("err_id", "click_id").collect()
-      .map(r => (if (r.isNullAt(0)) -1L else r.getLong(0)) -> r.getLong(1)).toSet
-    q.stop()
-    assert(rows.contains((100L, 1L)))  // matched click joined normally
-    assert(rows.contains((-1L, 2L)),   // unmatched click emitted with null
-      s"no null-padded row for click 2 in $rows")
-  }
-
-  test("stateful sessionization closes sessions on gap") {
-    val input = MemoryStream[StreamingKg.Event](spark)
-    val q = StreamingKg.sessionize(input.toDS(), idleTimeout = false)
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    // two sessions for user 1 separated by > 30 min; the second stays open
-    input.addData(
-      StreamingKg.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
-      StreamingKg.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), 2.0),
-      StreamingKg.Event(1, java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 4.0))
-    q.processAllAvailable()
-    val closed = spark.table("sess_out").as[StreamingKg.SessionOut].collect()
-    q.stop()
-    assert(closed.length === 1)
-    assert(closed.head.n_events === 2)
-    assert(closed.head.session_value === 3.0)
-    assert(closed.head.duration_secs === 600)
   }
 }
