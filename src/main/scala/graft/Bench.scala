@@ -51,7 +51,7 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Multi-core companion probe: `threads` concurrent copies of the same
+  /** Multi-core companion probe: 8 concurrent copies of the same
     * chain, wall time until ALL finish. On an idle box this ≈ the
     * single-thread probe (independent register chains, no shared data);
     * when a noisy neighbor steals cores it inflates even while the
@@ -60,18 +60,17 @@ object Bench {
     * Reported beside the single probe so the artifact distinguishes THREE
     * states: rested (both low), credit-drained (both high), core-stolen
     * (single low, multi high). */
-  def calibrateParallel(threads: Int = 8,
-                        iters: Long = CalibrationIters): Double = {
+  def calibrateParallel(): Double = {
     val sinks = new java.util.concurrent.atomic.AtomicLong(0)
     def fleet(n: Long): Unit = {
-      val ts = (0 until threads).map(_ => new Thread(() => {
+      val ts = (0 until 8).map(_ => new Thread(() => {
         sinks.addAndGet(xorshiftLoop(n))
       }))
       ts.foreach(_.start()); ts.foreach(_.join())
     }
-    fleet(iters / 16) // warmup, untimed
+    fleet(CalibrationIters / 16) // warmup, untimed
     val t0 = System.nanoTime()
-    fleet(iters)
+    fleet(CalibrationIters)
     calSink = sinks.get()
     (System.nanoTime() - t0) / 1e9
   }

@@ -96,7 +96,9 @@ object KgQueries {
     * (first-hit-deduped) hydration keys and the alias dim are identical
     * across every KG gate query — building them once per session removes
     * the dominant fixed cost of the chain-running queries (dedup windows +
-    * broadcast builds were 27% of the visible gate wall at sf0.1). */
+    * broadcast builds were 27% of the visible gate wall at sf0.1). The
+    * keys and the alias come back inside a base Config that each query
+    * `.copy`s. */
   // Entries for STOPPED sessions are evicted on every access (a weak-key
   // map would not work here: the cached DataFrames strongly reference
   // their session, so the value would pin the key) — a long-lived driver
@@ -107,8 +109,8 @@ object KgQueries {
     while (it.hasNext) if (it.next().sparkContext.isStopped) it.remove()
   }
   private val dimCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, (Dims.Snapshot, Hydrator.Prepared, DataFrame)]()
-  private def cachedDims(s: SparkSession): (Dims.Snapshot, Hydrator.Prepared, DataFrame) = {
+    SparkSession, (Dims.Snapshot, KgPipeline.Config)]()
+  private def cachedDims(s: SparkSession): (Dims.Snapshot, KgPipeline.Config) = {
     evictStopped(dimCache)
     dimCache.computeIfAbsent(s, s => {
       // coalesce(1) before caching: the tiny gate dims otherwise cache at
@@ -121,8 +123,17 @@ object KgQueries {
       def c1(df: DataFrame) = df.coalesce(1)
       val dims = Dims.tiny(s).map(c1).persisted()
       val prepared = Hydrator.prepare(dims).map(c1).cached()
-      (dims, prepared, c1(Linker.aliasDim(dims)).cache())
+      (dims, KgPipeline.Config(prebuiltAlias = Some(c1(Linker.aliasDim(dims)).cache()),
+        preparedDims = Some(prepared)))
     })
+  }
+
+  /** Tier-1 align → canonicalize → hydrate of hand-built triples over the
+    * cached alias and hydration keys. */
+  private def hydrateCached(s: SparkSession, triples: DataFrame): DataFrame = {
+    val (_, base) = cachedDims(s)
+    val canonical = Canonicalizer(Linker.align(triples, base.prebuiltAlias.get))
+    Hydrator.hydratePrepared(canonical, base.preparedDims.get, base.jobStart)
   }
 
   /** Per-session fixture-pipeline result, shared by every gate query that
@@ -135,11 +146,10 @@ object KgQueries {
   private def fixtureResult(s: SparkSession): KgPipeline.Result = {
     evictStopped(resultCache)
     resultCache.computeIfAbsent(s, s => {
-      val (dims, prepared, alias) = cachedDims(s)
+      val (dims, base) = cachedDims(s)
       val client = Inference.pinnedClient
       val res = KgPipeline.run(s, Pages.fixtures(s), dims, client,
-        KgPipeline.Config(numPartitions = 4, emitRdf = true,
-          prebuiltAlias = Some(alias), preparedDims = Some(prepared)))
+        base.copy(numPartitions = 4, emitRdf = true))
       res.copy(triples = res.triples.persist(), rdf = res.rdf.map(_.persist()))
     })
   }
@@ -351,7 +361,7 @@ object KgQueries {
     // oracle never needs to know.
     "kg_pipeline_dedup" -> { (s, dir) =>
       import s.implicits._
-      val (dims, prepared, alias) = cachedDims(s)
+      val (dims, cfg) = cachedDims(s)
       val render = udf((t: String, l: String) => HtmlText.render(t, l))
       val base = Tables.documents(s, dir).filter(col("doc_id") < 60)
         .select(col("doc_id"), col("text"), col("lang"))
@@ -364,9 +374,8 @@ object KgQueries {
           base.filter(col("doc_id") < 20)))
         .withColumn("html", render(col("text"), col("lang")))
       val res = KgPipeline.run(s, pages, dims, SetFingerprintClient,
-        KgPipeline.Config(numPartitions = 4, dedupMinJaccard = Some(1.0),
-          canonicalize = false, promptDicts = Some(Seq()),
-          prebuiltAlias = Some(alias), preparedDims = Some(prepared)))
+        cfg.copy(numPartitions = 4, dedupMinJaccard = Some(1.0),
+          canonicalize = false, promptDicts = Some(Seq())))
       val kept = res.triples.select(col("obj_name").as("kept_fp"), lit(1L).as("n"))
       val drops = res.lineage.filter(col("stage") === "dedup")
         .agg(coalesce(sum("failed_rows"), lit(0L)).cast("long").as("n"))
@@ -390,7 +399,7 @@ object KgQueries {
     // failed-url set must count exactly those pages, derivable from doc_id
     // arithmetic alone.
     "kg_pipeline_failures" -> { (s, dir) =>
-      val (dims, prepared, alias) = cachedDims(s)
+      val (dims, base) = cachedDims(s)
       val render = udf((t: String, l: String) => HtmlText.render(t, l))
       val pages = Tables.documents(s, dir).filter(col("doc_id") < 40)
         .select(concat(lit("https://synthetic.graft/doc/"), col("doc_id")).as("url"),
@@ -398,9 +407,8 @@ object KgQueries {
           col("text"), col("lang"))
         .withColumn("html", render(col("text"), col("lang")))
       val res = KgPipeline.run(s, pages, dims, FlakyClient,
-        KgPipeline.Config(numPartitions = 4, canonicalize = false,
-          promptDicts = Some(Seq()), prebuiltAlias = Some(alias),
-          preparedDims = Some(prepared)))
+        base.copy(numPartitions = 4, canonicalize = false,
+          promptDicts = Some(Seq())))
       val stages = res.lineage
         .filter(col("stage").isin("extract", "infer", "parse", "triples"))
         .groupBy("stage")
@@ -438,7 +446,7 @@ object KgQueries {
     "kg_eval_recall" -> { (s, dir) =>
       import s.implicits._
       val rows = EvalSet.testsetMicro
-      val (dims, prepared, _) = cachedDims(s)
+      val (dims, base) = cachedDims(s)
       val render = udf((t: String, l: String) => HtmlText.render(t, l))
       val pages = rows.map(r => (s"https://xdd.ref/${r.paperId}", r.paragraph))
         .toDF("url", "text")
@@ -452,9 +460,8 @@ object KgQueries {
         .select(Linker.normName(col("canonical")).as("alias_norm"),
           col("canonical"), lit(Model.ObjKind.Strat).as("kind"))
       val res = KgPipeline.run(s, pages, dims, client,
-        KgPipeline.Config(numPartitions = 4, canonicalize = false,
-          promptDicts = Some(Seq()), prebuiltAlias = Some(evalAlias),
-          preparedDims = Some(prepared)))
+        base.copy(numPartitions = 4, canonicalize = false,
+          promptDicts = Some(Seq()), prebuiltAlias = Some(evalAlias)))
       val found = res.triples
         .filter(col("obj_kind") === Model.ObjKind.Strat)
         .select(col("url").as("f_url"), col("obj_name"), col("obj_linked"))
@@ -513,7 +520,6 @@ object KgQueries {
     // never from engine output.
     "kg_hydrate_fuzzy" -> { (s, dir) =>
       import s.implicits._
-      val (_, prepared, alias) = cachedDims(s)
       val surfaces = Seq(
         "Shakopee Fm", "Roubidoux Fm", "Smithville Formation", "Nonesuch Fm")
         .toDF("s_name")
@@ -522,9 +528,7 @@ object KgQueries {
           lit("m").as("model_id"), lit("Minnesota").as("subj_name"),
           lit("is in").as("predicate"),
           col("s_name").as("obj_name"), lit(Model.ObjKind.Strat).as("obj_kind"))
-      val canonical = Canonicalizer(Linker.align(surfaces, alias))
-      Hydrator.hydratePrepared(canonical, prepared,
-          java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+      hydrateCached(s, surfaces)
         .select(col("obj_name").as("name"), col("strat_name"),
           col("strat_name_long"), col("rank"), col("strat_name_id"),
           col("concept_id"), col("b_age"), col("t_age"))
@@ -537,7 +541,6 @@ object KgQueries {
     // the oracle inlines the same rows.
     "kg_lith_hydrate" -> { (s, dir) =>
       import s.implicits._
-      val (_, prepared, alias) = cachedDims(s)
       val variants = Dims.pinnedLith.map(_.lith).toDF("lith_name")
         .withColumn("surface", explode(array(col("lith_name"),
           initcap(col("lith_name")), concat(col("lith_name"), lit(".")))))
@@ -546,11 +549,7 @@ object KgQueries {
           lit("m").as("model_id"), lit("Wisconsin").as("subj_name"),
           lit("contains").as("predicate"),
           col("surface").as("obj_name"), lit(Model.ObjKind.Lith).as("obj_kind"))
-      val aligned = Linker.align(variants, alias)
-      val canonical = Canonicalizer(aligned)
-      val hydrated = Hydrator.hydratePrepared(canonical, prepared,
-        java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
-      hydrated.select(col("obj_name").as("surface"), col("obj_final"),
+      hydrateCached(s, variants).select(col("obj_name").as("surface"), col("obj_final"),
         col("lith"), col("lith_id"), col("lith_type"), col("lith_class"))
     },
 
@@ -569,7 +568,7 @@ object KgQueries {
     // hand-derived: the ten Sauk strat long names x the pinned strat-GPS
     // dim (hits: Shakopee + Smithville only).
     "kg_strat_gps" -> { (s, dir) =>
-      val (dims, _, _) = cachedDims(s)
+      val (dims, _) = cachedDims(s)
       Hydrator.stratGps(fixtureResult(s).triples, dims)
         .filter(col("strat_name_long").isNotNull)
         .select("strat_name_long", "clat", "clng").distinct()
@@ -583,7 +582,7 @@ object KgQueries {
     // if-hit inserts. Oracle VALUES hand-derived per fixture page.
     "kg_entity_coords" -> { (s, dir) =>
       val t = fixtureResult(s).triples
-      val (dims, _, _) = cachedDims(s)
+      val (dims, _) = cachedDims(s)
       val subj = t.filter(col("subj_lat").isNotNull)
         .select(col("url"), col("subj_name").as("entity"),
           col("subj_lat").as("lat"), col("subj_lon").as("lon"))
@@ -601,7 +600,6 @@ object KgQueries {
     // semantics), not from the engine.
     "kg_elements" -> { (s, dir) =>
       import s.implicits._
-      val (_, prepared, alias) = cachedDims(s)
       val minerals = Seq("gold", "gallium", "Agrinierite", "fluorspar")
         .toDF("m_name")
         .select(
@@ -609,9 +607,7 @@ object KgQueries {
           lit("m").as("model_id"), lit("Minnesota").as("subj_name"),
           lit("contains").as("predicate"),
           col("m_name").as("obj_name"), lit(Model.ObjKind.Mineral).as("obj_kind"))
-      val canonical = Canonicalizer(Linker.align(minerals, alias))
-      Hydrator.hydratePrepared(canonical, prepared,
-          java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+      hydrateCached(s, minerals)
         .select(col("obj_name").as("name"), col("mineral"), col("formula"),
           col("formula_source"),
           // array_join'd so any row-hashing comparator (which cannot
@@ -753,13 +749,11 @@ object KgQueries {
     // ENTRY POINTS rather than physical plans.
     "kg_search_to_graph_slow" -> { (s, dir) =>
       val scored = searchScored(s).localCheckpoint(true) // bounded: ≤ SearchK rows
-      val (dims, prepared, alias) = cachedDims(s)
+      val (dims, base) = cachedDims(s)
       val client = Inference.pinnedClient
       val top = Pages.fixtures(s).join(broadcast(scored.select("url")), Seq("url"))
       val res = KgPipeline.run(s, top, dims, client,
-        KgPipeline.Config(numPartitions = 4, emitRdf = true,
-          canonicalize = false,
-          prebuiltAlias = Some(alias), preparedDims = Some(prepared)))
+        base.copy(numPartitions = 4, emitRdf = true, canonicalize = false))
       val out = scored.join(Rdf.toTtl(res.rdf.get), Seq("url"))
         .select(col("url"), col("score"), md5(col("ttl")).as("ttl_md5"))
         .localCheckpoint(true)
@@ -787,12 +781,11 @@ object KgQueries {
         .map(java.nio.file.Files.createTempDirectory(_))
       val Seq(pagesDir, storeDir, ckptDir) = tmps.map(_.toString)
       Pages.fixtures(s).write.mode("overwrite").parquet(pagesDir)
-      val (dims, prepared, alias) = cachedDims(s)
+      val (dims, base) = cachedDims(s)
       val sink = StreamingKg.snapshotSinkWithFailures(
         StreamingKg.rawParsedStream(StreamingKg.pagesStream(s, pagesDir),
           dims, Inference.pinnedClient),
-        storeDir, dims,
-        KgPipeline.Config(prebuiltAlias = Some(alias), preparedDims = Some(prepared)))
+        storeDir, dims, base)
       try {
         val q = sink.writer.option("checkpointLocation", ckptDir)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()

@@ -149,7 +149,7 @@ object OpsQueries {
     "mm_features" -> { (s, dir) =>
       val media = docsRaw(s, dir)
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      Multimodal.features(media, maxSide = 100).toDF()
+      Multimodal.features(media).toDF()
         .select("doc_id", "width", "height", "resized_w", "resized_h")
     },
 

@@ -41,8 +41,7 @@ object Canonicalizer {
     *        before the distributed path engages.
     * @return (id, component) for every id appearing in an edge;
     *         component = min member id of the cluster. */
-  def connectedComponents(edges0: DataFrame, maxIter: Int = 20,
-                          localProbe: Boolean = true): DataFrame = {
+  def connectedComponents(edges0: DataFrame, localProbe: Boolean = true): DataFrame = {
     val spark = edges0.sparkSession
     // RAW directed edges, persisted once: the probe reads them directly —
     // union-find is orientation- and duplicate-insensitive, so the
@@ -66,36 +65,25 @@ object Canonicalizer {
       if (localProbe) e0.limit(SmallGraphEdges.toInt + 1).collect()
       else Array.empty[org.apache.spark.sql.Row]
     if (localProbe && probe.length <= SmallGraphEdges) {
-      // Driver union-find fast path (deterministic min-root).
+      // Driver union-find fast path: the min root is the min member id.
       import spark.implicits._
       val edges = probe.map(r => (r.getLong(0), r.getLong(1)))
       e0.unpersist(false)
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // min id becomes the root → component = min member
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-        parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
-      }
+      val uf = new MinRootUnionFind[Long]
+      edges.foreach { case (a, b) => uf.union(a, b) }
       val ids = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
-      return ids.map(id => (id, find(id))).toSeq.toDF("id", "component")
+      return ids.map(id => (id, uf.find(id))).toSeq.toDF("id", "component")
     }
 
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint(true)
 
-    var iter = 0
+    // Labels only decrease and are bounded below by the component minimum,
+    // so the loop ends: one round per hop from a component's minimum to its
+    // farthest member, plus the round that sees no label change.
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged) {
       val msgs = sym.join(labels, sym("src") === labels("id"))
         .select(sym("dst").as("id"), col("component"))
       val next = labels.unionAll(msgs)
@@ -107,7 +95,6 @@ object Canonicalizer {
         .limit(1).count()
       labels = next
       converged = changed == 0
-      iter += 1
     }
     sym.unpersist(false)
     e0.unpersist(false)
@@ -155,18 +142,9 @@ object Canonicalizer {
 
     if (probe.length <= MaxLocalNames) {
       val linkPairs = probe.filter(_.getBoolean(3))
-      val parent = scala.collection.mutable.HashMap.empty[(String, String), (String, String)]
-      def find(x: (String, String)): (String, String) = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      def union(a: (String, String), b: (String, String)): Unit = {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(if (ra._2 <= rb._2) rb else ra) = if (ra._2 <= rb._2) ra else rb
-      }
+      // every union stays within one kind, so the min root is the min name
+      val uf = new MinRootUnionFind[(String, String)]
+      import uf.{find, union}
       // real surface forms: extracted names AND their alignment canonicals,
       // each with its normalized form
       val normed = (probe.map(r => ((r.getString(0), r.getString(1)), r.getString(4))) ++
@@ -259,6 +237,24 @@ object Canonicalizer {
       .localCheckpoint(true)
     vertices.unpersist(false)
     out
+  }
+
+  /** Path-compressing union-find whose root is always the least member
+    * under `Ordering[K]` — both driver-side clustering paths pick it as the
+    * component id. A key never unioned is its own root. */
+  private final class MinRootUnionFind[K](implicit ord: Ordering[K]) {
+    private val parent = scala.collection.mutable.HashMap.empty[K, K]
+    def find(x: K): K = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    def union(a: K, b: K): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
   }
 
   /** Join the canonical table back onto aligned triples, adding

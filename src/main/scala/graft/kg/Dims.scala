@@ -231,6 +231,11 @@ object Dims {
     def persisted(): Snapshot = map(_.cache())
   }
 
+  /** Rows of the full strat and mineral dims: the reference's dictionary
+    * cardinalities, pinned rows included. */
+  private val StratRows = 45646
+  private val MineralRows = 6387
+
   /** The full dims, each generated in the one task that scans it: a
     * one-slice `spark.range` mapped through a per-index row function
     * (pinned rows first, then the synthetic row for `i - pinned.size`).
@@ -240,17 +245,16 @@ object Dims {
     * each task over the dim (8.8 MiB for the strat dim), cached or not.
     * The one-slice range also reports a single partition, so the
     * first-hit windows of Hydrator.prepare over a dim plan no shuffle. */
-  def snapshot(spark: SparkSession, bulkStrat: Int = 45646 - 13,
-               bulkMinerals: Int = 6387 - 3): Snapshot = {
+  def snapshot(spark: SparkSession): Snapshot = {
     import spark.implicits._
     def leaf[T: Encoder](n: Int)(rowAt: Int => T): DataFrame =
       spark.range(0, n, 1, 1).map(i => rowAt(i.toInt)).toDF()
     Snapshot(
-      leaf(pinnedStrat.size + bulkStrat) { i =>
+      leaf(StratRows) { i =>
         if (i < pinnedStrat.size) pinnedStrat(i)
         else syntheticStratAt(i - pinnedStrat.size)
       },
-      leaf(pinnedMinerals.size + bulkMinerals) { i =>
+      leaf(MineralRows) { i =>
         if (i < pinnedMinerals.size) pinnedMinerals(i)
         else syntheticMineralAt(i - pinnedMinerals.size)
       },

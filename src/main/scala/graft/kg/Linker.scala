@@ -91,13 +91,13 @@ object Linker {
       .drop("alias_norm", "canonical", "alias_kind", "obj_norm")
   }
 
-  /** Distinct character n-grams of a (normalized) name; names shorter than
-    * `n` contribute themselves as their only gram. Pure expression work —
+  /** Distinct character 3-grams of a (normalized) name; names shorter than
+    * 3 contribute themselves as their only gram. Pure expression work —
     * fuses into the scan, no UDF. */
-  def charGrams(c: Column, n: Int = 3): Column =
-    when(length(c) >= n,
-      array_distinct(transform(sequence(lit(0), length(c) - lit(n)),
-        i => c.substr(i + lit(1), lit(n)))))
+  def charGrams(c: Column): Column =
+    when(length(c) >= 3,
+      array_distinct(transform(sequence(lit(0), length(c) - lit(3)),
+        i => c.substr(i + lit(1), lit(3)))))
       .otherwise(array(c))
 
   /** Tier-2 fuzzy alignment (deterministic stand-in for the reference's
@@ -251,19 +251,20 @@ object Linker {
   val CosineDim = 64
 
   /** Bucket ids of a normalized name's distinct char-3-grams: bucket =
-    * first two hex digits of md5(gram) mod `dim`. Pure expression work. */
-  def gramBuckets(normCol: Column, dim: Int = CosineDim): Column =
+    * first two hex digits of md5(gram) mod [[CosineDim]]. Pure expression
+    * work. */
+  def gramBuckets(normCol: Column): Column =
     transform(charGrams(normCol),
-      g => pmod(conv(substring(md5(g), 1, 2), 16, 10).cast("int"), lit(dim)))
+      g => pmod(conv(substring(md5(g), 1, 2), 16, 10).cast("int"), lit(CosineDim)))
 
-  /** Dense `dim`-vector from a bucket-id array: component d counts the
+  /** Dense [[CosineDim]]-vector from a bucket-id array: component d counts the
     * grams in bucket d. A per-name histogram, not an aggregation — stays
     * inside the projection. The native codegen'd kernel
     * (graft.plans.Expressions.BucketHistogramExpr) walks the bucket array
     * once; the composed form [[bucketVectorHof]] it replaced walks it
-    * `dim` times (parity-tested bit-for-bit in ExpressionsSpec). */
-  def bucketVector(bucketsCol: Column, dim: Int = CosineDim): Column =
-    graft.plans.Expressions.bucket_histogram(bucketsCol, dim)
+    * [[CosineDim]] times (parity-tested bit-for-bit in ExpressionsSpec). */
+  def bucketVector(bucketsCol: Column): Column =
+    graft.plans.Expressions.bucket_histogram(bucketsCol, CosineDim)
 
   /** Composed higher-order-function form of [[bucketVector]] — the
     * engine-portable fallback, and the parity oracle for the native
@@ -271,8 +272,8 @@ object Linker {
     * (which no featurization path produces) the native form is null while
     * this form yields an array of null counts (size(null) = null per
     * bucket) — pinned in ExpressionsSpec. */
-  def bucketVectorHof(bucketsCol: Column, dim: Int = CosineDim): Column =
-    array((0 until dim).map(d =>
+  def bucketVectorHof(bucketsCol: Column): Column =
+    array((0 until CosineDim).map(d =>
       size(filter(bucketsCol, b => b === lit(d))).cast("double")): _*)
 
   /** Tier-3 cosine alignment — the reference's own alignment geometry
@@ -314,12 +315,12 @@ object Linker {
     *        a long-running stream accumulated one pair per micro-batch
     *        (ADVICE round 5). Default no-op is for short-lived dev tools. */
   def alignCosine(aligned: DataFrame, alias: DataFrame,
-                  minSim: Double = 0.8, dim: Int = CosineDim,
+                  minSim: Double = 0.8,
                   lshPrune: Option[(Int, Int)] = None,
                   prebuiltDict: Option[DataFrame] = None,
                   registerCached: DataFrame => Unit = _ => ()): DataFrame = {
-    val unlinked = cosineUnlinked(aligned, dim)
-    val dict = prebuiltDict.getOrElse(cosineDict(alias, dim))
+    val unlinked = cosineUnlinked(aligned)
+    val dict = prebuiltDict.getOrElse(cosineDict(alias))
     val pairs = lshPrune match {
       case None =>
         unlinked.join(broadcast(dict), col("f_kind") === col("a_kind"))
@@ -343,22 +344,22 @@ object Linker {
     * embeddings — [[alignCosine]]'s probe side, shared with
     * tools/CosinePrune so the tool measures the engine's actual vector
     * space. */
-  private[graft] def cosineUnlinked(aligned: DataFrame, dim: Int = CosineDim): DataFrame =
+  private[graft] def cosineUnlinked(aligned: DataFrame): DataFrame =
     aligned.filter(!col("obj_linked"))
       .select(col("obj_kind").as("f_kind"), col("obj_name").as("f_name"))
       .distinct()
-      .withColumn("f_bks", gramBuckets(normName(col("f_name")), dim))
-      .withColumn("f_vec", bucketVector(col("f_bks"), dim))
+      .withColumn("f_bks", gramBuckets(normName(col("f_name"))))
+      .withColumn("f_vec", bucketVector(col("f_bks")))
       .drop("f_bks")
 
   /** The alias dictionary with its gram embeddings — [[alignCosine]]'s
     * build side, shared with tools/CosinePrune. */
-  private[graft] def cosineDict(alias: DataFrame, dim: Int = CosineDim): DataFrame =
+  private[graft] def cosineDict(alias: DataFrame): DataFrame =
     alias
       .select(col("kind").as("a_kind"), col("alias_norm"),
         col("canonical").as("a_canonical"))
-      .withColumn("a_bks", gramBuckets(col("alias_norm"), dim))
-      .withColumn("a_vec", bucketVector(col("a_bks"), dim))
+      .withColumn("a_bks", gramBuckets(col("alias_norm")))
+      .withColumn("a_vec", bucketVector(col("a_bks")))
       .drop("a_bks")
 
   /** Hyperplane-LSH candidate generation for [[alignCosine]] — the
@@ -372,7 +373,7 @@ object Linker {
     *
     *   1. signature: bit_i = sign(v · h_i), banded into `bands` groups —
     *      the banding trick shared with MinHash-LSH and lshNearDup. The
-    *      plane table is BOUNDED (≤ `planes` rows of `dim` doubles — tens
+    *      plane table is BOUNDED (≤ `planes` rows of [[CosineDim]] doubles — tens
     *      of KB), so it is collected once on the driver (a guarded bounded
     *      collect, like the canonicalizer probes) and inlined as literals:
     *      each side's signature is then a pure projection +

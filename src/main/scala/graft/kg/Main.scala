@@ -105,8 +105,7 @@ object Main {
         if (corpus.columns.contains("text")) corpus.select("url", "text")
         else StageChain.extract(corpus).select("url", "text")
       val v = graft.streaming.StreamingKg.compactDedup(spark, outDir, docs,
-        minJaccard = opts("compact-dedup").toDouble,
-        localProbe = cfg.canonLocalProbe)
+        minJaccard = opts("compact-dedup").toDouble, cfg)
       println(v.map(v => s"[graft] dedup-compacted to snapshot v$v at $outDir")
         .getOrElse(s"[graft] nothing to compact at $outDir"))
       spark.stop(); return

@@ -192,19 +192,15 @@ object Dedup {
   /** 16-bit SimHash (equality-grouping variant). */
   def simhash(docs: DataFrame): DataFrame = simhashFp(docs, 16)
 
-  /** SimHash NEAR-duplicates: pairs within Hamming distance `maxHamming`.
-    * Pigeonhole banding — the fingerprint splits into `nBlocks` equal bit
-    * blocks; any pair within Hamming nBlocks-1 must agree exactly on at
-    * least one block, so candidates are the pairs of each
+  /** SimHash NEAR-duplicates: pairs of 32-bit fingerprints within Hamming
+    * distance 3. Pigeonhole banding — the fingerprint splits into 4 blocks
+    * of 8 bits; any pair within Hamming 3 must agree exactly on at least
+    * one block, so candidates are the pairs of each
     * (block index, block bits) bucket — never an all-pairs comparison —
     * and the exact Hamming check is bit_count(xor) on the candidates. */
-  def simhashNearDup(docs: DataFrame, nBits: Int = 32, nBlocks: Int = 4,
-                     maxHamming: Int = 3): DataFrame = {
-    require(maxHamming < nBlocks,
-      s"pigeonhole: $nBlocks blocks only guarantee recall up to Hamming ${nBlocks - 1}")
-    require(nBits % nBlocks == 0,
-      s"$nBits bits must split evenly into $nBlocks blocks — a remainder would " +
-        "leave the top bits un-banded and silently void the recall guarantee")
+  def simhashNearDup(docs: DataFrame): DataFrame = {
+    val (nBits, nBlocks) = (32, 4)
+    val maxHamming = nBlocks - 1 // the pigeonhole recall bound
     val blockBits = nBits / nBlocks
     val fp = simhashFp(docs, nBits)
     // One pass over the fingerprint aggregation (the former per-block

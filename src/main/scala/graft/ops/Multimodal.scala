@@ -82,10 +82,12 @@ object Multimodal {
 
   /** Resize + feature-extract stage: decode (stub) → aspect-preserving
     * resize arithmetic (real) → fixed-width float feature vector (stub
-    * content-derived embedding). Batch shape matches a `mapInPandas`
-    * feature extractor: one model/codec init per partition, fixed-size
-    * vector column out, ready for the Similarity operators. */
-  def features(media: DataFrame, maxSide: Int = 224, dim: Int = 16): Dataset[MediaFeature] = {
+    * content-derived embedding). The longer side shrinks to at most 100
+    * pixels and the vector has 16 components. Batch shape matches a
+    * `mapInPandas` feature extractor: one model/codec init per partition,
+    * fixed-size vector column out, ready for the Similarity operators. */
+  def features(media: DataFrame): Dataset[MediaFeature] = {
+    val (maxSide, dim) = (100, 16)
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]

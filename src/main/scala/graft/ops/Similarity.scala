@@ -60,17 +60,10 @@ object Similarity {
       .limit(k)
   }
 
-  /** Centroid table of the coarse quantizer: avg vector per cluster.
-    * `samplePermille` < 1000 computes centroids from a deterministic
-    * hash-keyed sample of the corpus — the 10^12-row path, where
-    * posexploding every vector for an average is needless (centroid
-    * estimates converge long before full coverage; the sample key is a
-    * content hash so results are reproducible across runs/engines). */
-  def centroids(embeddings: DataFrame, samplePermille: Int = 1000): DataFrame = {
-    val base =
-      if (samplePermille >= 1000) embeddings
-      else embeddings.filter(pmod(xxhash64(col("vec_id")), lit(1000)) < samplePermille)
-    val dim = base
+  /** Centroid table of the coarse quantizer: avg vector per cluster, over
+    * every vector of the corpus. */
+  def centroids(embeddings: DataFrame): DataFrame = {
+    val dim = embeddings
       .select(posexplode(col("embedding")).as(Seq("pos", "v")), col("label"))
       .groupBy(col("label"), col("pos"))
       .agg(avg(col("v")).as("c"))
@@ -141,39 +134,24 @@ object Similarity {
     * coarse quantizer for IVF instead of the `label` stand-in. Fully
     * deterministic and engine-portable (reproducible by the DuckDB oracle):
     * init = the embeddings of the k smallest vec_ids; `iters` full Lloyd
-    * rounds; centroid components rounded to 6 decimals per round; empty
+    * rounds over every vector of the corpus; centroid components rounded to 6 decimals per round; empty
     * clusters simply vanish (standard Lloyd behavior). Expressed as a
     * DataFrame loop like the CC rounds — per-round localCheckpoint
     * truncates lineage so Catalyst never re-analyzes a growing plan; at
     * 10^12 rows the update is one posexplode shuffle keyed on
     * (cluster, pos), map-side combined, per round. */
-  def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int,
-                      samplePermille: Int = 1000): DataFrame = {
+  def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
     // Deterministic init: the k SMALLEST vec_ids (not `vec_id < k`, which
     // silently yields fewer/zero centroids when ids are sparse or hashed —
     // e.g. xxhash64-derived doc ids), cluster id = rank among those k.
-    val e0 = embeddings.select(col("vec_id"), col("embedding"))
-    val init = e0.orderBy(col("vec_id")).limit(k)
+    val e = embeddings.select(col("vec_id"), col("embedding"))
+    val init = e.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id"),
         transform(col("embedding"), x => round(x, 6)).as("centroid"))
     val initRanked = init
       .withColumn("cluster", (row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("vec_id"))) - 1)
         .cast("int")) // k-row frame: the single-partition window is bounded
-    // 10^12-row path: train the codebook on a deterministic hash-keyed
-    // sample (same knob as [[centroids]]) — Lloyd converges long before
-    // full coverage, and the per-round posexplode shuffle shrinks by the
-    // sample ratio. Init points always stay in the training set; assignment
-    // of the FULL corpus still uses every row.
-    // the sampled training set is consumed twice per Lloyd round (assign +
-    // centroid update) and its lineage carries the init sort/join/dedup —
-    // materialize it ONCE so rounds never re-scan the full corpus
-    val e =
-      if (samplePermille >= 1000) e0
-      else initRanked.select(col("vec_id")).join(e0, "vec_id")
-        .unionByName(e0.filter(pmod(xxhash64(col("vec_id")), lit(1000)) < samplePermille))
-        .dropDuplicates("vec_id")
-        .localCheckpoint(true)
     var cents = initRanked.select("cluster", "centroid")
     for (i <- 1 to iters) {
       // assignCarry keeps the embedding on the assigned row, so the

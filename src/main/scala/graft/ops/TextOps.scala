@@ -50,9 +50,9 @@ object TextOps {
     "es" -> Seq("el", "los", "las", "y", "es", "la"))
 
   /** Multi-language ID: per-profile function-word density, argmax above a
-    * density floor, earlier profile wins exact ties (fixed order => the
-    * same CASE chain is expressible verbatim in any SQL engine). */
-  def langIdMulti(docs: DataFrame, minDensity: Double = 0.05): DataFrame = {
+    * density floor of 0.05, earlier profile wins exact ties (fixed order =>
+    * the same CASE chain is expressible verbatim in any SQL engine). */
+  def langIdMulti(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"), col("lang").as("declared_lang"),
       col("text"), wsTokenCount(col("text")).as("n_tok"))
     val withRatios = LangProfiles.foldLeft(base) { case (df, (lg, words)) =>
@@ -64,7 +64,7 @@ object TextOps {
     val pred = langs.foldLeft(when(lit(false), lit(""))) { (acc, lg) =>
       val wins = langs.filter(_ != lg)
         .map(o => col(s"r_$lg") >= col(s"r_$o"))
-        .foldLeft(col(s"r_$lg") >= minDensity)(_ && _)
+        .foldLeft(col(s"r_$lg") >= 0.05)(_ && _)
       acc.when(wins, lit(lg))
     }.otherwise(lit("und"))
     withRatios.withColumn("predicted_lang", pred)

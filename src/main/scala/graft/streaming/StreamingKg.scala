@@ -300,11 +300,14 @@ object StreamingKg {
     * Done/failed tables are untouched: dropped urls WERE processed — they
     * must not be re-driven, they are duplicates. The pass's caches are
     * released whether or not the commit succeeds. Returns the committed
-    * version, None when the store has no triples. */
+    * version, None when the store has no triples.
+    *
+    * @param cfg the deployment's Config: `canonLocalProbe` selects the
+    *        cluster resolution's driver probe ([[graft.ops.Dedup.resolve]])
+    *        and `jobStart` stamps the lineage row. */
   def compactDedup(spark: SparkSession, dir: String, corpus: DataFrame,
-                   minJaccard: Double, localProbe: Boolean = true,
-                   jobStart: java.sql.Timestamp =
-                     java.sql.Timestamp.valueOf("2024-06-01 00:00:00")): Option[Int] = {
+                   minJaccard: Double,
+                   cfg: KgPipeline.Config = KgPipeline.Config()): Option[Int] = {
     import graft.sources.SnapshotStore
     val readVersion = SnapshotStore.currentVersion(spark, dir)
     SnapshotStore.read(spark, dir, "triples",
@@ -317,7 +320,7 @@ object StreamingKg {
         .withColumn("doc_id", xxhash64(col("url")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val losers = graft.ops.Dedup
-        .dedupe(docs.select("doc_id", "text"), minJaccard, localProbe)
+        .dedupe(docs.select("doc_id", "text"), minJaccard, cfg.canonLocalProbe)
         .filter(!col("keep")).select(col("doc_id").as("drop_id"))
       // loser urls are duplicate-cluster members only — tiny next to the
       // corpus, so the rewrite anti-join broadcasts under AQE
@@ -347,7 +350,7 @@ object StreamingKg {
             // match the pipeline lineage schema exactly (partition_id is the
             // int spark_partition_id(); a global pass has none)
             .withColumn("partition_id", col("partition_id").cast("int"))
-            .withColumn("job_start", lit(jobStart))
+            .withColumn("job_start", lit(cfg.jobStart))
         }
         // requireVersion: a concurrent append to triples between our read
         // and this publish must abort the rewrite, not vanish under it

@@ -71,7 +71,10 @@ class CanonicalizerSpec extends SparkSpec {
   }
 
   test("connectedComponents localProbe=false: distributed rounds engage, same output") {
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (10L, 12L), (20L, 21L))
+    // plus a 25-vertex path: its far end is 24 hops from the minimum, so the
+    // distributed rounds must run until no label changes
+    val path = (100L until 124L).map(v => (v, v + 1))
+    val edges = (Seq((1L, 2L), (2L, 3L), (10L, 11L), (10L, 12L), (20L, 21L)) ++ path)
       .toDF("src", "dst")
     val probed = Canonicalizer.connectedComponents(edges)
     val unprobed = Canonicalizer.connectedComponents(edges, localProbe = false)
@@ -84,6 +87,7 @@ class CanonicalizerSpec extends SparkSpec {
       .forall(!_.isInstanceOf[LocalRelation]))
     val l = probed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val d = unprobed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(l(124L) === 100L)
     assert(d === l)
   }
 

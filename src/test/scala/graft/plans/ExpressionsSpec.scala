@@ -117,15 +117,15 @@ class ExpressionsSpec extends SparkSpec {
   test("BucketHistogramExpr equals the composed filter/size form") {
     import graft.kg.Linker
     val rnd = new scala.util.Random(11)
-    // random bucket ids incl. out-of-range and negative (match no bucket),
-    // empty arrays, and a null row
+    // random bucket ids in -2 until CosineDim + 2, so ids out of range on
+    // both ends (match no bucket) occur; empty arrays, and a null row
     val rows = (0 until 40).map { i =>
-      (i.toLong, Some(Seq.fill(rnd.nextInt(20))(rnd.nextInt(20) - 2)))
+      (i.toLong, Some(Seq.fill(rnd.nextInt(20))(rnd.nextInt(Linker.CosineDim + 4) - 2)))
     } :+ (40L, None) :+ (41L, Some(Seq.empty[Int]))
     val df = rows.toDF("id", "bks")
     val got = df.select(col("id"),
-        Linker.bucketVector(col("bks"), 16).as("native"),
-        Linker.bucketVectorHof(col("bks"), 16).as("hof"))
+        Linker.bucketVector(col("bks")).as("native"),
+        Linker.bucketVectorHof(col("bks")).as("hof"))
       .collect()
     got.foreach { r =>
       if (r.isNullAt(1)) {

@@ -339,7 +339,7 @@ class StreamingSpec extends SparkSpec {
     assert(urls(shard) === Set(uA, uB, uC))
     // global compaction over the SAME corpus closes it
     val v = StreamingKg.compactDedup(spark, shard,
-      pages.select("url", "text"), minJaccard = 0.5)
+      pages.select("url", "text"), minJaccard = 0.5, KgPipeline.Config())
     assert(v.nonEmpty)
     def rows(dir: String) = SnapshotStore.read(spark, dir, "triples").get
       .select("url", "subj_name", "predicate", "obj_name", "obj_final")
@@ -363,13 +363,13 @@ class StreamingSpec extends SparkSpec {
       .select("url").distinct().count() === 4L)
     // idempotent: a second compaction over the same corpus drops nothing
     val v2 = StreamingKg.compactDedup(spark, shard,
-      pages.select("url", "text"), minJaccard = 0.5)
+      pages.select("url", "text"), minJaccard = 0.5, KgPipeline.Config())
     assert(SnapshotStore.readSnapshot(spark, shard, v2.get)
       .meta("dedup_dropped_triples") === "0")
     assert(rows(shard) === rows(full))
     // --compact-dedup's threshold reaches Dedup.dedupe unchecked by Config
     assertThrows[IllegalArgumentException](StreamingKg.compactDedup(spark, shard,
-      pages.select("url", "text"), minJaccard = 0.0))
+      pages.select("url", "text"), minJaccard = 0.0, KgPipeline.Config()))
   }
 
   test("compaction re-hydration preserves each row's original requested_at provenance") {
