@@ -150,7 +150,8 @@ object KgQueries {
       val client = Inference.pinnedClient
       val res = KgPipeline.run(s, Pages.fixtures(s), dims, client,
         base.copy(numPartitions = 4, emitRdf = true))
-      res.copy(triples = res.triples.persist(), rdf = res.rdf.map(_.persist()))
+      // `triples` already reads the run's persisted hydrated output
+      res.copy(rdf = res.rdf.map(_.persist()))
     })
   }
   private def fixtureRdf(s: SparkSession) = fixtureResult(s).rdf.get

@@ -147,8 +147,10 @@ object Hydrator {
   /** Hydrate canonicalized triples with strat, mineral, USGS-fallback and
     * gazetteer fields. Input needs: subj_name, predicate, obj_kind,
     * obj_final. Output adds nullable dim columns + subj_lat/subj_lon +
-    * elements + requested_at provenance timestamp. The four dim joins are
-    * pinned broadcasts: `Dims.snapshot` bounds every dim to dictionary size.
+    * elements + requested_at provenance timestamp. Two pinned broadcast
+    * joins do it — the object side (strat, mineral and lith in one keyed
+    * relation) and the gazetteer: `Dims.snapshot` bounds every dim to
+    * dictionary size.
     *
     * `requestedAt` overrides the provenance timestamp SOURCE: by default
     * every row stamps `lit(jobStart)` (one job, one timestamp — the batch
@@ -161,27 +163,26 @@ object Hydrator {
                       requestedAt: Option[Column] = None): DataFrame = {
     val Prepared(stratKeyed, mineralKeyed, gaz, lithKeyed) = prepared
 
-    val withStrat = triples
+    // The three object dims in ONE broadcast relation keyed on
+    // (kind, normalized name): each kind's rows carry only its own fields
+    // (the others null), and each prepared dim is unique on its key, so a
+    // triple matches at most one row — the row of its own kind, exactly as
+    // three kind-exclusive left joins would hydrate it, for one hash
+    // relation instead of three.
+    val objectDims = Seq(Model.ObjKind.Strat -> stratKeyed,
+        Model.ObjKind.Mineral -> mineralKeyed, Model.ObjKind.Lith -> lithKeyed)
+      .map { case (kind, keyed) =>
+        keyed.withColumnRenamed("join_norm", "dim_join").withColumn("dim_kind", lit(kind))
+      }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val withObject = triples
       .withColumn("obj_join", Linker.normName(col("obj_final")))
-      .join(broadcast(stratKeyed.withColumnRenamed("join_norm", "strat_join")),
-        col("obj_kind") === Model.ObjKind.Strat && col("obj_join") === col("strat_join"),
-        "left")
-      .drop("strat_join")
-
-    val withMineral = withStrat
-      .join(broadcast(mineralKeyed.withColumnRenamed("join_norm", "min_join")),
-        col("obj_kind") === Model.ObjKind.Mineral && col("obj_join") === col("min_join"),
-        "left")
-      .drop("min_join")
+      .join(broadcast(objectDims),
+        col("obj_kind") === col("dim_kind") && col("obj_join") === col("dim_join"), "left")
+      .drop("dim_kind", "dim_join")
       .withColumn("elements", elementsUdf(col("formula")))
 
-    val withLith = withMineral
-      .join(broadcast(lithKeyed.withColumnRenamed("join_norm", "lith_join")),
-        col("obj_kind") === Model.ObjKind.Lith && col("obj_join") === col("lith_join"),
-        "left")
-      .drop("lith_join")
-
-    val hydrated = withLith
+    val hydrated = withObject
       .withColumn("subj_join", Linker.normName(col("subj_name")))
       .join(broadcast(gaz.withColumnRenamed("join_norm", "gaz_join")),
         col("subj_join") === col("gaz_join"), "left")

@@ -282,8 +282,10 @@ object Inference {
     prompting.map(_._1.version).mkString("+")
 
   /** The mapPartitions host. Input must carry (url, hashed_text, text, lang);
-    * output adds (raw, model_id, prompt_version). Micro-batch default
-    * follows the reference's chosen operating point of 200
+    * output adds (raw, model_id, prompt_version) and carries the input's
+    * `extract_ok` (true when the input has none) past the client, which
+    * never sees it. Micro-batch default follows the reference's chosen
+    * operating point of 200
     * (reference: chtc/preprocess_extraction_direct.py:68; BASELINE.md).
     *
     * When `prompting` is non-empty, each request's prompt is built in-task
@@ -306,8 +308,13 @@ object Inference {
     val pv = promptVersion(prompting)
     val shipped = spark.sparkContext.broadcast((client, prompting))
     registerBroadcast(shipped)
-    pages.select(col("url"), col("hashed_text"), col("text"), col("lang"),
-        lit("").as("prompt")).as[Request]
+    // a null check (no golden text to compare) counts as a failed extract,
+    // as the lineage aggregation always has
+    val extractOk =
+      if (pages.columns.contains("extract_ok")) coalesce(col("extract_ok"), lit(false))
+      else lit(true)
+    pages.select(struct(col("url"), col("hashed_text"), col("text"), col("lang"),
+        lit("").as("prompt")).as("_1"), extractOk.as("_2")).as[(Request, Boolean)]
       .mapPartitions { it =>
         // the closure captures the handle only, never `client`/`prompting`
         val (c, dicts) = shipped.value
@@ -316,16 +323,17 @@ object Inference {
         }
         it.grouped(microBatch).flatMap { batch =>
           val reqs =
-            if (handlers.isEmpty) batch
-            else batch.map { r =>
+            if (handlers.isEmpty) batch.map(_._1)
+            else batch.map { case (r, _) =>
               val prompt = handlers.map { case (h, sc) =>
                 Prompts.mixtralWrap(h.messages(r.text, sc))
               }.mkString("\n\n")
               r.copy(prompt = prompt)
             }
           val outs = c.infer(reqs)
-          reqs.iterator.zip(outs.iterator).map { case (r, raw) =>
-            Model.RawExtraction(r.url, r.hashed_text, r.lang, raw, c.modelId, pv)
+          reqs.iterator.zip(outs.iterator).zip(batch.iterator.map(_._2)).map {
+            case ((r, raw), ok) =>
+              Model.RawExtraction(r.url, r.hashed_text, r.lang, raw, c.modelId, pv, ok)
           }
         }
       }

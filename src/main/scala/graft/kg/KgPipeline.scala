@@ -26,7 +26,9 @@ import org.apache.spark.sql.functions._
   *    re-running after failure processes only missing urls, and because
   *    every stage is deterministic the union of runs equals one clean run,
   *  - lineage/metrics are per-partition rows computed from
-  *    spark_partition_id() — no driver-side collections of data rows.
+  *    spark_partition_id() over the pass's persisted frames — the parsed
+  *    boundary (extract, infer, parse) and the hydrated output (triples) —
+  *    so counting re-runs no stage and collects no data rows on the driver.
   */
 object KgPipeline {
 
@@ -199,10 +201,10 @@ object KgPipeline {
       // with zero triples.
       failedUrls: DataFrame,
       // Unpersists this run's cached intermediates (dedup marks, parsed,
-      // aligned) and its inference broadcast. Call AFTER all outputs have
-      // materialized — a long-lived session (e.g. one SparkSession serving
-      // many runs) leaks the cached frames otherwise; the commit entry
-      // points below call it for you.
+      // aligned, hydrated) and its inference broadcast. Call AFTER all
+      // outputs have materialized — a long-lived session (e.g. one
+      // SparkSession serving many runs) leaks the cached frames otherwise;
+      // the commit entry points below call it for you.
       cleanup: () => Unit = () => ())
 
   /** Columns of the output triples table (FIXTURES.md §5). */
@@ -276,52 +278,57 @@ object KgPipeline {
 
     // P3/P4/P5: lenient parse → validated triples. The PRE-explode frame is
     // the persisted stage boundary — the downstream triple chain explodes
-    // it, and the infer/parse failure bookkeeping (lineage stages +
-    // Result.failedUrls) reads its parse_status column, all off one cache;
-    // without a persist every action would re-run extract+inference+parse
-    // from the scan (the reference commits exactly this intermediate to its
-    // cache table, chtc/db.py:56-66). Disk-backed so it degrades gracefully
-    // when the raw set outgrows executor memory at scale.
+    // it, and the page bookkeeping (the extract/infer/parse lineage stages
+    // + Result.failedUrls) reads its extract_ok and parse_status columns,
+    // all off one cache; without a persist every action would re-run
+    // extract+inference+parse from the scan (the reference commits exactly
+    // this intermediate to its cache table, chtc/db.py:56-66). Disk-backed
+    // so it degrades gracefully when the raw set outgrows executor memory
+    // at scale.
     val rawParsed = PostProcess.withParsed(raw.toDF())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // J2 alignment tiers → CC canonicalization → J3 hydration: the shared
     // chain. Its aligned stage boundary and tier-3's LSH-prune sides
     // persist; Result.cleanup releases them with the run's other caches.
+    // The hydrated output is the pass's output boundary: the triples, their
+    // lineage count and the RDF each read it, so hydration runs once.
     val chainCached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val hydrated = StageChain(dims, cfg)(rawParsed, chainCached += _)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val triples = StageChain.triples(hydrated)
 
     // Lineage/metrics: one row per partition per stage (replaces the
     // reference's job_id bookkeeping + "NA" failure placeholders,
-    // chtc/db.py:26-66).
-    val pageStats = extracted
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("input_rows"),
-           sum(when(col("extract_ok"), 0L).otherwise(1L)).as("failed_rows"))
-      .withColumn("stage", lit("extract"))
-      .withColumn("output_rows", col("input_rows") - col("failed_rows"))
-    // Infer + parse failure stages (the reference's per-doc "NA" failure
-    // bookkeeping, preprocess_extraction_direct.py:99-110): ONE aggregation
-    // over the persisted pre-explode frame yields both stage rows — a page
-    // with an empty raw failed `infer` (retry exhaustion is deterministic
+    // chtc/db.py:26-66). ONE aggregation over the persisted pre-explode
+    // frame yields the three page stages: it keeps the url repartition's
+    // partitioning, and it carries each page's extract check through
+    // inference. Infer and parse are the reference's per-doc "NA" failure
+    // bookkeeping (preprocess_extraction_direct.py:99-110): a page with an
+    // empty raw failed `infer` (retry exhaustion is deterministic
     // downstream of TransportClient's empty-raw degradation); a page whose
     // non-empty raw yields no triplet list failed `parse`. A
     // legitimately-empty page (valid JSON, zero triplets) fails neither —
     // the distinction the raw-count bookkeeping alone cannot make.
-    val inferParse = rawParsed
+    val pageCounts = rawParsed
       .groupBy(spark_partition_id().as("partition_id"))
       .agg(count(lit(1)).as("n_in"),
+        sum(when(col("extract_ok"), 0L).otherwise(1L)).as("n_extract_failed"),
         sum(when(col("parse_status") === PostProcess.StatusInferFailed, 1L)
           .otherwise(0L)).as("n_infer_failed"),
         sum(when(col("parse_status") === PostProcess.StatusParseFailed, 1L)
           .otherwise(0L)).as("n_parse_failed"))
-    val inferStats = inferParse.select(
+    val pageStats = pageCounts.select(
+      lit("extract").as("stage"), col("partition_id"),
+      col("n_in").as("input_rows"),
+      (col("n_in") - col("n_extract_failed")).as("output_rows"),
+      col("n_extract_failed").as("failed_rows"))
+    val inferStats = pageCounts.select(
       lit("infer").as("stage"), col("partition_id"),
       col("n_in").as("input_rows"),
       (col("n_in") - col("n_infer_failed")).as("output_rows"),
       col("n_infer_failed").as("failed_rows"))
-    val parseStats = inferParse.select(
+    val parseStats = pageCounts.select(
       lit("parse").as("stage"), col("partition_id"),
       (col("n_in") - col("n_infer_failed")).as("input_rows"),
       (col("n_in") - col("n_infer_failed") - col("n_parse_failed")).as("output_rows"),
@@ -341,7 +348,7 @@ object KgPipeline {
               "failed_rows", "job_start")
 
     val rdf = if (cfg.emitRdf) Some(Rdf.fromHydrated(hydrated, dims)) else None
-    val cached = dedupCached ++ chainCached :+ rawParsed
+    val cached = dedupCached ++ chainCached :+ rawParsed :+ hydrated
     Result(triples, lineage, rdf, StageChain.failedUrls(rawParsed),
       () => {
         cached.foreach(_.unpersist(blocking = false))

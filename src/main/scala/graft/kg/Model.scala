@@ -21,14 +21,18 @@ object Model {
     * `raw_llm_output` fixture (reference: tests/conftest.py:22-24).
     * `prompt_version` records which prompt handler(s) built the request —
     * the reference stores it in the ask-LLM provenance hop
-    * (reference: text2graph/llm.py:302-311 additional_values.prompt). */
+    * (reference: text2graph/llm.py:302-311 additional_values.prompt).
+    * `extract_ok` carries the extract stage's byte-identity check through
+    * inference, so the pass's lineage reads all three page stages off one
+    * persisted frame. */
   final case class RawExtraction(
       url: String,
       hashed_text: String,
       lang: String,
       raw: String,
       model_id: String,
-      prompt_version: String)
+      prompt_version: String,
+      extract_ok: Boolean)
 
   /** RDF triple row — final graph materialization unit
     * (reference: text2graph/gkm/convert.py:30-78). `obj_is_literal`

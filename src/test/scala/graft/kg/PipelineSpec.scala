@@ -214,6 +214,76 @@ class KgPipelineSpec extends SparkSpec {
     assert(stages === Set("extract", "infer", "parse", "triples"))
   }
 
+  test("lineage reads only the pass's cached frames, once its triples landed") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper {
+      // leaves below AQE's wrappers; a reused exchange stands for its child
+      def leaves(p: SparkPlan): Seq[SparkPlan] = collect(p) {
+        case r: ReusedExchangeExec => leaves(r.child)
+        case l if l.children.isEmpty && !l.isInstanceOf[AdaptiveSparkPlanExec] &&
+          !l.isInstanceOf[QueryStageExec] => Seq(l)
+      }.flatten
+    }
+    val res = KgPipeline.run(spark, Pages.fixtures(spark), dims, client,
+      KgPipeline.Config(numPartitions = 2))
+    try {
+      res.triples.count()
+      val lineage = res.lineage
+      lineage.collect()
+      val leaves = Plans.leaves(lineage.queryExecution.executedPlan)
+      assert(leaves.nonEmpty)
+      assert(leaves.forall(_.isInstanceOf[InMemoryTableScanExec]),
+        leaves.map(_.nodeName).mkString(", "))
+    } finally res.cleanup()
+  }
+
+  test("an extract mismatch reaches lineage; the page is still parsed") {
+    val pages = Seq(("https://t/mismatch", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
+      HtmlText.render("A", "en"), "B", "en"))
+      .toDF("url", "warc_ts", "html", "text", "lang")
+    val r = KgPipeline.run(spark, pages, dims, client, KgPipeline.Config(numPartitions = 2))
+    try {
+      val byStage = r.lineage.groupBy("stage")
+        .agg(sum("input_rows"), sum("output_rows"), sum("failed_rows")).collect()
+        .map(x => x.getString(0) -> (x.getLong(1), x.getLong(2), x.getLong(3))).toMap
+      assert(byStage("extract") === ((1L, 0L, 1L)))
+      assert(byStage("parse") === ((1L, 1L, 0L)))
+      assert(r.failedUrls.count() === 0L)
+    } finally r.cleanup()
+  }
+
+  test("merged object join: a name keyed in several dims hydrates only its own kind") {
+    val key = Seq("Sandstone").toDF("n").select(Linker.normName(col("n"))).head().getString(0)
+    val p = Hydrator.prepare(dims)
+    // one normalized name in all three object dims: a strat, a mineral and a lith
+    val shared = Hydrator.Prepared(
+      stratKeyed = p.stratKeyed.limit(1).withColumn("join_norm", lit(key)),
+      mineralKeyed = p.mineralKeyed.filter(col("mineral_id").isNotNull).limit(1)
+        .withColumn("join_norm", lit(key)),
+      gaz = p.gaz,
+      lithKeyed = p.lithKeyed.filter(col("join_norm") === key))
+    val triples = Seq(
+      ("https://t/m", "m0", "Minnesota", "contains", Model.ObjKind.Mineral, "Sandstone"),
+      ("https://t/l", "m0", "Minnesota", "contains", Model.ObjKind.Lith, "Sandstone"))
+      .toDF("url", "model_id", "subj_name", "predicate", "obj_kind", "obj_final")
+    val rows = Hydrator.hydratePrepared(triples, shared,
+        java.sql.Timestamp.valueOf("2024-06-01 00:00:00"))
+      .collect().map(r => r.getAs[String]("obj_kind") -> r).toSeq
+    assert(rows.size === 2)
+    val byKind = rows.toMap
+    val (mineral, lith) = (byKind(Model.ObjKind.Mineral), byKind(Model.ObjKind.Lith))
+    assert(!mineral.isNullAt(mineral.fieldIndex("mineral_id")))
+    assert(mineral.isNullAt(mineral.fieldIndex("lith_id")))
+    assert(mineral.isNullAt(mineral.fieldIndex("strat_name_id")))
+    assert(lith.getAs[Long]("lith_id") === 10L)
+    assert(lith.isNullAt(lith.fieldIndex("mineral_id")))
+    assert(lith.isNullAt(lith.fieldIndex("strat_name_id")))
+  }
+
   test("USGS fallback: fluorspar gets Mindat formula when Macrostrat misses") {
     val pages = Seq(("https://t/usgs", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
       HtmlText.render("There is fluorspar in Wisconsin.", "en"),
