@@ -281,10 +281,10 @@ object Inference {
   def promptVersion(prompting: Seq[HandlerDict]): String =
     prompting.map(_._1.version).mkString("+")
 
-  /** The mapPartitions host. Input must carry (url, hashed_text, text, lang);
-    * output adds (raw, model_id, prompt_version) and carries the input's
-    * `extract_ok` (true when the input has none) past the client, which
-    * never sees it. Micro-batch default follows the reference's chosen
+  /** The mapPartitions host. Input must carry (url, hashed_text, text, lang,
+    * extract_ok), as `StageChain.extract` yields it; output adds (raw,
+    * model_id, prompt_version) and carries `extract_ok` past the client,
+    * which never sees it. Micro-batch default follows the reference's chosen
     * operating point of 200
     * (reference: chtc/preprocess_extraction_direct.py:68; BASELINE.md).
     *
@@ -308,13 +308,11 @@ object Inference {
     val pv = promptVersion(prompting)
     val shipped = spark.sparkContext.broadcast((client, prompting))
     registerBroadcast(shipped)
-    // a null check (no golden text to compare) counts as a failed extract,
-    // as the lineage aggregation always has
-    val extractOk =
-      if (pages.columns.contains("extract_ok")) coalesce(col("extract_ok"), lit(false))
-      else lit(true)
+    // a null check (a null golden text) counts as a failed extract, as the
+    // lineage aggregation always has
     pages.select(struct(col("url"), col("hashed_text"), col("text"), col("lang"),
-        lit("").as("prompt")).as("_1"), extractOk.as("_2")).as[(Request, Boolean)]
+        lit("").as("prompt")).as("_1"), coalesce(col("extract_ok"), lit(false)).as("_2"))
+      .as[(Request, Boolean)]
       .mapPartitions { it =>
         // the closure captures the handle only, never `client`/`prompting`
         val (c, dicts) = shipped.value

@@ -66,8 +66,8 @@ class PayloadSpec extends SparkSpec {
     val client = Inference.defaultClient(prompting.head._2,
       Dims.gazetteer.map(_.name).toArray, prompting(1)._2)
     val pages = Seq(("https://p.graft/1", "h1",
-      "The Shakopee Formation overlies the St. Peter in Minnesota.", "en"))
-      .toDF("url", "hashed_text", "text", "lang")
+      "The Shakopee Formation overlies the St. Peter in Minnesota.", "en", true))
+      .toDF("url", "hashed_text", "text", "lang", "extract_ok")
     val shipped = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.broadcast.Broadcast[_]]
     val raw = Inference.run(pages, client, 200, prompting, shipped += _)
     try {

@@ -5,16 +5,16 @@
         --parent ../parent --change .
 
 Runs `python3 kgbench/run.py --workload W --seed S --seconds N --trace 0`
-in each checkout, alternating which side goes first: pair 1 runs the
-parent first, pair 2 the change first, and so on. Prints each pair's
-end-to-end metrics, each side's median and quartiles, and per metric the
-share of pairs the change won (ties count for neither) with a verdict: a
-win needs at least 9/10 of the pairs won and a median gap larger than the
-parent's interquartile range. A run that fails its checks stops the A/B.
+in each checkout, with N the benchmark's `run_seconds`, alternating which
+side goes first: pair 1 runs the parent first, pair 2 the change first, and
+so on. Prints each pair's end-to-end metrics, each side's median and
+quartiles, and per metric the share of pairs the change won (ties count for
+neither) with a verdict: a win needs at least 9/10 of the pairs won and a
+median gap larger than the parent's interquartile range. A run that fails its checks stops the A/B.
 
 Each checkout builds into its own `.bench_build/`; the first run on a side
-pays that build. Metric names and directions come from the change's
-BENCHMARK.json.
+pays that build. The run length and the metric names and directions come
+from the change's BENCHMARK.json.
 """
 import argparse
 import json
@@ -50,23 +50,24 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=5)
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
     ap.add_argument("--change", required=True, help="checkout of the change")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
-        metrics = [(m["name"], m["better"]) for m in json.load(f)["end_to_end"]]
+        bench = json.load(f)
+    seconds = bench["run_seconds"]
+    metrics = [(m["name"], m["better"]) for m in bench["end_to_end"]]
     names = [n for n, _ in metrics]
     sides = {"parent": a.parent, "change": a.change}
     runs = {"parent": [], "change": []}
 
-    print("%s seed %d, %d pairs, %d s per run" % (a.workload, a.seed, a.pairs, a.seconds))
+    print("%s seed %d, %d pairs, %d s per run" % (a.workload, a.seed, a.pairs, seconds))
     print("pair first   " + "  ".join("%-27s" % n for n in names))
     for i in range(a.pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
-            runs[side].append(run_once(sides[side], a.workload, a.seed, a.seconds))
+            runs[side].append(run_once(sides[side], a.workload, a.seed, seconds))
         cells = ["%12.2f → %-12.2f" % (runs["parent"][-1][n], runs["change"][-1][n])
                  for n in names]
         print("%4d %-7s %s" % (i + 1, order[0], "  ".join(cells)), flush=True)
