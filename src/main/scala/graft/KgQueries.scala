@@ -217,28 +217,6 @@ object KgQueries {
           coalesce(col("canonical"), col("surface")).as("obj_canonical"))
     },
 
-    // J2, skew-safe variant: the SAME alignment through Linker.alignSalted
-    // (salted probe key + S-replicated build side, shuffle-hash join) —
-    // identical rows to kg_align, so it shares kg_align's oracle SQL
-    // verbatim. This is the plan that survives a dictionary too large to
-    // broadcast with "Minnesota"-hot probe keys (SURVEY.md §4).
-    "kg_align_salted" -> { (s, dir) =>
-      import s.implicits._
-      val ents = mentionsDf(s, dir, EntTerms).distinct()
-        .withColumn("surface", explode(array(col("term"), initcap(col("term")),
-          concat(col("term"), lit(".")))))
-      val probe = ents
-        .withColumn("url", col("doc_id").cast("string"))
-        .withColumn("obj_name", col("surface"))
-        .withColumn("obj_kind", lit("ent"))
-      val alias = EntTerms.toDF("alias")
-        .select(Linker.normName(col("alias")).as("alias_norm"),
-          concat(lit("canon_"), col("alias")).as("canonical"),
-          lit("ent").as("kind"))
-      Linker.alignSalted(probe, alias, saltBuckets = 8)
-        .select(col("doc_id"), col("surface"), col("obj_canonical"))
-    },
-
     // J2, tier-2 fuzzy (alignment.py:110-119 sub-normalization linking,
     // made deterministic): a misspelled name links to its dictionary
     // canonical via char-3-gram Jaccard argmax iff J >= 0.6; an exact name
@@ -325,28 +303,6 @@ object KgQueries {
           lit("is in").as("predicate"),
           col("n").as("obj_name"), lit(Model.ObjKind.Strat).as("obj_kind"))
       Linker.alignCosine(Linker.align(names, alias), alias, minSim = 0.8)
-        .select(col("obj_name").as("name"), col("obj_canonical"), col("obj_linked"))
-    },
-
-    // J2 tier-3, past-broadcast variant: the SAME alignment through the
-    // hyperplane-LSH candidate prune (Linker.cosineLshCandidates) at
-    // generous single-bit banding — a >=0.8 pair is pruned only if it
-    // disagrees with its argmax entity on EVERY plane, which no gate
-    // fixture does, and survivors re-score with the exact kernel. Recall
-    // is therefore total here and the query shares kg_align_cosine's
-    // oracle SQL verbatim (the kg_align_salted twin pattern: one more
-    // gate-proven physical strategy, zero new oracle SQL).
-    "kg_align_cosine_lsh" -> { (s, dir) =>
-      import s.implicits._
-      val alias = CosineAliasDict.toDF("alias_norm", "canonical")
-        .withColumn("kind", lit(Model.ObjKind.Strat))
-      val names = CosineTestNames.toDF("n")
-        .select(lit("https://q/cosine").as("url"), lit("h").as("hashed_text"),
-          lit("m").as("model_id"), lit("Minnesota").as("subj_name"),
-          lit("is in").as("predicate"),
-          col("n").as("obj_name"), lit(Model.ObjKind.Strat).as("obj_kind"))
-      Linker.alignCosine(Linker.align(names, alias), alias, minSim = 0.8,
-        lshPrune = Some((3, 3)))
         .select(col("obj_name").as("name"), col("obj_canonical"), col("obj_linked"))
     },
 
@@ -1070,8 +1026,6 @@ object KgQueries {
             WHERE regexp_matches(text, '\\b' || term || '\\b'))
           SELECT locs.doc_id, subj, 'co_occurs_with' AS predicate, obj
           FROM locs JOIN ents ON locs.doc_id = ents.doc_id""",
-    // kg_align_salted intentionally shares this SQL verbatim (same rows,
-    // different physical join strategy on the Spark side) — see below.
     "kg_align" ->
       s"""WITH ents AS (
             SELECT DISTINCT doc_id, term FROM documents
@@ -1495,13 +1449,9 @@ object KgQueries {
     }
   )
 
-  /** kg_align_salted shares kg_align's oracle SQL verbatim (the salted
-    * shuffle-hash plan must produce hash-identical rows to the broadcast
-    * plan), and kg_align_cosine_lsh shares kg_align_cosine's (the pruned
-    * path must reproduce the full scan at generous banding) — two more
-    * gate-proven physical strategies, zero new oracle SQL. */
+  /** kg_search_to_graph_slow shares kg_search_to_graph's oracle SQL
+    * verbatim. */
   val oracles: Map[String, String] =
-    oraclesBase + ("kg_align_salted" -> oraclesBase("kg_align")) +
-      ("kg_align_cosine_lsh" -> oraclesBase("kg_align_cosine")) +
+    oraclesBase +
       ("kg_search_to_graph_slow" -> oraclesBase("kg_search_to_graph"))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   *
   *   pages → repartition(hash(url)) → resume anti-join → html→text extract
   *   → batched inference (mapPartitions) → lenient parse/explode
-  *   → alignment join (broadcast | salted) → connected-components
+  *   → broadcast alignment join → connected-components
   *   canonicalization → hydration joins → triples table
   *   [+ RDF materialization] + per-partition lineage/metrics rows.
   *
@@ -91,7 +91,6 @@ object KgPipeline {
   final case class Config(
       numPartitions: Int = 32,
       microBatch: Int = 200,
-      saltedAlign: Boolean = false,
       // Some(minJaccard) => tier-2 fuzzy alignment (Linker.alignFuzzy):
       // names tier-1 leaves unlinked get a char-3-gram Jaccard argmax
       // against the dictionary — the deterministic stand-in for the
@@ -111,13 +110,6 @@ object KgPipeline {
       // under the deterministic hashed-gram embedding). Off by default for
       // the same reason as the fuzzy tier.
       cosineAlignMinSim: Option[Double] = None,
-      // Some((planes, bands)) => tier-3 scores only hyperplane-LSH
-      // candidates instead of the full dictionary matrix (Linker
-      // .cosineLshCandidates) — the lever for a dictionary past broadcast
-      // size. Approximate (recall-only; emitted sims stay exact), so off
-      // by default; trade measured in tools/CosinePrune. Only read when
-      // cosineAlignMinSim is set.
-      cosineAlignLshPrune: Option[(Int, Int)] = None,
       canonicalize: Boolean = true,
       // false => entity space is known-unbounded (open-vocabulary web
       // extraction): go straight to distributed CC, skip the driver probe.
@@ -176,6 +168,11 @@ object KgPipeline {
     }
     // a cap of 0 silently drops every gram
     fuzzyStopGramMaxDf.foreach(c => require(c > 0, s"fuzzyStopGramMaxDf must be > 0, got $c"))
+
+    /** Tier 1 is always the broadcast join. Kept only for the kgbench
+      * benchmark's `Staged.run` guard; delete it when kgbench runs the
+      * engine's own chain (ROADMAP direction 1). */
+    def saltedAlign: Boolean = false
 
     /** This config with the corpus-wide stages cleared, for an incremental
       * pass — a streaming micro-batch or a failure re-drive. Such a pass
@@ -289,8 +286,8 @@ object KgPipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // J2 alignment tiers → CC canonicalization → J3 hydration: the shared
-    // chain. Its aligned stage boundary and tier-3's LSH-prune sides
-    // persist; Result.cleanup releases them with the run's other caches.
+    // chain. Its aligned stage boundary persists; Result.cleanup releases
+    // it with the run's other caches.
     // The hydrated output is the pass's output boundary: the triples, their
     // lineage count and the RDF each read it, so hydration runs once.
     val chainCached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Entity linking against the known-entity dictionary (SURVEY.md J2).
@@ -13,20 +13,18 @@ import org.apache.spark.sql.functions._
   * the reference's own tests exercise exactly that:
   * "Abbey head bed." → "Abbey Head Bed", "Gold" → "gold"
   * (reference: tests/test_alignment.py:7-23). We therefore link by a
-  * deterministic normalized-key join (BASELINE.json north_star mandates the
-  * broadcast alias dictionary + salted-key skew-safe hash join; embedding
-  * weights are nondeterministic and the binaries are absent from the repo).
+  * deterministic normalized-key join; embedding weights are
+  * nondeterministic and the binaries are absent from the repo.
   *
-  * Two physical strategies, same semantics:
-  *  - [[align]]: broadcast hash join — the right plan while the dictionary
-  *    is dictionary-sized (~52k names ≈ few MB). Broadcast joins cannot
-  *    skew regardless of probe-side key distribution.
-  *  - [[alignSalted]]: shuffle hash join with explicit key salting for the
-  *    case where the dictionary outgrows broadcast (e.g. cross-lingual
-  *    alias tables at web scale). Head entities ("Minnesota"-type keys,
-  *    SURVEY.md §4) would make single reducers hot; salting the probe key
-  *    with pmod(xxhash64(url), S) and replicating the build side S times
-  *    bounds any reducer at 1/S of a hot key.
+  * Tier 1 ([[align]]) is a broadcast hash join: the dictionary is
+  * dictionary-sized (~52k names ≈ a few MB), and a broadcast join cannot
+  * skew whatever the probe-side key distribution — head entities
+  * ("Minnesota"-type keys, SURVEY.md §4) never make a reducer hot, which
+  * is what BASELINE.json's skew-safe linking join asks for. Explicit key
+  * salting measured slower than both this plan and AQE's skew-join split
+  * on a head-skewed probe (PLANS.md round 17). Tiers 2
+  * ([[alignFuzzy]]) and 3 ([[alignCosine]]) link what tier 1 leaves
+  * unlinked.
   */
 object Linker {
 
@@ -104,7 +102,7 @@ object Linker {
     * sub-normalization embedding matches, alignment.py:110-119: the argmax
     * cosine over the known-entity list links misspellings like
     * "Abbey Haed Bed" → "Abbey Head Bed"). Applies ONLY to names tier-1
-    * ([[align]]/[[alignSalted]]) left unlinked:
+    * ([[align]]) left unlinked:
     *
     *   unlinked names × alias dictionary → candidate pairs via a char-3-gram
     *   equi-join on (kind, gram) — never all-pairs — → Jaccard from shared
@@ -291,43 +289,19 @@ object Linker {
     * scans), and scoring is a map over the bounded broadcast: no shuffle
     * anywhere except the distinct() on unlinked names and the per-name
     * argmax aggregate (map-side combined). Per-name cost is O(|dict|·dim),
-    * exactly the reference's dense matmul. When the dictionary outgrows a
-    * broadcast, `lshPrune = Some((planes, bands))` replaces the full scan
-    * with hyperplane-LSH sign-bucket candidate generation (an equi-join on
-    * (kind, band, band-signature) — the same bucketed family as
-    * [[alignFuzzy]]'s gram join and ops.Similarity's near-dup path) before
-    * exact re-scoring; see [[cosineLshCandidates]]. Approximate by nature
-    * (a name whose argmax entity shares no band signature is missed), so
-    * off by default; recall/cost measured in tools/CosinePrune.
+    * exactly the reference's dense matmul.
     *
     * Determinism: gram counts are small exact ints, so dot/norms are exact
     * in double and sqrt/mult/div are correctly rounded — sims are
     * bit-reproducible (and bit-equal to an engine repeating the same
     * arithmetic, which the gate oracle does). Ties break to the
-    * lexical-min alias. Output schema equals [[align]]'s.
-    *
-    * @param registerCached receives every frame the LSH-prune path
-    *        persists (the probe/dict sides feed two subtrees each, so they
-    *        must cache — see [[cosineLshCandidates]]), so the OWNER of the
-    *        run can unpersist them: the batch pipeline adds them to
-    *        Result.cleanup, the streaming sink releases them at the end of
-    *        each micro-batch. Without a hook the caches outlived the run —
-    *        a long-running stream accumulated one pair per micro-batch
-    *        (ADVICE round 5). Default no-op is for short-lived dev tools. */
+    * lexical-min alias. Output schema equals [[align]]'s. */
   def alignCosine(aligned: DataFrame, alias: DataFrame,
                   minSim: Double = 0.8,
-                  lshPrune: Option[(Int, Int)] = None,
-                  prebuiltDict: Option[DataFrame] = None,
-                  registerCached: DataFrame => Unit = _ => ()): DataFrame = {
-    val unlinked = cosineUnlinked(aligned)
+                  prebuiltDict: Option[DataFrame] = None): DataFrame = {
     val dict = prebuiltDict.getOrElse(cosineDict(alias))
-    val pairs = lshPrune match {
-      case None =>
-        unlinked.join(broadcast(dict), col("f_kind") === col("a_kind"))
-      case Some((planes, bands)) =>
-        cosineLshCandidates(unlinked, dict, planes, bands, registerCached)
-    }
-    val scored = pairs
+    val scored = cosineUnlinked(aligned)
+      .join(broadcast(dict), col("f_kind") === col("a_kind"))
       .withColumn("sim",
         graft.plans.Expressions.cosine_sim(col("f_vec"), col("a_vec")))
       .filter(col("sim") >= minSim)
@@ -340,11 +314,17 @@ object Linker {
     applyTierSwap(aligned, best, "cos_canonical")
   }
 
+  /** [[alignCosine]] for callers that still pass a `registerCached` hook.
+    * Tier 3 persists nothing, so the hook is never called. Kept only for
+    * the kgbench benchmark's `Staged.tiers`; delete it when kgbench runs
+    * the engine's own chain (ROADMAP direction 1). */
+  def alignCosine(aligned: DataFrame, alias: DataFrame, minSim: Double,
+                  registerCached: DataFrame => Unit): DataFrame =
+    alignCosine(aligned, alias, minSim)
+
   /** The still-unlinked surface forms with their [[bucketVector]] gram
-    * embeddings — [[alignCosine]]'s probe side, shared with
-    * tools/CosinePrune so the tool measures the engine's actual vector
-    * space. */
-  private[graft] def cosineUnlinked(aligned: DataFrame): DataFrame =
+    * embeddings — [[alignCosine]]'s probe side. */
+  private def cosineUnlinked(aligned: DataFrame): DataFrame =
     aligned.filter(!col("obj_linked"))
       .select(col("obj_kind").as("f_kind"), col("obj_name").as("f_name"))
       .distinct()
@@ -353,117 +333,12 @@ object Linker {
       .drop("f_bks")
 
   /** The alias dictionary with its gram embeddings — [[alignCosine]]'s
-    * build side, shared with tools/CosinePrune. */
-  private[graft] def cosineDict(alias: DataFrame): DataFrame =
+    * build side; a long-lived [[StageChain]] caches it once per job. */
+  private[kg] def cosineDict(alias: DataFrame): DataFrame =
     alias
       .select(col("kind").as("a_kind"), col("alias_norm"),
         col("canonical").as("a_canonical"))
       .withColumn("a_bks", gramBuckets(col("alias_norm")))
       .withColumn("a_vec", bucketVector(col("a_bks")))
       .drop("a_bks")
-
-  /** Hyperplane-LSH candidate generation for [[alignCosine]] — the
-    * past-broadcast scale path. Gram-count vectors are NONNEGATIVE, so
-    * sign-LSH against raw dictionary vectors would put every vector on the
-    * positive side of every plane (dot of nonneg vectors is always >= 0)
-    * and prune nothing; the planes are therefore DIFFERENCE vectors of
-    * consecutive lexically-ordered dictionary embeddings,
-    * h_i = v(2i) − v(2i+1) — genuine separating planes ("is this name's
-    * histogram closer to entity 2i or 2i+1"), deterministic in any engine.
-    *
-    *   1. signature: bit_i = sign(v · h_i), banded into `bands` groups —
-    *      the banding trick shared with MinHash-LSH and lshNearDup. The
-    *      plane table is BOUNDED (≤ `planes` rows of [[CosineDim]] doubles — tens
-    *      of KB), so it is collected once on the driver (a guarded bounded
-    *      collect, like the canonicalizer probes) and inlined as literals:
-    *      each side's signature is then a pure projection +
-    *      posexplode(bands) — no extra shuffle, no fan-out join;
-    *   2. candidates: equi-join on (kind, band, band signature) — never
-    *      all-pairs; a name meets only dictionary entries sharing SOME
-    *      band's full bit pattern;
-    *   3. the caller re-scores candidates with the EXACT cosine kernel, so
-    *      pruning affects recall only, never a produced sim value. The
-    *      candidate→vector rehydration joins are plain equi-joins (NO
-    *      broadcast hint — this path exists precisely because the
-    *      dictionary outgrew one; AQE still broadcasts at small scale). */
-  private[graft] def cosineLshCandidates(unlinked: DataFrame, dict: DataFrame,
-                                         planes: Int, bands: Int,
-                                         registerCached: DataFrame => Unit = _ => ()): DataFrame = {
-    require(planes > 0 && bands > 0 && planes % bands == 0,
-      s"lshPrune needs planes > 0 divisible by bands, got ($planes, $bands)")
-    val rows = planes / bands
-    // Both sides feed two subtrees each (signature + candidate
-    // rehydration) whose exchanges differ, so ReuseExchange cannot
-    // deduplicate them — persist so the gram featurization (the heaviest
-    // projection in the path's operating regime) runs once per side, and
-    // hand each NEWLY persisted frame to registerCached so the caller can
-    // release it (an already-persisted input — the streaming bootstrap's
-    // prebuilt dict — is left alone: its owner manages its lifetime). The
-    // seed collect below materializes the dict cache as a side effect.
-    import org.apache.spark.storage.StorageLevel
-    def persistOwned(df: DataFrame): DataFrame =
-      if (df.storageLevel == StorageLevel.NONE) {
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK); registerCached(p); p
-      } else df
-    val u = persistOwned(unlinked)
-    val d = persistOwned(dict)
-    // Deterministic bounded plane build: the first 2·planes dictionary
-    // vectors in (kind, alias) lexical order, paired consecutively. A
-    // dictionary smaller than 2·planes yields fewer planes — the LAST
-    // band(s) then carry fewer (or zero) bits than requested, i.e. the
-    // effective (planes, bands) clamps to the dictionary size; callers
-    // configuring a measured operating point (PLANS.md round-5) should
-    // size planes ≤ |dict|/2.
-    val seed = d.orderBy(col("a_kind"), col("alias_norm"))
-      .limit(2 * planes).select("a_vec").collect()
-      .map(_.getSeq[Double](0).toArray)
-    val hyper: Array[Seq[Double]] = seed.grouped(2).collect {
-      case Array(a, b) => a.zip(b).map { case (x, y) => x - y }.toSeq
-    }.toArray
-    if (hyper.isEmpty) // degenerate (<2 entries): nothing to prune with —
-      return u.join(broadcast(d), col("f_kind") === col("a_kind"))
-    val nBands = (hyper.length + rows - 1) / rows
-    def sig(vec: String, b: Int): Column = concat(
-      (b * rows until math.min((b + 1) * rows, hyper.length)).map { i =>
-        when(graft.ops.Similarity.dot(col(vec), typedLit(hyper(i))) >= 0,
-          lit("1")).otherwise(lit("0"))
-      }: _*)
-    def withSigs(df: DataFrame, vec: String, k1: String, k2: String) =
-      df.select(col(k1), col(k2),
-        posexplode(array((0 until nBands).map(b => sig(vec, b)): _*))
-          .as(Seq("band", "band_sig")))
-    val uSig = withSigs(u, "f_vec", "f_kind", "f_name")
-    val dSig = withSigs(d, "a_vec", "a_kind", "alias_norm")
-    uSig.join(dSig, col("f_kind") === col("a_kind") &&
-        uSig("band") === dSig("band") && uSig("band_sig") === dSig("band_sig"))
-      .select("f_kind", "f_name", "alias_norm")
-      .distinct()
-      .join(u, Seq("f_kind", "f_name"))
-      .join(d.withColumnRenamed("a_kind", "f_kind"),
-        Seq("f_kind", "alias_norm"))
-  }
-
-  /** Skew-safe shuffle variant: salt the probe key S ways, replicate the
-    * build side S times, join on (key, salt). Identical output to [[align]].
-    */
-  def alignSalted(triples: DataFrame, alias: DataFrame, saltBuckets: Int = 16): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val salts = (0 until saltBuckets).toDF("salt")
-    val build = alias.withColumnRenamed("kind", "alias_kind")
-      .crossJoin(salts) // S replicas of the dictionary
-    val probe = triples
-      .withColumn("obj_norm", normName(col("obj_name")))
-      .withColumn("salt", pmod(xxhash64(col("url")), lit(saltBuckets)).cast("int"))
-    probe
-      .hint("shuffle_hash")
-      .join(build,
-        probe("obj_norm") === build("alias_norm") &&
-          probe("obj_kind") === build("alias_kind") &&
-          probe("salt") === build("salt"), "left")
-      .withColumn("obj_canonical", coalesce(col("canonical"), col("obj_name")))
-      .withColumn("obj_linked", col("canonical").isNotNull)
-      .drop("alias_norm", "canonical", "alias_kind", "obj_norm")
-      .drop(probe("salt")).drop(build("salt"))
-  }
 }

@@ -7,10 +7,9 @@ import org.apache.spark.sql.SparkSession
   *
   *   spark-submit --class graft.kg.Main <jar> \
   *     --pages <parquet dir | "synthetic:<sfDir>"> --out <dir> \
-  *     [--partitions N] [--salted] [--no-canonicalize] \
+  *     [--partitions N] [--no-canonicalize] \
   *     [--dedup <minJaccard>] [--open-vocabulary] [--buckets lo-hi] \
-  *     [--fuzzy <minJaccard> [--fuzzy-cap <df>]] [--cosine <minSim>
-  *      [--cosine-lsh planes,bands]]
+  *     [--fuzzy <minJaccard> [--fuzzy-cap <df>]] [--cosine <minSim>]
   *
   * Maintenance modes (snapshot stores; run instead of a pipeline pass):
   *     --out <dir> --compact            global CC canonicalization rewrite
@@ -54,14 +53,12 @@ object Main {
     // one Config for a pipeline run and every maintenance mode that reads it
     val cfg = KgPipeline.Config(
       numPartitions = numPartitions,
-      saltedAlign = opts.contains("salted"),
       canonicalize = !opts.contains("no-canonicalize"),
       canonLocalProbe = !opts.contains("open-vocabulary"),
       dedupMinJaccard = opts.get("dedup").map(_.toDouble),
       fuzzyAlignMinJaccard = opts.get("fuzzy").map(_.toDouble),
       fuzzyStopGramMaxDf = opts.get("fuzzy-cap").map(_.toInt),
       cosineAlignMinSim = opts.get("cosine").map(_.toDouble),
-      cosineAlignLshPrune = opts.get("cosine-lsh").map(parsePair),
       buckets = opts.get("buckets").map { r =>
         // anchored regexes, not split: "5-" / "-5" / "a-b" all fall through
         // to the usage error instead of silently sharding to one bucket or
@@ -162,29 +159,20 @@ object Main {
     (dims, client)
   }
 
-  /** "planes,bands" → (planes, bands), anchored like --buckets. */
-  private def parsePair(v: String): (Int, Int) = {
-    val PairRe = """(\d+)\s*,\s*(\d+)""".r
-    v.trim match {
-      case PairRe(p, b) => (p.toInt, b.toInt)
-      case _ => sys.error(s"--cosine-lsh expects planes,bands, got: $v")
-    }
-  }
-
+  /** Command line → option map: a valued flag maps to its value, a switch
+    * to "1"; any other argument fails. */
   @annotation.tailrec
-  private def parse(args: List[String], acc: Map[String, String]): Map[String, String] =
+  private[kg] def parse(args: List[String], acc: Map[String, String]): Map[String, String] =
     args match {
       case Nil => acc
       case "--pages" :: v :: rest => parse(rest, acc + ("pages" -> v))
       case "--out" :: v :: rest => parse(rest, acc + ("out" -> v))
       case "--partitions" :: v :: rest => parse(rest, acc + ("partitions" -> v))
-      case "--salted" :: rest => parse(rest, acc + ("salted" -> "1"))
       case "--no-canonicalize" :: rest => parse(rest, acc + ("no-canonicalize" -> "1"))
       case "--dedup" :: v :: rest => parse(rest, acc + ("dedup" -> v))
       case "--fuzzy" :: v :: rest => parse(rest, acc + ("fuzzy" -> v))
       case "--fuzzy-cap" :: v :: rest => parse(rest, acc + ("fuzzy-cap" -> v))
       case "--cosine" :: v :: rest => parse(rest, acc + ("cosine" -> v))
-      case "--cosine-lsh" :: v :: rest => parse(rest, acc + ("cosine-lsh" -> v))
       case "--open-vocabulary" :: rest => parse(rest, acc + ("open-vocabulary" -> "1"))
       case "--compact" :: rest => parse(rest, acc + ("compact" -> "1"))
       case "--compact-dedup" :: v :: rest => parse(rest, acc + ("compact-dedup" -> v))

@@ -10,7 +10,7 @@ import org.apache.spark.storage.StorageLevel
   * (graft.streaming.StreamingKg.snapshotSinkWithFailures), and the
   * compaction re-hydration:
   *
-  *   parsed → explode → tier 1 (broadcast | salted) → [tier 2 fuzzy]
+  *   parsed → explode → tier 1 (broadcast) → [tier 2 fuzzy]
   *   → [tier 3 cosine] → canonicalize | identity → hydrate
   *
   * One value per job, built from `(dims, cfg)`. It owns the static side of
@@ -51,20 +51,17 @@ final class StageChain private (dims: Dims.Snapshot, cfg: KgPipeline.Config,
   private lazy val cosineDict = cfg.cosineAlignMinSim.map(_ => own(Linker.cosineDict(alias)))
 
   /** Map a pre-explode parsed frame (PostProcess.withParsed) to hydrated
-    * triples. `registerCached` receives every frame this pass persists —
-    * tier 3's LSH-prune sides, and a one-shot chain's aligned boundary —
-    * so the pass's owner unpersists them when its outputs have landed. */
+    * triples. `registerCached` receives the one frame a pass persists, a
+    * one-shot chain's aligned boundary, so the pass's owner unpersists it
+    * when its outputs have landed; a long-lived chain persists nothing. */
   def apply(rawParsed: DataFrame,
             registerCached: DataFrame => Unit = _ => ()): DataFrame = {
     val parsed = PostProcess.explodeParsed(rawParsed)
-    val t1 =
-      if (cfg.saltedAlign) Linker.alignSalted(parsed, alias)
-      else Linker.align(parsed, alias)
+    val t1 = Linker.align(parsed, alias)
     val t2 = cfg.fuzzyAlignMinJaccard.fold(t1)(Linker.alignFuzzy(t1, alias, _,
       cfg.fuzzyStopGramMaxDf, prebuiltDict = fuzzyDict, prebuiltStopGrams = stopGrams))
     val t3 = cfg.cosineAlignMinSim.fold(t2)(Linker.alignCosine(t2, alias, _,
-      lshPrune = cfg.cosineAlignLshPrune, prebuiltDict = cosineDict,
-      registerCached = registerCached))
+      prebuiltDict = cosineDict))
     val aligned =
       if (longLived) t3
       else { val p = t3.persist(StorageLevel.MEMORY_AND_DISK); registerCached(p); p }

@@ -123,17 +123,10 @@ object StreamingKg {
     val writer = rawParsed.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val b = batch.toDF().persist()
-        // per-batch caches the tiers create for THIS batch's rows (the
-        // cosine LSH prune persists its probe subtree) — released with the
-        // batch frame, so a long-running stream holds only the bootstrap
-        val batchCached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         try commitBatchTables(dir, Map(
-            "triples" -> StageChain.triples(chain(b, batchCached += _)),
+            "triples" -> StageChain.triples(chain(b)),
             "failed" -> StageChain.failedUrls(b)), batchId)
-        finally {
-          batchCached.foreach(_.unpersist(blocking = false))
-          b.unpersist()
-        }
+        finally b.unpersist()
         ()
       }
     FailureSink(writer, () => chain.release())

@@ -90,23 +90,6 @@ class CanonicalizerSpec extends SparkSpec {
     assert(l(124L) === 100L)
     assert(d === l)
   }
-
-  test("salted alignment equals broadcast alignment") {
-    val dims = Dims.tiny(spark)
-    val triples = Seq(
-      ("u1", "h1", "m", "Minnesota", "contains", "Shakopee Formation", "strat"),
-      ("u2", "h2", "m", "Minnesota", "contains", "Unknownite", "mineral"),
-      ("u3", "h3", "m", "Minnesota", "contains", "gold", "mineral"))
-      .toDF("url", "hashed_text", "model_id", "subj_name", "predicate", "obj_name", "obj_kind")
-    val alias = Linker.aliasDim(dims)
-    val a = Linker.align(triples, alias)
-      .select("url", "obj_name", "obj_canonical", "obj_linked")
-      .collect().map(_.toSeq).toSet
-    val b = Linker.alignSalted(triples, alias, saltBuckets = 4)
-      .select("url", "obj_name", "obj_canonical", "obj_linked")
-      .collect().map(_.toSeq).toSet
-    assert(a === b)
-  }
 }
 
 /** JVM-shared prompt capture (local-mode executor threads share this
@@ -841,49 +824,6 @@ class KgPipelineSpec extends SparkSpec {
     assert(strict.filter(col("obj_linked")).count() === 1)
   }
 
-  test("tier-3 cosine LSH prune: generous banding reproduces the full scan") {
-    val alias = Seq(
-      "Abbey Head Bed", "Everton Formation", "Shakopee Formation",
-      "Oneota Dolomite", "Jordan Sandstone", "St Lawrence Formation",
-      "Franconia Formation", "Galesville Sandstone", "Eau Claire Formation",
-      "Mt Simon Sandstone", "Prairie Du Chien Group", "Decorah Shale")
-      .toDF("canonical")
-      .select(lower(col("canonical")).as("alias_norm"), col("canonical"),
-        lit(Model.ObjKind.Strat).as("kind"))
-    val names = Seq("Abbey Haed Bed.", "Evertn Formation", "Jordann Sandstone",
-        "totally unrelated zq", "Shakopee Formation")
-      .toDF("n")
-      .select(lit("https://t/coslsh").as("url"), lit("h").as("hashed_text"),
-        lit("m").as("model_id"), lit("Minnesota").as("subj_name"),
-        lit("is in").as("predicate"),
-        col("n").as("obj_name"), lit(Model.ObjKind.Strat).as("obj_kind"))
-    def run(prune: Option[(Int, Int)]) =
-      Linker.alignCosine(Linker.align(names, alias), alias, lshPrune = prune)
-        .select("obj_name", "obj_canonical", "obj_linked")
-    val full = out_rows(run(None))
-    assert(full === Set(
-      ("Abbey Haed Bed.", "Abbey Head Bed", true),
-      ("Evertn Formation", "Everton Formation", true),
-      ("Jordann Sandstone", "Jordan Sandstone", true),
-      ("totally unrelated zq", "totally unrelated zq", false),
-      ("Shakopee Formation", "Shakopee Formation", true)))
-    // single-bit bands (rows=1): a 0.8+ pair is pruned only if it disagrees
-    // on ALL planes — generous recall; output must equal the full scan
-    val generousDf = run(Some((6, 6)))
-    val plan = generousDf.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"))
-    assert(out_rows(generousDf) === full)
-    // one 6-bit band: aggressive — may MISS links (stay unlinked, keeping
-    // the raw name) but can never invent a canonical the full scan lacks
-    val tight = out_rows(run(Some((6, 1))))
-    assert(tight.size === full.size)
-    tight.foreach { case (n, c, linked) =>
-      if (linked) assert(full.contains((n, c, true)))
-      else assert(c === n)
-    }
-  }
-
   test("tier-3 cosine alignment wired through the pipeline config") {
     val text = "The Waldron Shael is exposed near Minnesota."
     val page = Seq(("https://t/cos-pipe",
@@ -903,15 +843,6 @@ class KgPipelineSpec extends SparkSpec {
     assert(on.getAs[Boolean]("obj_linked"))
     assert(on.getAs[String]("obj_final") === "Waldron Shale")
     assert(on.getAs[Long]("strat_name_id") === 4260L)
-    // the LSH-prune lever wires through Config too: generous banding keeps
-    // the same link end-to-end (hydration included)
-    val pruned = KgPipeline.run(spark, page, dims, cosClient,
-      KgPipeline.Config(numPartitions = 2,
-        cosineAlignMinSim = Some(0.8),
-        cosineAlignLshPrune = Some((4, 4)))).triples
-      .filter(col("obj_name") === "Waldron Shael").collect().head
-    assert(pruned.getAs[Boolean]("obj_linked"))
-    assert(pruned.getAs[String]("obj_final") === "Waldron Shale")
   }
 
   test("fixture corpus: canonicalization is identity on per-page TTLs " +
