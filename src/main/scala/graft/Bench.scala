@@ -75,6 +75,11 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Local cores for a dev main's session: `SPARK_GRAFT_CPUS`, else every
+    * core of the host. */
+  private[graft] def hostCpus(): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   private[graft] def newSession(cores: Int): SparkSession = {
     // shuffle/spill on tmpfs: the host's virtio disk turns the concurrent
     // executor-JVM phase into kernel-time soup; RAM-backed local dirs are
@@ -164,7 +169,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = hostCpus()
     // corpus sized so the ~4 s per-run driver-serial fraction is small
     // against the parallel page work (Amdahl analysis in BASELINE.md):
     // eff_cap = (s+p)/(4(s+p/4)). Sized per the CURRENT per-page cost —
@@ -180,8 +185,9 @@ object Bench {
     // worker threads) under this host's memory-bandwidth wall — profiling
     // measured per-core task-CPU inflating 3.2x at 16 threads but ~1.0x at
     // 8 (BASELINE.md): beyond it the box, not the job, is what stops
-    // scaling.
-    val scaleN = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
+    // scaling. Below 8 cores the 4N level of 2-core executors would
+    // oversubscribe the host, so N defaults to 1 core there.
+    val scaleN = sys.env.get("SPARK_GRAFT_SCALE_N").fold(if (cpus < 8) 1 else 2)(_.toInt)
 
     // executor-child mode: run one shard and exit
     sys.env.get("SPARK_GRAFT_EXEC_SPEC") match {

@@ -52,7 +52,7 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = Bench.hostCpus()
     val repeats = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPEATS", "3").toInt
     val mode = args.headOption.getOrElse("time")
     val spark = Bench.newSession(cpus)

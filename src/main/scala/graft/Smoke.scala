@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * pipeline, print row count and a sample, dump the physical plan. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Bench.hostCpus().toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

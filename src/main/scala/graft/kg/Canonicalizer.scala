@@ -21,6 +21,11 @@ import org.apache.spark.storage.StorageLevel
   * truncate lineage so Catalyst never re-analyzes a growing plan tree.
   * Driver holds only the convergence flag — no collected data.
   *
+  * The entity space picks the path, with no user switch: a bounded driver
+  * probe ([[MaxLocalNames]] names, then [[SmallGraphEdges]] edges) clusters
+  * a space that fits in a driver union-find, and falls through to the
+  * distributed rounds when it overflows. Both paths give the same output.
+  *
   * Ids are xxhash64 of (kind, surface form) — content-derived, so results
   * are reproducible across runs and cluster sizes (no uuid4, SURVEY §7.4).
   */
@@ -34,46 +39,51 @@ object Canonicalizer {
 
   /** Connected components by min-label propagation.
     * @param edges0 (src:long, dst:long) undirected candidate pairs
-    * @param localProbe false => the edge set is known-unbounded (e.g.
-    *        open-vocabulary dedup over a web corpus): skip the driver
-    *        small-graph probe entirely and go straight to the distributed
-    *        rounds — otherwise every job pays a wasted up-to-2M-row collect
-    *        before the distributed path engages.
     * @return (id, component) for every id appearing in an edge;
-    *         component = min member id of the cluster. */
-  def connectedComponents(edges0: DataFrame, localProbe: Boolean = true): DataFrame = {
+    *         component = min member id of the cluster. A bounded driver
+    *         probe picks the path: an edge set of at most
+    *         [[SmallGraphEdges]] clusters in a driver union-find, a larger
+    *         one in [[distributedComponents]]' rounds. */
+  def connectedComponents(edges0: DataFrame): DataFrame = {
     val spark = edges0.sparkSession
     // RAW directed edges, persisted once: the probe reads them directly —
     // union-find is orientation- and duplicate-insensitive, so the
-    // symmetrize + distinct exchange the old probe paid is needed only by
-    // the DISTRIBUTED rounds and is built lazily below, from this cache,
-    // only when the probe overflows. (The size threshold now bounds raw
-    // edges rather than the deduped symmetric set — either side of the
-    // boundary produces identical output, just via a different path.)
+    // symmetrize + distinct exchange is needed only by the distributed
+    // rounds, which build it from this cache when the probe overflows.
+    // (The size threshold bounds raw edges rather than the deduped
+    // symmetric set — either side of the boundary produces identical
+    // output, just via a different path.)
     val e0 = edges0.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    lazy val sym = e0
-      .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // Single-job small-graph probe: limit(threshold+1).collect() — if the
     // result fits, we already hold the whole edge set and skip both the
     // count job and the distributed rounds entirely.
-    val probe =
-      if (localProbe) e0.limit(SmallGraphEdges.toInt + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    if (localProbe && probe.length <= SmallGraphEdges) {
-      // Driver union-find fast path: the min root is the min member id.
-      import spark.implicits._
-      val edges = probe.map(r => (r.getLong(0), r.getLong(1)))
-      e0.unpersist(false)
-      val uf = new MinRootUnionFind[Long]
-      edges.foreach { case (a, b) => uf.union(a, b) }
-      val ids = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
-      return ids.map(id => (id, uf.find(id))).toSeq.toDF("id", "component")
-    }
+    val probe = e0.limit(SmallGraphEdges.toInt + 1).collect()
+    val out =
+      if (probe.length <= SmallGraphEdges) {
+        // Driver union-find fast path: the min root is the min member id.
+        import spark.implicits._
+        val edges = probe.map(r => (r.getLong(0), r.getLong(1)))
+        val uf = new MinRootUnionFind[Long]
+        edges.foreach { case (a, b) => uf.union(a, b) }
+        val ids = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
+        ids.map(id => (id, uf.find(id))).toSeq.toDF("id", "component")
+      } else distributedComponents(e0)
+    e0.unpersist(false)
+    out
+  }
+
+  /** The distributed rounds of [[connectedComponents]], with no driver
+    * probe: the same (id, component) output for (src:long, dst:long) edges
+    * without self-loops. The result is localCheckpointed, so it holds no
+    * reference to `e0`. */
+  private[graft] def distributedComponents(e0: DataFrame): DataFrame = {
+    val sym = e0.select("src", "dst")
+      .unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
@@ -97,7 +107,6 @@ object Canonicalizer {
       converged = changed == 0
     }
     sym.unpersist(false)
-    e0.unpersist(false)
     labels
   }
 
@@ -115,11 +124,7 @@ object Canonicalizer {
     * identity), and alignment swaps surface — canonical. Pseudo-nodes never
     * become canonical names because canonical selection runs over real
     * surface forms only. */
-  def canonicalize(aligned: DataFrame, localProbe: Boolean = true): DataFrame = {
-    // Guard for known-unbounded entity spaces (open-vocabulary web
-    // extraction): skip the driver probe entirely — every job would
-    // otherwise pay a wasted up-to-500k-row collect before falling back.
-    if (!localProbe) return distributedCanonicalize(aligned, localProbe = false)
+  def canonicalize(aligned: DataFrame): DataFrame = {
     val spark = aligned.sparkSession
     import spark.implicits._
 
@@ -179,14 +184,13 @@ object Canonicalizer {
         val root = find(v)
         (v._1, v._2, linkedOfRoot.getOrElse(root, canonOfRoot(root)))
       }.toSeq.toDF("kind", "name", "canonical_name")
-    } else distributedCanonicalize(aligned, localProbe = true)
+    } else distributedCanonicalize(aligned)
   }
 
-  /** Distributed path: CC over hashed vertex ids. `localProbe` passes on
-    * to [[connectedComponents]]: an open-vocabulary run skips its edge
-    * probe too, while a name-probe overflow still tries it (the edge set
-    * can fit where the name set did not). */
-  private def distributedCanonicalize(aligned: DataFrame, localProbe: Boolean): DataFrame = {
+  /** Distributed path: CC over hashed vertex ids, taken when the name
+    * probe overflows. Its [[connectedComponents]] call probes the edge set
+    * in turn (the edge set can fit where the name set did not). */
+  private[kg] def distributedCanonicalize(aligned: DataFrame): DataFrame = {
     def nid(kindCol: Column, nameCol: Column): Column = xxhash64(kindCol, nameCol)
 
     val names = aligned.select(col("obj_kind").as("kind"), col("obj_name").as("name"))
@@ -207,7 +211,7 @@ object Canonicalizer {
               nid(col("obj_kind"), col("obj_canonical")).as("dst"))
       .distinct()
 
-    val comp = connectedComponents(normEdges.unionAll(alignEdges), localProbe = localProbe)
+    val comp = connectedComponents(normEdges.unionAll(alignEdges))
 
     val withComp = vertices.join(comp, Seq("id"), "left")
       .withColumn("component", coalesce(col("component"), col("id")))
@@ -261,8 +265,8 @@ object Canonicalizer {
     * `obj_final` (the cluster-canonical name) and `entity_cluster_id`
     * (= xxhash64 of the canonical — content-derived, identical across the
     * local and distributed paths). */
-  def apply(aligned: DataFrame, localProbe: Boolean = true): DataFrame = {
-    val canon = canonicalize(aligned, localProbe)
+  def apply(aligned: DataFrame): DataFrame = {
+    val canon = canonicalize(aligned)
     // No explicit broadcast hint: the local path yields a LocalRelation
     // with known size stats (Catalyst broadcasts it without AQE); the
     // distributed path defers to AQE.
@@ -274,4 +278,9 @@ object Canonicalizer {
       .withColumn("entity_cluster_id", xxhash64(col("obj_kind"), col("obj_final")))
       .drop("c_kind", "c_name", "canonical_name")
   }
+
+  /** [[apply]] for the kgbench benchmark's `Staged.run`, which still passes
+    * `cfg.canonLocalProbe`; the flag is ignored, every call probes. Delete
+    * it when kgbench runs the engine's own chain (ROADMAP direction 1). */
+  def apply(aligned: DataFrame, ignoredProbe: Boolean): DataFrame = apply(aligned)
 }

@@ -185,7 +185,7 @@ object Inference {
     * collect in the engine whose bound is the dictionary rather than a
     * constant, so it is guarded: the collect itself is `limit(max+1)`
     * (never materializes an oversized column on the driver) and an
-    * over-bound dictionary fails fast with the open-vocabulary remedy
+    * over-bound dictionary fails fast with the capped-slice remedy
     * instead of OOMing the driver mid-job. */
   def promptDictsFromDims(dims: Dims.Snapshot,
                           maxTerms: Int = PromptDictMaxTerms): Seq[HandlerDict] = {
@@ -195,7 +195,7 @@ object Inference {
         s"prompt dictionary column '$colName' exceeds the $maxTerms-term " +
           "driver-collect bound; pass a capped top-df dictionary slice via " +
           "Config.promptDicts / rawParsedStream(promptDicts) instead of " +
-          "collecting the open-vocabulary table whole")
+          "collecting the unbounded table whole")
       rows.map(_.getString(0))
     }
     Seq(Prompts.StratV3 -> bounded(dims.stratDim, "strat_name"),

@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *    preserves partitioning (narrow) or shuffles on aggregation keys,
   *  - all enrichment joins broadcast dictionary-sized dims — zero shuffle
   *    of the page-cardinality side,
-  *  - resume is a left_anti join against the checkpoint table (SURVEY J1):
+  *  - resume is a left_anti join against the committed done set (SURVEY
+  *    J1), applied once by the commit entry points before [[run]]:
   *    re-running after failure processes only missing urls, and because
   *    every stage is deterministic the union of runs equals one clean run,
   *  - lineage/metrics are per-partition rows computed from
@@ -110,10 +111,9 @@ object KgPipeline {
       // under the deterministic hashed-gram embedding). Off by default for
       // the same reason as the fuzzy tier.
       cosineAlignMinSim: Option[Double] = None,
+      // true => connected-components canonicalization (Canonicalizer: its
+      // bounded driver probe picks the local or the distributed path).
       canonicalize: Boolean = true,
-      // false => entity space is known-unbounded (open-vocabulary web
-      // extraction): go straight to distributed CC, skip the driver probe.
-      canonLocalProbe: Boolean = true,
       // Some(minJaccard) => corpus dedup gate BEFORE extraction work is
       // spent on duplicates (the standard training-data gate): MinHash-LSH
       // candidates → candidate-restricted Jaccard → CC resolution over the
@@ -123,9 +123,11 @@ object KgPipeline {
       // This is the done-set scale path: the resume anti-join always pins
       // the done-set as a broadcast, and bucket shards keep each run's
       // slice of a page-cardinality done-set small enough to stay one
-      // (PLANS.md round 8).
+      // (PLANS.md round 8). The commit entry points (runAndCommit,
+      // runAndCommitSnapshot) apply the shard in their resume step;
+      // `run` takes the pages it is given.
       // Some(buckets) => bucket-sharded operation (the 10^12-url resume
-      // shape PLANS.md round-4 named): this run processes ONLY pages whose
+      // shape PLANS.md round-4 named): a commit run processes ONLY pages whose
       // url bucket (pmod(xxhash64(url), 64) — the same transform the
       // triples/done sinks partition by) is in the set, and the done-set
       // read prunes to exactly those bucket directories at the parquet
@@ -144,7 +146,6 @@ object KgPipeline {
       // path; None = process everything.
       buckets: Option[Seq[Int]] = None,
       emitRdf: Boolean = false,
-      checkpointDir: Option[String] = None,
       jobStart: java.sql.Timestamp = java.sql.Timestamp.valueOf("2024-06-01 00:00:00"),
       // Prebuilt bootstrap artifacts (dictionary dedup windows, alias
       // normalization) — build + cache once per job, reuse across runs.
@@ -174,14 +175,24 @@ object KgPipeline {
       * engine's own chain (ROADMAP direction 1). */
     def saltedAlign: Boolean = false
 
+    /** Canonicalization always probes. Kept only for the kgbench
+      * benchmark's `Staged.run`, which passes it on; delete it with
+      * `saltedAlign` (ROADMAP direction 1). */
+    def canonLocalProbe: Boolean = true
+
+    /** [[run]] resumes from no checkpoint. Kept only for the kgbench
+      * benchmark's `Staged.run` guard; delete it with `saltedAlign`
+      * (ROADMAP direction 1). */
+    def checkpointDir: Option[String] = None
+
     /** This config with the corpus-wide stages cleared, for an incremental
       * pass — a streaming micro-batch or a failure re-drive. Such a pass
       * sees only its own pages, so it defers canonicalization to
       * compaction (StreamingKg.compactCanonicalize) and corpus dedup to
-      * StreamingKg.compactDedup, and it runs no shard filter, resume
-      * checkpoint or RDF output of its own. */
+      * StreamingKg.compactDedup, and it runs no shard filter or RDF
+      * output of its own. */
     def incremental: Config = copy(canonicalize = false, dedupMinJaccard = None,
-      buckets = None, checkpointDir = None, emitRdf = false)
+      buckets = None, emitRdf = false)
   }
 
   final case class Result(
@@ -217,12 +228,11 @@ object KgPipeline {
     "lith", "lith_id", "lith_type", "lith_group", "lith_class",
     "provenance", "requested_at")
 
-  def run(spark: SparkSession, pages0: DataFrame, dims: Dims.Snapshot,
+  /** One pass over `pages` as given: no shard filter and no done-set
+    * resume, which [[runAndCommit]] and [[runAndCommitSnapshot]] apply
+    * before they call it. */
+  def run(spark: SparkSession, pages: DataFrame, dims: Dims.Snapshot,
           client: Inference.InferenceClient, cfg: Config = Config()): Result = {
-
-    // J1: resume anti-join against previously committed urls — FIRST, so
-    // already-done pages are pruned before any per-page work.
-    val pages = resume(pages0, cfg.checkpointDir.flatMap(readDone(spark, _, cfg)), cfg)
 
     // Extract stage (StageChain.extract): runs BEFORE the repartition and
     // drops `html` + the golden column on the spot — shuffling both the raw
@@ -243,7 +253,7 @@ object KgPipeline {
         val withId = slim.withColumn("doc_id", xxhash64(col("url")))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val losers = graft.ops.Dedup
-          .dedupe(withId.select("doc_id", "text"), minJ, cfg.canonLocalProbe)
+          .dedupe(withId.select("doc_id", "text"), minJ)
           .filter(!col("keep")).select(col("doc_id").as("drop_id"))
         val marked = withId
           .join(losers, withId("doc_id") === losers("drop_id"), "left")
@@ -354,7 +364,7 @@ object KgPipeline {
   }
 
   /** Run + commit: write triples and lineage, then mark urls done so a
-    * subsequent run with the same checkpointDir is incremental
+    * subsequent run with the same `outDir` is incremental
     * (idempotent re-entry — running twice yields the same table). Triples
     * and the done set are written `url_bucket`-partitioned, the store
     * layout of [[commitStore]]: point lookups by url prune to one bucket
@@ -365,7 +375,7 @@ object KgPipeline {
                    cfg: Config = Config()): Unit = {
     val checkpoint = s"$outDir/checkpoint"
     val todo = resume(pages, readDone(spark, checkpoint, cfg), cfg)
-    val res = run(spark, todo, dims, client, cfg.copy(checkpointDir = None))
+    val res = run(spark, todo, dims, client, cfg)
     try {
       bucketed(res.triples)
         .write.mode("append").partitionBy("url_bucket").parquet(s"$outDir/triples")
@@ -441,10 +451,10 @@ object KgPipeline {
 
   /** The pages a run still owes: the configured bucket shard (no-op when
     * bucket sharding is off), minus the done set when there is one — a
-    * broadcast left-anti join, so the page side never shuffles. Every
-    * resume ([[run]]'s checkpoint, [[runAndCommit]],
-    * [[runAndCommitSnapshot]]) goes through here. */
-  private def resume(pages: DataFrame, done: Option[DataFrame], cfg: Config): DataFrame = {
+    * broadcast left-anti join, so the page side never shuffles. Both
+    * commit entry points ([[runAndCommit]], [[runAndCommitSnapshot]])
+    * resume here, once, before they call [[run]]. */
+  private[kg] def resume(pages: DataFrame, done: Option[DataFrame], cfg: Config): DataFrame = {
     val scoped = cfg.buckets.fold(pages)(bs =>
       pages.filter(urlBucket(col("url")).isin(bs.map(_.toLong): _*)))
     done.foldLeft(scoped)((todo, d) =>
@@ -456,7 +466,7 @@ object KgPipeline {
     * PARTITION filter: the scan reads only the shard's bucket directories
     * (verified executed-plan evidence in PLANS.md round-5 —
     * `PartitionFilters: [url_bucket IN (...)]`, no full done-set IO). */
-  private def readDone(spark: SparkSession, checkpoint: String, cfg: Config): Option[DataFrame] =
+  private[kg] def readDone(spark: SparkSession, checkpoint: String, cfg: Config): Option[DataFrame] =
     Some(new org.apache.hadoop.fs.Path(s"$checkpoint/done"))
       .filter(p => p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       .map { p =>

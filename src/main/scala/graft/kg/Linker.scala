@@ -116,7 +116,7 @@ object Linker {
     *
     * `stopGramMaxDf = Some(cap)` is the web-scale skew lever: grams whose
     * DICTIONARY-side document frequency exceeds the cap (the "for"/"ati"
-    * inside every "...Formation" — the head keys a skewed open-vocabulary
+    * inside every "...Formation" — the head keys a skewed unbounded-vocabulary
     * corpus hammers) are dropped from candidate GENERATION only; surviving
     * candidate pairs then rejoin their full gram arrays and score by exact
     * `array_intersect` Jaccard, so every emitted link carries the same

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   *   spark-submit --class graft.kg.Main <jar> \
   *     --pages <parquet dir | "synthetic:<sfDir>"> --out <dir> \
   *     [--partitions N] [--no-canonicalize] \
-  *     [--dedup <minJaccard>] [--open-vocabulary] [--buckets lo-hi] \
+  *     [--dedup <minJaccard>] [--buckets lo-hi] \
   *     [--fuzzy <minJaccard> [--fuzzy-cap <df>]] [--cosine <minSim>]
   *
   * Maintenance modes (snapshot stores; run instead of a pipeline pass):
@@ -32,10 +32,11 @@ import org.apache.spark.sql.SparkSession
   * maintenance modes write. Reruns with the same --out resume
   * incrementally (left-anti join against the committed `done` set).
   * --dedup runs the corpus duplicate gate before inference (LSH →
-  * verified Jaccard → CC resolution; drops counted in lineage);
-  * --open-vocabulary skips the driver small-graph probes (unbounded
-  * entity/dedup spaces go straight to distributed CC) in a pipeline run
-  * and in the --compact and --compact-dedup rewrites;
+  * verified Jaccard → CC resolution; drops counted in lineage). Every
+  * connected-components step (canonicalization, --dedup and the
+  * --compact and --compact-dedup rewrites) picks its local or distributed
+  * path from a bounded driver probe of its own input, so no flag selects
+  * it.
   * --buckets lo-hi (inclusive url-bucket range, 0-63) shards this run:
   * only pages in the shard's buckets process, and the resume anti-join
   * prunes the done-set scan to those bucket directories — a 64-shard
@@ -54,7 +55,6 @@ object Main {
     val cfg = KgPipeline.Config(
       numPartitions = numPartitions,
       canonicalize = !opts.contains("no-canonicalize"),
-      canonLocalProbe = !opts.contains("open-vocabulary"),
       dedupMinJaccard = opts.get("dedup").map(_.toDouble),
       fuzzyAlignMinJaccard = opts.get("fuzzy").map(_.toDouble),
       fuzzyStopGramMaxDf = opts.get("fuzzy-cap").map(_.toInt),
@@ -173,7 +173,6 @@ object Main {
       case "--fuzzy" :: v :: rest => parse(rest, acc + ("fuzzy" -> v))
       case "--fuzzy-cap" :: v :: rest => parse(rest, acc + ("fuzzy-cap" -> v))
       case "--cosine" :: v :: rest => parse(rest, acc + ("cosine" -> v))
-      case "--open-vocabulary" :: rest => parse(rest, acc + ("open-vocabulary" -> "1"))
       case "--compact" :: rest => parse(rest, acc + ("compact" -> "1"))
       case "--compact-dedup" :: v :: rest => parse(rest, acc + ("compact-dedup" -> v))
       case "--redrive" :: rest => parse(rest, acc + ("redrive" -> "1"))

@@ -66,7 +66,7 @@ final class StageChain private (dims: Dims.Snapshot, cfg: KgPipeline.Config,
       if (longLived) t3
       else { val p = t3.persist(StorageLevel.MEMORY_AND_DISK); registerCached(p); p }
     val canonical =
-      if (cfg.canonicalize) Canonicalizer(aligned, cfg.canonLocalProbe)
+      if (cfg.canonicalize) Canonicalizer(aligned)
       else aligned.withColumn("obj_final", col("obj_canonical"))
         .withColumn("entity_cluster_id", xxhash64(col("obj_kind"), col("obj_canonical")))
     hydrate(canonical)

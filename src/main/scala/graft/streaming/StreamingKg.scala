@@ -46,7 +46,7 @@ object StreamingKg {
                       microBatch: Int = 200,
                       promptDicts: Option[Seq[Inference.HandlerDict]] = None): DataFrame = {
     // shared bounded bootstrap (Inference.promptDictsFromDims guards the
-    // driver collect); an open-vocabulary deployment passes its capped
+    // driver collect); an unbounded-vocabulary deployment passes its capped
     // top-df dictionary slice via promptDicts instead
     val prompting = promptDicts
       .getOrElse(Inference.promptDictsFromDims(dims))
@@ -227,9 +227,9 @@ object StreamingKg {
     *        restamps the provenance history of rows an earlier run
     *        committed — `cfg.jobStart` is only the fallback for a store
     *        whose rows predate the column (ADVICE round 5).
-    * @param cfg the deployment's Config: `jobStart` as above, and
-    *        `canonLocalProbe` — an open-vocabulary store skips the driver
-    *        probe here too, where the entity space is the whole store's. */
+    * @param cfg the deployment's Config: `jobStart` as above. The entity
+    *        space here is the whole store's; the canonicalizer's bounded
+    *        probe sends one past its cap down the distributed path. */
   def compactCanonicalize(spark: SparkSession, dir: String,
                           dims: Dims.Snapshot,
                           cfg: KgPipeline.Config = KgPipeline.Config()): Option[Int] = {
@@ -242,7 +242,7 @@ object StreamingKg {
       // column set — later micro-batches append the same schema, so
       // SnapshotStore.read never sees a mixed-schema file list. Folding is
       // idempotent: re-canonicalizing already-canonical values is a no-op.
-      val canonicalized = Canonicalizer(triples, cfg.canonLocalProbe)
+      val canonicalized = Canonicalizer(triples)
       val core = Seq("url", "hashed_text", "model_id", "prompt_version",
         "subj_name", "predicate", "obj_name", "obj_kind", "obj_canonical",
         "obj_linked", "obj_final", "entity_cluster_id", "requested_at")
@@ -295,9 +295,8 @@ object StreamingKg {
     * released whether or not the commit succeeds. Returns the committed
     * version, None when the store has no triples.
     *
-    * @param cfg the deployment's Config: `canonLocalProbe` selects the
-    *        cluster resolution's driver probe ([[graft.ops.Dedup.resolve]])
-    *        and `jobStart` stamps the lineage row. */
+    * @param cfg the deployment's Config: `jobStart` stamps the lineage
+    *        row. */
   def compactDedup(spark: SparkSession, dir: String, corpus: DataFrame,
                    minJaccard: Double,
                    cfg: KgPipeline.Config = KgPipeline.Config()): Option[Int] = {
@@ -313,7 +312,7 @@ object StreamingKg {
         .withColumn("doc_id", xxhash64(col("url")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val losers = graft.ops.Dedup
-        .dedupe(docs.select("doc_id", "text"), minJaccard, cfg.canonLocalProbe)
+        .dedupe(docs.select("doc_id", "text"), minJaccard)
         .filter(!col("keep")).select(col("doc_id").as("drop_id"))
       // loser urls are duplicate-cluster members only — tiny next to the
       // corpus, so the rewrite anti-join broadcasts under AQE

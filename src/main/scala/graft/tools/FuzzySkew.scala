@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Dev main: measure the hot-gram skew of the tier-2 fuzzy-alignment
   * candidate join (graft.kg.Linker.alignFuzzy) on a head-skewed input — the
-  * open-vocabulary shape where most names share a high-frequency suffix
+  * unbounded-vocabulary shape where most names share a high-frequency suffix
   * ("... Formation" ⇒ grams "for","orm","rma","ati","tio","ion" appear in
   * nearly every posting list) — with and without the IDF stop-gram cap.
   *

@@ -250,12 +250,12 @@ class MainSpec extends AnyFunSuite {
   test("kg.Main parses every flag; --salted and --cosine-lsh are unknown") {
     val valued = Seq("pages", "out", "partitions", "dedup", "fuzzy", "fuzzy-cap",
       "cosine", "compact-dedup", "expire", "grace-ms", "buckets")
-    val switches = Seq("no-canonicalize", "open-vocabulary", "compact",
-      "redrive", "rewrite")
+    val switches = Seq("no-canonicalize", "compact", "redrive", "rewrite")
     val args = valued.flatMap(f => Seq(s"--$f", s"v-$f")) ++ switches.map("--" + _)
     assert(Main.parse(args.toList, Map.empty) ===
       valued.map(f => f -> s"v-$f").toMap ++ switches.map(_ -> "1"))
-    for (gone <- Seq(List("--salted"), List("--cosine-lsh", "64,8"))) {
+    for (gone <- Seq(List("--salted"), List("--cosine-lsh", "64,8"),
+        List("--open-vocabulary"))) {
       val e = intercept[RuntimeException](Main.parse("--out" :: "o" :: gone, Map.empty))
       assert(e.getMessage === s"unknown arg: ${gone.head}")
     }

@@ -42,44 +42,26 @@ class CanonicalizerSpec extends SparkSpec {
       ("u3", "h3", "m", "Minnesota", "contains", "Abbey Head Bed", "strat"))
       .toDF("url", "hashed_text", "model_id", "subj_name", "predicate", "obj_name", "obj_kind")
     val aligned = Linker.align(triples, Linker.aliasDim(dims))
-    val local = Canonicalizer(aligned, localProbe = true)
-      .select("obj_name", "obj_final", "entity_cluster_id")
-      .collect().map(_.toSeq).toSet
-    // without the probe, no action may be a driver probe: both probes
-    // (names and CC edges) plan as CollectLimit
-    import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution}
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
-    }
-    drainBus()
-    spark.listenerManager.register(listener)
-    val dist = try {
-      val rows = Canonicalizer(aligned, localProbe = false)
-        .select("obj_name", "obj_final", "entity_cluster_id")
-        .collect().map(_.toSeq).toSet
-      drainBus()
-      rows
-    } finally spark.listenerManager.unregister(listener)
-    assert(dist === local)
-    // the physical plan before adaptive execution: AQE's final plan folds
-    // the CollectLimit into its result stage
-    val probes = plans.toArray(Array.empty[QueryExecution])
-      .map(_.sparkPlan).filter(_.exists(_.isInstanceOf[CollectLimitExec]))
-    assert(!plans.isEmpty && probes.isEmpty, probes.mkString("\n"))
+    // a three-name space fits the name probe, so canonicalize clusters in
+    // the driver union-find; distributedCanonicalize is the path a space
+    // past MaxLocalNames takes
+    def rows(canon: org.apache.spark.sql.DataFrame) = canon.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    val local = rows(Canonicalizer.canonicalize(aligned))
+    assert(rows(Canonicalizer.distributedCanonicalize(aligned)) === local)
+    assert(local.map(_._3) === Set("Abbey Head Bed", "gold"))
   }
 
-  test("connectedComponents localProbe=false: distributed rounds engage, same output") {
+  test("distributedComponents: rounds run to convergence, same output as probed") {
     // plus a 25-vertex path: its far end is 24 hops from the minimum, so the
     // distributed rounds must run until no label changes
     val path = (100L until 124L).map(v => (v, v + 1))
     val edges = (Seq((1L, 2L), (2L, 3L), (10L, 11L), (10L, 12L), (20L, 21L)) ++ path)
       .toDF("src", "dst")
     val probed = Canonicalizer.connectedComponents(edges)
-    val unprobed = Canonicalizer.connectedComponents(edges, localProbe = false)
+    val unprobed = Canonicalizer.distributedComponents(edges)
     // the probed path collapses a small graph to a driver LocalRelation;
-    // skipping the probe must leave a distributed result (the min-label
+    // the distributed rounds leave a distributed result (the min-label
     // rounds localCheckpoint → LogicalRDD) — i.e. no driver collect happened
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     assert(probed.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
@@ -341,16 +323,19 @@ class KgPipelineSpec extends SparkSpec {
   test("plan discipline: no sort-merge/nested-loop/cartesian anywhere in the pipeline") {
     // regression guard for the PLANS.md audit: every enrichment join must
     // stay broadcast; any SMJ/BNLJ/cartesian appearing here means a hint
-    // or a key extraction silently broke. The second run resumes from a
-    // checkpoint that already holds a done set, so the resume anti-join
-    // is held to the same rule.
+    // or a key extraction silently broke. The second run's pages are
+    // resumed (as runAndCommit resumes them) against a checkpoint that
+    // already holds a done set, so the resume anti-join is held to the
+    // same rule.
     val outDir = tempDir("kgplanresume")
+    val cfg = KgPipeline.Config(numPartitions = 2)
     KgPipeline.runAndCommit(spark,
       Pages.fixtures(spark).filter(col("url") === "https://fixtures.graft/sauk"),
-      dims, client, outDir, KgPipeline.Config(numPartitions = 2))
+      dims, client, outDir, cfg)
     Seq(None, Some(s"$outDir/checkpoint")).foreach { checkpointDir =>
-      val res = KgPipeline.run(spark, Pages.fixtures(spark), dims, client,
-        KgPipeline.Config(numPartitions = 2, checkpointDir = checkpointDir))
+      val pages = checkpointDir.fold(Pages.fixtures(spark))(c =>
+        KgPipeline.resume(Pages.fixtures(spark), KgPipeline.readDone(spark, c, cfg), cfg))
+      val res = KgPipeline.run(spark, pages, dims, client, cfg)
       val plan = res.triples.queryExecution.executedPlan.toString
       assert(!plan.contains("SortMergeJoin"), plan.linesIterator.take(40).mkString("\n"))
       assert(!plan.contains("CartesianProduct"))
@@ -780,7 +765,7 @@ class KgPipelineSpec extends SparkSpec {
     val dicts = Inference.promptDictsFromDims(dims)
     assert(dicts.map(_._1) === Seq(Prompts.StratV3, Prompts.MineralV0))
     assert(dicts.head._2.contains("Shakopee"))
-    // past the cap: fail-fast with the open-vocabulary remedy in the
+    // past the cap: fail-fast with the capped-slice remedy in the
     // message — never an unbounded driver collect
     val e = intercept[IllegalArgumentException] {
       Inference.promptDictsFromDims(dims, maxTerms = 2)

@@ -136,20 +136,6 @@ class DedupSpec extends SparkSpec {
     assert(got(21L) === ((20L, false)))
   }
 
-  test("resolve localProbe=false: open-vocabulary path skips the driver probe, same clusters") {
-    import spark.implicits._
-    val verified = Seq((10L, 11L), (11L, 12L), (20L, 21L)).toDF("doc_a", "doc_b")
-    val probed = Dedup.resolve(verified).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val open = Dedup.resolve(verified, localProbe = false)
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    // distributed result (checkpointed min-label rounds), never a driver
-    // LocalRelation => the small-graph collect did not run
-    assert(open.queryExecution.optimizedPlan.collectLeaves()
-      .forall(!_.isInstanceOf[LocalRelation]))
-    assert(open.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet === probed)
-  }
-
   test("bucket-local pair generation equals a bucket self-join on a hot bucket") {
     // round-7 internals change: candidate pairs come from the bucket-local
     // pair kernel (bucketPairs) instead of a bucket self-join. Pin the pair

@@ -267,12 +267,6 @@ class StreamingSpec extends SparkSpec {
     val canon = canonMap(dir)
     assert(canon("Foo Formation") === "Foo Formation")
     assert(canon("foo formation.") === "Foo Formation")
-    // an open-vocabulary store (no driver probe) compacts to the same map
-    val openDir = tempDir("compactopen")
-    twoBatches(openDir)
-    assert(StreamingKg.compactCanonicalize(spark, openDir, dims,
-      KgPipeline.Config(canonLocalProbe = false)).contains(3))
-    assert(canonMap(openDir) === canon)
     // the batch_id watermark survives the replace-mode commit: a restarted
     // query replaying its last micro-batch must still be skipped
     assert(SnapshotStore.readSnapshot(spark, dir, 3).meta.get("batch_id")
